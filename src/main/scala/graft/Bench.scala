@@ -156,7 +156,7 @@ object Bench {
   /** JIT-TRIVIAL machine-speed probe — the drift gate's signal (r16).
     * The Spark [[calibWorkload]] never stops JIT-gliding: a fresh
     * idle local[32] JVM ran its 5-rep median 0.40 → 0.19 s across 100
-    * executions (CalibProbe, measured), so pre-vs-post wall drift on
+    * executions (measured r16, 5-rep medians), so pre-vs-post wall drift on
     * it conflates whole-stage-codegen warmup with machine speed —
     * three bit-repeatable 35-40% "drifts" were stamped on quiet runs
     * the round the suite got lighter. This probe is one hot scalar
@@ -461,8 +461,8 @@ object Bench {
     val (calib, results, warmWalls) = try {
       // Warm the calibration workload to its JIT PLATEAU before
       // measuring calib_pre — not one pass: a fresh local[32] JVM
-      // glides 0.54 → 0.25 s median over ~40 executions (CalibProbe,
-      // measured r16 on an idle VM), so a pre row taken after one
+      // glides 0.54 → 0.25 s median over ~40 executions (measured
+      // r16 on an idle VM), so a pre row taken after one
       // warm pass reads ~1.6× the plateau and the pre-vs-post gate
       // stamps a structural 35-40% "drift" on a perfectly quiet run
       // (three bit-repeatable red stamps before this was diagnosed).
@@ -521,7 +521,7 @@ object Bench {
       // gate artifact quality; this row measures how much of it the
       // cached frames explain. The first cleared rep races the async
       // unpersist storm — the median absorbs it.
-      ScaleBench.clearMemoCaches()
+      BoundedMemo.clearAll()
       spark.catalog.clearCache()
       val postClear = calibMedian("calib_post_clear")
       // postClear rides LAST; calibAt/calibNormalize interpolate over

@@ -45,7 +45,7 @@ object ClampRehearsal {
         "vec_id", "embedding").count()
       catch { case t: Throwable =>
         System.err.println(s"[clamp] warmup: ${t.getMessage}") }
-      ScaleBench.clearMemoCaches()
+      BoundedMemo.clearAll()
       factors.foreach { factor =>
         val emb =
           if (factor == 1) Tables.embeddings(spark, srcDir)
@@ -59,7 +59,7 @@ object ClampRehearsal {
           }
         val n = emb.count()
         val plan = graft.ops.Dedup.clusterPlanFor(n)
-        ScaleBench.clearMemoCaches()
+        BoundedMemo.clearAll()
         sm.reset()
         val t0 = System.nanoTime()
         val survivors = graft.ops.Dedup.semanticClusterDedup(

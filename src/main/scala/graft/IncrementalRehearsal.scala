@@ -87,7 +87,7 @@ object IncrementalRehearsal {
 
     def medianOf(reps: Int)(body: () => Long): (Double, Double, Long) = {
       val cells = (0 until reps).map { _ =>
-        ScaleBench.clearMemoCaches()
+        BoundedMemo.clearAll()
         sm.reset()
         val t0 = System.nanoTime()
         val n = body()
@@ -200,7 +200,7 @@ object IncrementalRehearsal {
       }
       // equivalence vs an UNCAPPED full run (the incremental path has
       // no bucket cap; the timed full uses the production default)
-      ScaleBench.clearMemoCaches()
+      BoundedMemo.clearAll()
       val fullMhPairs = Dedup.minhashNearDuplicates(docs.unionByName(dBatch),
         "doc_id", "text", threshold = 0.8, maxBucket = Int.MaxValue)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -232,7 +232,7 @@ object IncrementalRehearsal {
         Dedup.incrementalEmbeddingNearDuplicates(embStore, emb, vBatch,
           "vec_id", "embedding", threshold = 0.95).count()
       }
-      ScaleBench.clearMemoCaches()
+      BoundedMemo.clearAll()
       val fullEmbPairs = Dedup.embeddingNearDuplicates(emb.unionByName(vBatch),
         "vec_id", "embedding", threshold = 0.95, numBits = numBits,
         bands = 8, maxBucket = Int.MaxValue)

@@ -1,30 +1,36 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 
 /** Stable session identity for memo keys.
   *
   * `System.identityHashCode` is NOT unique across a JVM's lifetime —
   * a collision would hand a caller a memoized DataFrame bound to
-  * another (possibly stopped) session. The classic session exposes a
-  * real UUID; fall back to identity hash only for exotic session
-  * implementations (none exist in this engine's deployments).
+  * another (possibly stopped) session — so memo keys use the classic
+  * session's UUID, and any other session implementation is refused
+  * loudly instead of keyed by a collision-prone fallback.
   */
 object SessionKeys {
   // sessionUUID is private[sql] in the Scala signature but public in
   // bytecode — same one-line bridge pattern as ColumnBridge
   private val uuidMethod =
-    try Some(classOf[org.apache.spark.sql.classic.SparkSession].getMethod("sessionUUID"))
-    catch { case _: Throwable => None }
+    classOf[org.apache.spark.sql.classic.SparkSession].getMethod("sessionUUID")
 
   def of(s: SparkSession): String = s match {
-    case c: org.apache.spark.sql.classic.SparkSession if uuidMethod.isDefined =>
-      uuidMethod.get.invoke(c).asInstanceOf[String]
-    case other => "idhash-" + System.identityHashCode(other)
+    case c: org.apache.spark.sql.classic.SparkSession =>
+      uuidMethod.invoke(c).asInstanceOf[String]
+    case other => throw new IllegalArgumentException(
+      s"memo keys need a classic SparkSession, got ${other.getClass.getName}")
   }
 }
 
-/** Stable INPUT-PLAN identity for memo keys.
+/** Stable INPUT identity for memo keys: canonical plan + file identity.
   *
   * `semanticHash()` is 32 bits: a session that memoizes many distinct
   * input plans walks into birthday-collision territory, and a
@@ -35,49 +41,71 @@ object SessionKeys {
   * memo lookup; canonicalization normalizes expression ids, so
   * semantically-equal plans still share a key).
   *
-  * The plan STRING alone is not enough: a `LocalRelation` prints only
-  * its output attributes, so two literal frames with the same schema
-  * but different rows stringify identically. Fold each local
-  * relation's row data and the plan's `semanticHash` (a case-class
-  * hash, which DOES see the rows) into the digest so literal inputs
-  * with equal shapes stay distinct.
+  * The plan STRING alone is not enough:
+  *  - a `LocalRelation` prints only its output attributes, so two
+  *    literal frames with the same schema but different rows
+  *    stringify identically — each local relation's rows and the
+  *    plan's `semanticHash` (a case-class hash, which DOES see the
+  *    rows) are folded in;
+  *  - a file scan prints its root path, not its contents, so an
+  *    overwrite or append under the same path would serve the old
+  *    artifact — the path, length and modification time of every
+  *    file in the scan's index listing are folded in. The listing is
+  *    the one the index already holds from analysis: no new listing.
   */
 object PlanKeys {
-  def of(df: org.apache.spark.sql.DataFrame): String = {
+  def of(df: DataFrame): String = {
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     val md = java.security.MessageDigest.getInstance("SHA-256")
     val plan = df.queryExecution.analyzed.canonicalized
     md.update(plan.toString.getBytes(utf8))
     md.update(java.nio.ByteBuffer.allocate(4).putInt(plan.hashCode()).array())
     plan.foreach {
-      case lr: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+      case lr: LocalRelation =>
         lr.data.foreach(row => md.update(row.toString.getBytes(utf8)))
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location match {
+        case idx: PartitioningAwareFileIndex => idx.allFiles().foreach { f =>
+          md.update(s"${f.getPath}|${f.getLen}|${f.getModificationTime}\n".getBytes(utf8))
+        }
+        case _ => ()
+      }
       case _ => ()
     }
     md.digest().take(16).map(b => f"$b%02x").mkString
   }
+
+  /** The (session, input) prefix every frame-keyed memo key starts with. */
+  def scoped(df: DataFrame): (String, String) = (SessionKeys.of(df.sparkSession), of(df))
 }
 
-/** Tiny synchronized LRU memo with an eviction hook — the shape every
-  * per-session materialized-artifact cache in this engine uses
-  * (candidate pair tables, IVF indexes, settled streaming results).
-  * Bounded so a long-lived session can't pin artifacts forever; the
-  * eviction hook unpersists what the entry had materialized (safe:
-  * Spark recomputes from lineage for any caller still holding the
-  * evicted value).
+/** Tiny synchronized LRU memo — the one cache layer every per-session
+  * built artifact in this engine goes through (candidate pair tables,
+  * IVF indexes, trained models, settled streams, corpus counts).
+  * Bounded so a long-lived session can't pin artifacts forever.
+  *
+  * Release hooks are declared once, here: `onEvict` releases a value
+  * that aged out or lost a build race (for a persisted frame, a
+  * non-blocking unpersist is safe — Spark recomputes from lineage for
+  * any caller still holding the evicted value); `onClear` releases
+  * each value on [[BoundedMemo.clearAll]]. A failing hook is reported
+  * as a `[memo] <name> release-failed key=…` line, never swallowed.
+  *
+  * Every memo registers itself on construction, so
+  * [[BoundedMemo.clearAll]] resets all of them with no roster to keep.
   */
-final class BoundedMemo[K, V](capacity: Int, onEvict: V => Unit = (_: V) => (),
-    name: String = "memo") {
+final class BoundedMemo[K, V](capacity: Int, name: String,
+    onEvict: V => Unit = (_: V) => (), onClear: V => Unit = (_: V) => ()) {
   private val map = new java.util.LinkedHashMap[K, V](capacity, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = {
       val evict = size() > capacity
       if (evict) {
         System.err.println(s"[memo] $name evict key=${e.getKey}")
-        try onEvict(e.getValue) catch { case _: Throwable => () }
+        release(onEvict, e.getKey, e.getValue)
       }
       evict
     }
   }
+  BoundedMemo.register(this)
 
   // one stderr line per lookup: the cheapest possible answer to "did
   // the bench's x8→x10 / x17→x33 reuse actually hit?" (a silent miss
@@ -85,40 +113,66 @@ final class BoundedMemo[K, V](capacity: Int, onEvict: V => Unit = (_: V) => (),
   private def trace(outcome: String, key: K): Unit =
     System.err.println(s"[memo] $name $outcome key=$key")
 
-  /** Build-under-lock get-or-create: fine when `build` only constructs
-    * a lazy plan. Use [[get]]/[[putIfAbsent]] when the build runs jobs
-    * (holding the lock would serialize unrelated concurrent builds). */
-  def getOrElseUpdate(key: K)(build: => V): V = synchronized {
-    Option(map.get(key)) match {
-      case Some(v) => trace("hit", key); v
-      case None => trace("miss", key); val v = build; map.put(key, v); v
+  private def release(hook: V => Unit, key: K, v: V): Unit =
+    try hook(v) catch {
+      case NonFatal(e) => System.err.println(s"[memo] $name release-failed key=$key: $e")
+    }
+
+  /** The value memoized for `key`, building it on a miss.
+    *
+    * `build` runs OUTSIDE the memo lock: builds run Spark jobs
+    * (counts, collects, streams, iterative propagation), and holding
+    * the monitor through one would serialize every unrelated build.
+    * Two threads missing the same key may therefore both build; the
+    * first to store wins, both callers get the winner, and the losing
+    * build is released with `onEvict` — a persisted loser otherwise
+    * stays pinned in the session CacheManager, a loser stream's
+    * memory sink on the driver. */
+  def getOrBuild(key: K)(build: => V): V = {
+    val hit = synchronized {
+      val v = Option(map.get(key))
+      trace(if (v.isDefined) "hit" else "miss", key)
+      v
+    }
+    hit.getOrElse {
+      val built = build
+      val (winner, stored) = synchronized {
+        Option(map.get(key)) match {
+          case Some(w) => (w, false)
+          case None => map.put(key, built); (built, true)
+        }
+      }
+      if (!stored) release(onEvict, key, built)
+      winner
     }
   }
 
-  def get(key: K): Option[V] = synchronized {
-    val v = Option(map.get(key))
-    trace(if (v.isDefined) "hit" else "miss", key)
-    v
-  }
-
-  /** Keeps the first value if two builders raced; returns the winner.
-    * The returned value is the one to use; a caller whose `value` lost
-    * the race must release whatever `value` had materialized. */
-  def putIfAbsent(key: K, value: V): V = synchronized {
-    Option(map.get(key)).getOrElse { map.put(key, value); value }
-  }
-
-  /** Drop everything, running `onEach` (then the evict hook is NOT
-    * called — callers pass the same unpersist here). */
-  def clear(onEach: V => Unit = (_: V) => ()): Unit = synchronized {
-    val it = map.values().iterator()
-    while (it.hasNext) { try onEach(it.next()) catch { case _: Throwable => () } }
-    map.clear()
+  private def clear(): Unit = {
+    val entries = synchronized {
+      val es = map.entrySet().asScala.map(e => (e.getKey, e.getValue)).toList
+      map.clear()
+      es
+    }
+    entries.foreach { case (k, v) => release(onClear, k, v) }
   }
 }
 
+object BoundedMemo {
+  // weak: a memo that is no longer reachable has nothing left to reset
+  private val registry = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[BoundedMemo[_, _], java.lang.Boolean]())
+
+  private def register(m: BoundedMemo[_, _]): Unit = registry.synchronized(registry.add(m))
+
+  /** Empty every memo in the JVM, releasing each value with its memo's
+    * `onClear` — the one reset between rehearsal reps and after a
+    * suite, so the next cell starts cold. */
+  def clearAll(): Unit =
+    registry.synchronized(registry.asScala.toList).foreach(_.clear())
+}
+
 /** Session-scoped memo of corpus row counts keyed by
-  * (session, plan key) — the shared resolution step for every
+  * (session, input) — the shared resolution step for every
   * auto-sizing sentinel ([[graft.ops.Dedup.AutoBits]]/[[graft.ops.Dedup.AutoK]]/
   * [[graft.ops.Similarity.AutoLists]]). The r14 advice: each sentinel
   * resolution ran a `df.count()` BEFORE its family's memo lookup, so
@@ -127,22 +181,11 @@ final class BoundedMemo[K, V](capacity: Int, onEvict: V => Unit = (_: V) => (),
   * scan; a derived frame (filters, projections, joins upstream) pays
   * a full job per call. Counts are 8 bytes, so memoizing them is free
   * and makes repeated auto-sized calls over the same frame one job
-  * total. Cleared with the other memos
-  * ([[graft.ScaleBench.clearMemoCaches]]) so rehearsal marginals stay
-  * per-corpus. */
+  * total. */
 object CorpusCounts {
-  private val memo =
-    new BoundedMemo[(String, String), Long](64, name = "corpus-count")
+  private val memo = new BoundedMemo[(String, String), Long](64, "corpus-count")
 
-  /** The frame's row count (min 1 — sizing formulas log/divide by it),
-    * memoized per (session, canonical plan). Counted OUTSIDE the memo
-    * lock (the minhashCandidates pattern): the count runs a job, and a
-    * global monitor around it would serialize unrelated builds. */
-  def of(df: org.apache.spark.sql.DataFrame): Long = {
-    val key = (SessionKeys.of(df.sparkSession), PlanKeys.of(df))
-    memo.get(key).getOrElse(
-      memo.putIfAbsent(key, math.max(1L, df.count())))
-  }
-
-  def clear(): Unit = memo.clear()
+  /** The frame's row count (min 1 — sizing formulas log/divide by it). */
+  def of(df: DataFrame): Long =
+    memo.getOrBuild(PlanKeys.scoped(df))(math.max(1L, df.count()))
 }

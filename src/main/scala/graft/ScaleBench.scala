@@ -16,8 +16,8 @@ import org.apache.spark.sql.SparkSession
   *  - one untimed JIT/codegen warmup pass runs the SAME families at
   *    sf0.01 — a dir deliberately NOT among the timed ones, so no
   *    timed dir starts memo-warm while another starts cold;
-  *  - family order is FIXED across dirs and the clearable memo
-  *    caches reset between dirs: every dir's pass does the same
+  *  - family order is FIXED across dirs and every memo resets
+  *    between dirs ([[BoundedMemo.clearAll]]): every dir's pass does the same
   *    cold/warm work, so cross-dir ratios compare corpus size, not
   *    cache luck;
   *  - the machine-speed calibration workload brackets the whole run
@@ -47,20 +47,6 @@ object ScaleBench {
     "x93_source_cap")            // per-source WindowGroupLimit cap
 
   case class Obs(buckets: Long, capped: Long, maxBucket: Long)
-
-  /** Shared by ScaleProbe — one list to keep in lockstep when a new
-    * memo lands (the per-dir clears are what make per-corpus numbers
-    * marginal instead of cache-luck). */
-  private[graft] def clearMemoCaches(): Unit = {
-    graft.ops.Dedup.clearCandidateCache()
-    graft.ops.Dedup.clearGramsCache()
-    graft.ops.Dedup.clearBloomCache()
-    graft.ops.Dedup.clearClusterCache()
-    graft.ops.Dedup.clearEmbeddingPairCache()
-    graft.ops.Similarity.clearIvfCache()
-    graft.ops.Classifier.clearModelCache()
-    graft.CorpusCounts.clear()
-  }
 
   def main(args: Array[String]): Unit = {
     val dirs =
@@ -142,7 +128,7 @@ object ScaleBench {
     }
     def runOne(dir: String, family: String): Run = {
       val cells = (0 until reps).map { i =>
-        if (i > 0) clearMemoCaches()
+        if (i > 0) BoundedMemo.clearAll()
         runOnce(dir, family)
       }
       cells.sortBy(_.cpu).apply(cells.length / 2)
@@ -157,7 +143,7 @@ object ScaleBench {
       catch { case t: Throwable =>
         System.err.println(s"[scalebench] warmup $f: ${t.getMessage}") }
     }
-    clearMemoCaches()
+    BoundedMemo.clearAll()
 
     Bench.calibWorkload(spark); sm.drain() // untimed calib JIT
     def calib(): Double = {
@@ -167,7 +153,7 @@ object ScaleBench {
     val calibPre = calib()
     val runs = dirs.flatMap { dir =>
       System.err.println(s"[scalebench] timed pass at $dir")
-      clearMemoCaches()
+      BoundedMemo.clearAll()
       active.map { f =>
         val r = runOne(dir, f)
         System.err.println(f"[scalebench] ${r.family}%-28s @ $dir%-28s " +

@@ -71,7 +71,7 @@ object ScaleProbe {
     }
 
     dirs.foreach { dir =>
-      ScaleBench.clearMemoCaches()
+      BoundedMemo.clearAll()
       val docs = Tables.documents(spark, dir)
       val emb = Tables.embeddings(spark, dir)
 

@@ -85,7 +85,7 @@ object ShardRehearsal {
         // flat CPU at x4 2.3x its x8 value on a contended VM)
         def medianOf(reps: Int)(build: () => Int): (Double, Double, Int) = {
           val cells = (0 until reps).map { _ =>
-            ScaleBench.clearMemoCaches()
+            BoundedMemo.clearAll()
             sm.reset()
             val t0 = System.nanoTime()
             val lists = build()

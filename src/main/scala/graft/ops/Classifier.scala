@@ -169,12 +169,6 @@ object Classifier {
   final case class LogRegModel(weights: DataFrame, numBuckets: Int,
       eta: Double, iters: Int)
 
-  /** Train ONCE on the labeled corpus and return the persistable
-    * model — the production half of [[logRegScores]] (train on the
-    * curated reference-vs-crawl set, then score every day's intake
-    * with [[logRegApply]] at one broadcast join per batch, no
-    * retraining). Expression-identical to the fused path by
-    * construction (shared [[logRegFeatures]]/[[logRegTrainOn]]). */
   // CAPACITY eviction deliberately does NOT release the weights (r18
   // advice): the weights are localCheckpoint(true)-materialized, so
   // BoundedMemo's safety premise ("Spark recomputes from lineage for
@@ -187,51 +181,38 @@ object Classifier {
   // was a silent no-op anyway — Dataset.unpersist only drops
   // CacheManager entries, never checkpoint blocks
   // (graft.Persistence scaladoc; PersistenceSpec proves it).
+  // UNLIKE eviction, clearAll releases each model's checkpointed
+  // weight blocks deterministically ([[graft.Persistence.release]]):
+  // a clear is an explicit between-reps reset and any handle held
+  // across it is dead by contract.
   private val trainMemo = new graft.BoundedMemo[
-    (String, String, String, Int, Double, Int, Boolean), LogRegModel](
-    8, name = "logreg-model")
+    ((String, String), String, Int, Double, Int, Boolean), LogRegModel](
+    8, "logreg-model", onClear = m => graft.Persistence.release(m.weights))
 
-  /** Clear the trained-model memo (rehearsal hygiene — the
-    * ScaleBench.clearMemoCaches roster). UNLIKE capacity eviction
-    * (see trainMemo), clear releases each model's checkpointed weight
-    * blocks deterministically ([[graft.Persistence.release]]): a
-    * clear is an explicit between-reps reset and any handle held
-    * across it is dead by contract. */
-  def clearModelCache(): Unit =
-    trainMemo.clear(m => graft.Persistence.release(m.weights))
-
-  /** IMMUTABLE-INPUT ASSUMPTION (the pair-table memo contract, r17
-    * advice): the memo key canonicalizes to the input's LOGICAL PLAN
-    * — for a file source that is the scan path, not the file
-    * contents — so a same-session retrain over an external directory
-    * whose underlying files changed silently returns the stale
-    * day-0 model. Daily-append pipelines must either re-`spark.read`
-    * under a new session, call [[clearModelCache]] after the
-    * append, or train through a snapshot path that never mutates
-    * in place (the store-trio discipline: stores are rewritten to
-    * fresh roots, never edited under a live handle). */
+  /** Train ONCE on the labeled corpus and return the persistable
+    * model — the production half of [[logRegScores]] (train on the
+    * curated reference-vs-crawl set, then score every day's intake
+    * with [[logRegApply]] at one broadcast join per batch, no
+    * retraining). Expression-identical to the fused path by
+    * construction (shared [[logRegFeatures]]/[[logRegTrainOn]]).
+    *
+    * Memoized per (session, input, columns, params) — x207 and x209
+    * train the IDENTICAL model on the identical slice; the final
+    * weights are localCheckpoint(true)-materialized inside
+    * logRegTrainOn, so a memo hit is a free frame reference. */
   def logRegTrain(df: DataFrame, idCol: String, textCol: String,
       labelCol: String, numBuckets: Int = 64, eta: Double = 0.5,
-      iters: Int = 2, exact: Boolean = true): LogRegModel = {
-    // memoized per (session, input plan, columns, params) — x207 and
-    // x209 train the IDENTICAL model on the identical slice (the
-    // bpeModel pattern: one training run serves every same-input
-    // caller; the final weights are localCheckpoint(true)-materialized
-    // inside logRegTrainOn, so a memo hit is a free frame reference,
-    // and evicted checkpoints are reclaimed by the ContextCleaner once
-    // unreferenced). Built OUTSIDE the memo lock (the ivfIndex rule).
-    val key = (graft.SessionKeys.of(df.sparkSession),
-      graft.PlanKeys.of(df) + "/" + s"$idCol/$textCol/$labelCol",
-      "train", numBuckets, eta, iters, exact)
-    trainMemo.get(key).getOrElse(
-      trainMemo.putIfAbsent(key, LogRegModel(
+      iters: Int = 2, exact: Boolean = true): LogRegModel =
+    trainMemo.getOrBuild((graft.PlanKeys.scoped(df), s"$idCol/$textCol/$labelCol",
+        numBuckets, eta, iters, exact)) {
+      LogRegModel(
         logRegTrainOn(
           logRegFeatures(df, idCol, textCol,
             when(col(labelCol).cast("boolean"), 1.0).otherwise(0.0),
             numBuckets),
           eta, iters, exact),
-        numBuckets, eta, iters)))
-  }
+        numBuckets, eta, iters)
+    }
 
   /** Score an (unlabeled) corpus with a trained model: (id, score),
     * score = round(P(target | text), 6) exactly as [[logRegScores]]

@@ -64,24 +64,15 @@ object Dedup {
     * numHashes = bands × rowsPerBand; the (bands, rowsPerBand) pair
     * sets the S-curve threshold ≈ (1/bands)^(1/rowsPerBand).
     */
-  /** Memo of persisted candidate tables keyed by session identity +
-    * the *semantic* hash of the input plan + sketch parameters:
+  /** Memo of persisted candidate tables keyed by session + input +
+    * sketch parameters:
     * repeated dedup passes over the same corpus (candidate generation,
     * threshold sweep, exact verification) reuse one materialized
     * candidate list instead of re-running the banding pipeline per
-    * call. Entries are tiny (id pairs + estimate).
-    *
-    * Caveats (by design): the semantic hash keys a parquet scan by
-    * its path, not its contents — if files under a staged path are
-    * mutated in-place mid-session, call [[clearCandidateCache]]; the
-    * memo holds at most [[memoCapacity]] entries (oldest unpersisted
-    * and dropped). */
+    * call. Entries are tiny (id pairs + estimate). */
   private val candidateMemo =
-    new graft.BoundedMemo[(String, String, String, Int, Int, Int, Int), DataFrame](
-      16, _.unpersist(blocking = false), name = "minhash-candidates")
-
-  /** Drop all memoized candidate tables (unpersisting each). */
-  def clearCandidateCache(): Unit = candidateMemo.clear(_.unpersist())
+    new graft.BoundedMemo[((String, String), String, Int, Int, Int, Int), DataFrame](
+      16, "minhash-candidates", _.unpersist(blocking = false), _.unpersist(blocking = true))
 
   /** Default per-(band, bucket) membership bound for the banded LSH
     * pair generators — the quadratic escape hatch at 100 TB: one
@@ -219,21 +210,10 @@ object Dedup {
   def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 128, bands: Int = 32, shingleSize: Int = 3,
       maxBucket: Int = DefaultMaxBucket): DataFrame = {
-    val key = (graft.SessionKeys.of(df.sparkSession),
-      graft.PlanKeys.of(df),
+    val key = (graft.PlanKeys.scoped(df),
       s"$idCol/$textCol", numHashes, bands, shingleSize, maxBucket)
-    // build OUTSIDE the memo lock (the ivfIndex pattern): the build
-    // plans against the input frame, and planning arbitrary user
-    // frames under a global monitor would serialize unrelated builds
-    candidateMemo.get(key).getOrElse {
-      val built = minhashCandidatesUncached(
-        df, idCol, textCol, numHashes, bands, shingleSize, maxBucket)
-      val winner = candidateMemo.putIfAbsent(key, built)
-      // a racing builder beat us: release our build's cache
-      // registration, or CacheManager pins it for the session lifetime
-      if (!(winner eq built)) built.unpersist(blocking = false)
-      winner
-    }
+    candidateMemo.getOrBuild(key)(minhashCandidatesUncached(
+      df, idCol, textCol, numHashes, bands, shingleSize, maxBucket))
   }
 
   /** MinHash signature table (id, sig) — the persistable SIGNATURE
@@ -788,14 +768,10 @@ object Dedup {
   /** Memo for the verify-side hashed-gram tables below — the gram
     * arrays of the CANDIDATE docs are identical across every verify
     * threshold over the same corpus (x10 at 0.2, x42/x118 at 0.7 all
-    * share one), so one shingle pass serves the session. Same
-    * caveats as candidateMemo. */
+    * share one), so one shingle pass serves the session. */
   private val gramsMemo =
-    new graft.BoundedMemo[(String, String, String, Int), DataFrame](
-      16, _.unpersist(blocking = false), name = "verify-grams")
-
-  /** Drop all memoized verify-gram tables (unpersisting each). */
-  def clearGramsCache(): Unit = gramsMemo.clear(_.unpersist())
+    new graft.BoundedMemo[((String, String), String, Int), DataFrame](
+      16, "verify-grams", _.unpersist(blocking = false), _.unpersist(blocking = true))
 
   /** Exact n-gram Jaccard, verified on MinHash-LSH candidates only —
     * the scale-safe way to get exact similarities: the all-pairs
@@ -828,12 +804,11 @@ object Dedup {
     // PlanSpec pins the InMemoryTableScan shape). The memo extends
     // the same guarantee across verify thresholds: grams don't depend
     // on the threshold, so x10/x42/x118 share one table.
-    val gramsKey = (graft.SessionKeys.of(df.sparkSession),
-      graft.PlanKeys.of(df), s"$idCol/$textCol", shingleSize)
-    val grams = gramsMemo.get(gramsKey).getOrElse {
+    val grams = gramsMemo.getOrBuild(
+        (graft.PlanKeys.scoped(df), s"$idCol/$textCol", shingleSize)) {
       val ids = cands.select(col("id_a").as("gid"))
         .unionByName(cands.select(col("id_b").as("gid"))).distinct()
-      val built = df.select(col(idCol).as("gid"), col(textCol).as("t"))
+      df.select(col(idCol).as("gid"), col(textCol).as("t"))
         .join(ids, Seq("gid"), "leftsemi")
         .select(col("gid"),
           array_distinct(transform(
@@ -841,9 +816,6 @@ object Dedup {
             g => xxhash64(g))).as("g"))
         .repartition(col("gid"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val winner = gramsMemo.putIfAbsent(gramsKey, built)
-      if (!(winner eq built)) built.unpersist(blocking = false)
-      winner
     }
     // shuffle joins for the same exchange-reuse reasons as the
     // signature rejoin in minhashCandidates
@@ -1186,12 +1158,7 @@ object Dedup {
     * use it as the cheap first-pass filter and the join variant for
     * attribution on the survivors.
     *
-    * The eval-side filter is MEMOIZED per (eval plan, sketch params)
-    * — same caveat as the candidate memo (Dedup.scala's candidateMemo
-    * doc): the semantic hash keys a parquet scan by its PATH, so if
-    * the eval suite is rewritten in place mid-session, call
-    * [[clearBloomCache]] or the stale filter silently misses
-    * contamination that only the new eval set would flag.
+    * The eval-side filter is MEMOIZED per (eval input, sketch params).
     *
     * Same stop-fingerprint cap as the join variant: fingerprints in
     * more than `maxEvalDocFreq` eval docs are boilerplate, not
@@ -1203,18 +1170,15 @@ object Dedup {
     * `minMatched`. Exact-twin discipline: x37's word-trigram
     * intersection pins the shared-passage semantics this
     * approximates. */
-  /** Memo of built eval-side Bloom filters, keyed by session + the
-    * semantic hash of the eval plan + sketch/cap/fpp params (NOT
+  /** Memo of built eval-side Bloom filters, keyed by session + eval
+    * input + sketch/cap/fpp params (NOT
     * minMatched — the filter doesn't depend on it, so threshold
     * sweeps reuse one build). Values are the serialized filter
     * bytes: tiny and driver-held, nothing to unpersist on eviction;
     * `None` records an empty capped set. */
   private val bloomMemo =
-    new graft.BoundedMemo[(String, String, String, Int, Int, Int, Double),
-      Option[Array[Byte]]](16, name = "eval-bloom")
-
-  /** Drop all memoized eval Bloom filters. */
-  def clearBloomCache(): Unit = bloomMemo.clear()
+    new graft.BoundedMemo[((String, String), String, Int, Int, Int, Double),
+      Option[Array[Byte]]](16, "eval-bloom")
 
   private def buildEvalBloom(eval: DataFrame, idCol: String, textCol: String,
       k: Int, window: Int, maxEvalDocFreq: Int,
@@ -1253,15 +1217,9 @@ object Dedup {
       idCol: String, textCol: String,
       minMatched: Int = 2, k: Int = 8, window: Int = 4,
       maxEvalDocFreq: Int = 20, fpp: Double = 0.01): DataFrame = {
-    // build OUTSIDE the memo lock (the ivfIndex pattern — the build
-    // runs real jobs); a race loser's bytes just get garbage-collected
-    val key = (graft.SessionKeys.of(eval.sparkSession),
-      graft.PlanKeys.of(eval),
-      s"$idCol/$textCol", k, window, maxEvalDocFreq, fpp)
-    val maybeBytes = bloomMemo.get(key).getOrElse {
-      bloomMemo.putIfAbsent(key,
-        buildEvalBloom(eval, idCol, textCol, k, window, maxEvalDocFreq, fpp))
-    }
+    val maybeBytes = bloomMemo.getOrBuild((graft.PlanKeys.scoped(eval),
+        s"$idCol/$textCol", k, window, maxEvalDocFreq, fpp))(
+      buildEvalBloom(eval, idCol, textCol, k, window, maxEvalDocFreq, fpp))
     bloomDecontaminateWith(train,
       EvalBloomFilter(maybeBytes, k, window, maxEvalDocFreq, fpp),
       idCol, textCol, minMatched)
@@ -1364,13 +1322,10 @@ object Dedup {
     * pipeline stages in a session (survivor anti-join, leakage-safe
     * split, cluster stats) — one pointer-jumping run per (pairs,
     * maxIters), not one per consumer. Labels are O(|clustered
-    * docs|) rows. Same caveats as candidateMemo. */
+    * docs|) rows. */
   private val clusterMemo =
-    new graft.BoundedMemo[(String, String, String, Int), DataFrame](
-      16, _.unpersist(blocking = false), name = "dup-cluster-labels")
-
-  /** Drop all memoized cluster label tables (unpersisting each). */
-  def clearClusterCache(): Unit = clusterMemo.clear(_.unpersist())
+    new graft.BoundedMemo[((String, String), String, Int), DataFrame](
+      16, "dup-cluster-labels", _.unpersist(blocking = false), _.unpersist(blocking = true))
 
   /** `maxIters` default raised 20 → 40 (r14): the ×30 rehearsal
     * measured a 15-round convergence on x34's threshold-0.3 regime
@@ -1380,15 +1335,8 @@ object Dedup {
     * higher ceiling costs nothing on shallow graphs. */
   def duplicateClusters(pairs: DataFrame, idACol: String, idBCol: String,
       maxIters: Int = 40): DataFrame = {
-    val key = (graft.SessionKeys.of(pairs.sparkSession),
-      graft.PlanKeys.of(pairs),
-      s"$idACol/$idBCol", maxIters)
-    clusterMemo.get(key).getOrElse {
-      val built = duplicateClustersUncached(pairs, idACol, idBCol, maxIters)
-      val winner = clusterMemo.putIfAbsent(key, built)
-      if (!(winner eq built)) built.unpersist(blocking = false)
-      winner
-    }
+    clusterMemo.getOrBuild((graft.PlanKeys.scoped(pairs), s"$idACol/$idBCol", maxIters))(
+      duplicateClustersUncached(pairs, idACol, idBCol, maxIters))
   }
 
   private def duplicateClustersUncached(pairs: DataFrame, idACol: String,
@@ -2439,13 +2387,10 @@ object Dedup {
     * edge list is the shared artifact of a curation session (x22
     * surfaces it, x34's dedup consumes it, x99's leakage-safe split
     * consumes it again); one banding+verify pass per (input, params),
-    * not one per consumer. Same caveats as candidateMemo. */
+    * not one per consumer. */
   private val embPairMemo =
-    new graft.BoundedMemo[(String, String, String, Double, Int, Int, Int), DataFrame](
-      16, _.unpersist(blocking = false), name = "embedding-near-dup")
-
-  /** Drop all memoized embedding pair tables (unpersisting each). */
-  def clearEmbeddingPairCache(): Unit = embPairMemo.clear(_.unpersist())
+    new graft.BoundedMemo[((String, String), String, Double, Int, Int, Int), DataFrame](
+      16, "embedding-near-dup", _.unpersist(blocking = false), _.unpersist(blocking = true))
 
   /** Embedding-cosine near-duplicate pairs: hyperplane-LSH buckets
     * bound the candidate set, exact cosine verifies.
@@ -2479,17 +2424,10 @@ object Dedup {
     // resolve BEFORE the memo lookup so an [[AutoBits]] call and the
     // equivalent explicit call share one pair table
     val bits = resolvedNumBits(df, numBits, bands)
-    val key = (graft.SessionKeys.of(df.sparkSession),
-      graft.PlanKeys.of(df),
+    val key = (graft.PlanKeys.scoped(df),
       s"$idCol/$vecCol", threshold, bits, bands, maxBucket)
-    // build OUTSIDE the memo lock (the ivfIndex pattern)
-    embPairMemo.get(key).getOrElse {
-      val built = embeddingNearDuplicatesUncached(
-        df, idCol, vecCol, threshold, bits, bands, maxBucket)
-      val winner = embPairMemo.putIfAbsent(key, built)
-      if (!(winner eq built)) built.unpersist(blocking = false)
-      winner
-    }
+    embPairMemo.getOrBuild(key)(embeddingNearDuplicatesUncached(
+      df, idCol, vecCol, threshold, bits, bands, maxBucket))
   }
 
   /** `numBits` resolution for the hyperplane-LSH entry points: an

@@ -99,11 +99,10 @@ object Joins {
   }
 
   /** Decision memo for [[vectorSideBroadcastable]] keyed by
-    * (session, plan, column, threshold): the gate runs at most one
+    * (session, input, column, threshold): the gate runs at most one
     * count job and one length-sum job per distinct vector frame. */
   private val gateMemo =
-    new graft.BoundedMemo[(String, String, String, Long), Boolean](
-      64, name = "bcast-gate")
+    new graft.BoundedMemo[((String, String), String, Long), Boolean](64, "bcast-gate")
 
   /** Bytes/row floor for the gate's bound: an UnsafeRow of
     * (long id, array<numeric>) is 8B null bits + 8B id + 8B array
@@ -138,12 +137,8 @@ object Joins {
     val threshold =
       df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
     if (threshold <= 0) false
-    else {
-      val key = (graft.SessionKeys.of(df.sparkSession),
-        graft.PlanKeys.of(df), vecCol, threshold)
-      gateMemo.get(key).getOrElse(
-        gateMemo.putIfAbsent(key, provablyUnder(df, vecCol, threshold)))
-    }
+    else gateMemo.getOrBuild((graft.PlanKeys.scoped(df), vecCol, threshold))(
+      provablyUnder(df, vecCol, threshold))
   }
 
   private def provablyUnder(df: DataFrame, vecCol: String,

@@ -167,22 +167,16 @@ object Similarity {
       idCol: String,
       vecCol: String)
 
-  /** Memo of built IVF indexes keyed by session identity + the
-    * semantic hash of the input plan + index parameters — repeated
-    * probes over the same corpus reuse one persisted assignments
-    * table instead of retraining per call (same pattern and caveats
-    * as [[Dedup.minhashCandidates]]'s candidate memo). */
-  // unpersist on eviction: Dataset.persist registers the plan in the
+  /** Memo of built IVF indexes keyed by session + input + index
+    * parameters — repeated probes over the same corpus reuse one
+    * persisted assignments table instead of retraining per call. */
+  // unpersist on release: Dataset.persist registers the plan in the
   // session CacheManager, which holds a strong reference until an
   // explicit unpersist — dropping only OUR reference would leak the
-  // corpus-sized assignment table for the session lifetime. The
-  // non-blocking unpersist is safe for a caller still probing the
-  // evicted index: Spark recomputes the assignments from lineage.
-  private val ivfMemo = new graft.BoundedMemo[(String, String, String, Int, Int, Int), IvfIndex](
-    8, _.assignments.unpersist(blocking = false), name = "ivf-index")
-
-  /** Drop all memoized IVF indexes (unpersisting each). */
-  def clearIvfCache(): Unit = ivfMemo.clear(_.assignments.unpersist())
+  // corpus-sized assignment table for the session lifetime.
+  private val ivfMemo = new graft.BoundedMemo[((String, String), String, Int, Int, Int), IvfIndex](
+    8, "ivf-index", _.assignments.unpersist(blocking = false),
+    _.assignments.unpersist(blocking = true))
 
   /** IVF list count for a corpus — the standard nlist ≈ √corpus
     * balance (a probe touches nprobe·corpus/nlist candidate rows plus
@@ -240,23 +234,8 @@ object Similarity {
     require(trainSample >= kk && trainSample <= MaxTrainSample,
       s"ivfIndex: trainSample=$trainSample outside [k, $MaxTrainSample] — " +
         "the training sample is collected to the driver")
-    val key = (graft.SessionKeys.of(df.sparkSession),
-      graft.PlanKeys.of(df),
-      s"$idCol/$vecCol", kk, iters, trainSample)
-    // build OUTSIDE the lock: holding it through the sample collect +
-    // assignment job would serialize unrelated concurrent builds.
-    // Worst case two threads race the same key and one build is
-    // discarded — cheaper than a global build mutex.
-    ivfMemo.get(key).getOrElse {
-      val built = ivfIndexUncached(df, idCol, vecCol, kk, iters, trainSample)
-      val winner = ivfMemo.putIfAbsent(key, built)
-      // the loser's persisted assignments must be explicitly released:
-      // CacheManager holds a strong reference until unpersist, so the
-      // discarded build would otherwise pin a corpus-sized cache for
-      // the session lifetime
-      if (!(winner eq built)) built.assignments.unpersist(blocking = false)
-      winner
-    }
+    ivfMemo.getOrBuild((graft.PlanKeys.scoped(df), s"$idCol/$vecCol", kk, iters, trainSample))(
+      ivfIndexUncached(df, idCol, vecCol, kk, iters, trainSample))
   }
 
   /** Persist a built [[IvfIndex]] for serving: the assignments table
@@ -888,8 +867,8 @@ object Similarity {
     * clustering) train once per session. Values are plain driver
     * arrays — nothing persisted, so the evict hook is a no-op. */
   private val kmeansMemo =
-    new graft.BoundedMemo[(String, String, String, Int, Int), Array[Array[Double]]](
-      16, name = "kmeans")
+    new graft.BoundedMemo[((String, String), String, Int, Int), Array[Array[Double]]](
+      16, "kmeans")
 
   /** Fully DISTRIBUTED Lloyd's k-means over an embedding column — the
     * full-corpus complement to [[ivfIndex]]'s driver-side sample
@@ -917,11 +896,8 @@ object Similarity {
     require(k >= 1 && k <= MaxTrainK,
       s"kmeansCentroids: k=$k outside [1, $MaxTrainK] — the per-round " +
         "cluster-mean aggregate collects k rows to the driver")
-    val key = (graft.SessionKeys.of(df.sparkSession),
-      graft.PlanKeys.of(df), s"$idCol/$vecCol", k, iters)
-    // training runs jobs: build outside the memo lock (ivfIndex rule)
-    kmeansMemo.get(key).getOrElse(
-      kmeansMemo.putIfAbsent(key, kmeansUncached(df, idCol, vecCol, k, iters)))
+    kmeansMemo.getOrBuild((graft.PlanKeys.scoped(df), s"$idCol/$vecCol", k, iters))(
+      kmeansUncached(df, idCol, vecCol, k, iters))
   }
 
   private def kmeansUncached(df: DataFrame, idCol: String, vecCol: String,
@@ -993,11 +969,11 @@ object Similarity {
       subCentroids: Map[Int, Array[Array[Double]]],
       k2: Int)
 
-  /** Memo of trained two-level models — driver arrays only, same
-    * shape and caveats as [[kmeansCentroids]]' memo. */
+  /** Memo of trained two-level models — driver arrays only, like
+    * [[kmeansCentroids]]' memo. */
   private val hierKmeansMemo =
-    new graft.BoundedMemo[(String, String, String, Int, Int, Int), HierKmeansModel](
-      8, name = "hier-kmeans")
+    new graft.BoundedMemo[((String, String), String, Int, Int, Int), HierKmeansModel](
+      8, "hier-kmeans")
 
   /** Train a two-level Lloyd model: flat top-level k-means, then ALL
     * per-top-cluster sub-clusterings trained together — each Lloyd
@@ -1021,10 +997,8 @@ object Similarity {
       s"hierarchicalKmeansModel: k1=$k1 outside [1, $MaxTrainK]")
     require(k2 >= 1 && k2 <= MaxTrainK,
       s"hierarchicalKmeansModel: k2=$k2 outside [1, $MaxTrainK]")
-    val key = (graft.SessionKeys.of(df.sparkSession), graft.PlanKeys.of(df),
-      s"$idCol/$vecCol", k1, k2, iters)
-    hierKmeansMemo.get(key).getOrElse(hierKmeansMemo.putIfAbsent(key,
-      hierKmeansUncached(df, idCol, vecCol, k1, k2, iters)))
+    hierKmeansMemo.getOrBuild((graft.PlanKeys.scoped(df), s"$idCol/$vecCol", k1, k2, iters))(
+      hierKmeansUncached(df, idCol, vecCol, k1, k2, iters))
   }
 
   private def hierKmeansUncached(df: DataFrame, idCol: String, vecCol: String,
@@ -1157,8 +1131,7 @@ object Similarity {
   }
 
   private val pqMemo =
-    new graft.BoundedMemo[(String, String, String, Int, Int, Int), PqModel](
-      16, name = "pq")
+    new graft.BoundedMemo[((String, String), String, Int, Int, Int), PqModel](16, "pq")
 
   /** Distributed product-quantization training (Jégou et al., "Product
     * Quantization for Nearest Neighbor Search", TPAMI 2011): split
@@ -1187,10 +1160,8 @@ object Similarity {
         "and the per-round code-mean aggregate are driver-resident")
     require(m >= 1 && m.toLong * k <= MaxTrainK.toLong * 16,
       s"pqTrain: m=$m × k=$k codebook entries exceed the driver contract")
-    val key = (graft.SessionKeys.of(df.sparkSession),
-      graft.PlanKeys.of(df), s"$idCol/$vecCol", m, k, iters)
-    pqMemo.get(key).getOrElse(
-      pqMemo.putIfAbsent(key, pqTrainUncached(df, idCol, vecCol, m, k, iters)))
+    pqMemo.getOrBuild((graft.PlanKeys.scoped(df), s"$idCol/$vecCol", m, k, iters))(
+      pqTrainUncached(df, idCol, vecCol, m, k, iters))
   }
 
   private def pqTrainUncached(df: DataFrame, idCol: String, vecCol: String,

@@ -753,21 +753,16 @@ object TextAnalysis {
       rules: Seq[(Int, String, String, Long)], segmentedVocab: DataFrame)
 
   private val bpeMemo =
-    new graft.BoundedMemo[(String, String, String, Int), BpeModel](
-      8, name = "bpe-rules")
+    new graft.BoundedMemo[((String, String), String, Int), BpeModel](8, "bpe-rules")
 
   /** [[bpeTrain]]'s training loop. Memoized per (session, input,
     * column, numMerges) — the train query and the encode query share
-    * one training run; built OUTSIDE the memo lock (the ivfIndex
-    * rule: real jobs never run under the monitor). The evicted
-    * model's localCheckpoint blocks are reclaimed by the
-    * ContextCleaner once unreferenced (no CacheManager entry). */
-  def bpeModel(df: DataFrame, textCol: String, numMerges: Int): BpeModel = {
-    val key = (graft.SessionKeys.of(df.sparkSession),
-      graft.PlanKeys.of(df), textCol, numMerges)
-    bpeMemo.get(key).getOrElse(
-      bpeMemo.putIfAbsent(key, bpeTrainUncached(df, textCol, numMerges)))
-  }
+    * one training run. The evicted model's localCheckpoint blocks
+    * are reclaimed by the ContextCleaner once unreferenced (no
+    * CacheManager entry). */
+  def bpeModel(df: DataFrame, textCol: String, numMerges: Int): BpeModel =
+    bpeMemo.getOrBuild((graft.PlanKeys.scoped(df), textCol, numMerges))(
+      bpeTrainUncached(df, textCol, numMerges))
 
   /** The learned rules alone (rank, lhs, rhs, cnt) — ≤numMerges rows;
     * collecting them is the point, not a hot-path collect. */

@@ -271,14 +271,6 @@ object Extensions extends QueryModule {
       // the completed run is memoized per (session, sfDir): the
       // micro-batch machinery executes once, repeat calls (bench,
       // verify re-reads) serve the settled memory-sink table
-      // build OUTSIDE the memo lock (the ivfIndex pattern): the run
-      // executes a full streaming query — under the monitor it would
-      // block every other memo user for the whole stream run. The
-      // query/sink name is UNIQUE PER ATTEMPT: two racing builders
-      // with one shared name would not be a benign duplicate — the
-      // second start() throws "query with that name is already
-      // active". Each attempt settles into its own memory-sink table;
-      // the losing table is just an orphaned temp view.
       settledStream(x16Results, s, dir, "x16_hourly") {
         graft.streaming.EventStreams.hourlyTypeCounts(
           graft.streaming.EventStreams.fromParquetDir(s, streamSrcDir(dir)))
@@ -329,40 +321,30 @@ object Extensions extends QueryModule {
       table: org.apache.spark.sql.DataFrame)
 
   private def dropSink(st: SettledStream): Unit =
-    try st.table.sparkSession.catalog.dropTempView(st.name)
-    catch { case _: Throwable => () }
+    st.table.sparkSession.catalog.dropTempView(st.name)
 
-  /** The shared memo discipline for completed streams (x16/x72/x79/
-    * x103): build OUTSIDE the memo lock (running a stream under the
-    * monitor would block every other memo user for the whole run;
-    * sink names are unique per attempt because a shared name makes
-    * the second start() throw), drop the loser's sink table on a
-    * putIfAbsent race, and let the memo's evict hook drop aged-out
-    * tables. */
+  /** A completed stream's memo (x16/x72/x79/x103), keyed per
+    * (session, sfDir): a settled table that ages out, loses a build
+    * race or is cleared has its sink view dropped. */
+  private def streamMemo(name: String) =
+    new graft.BoundedMemo[(String, String), SettledStream](8, name, dropSink, dropSink)
+
+  /** The memoized completed run of `build`. The query/sink name is
+    * unique per attempt: two racing builders sharing one name would
+    * make the second start() throw "query with that name is already
+    * active". */
   private def settledStream(
       memo: graft.BoundedMemo[(String, String), SettledStream],
       s: org.apache.spark.sql.SparkSession, dir: String,
       namePrefix: String)(
-      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val memoKey = (graft.SessionKeys.of(s), dir)
-    memo.get(memoKey).getOrElse {
+      build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    memo.getOrBuild((graft.SessionKeys.of(s), dir)) {
       val attempt =
         s"${namePrefix}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-      val built = SettledStream(attempt,
-        graft.streaming.EventStreams.runToMemory(s, build, attempt))
-      val winner = memo.putIfAbsent(memoKey, built)
-      if (!(winner eq built)) dropSink(built)
-      winner
+      SettledStream(attempt, graft.streaming.EventStreams.runToMemory(s, build, attempt))
     }.table
-  }
 
-  /** Completed streaming results per (session, sfDir) — see x16.
-    * Keyed on the session UUID (identity hashes collide across a JVM
-    * lifetime), bounded so dead sessions' tables age out — and now
-    * actually RELEASED on the way out via the [[dropSink]] hook. */
-  private val x16Results =
-    new graft.BoundedMemo[(String, String), SettledStream](
-      8, dropSink, name = "x16-stream")
+  private val x16Results = streamMemo("x16-stream")
 
   /** Embedding near-dup over the FULL corpus via hyperplane-LSH
     * banding — the scale path behind x7's bounded exact baseline:
@@ -545,18 +527,13 @@ object Extensions extends QueryModule {
     * one cluster even though (A, C) never paired. */
   /** Clusters over x7's exact pair set, memoized per (session, dir):
     * the iterative propagation runs once, x28 and x29 both read it.
-    * Session-UUID keyed + bounded, like [[x16Results]]. */
+    * The labels frame is a localCheckpoint (RDD blocks, no
+    * CacheManager entry), reclaimed by the ContextCleaner once
+    * dropped — nothing to release. */
   private val clusterMemo =
-    new graft.BoundedMemo[(String, String), org.apache.spark.sql.DataFrame](
-      8, name = "dup-clusters")
-  // build OUTSIDE the memo lock (the ivfIndex pattern): the
-  // propagation loop runs a count() job per round — real jobs must
-  // never run under the memo monitor. A racing loser's labels frame is
-  // a localCheckpoint (RDD blocks, no CacheManager entry) reclaimed by
-  // the ContextCleaner once the loser is dropped.
-  private def dupClustersFor(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    val memoKey = (graft.SessionKeys.of(s), dir)
-    clusterMemo.get(memoKey).getOrElse {
+    new graft.BoundedMemo[(String, String), org.apache.spark.sql.DataFrame](8, "dup-clusters")
+  private def dupClustersFor(s: org.apache.spark.sql.SparkSession, dir: String) =
+    clusterMemo.getOrBuild((graft.SessionKeys.of(s), dir)) {
       val emb = Tables.embeddings(s, dir).filter(col("vec_id") < 200)
         .select(col("vec_id"), col("embedding"))
       val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("vec_a"))
@@ -566,9 +543,8 @@ object Extensions extends QueryModule {
           round(graft.functions.VectorMath.cosineSimilarity(col("vec_a"), col("vec_b")), 4))
         .filter(col("cosine") >= 0.3)
         .select(col("id_a"), col("id_b"))
-      clusterMemo.putIfAbsent(memoKey, Dedup.duplicateClusters(pairs, "id_a", "id_b"))
+      Dedup.duplicateClusters(pairs, "id_a", "id_b")
     }
-  }
 
   private val x28DupClusters = GraftQuery(
     "x28_dup_clusters",
@@ -2047,12 +2023,7 @@ object Extensions extends QueryModule {
       ORDER BY n DESC, subword
       LIMIT 20"""))
 
-  /** Completed streaming-session results per (session, sfDir) — the
-    * x16 memo pattern (unique attempt names, build outside the
-    * lock). */
-  private val x72Results =
-    new graft.BoundedMemo[(String, String), SettledStream](
-      8, dropSink, name = "x72-stream")
+  private val x72Results = streamMemo("x72-stream")
 
   /** STREAMING sessionization ([[graft.streaming.EventStreams.sessionizedStats]]):
     * watermarked `session_window` run to completion over the staged
@@ -2341,13 +2312,7 @@ object Extensions extends QueryModule {
         "events.parquet" -> "events.parquet",
         "events.parquet" -> "events_replay.parquet"))
 
-  /** Completed x79 streaming results per (session, sfDir) — same
-    * memo discipline as x16/x72 (build outside the lock via
-    * get/putIfAbsent; running a stream under a memo monitor is the
-    * anti-pattern ADVICE r4 flagged). */
-  private val x79Results =
-    new graft.BoundedMemo[(String, String), SettledStream](
-      8, dropSink, name = "x79-stream")
+  private val x79Results = streamMemo("x79-stream")
 
   /** Streaming exact dedup
     * ([[graft.streaming.EventStreams.dedupWithinWatermark]]): the
@@ -3009,11 +2974,7 @@ object Extensions extends QueryModule {
       FROM wt QUALIFY cum_tokens <= 1500
       ORDER BY lang, doc_id"""))
 
-  /** Completed streaming-curation results per (session, sfDir) —
-    * the x16/x72 memo pattern. */
-  private val x103Results =
-    new graft.BoundedMemo[(String, String), SettledStream](
-      8, dropSink, name = "x103-stream")
+  private val x103Results = streamMemo("x103-stream")
   private val docStreamDirs =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def docStreamSrcDir(sfDir: String): String =
@@ -6612,6 +6573,32 @@ object Extensions extends QueryModule {
     * the survivors → per (lang, fold) volume/token report. Every
     * stage is an already-hash-green fragment; the chain proves they
     * compose without re-keying drift. */
+  /** x192's evasion-resistant keep-first: the min-id doc of each
+    * skeleton-fingerprint group.
+    *
+    * r21: semi-join on the WINNER IDS alone. doc_id is unique (the
+    * corpus id contract), so id ∈ {min(doc_id) per fp} ≡ the
+    * exactKeepFirst (fp, id) membership — but the (fp, doc_id) form
+    * forced the probe side to re-evaluate the skeleton fingerprint,
+    * and `survivors` feeds TWO subplans, so the translate+regexp+md5
+    * pipeline ran 3× over the corpus (plan audit,
+    * plans/r21/x192_curation_v2_audit.txt nodes 4/10/27). Id-only
+    * keeps it to the ONE evaluation under `keep`.
+    *
+    * A NULL text has a NULL fingerprint in the oracle (md5 of a NULL
+    * list), and its null-unsafe `s.fp = k.fp` drops the doc. Spark's
+    * fingerprint of a NULL text is md5("") — concat_ws skips the NULL
+    * token array — so the NULL fingerprints are the NULL texts, and
+    * those are filtered before the keep-first. */
+  private[graft] def x192Survivors(
+      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val keep = docs.filter(col("text").isNotNull)
+      .withColumn("fp",
+        TextAnalysis.fingerprint(TextAnalysis.confusableSkeleton(col("text"))))
+      .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
+    docs.join(keep.select(col("doc_id")).hint("shuffle_hash"), Seq("doc_id"), "left_semi")
+  }
+
   private val x192CurationV2 = {
     val from = TextAnalysis.ConfusablesFrom
     val to = TextAnalysis.ConfusablesTo
@@ -6620,20 +6607,7 @@ object Extensions extends QueryModule {
     "x192_curation_v2",
     (s, dir) => {
       val docs = Tables.documents(s, dir)
-      val withFp = docs.withColumn("fp",
-        TextAnalysis.fingerprint(TextAnalysis.confusableSkeleton(col("text"))))
-      // r21: semi-join on the WINNER IDS alone. doc_id is unique (the
-      // corpus id contract), so id ∈ {min(doc_id) per fp} ≡ the
-      // exactKeepFirst (fp, id) membership — but the (fp, doc_id)
-      // form forced the probe side to re-evaluate the skeleton
-      // fingerprint, and `survivors` feeds TWO subplans, so the
-      // translate+regexp+md5 pipeline ran 3× over the corpus (plan
-      // audit, plans/r21/x192_curation_v2_audit.txt nodes 4/10/27).
-      // Id-only keeps it to the ONE evaluation under `keep`.
-      val keep = withFp.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-      val survivors = docs
-        .join(keep.select(col("doc_id")).hint("shuffle_hash"),
-          Seq("doc_id"), "left_semi")
+      val survivors = x192Survivors(docs)
       val scores = TextAnalysis.knLogProb(
         docs.filter(col("doc_id") % 2 === 0), survivors, "doc_id", "text")
       val gated = survivors

@@ -318,8 +318,9 @@ class BenchSpec extends AnyFunSuite {
 
   test("drift gates on the JIT-trivial scalar pair when present (r16 glide fix)") {
     // the r16 signature: Spark calib_wall pre 0.37 / post 0.22 (a
-    // 40% "drift" that is codegen warmup — CalibProbe measured the
-    // glide 0.40 → 0.19 s over 100 executions on an idle VM) while
+    // 40% "drift" that is codegen warmup — 5-rep medians of the calib
+    // workload glided 0.40 → 0.19 s over 100 executions on an idle
+    // VM) while
     // the scalar pair is flat — must gate GREEN on the scalar signal
     val quiet = Seq(
       Bench.QStat("q1_agg", 2.0, 6.0, 0.1, 3),

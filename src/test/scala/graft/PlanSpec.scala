@@ -428,7 +428,7 @@ class PlanSpec extends AnyFunSuite {
     // projection re-executes per side — read off the executed plan,
     // r13), so the gram table is persisted and both pair-side joins
     // must plan as InMemoryTableScans of it.
-    graft.ops.Dedup.clearGramsCache()
+    graft.BoundedMemo.clearAll()
     val docs = Tables.documents(spark, sfDir)
     val out = graft.ops.Dedup.ngramJaccardNearDuplicates(
       docs, "doc_id", "text", threshold = 0.2)

@@ -77,6 +77,20 @@ class BroadcastGateSpec extends AnyFunSuite {
     }
   }
 
+  test("an append under the same path re-proves the gate with no clear") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_gate_spec")
+      .resolve("v.parquet").toString
+    withThreshold("8192") {
+      vecFrame.write.parquet(dir)
+      // 24 rows × (64 B + 8 floats × 4 B) × 2 safety = 4608 B ≤ 8192
+      assert(Joins.vectorSideBroadcastable(spark.read.parquet(dir), "embedding"))
+      vecRows.map { case (i, v) => (i + 1000L, v) }.toDF("vec_id", "embedding")
+        .write.mode("append").parquet(dir)
+      // 48 rows: 9216 B > 8192 — the grown store must not broadcast
+      assert(!Joins.vectorSideBroadcastable(spark.read.parquet(dir), "embedding"))
+    }
+  }
+
   test("unknown vector element layout never broadcasts") {
     val strs = Seq((1L, Seq("a", "b"))).toDF("id", "toks")
     assert(!Joins.vectorSideBroadcastable(strs, "toks"))

@@ -220,7 +220,7 @@ class OpsSpec extends AnyFunSuite {
       "standard legal boilerplate footer text repeated verbatim across the crawl"))
     val mixed = (docs.as[(Long, String)].collect().toSeq ++ boiler)
       .toDF("doc_id", "text")
-    Dedup.clearCandidateCache()
+    graft.BoundedMemo.clearAll()
     val capped = Dedup.minhashCandidates(mixed, "doc_id", "text", maxBucket = 10)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     // beyond the cap the bucket emits STAR pairs: 29 hub edges, not
@@ -238,13 +238,13 @@ class OpsSpec extends AnyFunSuite {
     assert(survivors.count(_ >= 100L) == 1, s"mega-cluster survivors: $survivors")
     // pairs in healthy (below-cap) buckets are untouched by the cap
     assert(capped.contains((1L, 4L)) && capped.contains((1L, 2L)))
-    Dedup.clearCandidateCache()
+    graft.BoundedMemo.clearAll()
     val uncapped = Dedup.minhashCandidates(mixed, "doc_id", "text")
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(uncapped.filter { case (a, b) => a < 100L && b < 100L }
       == capped.filter { case (a, b) => a < 100L && b < 100L })
     assert(uncapped.count { case (a, b) => a >= 100L && b >= 100L } == 435)
-    Dedup.clearCandidateCache()
+    graft.BoundedMemo.clearAll()
   }
 
   test("hard negatives lsh: membership cap is a no-op above bucket sizes, valid output below") {
@@ -500,7 +500,7 @@ class OpsSpec extends AnyFunSuite {
     }
     // equivalence with the full-corpus run, restricted to pairs that
     // touch the batch (same seeds => identical candidates + estimates)
-    Dedup.clearCandidateCache()
+    graft.BoundedMemo.clearAll()
     val full = Dedup.minhashNearDuplicates(docs.unionByName(
       batch.filter(col("doc_id") === 6L)), "doc_id", "text", threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -564,7 +564,7 @@ class OpsSpec extends AnyFunSuite {
       if (src == "corpus") assert(d >= 100, s"bad corpus dup: $d")
       else assert(d < 100 && b < d, s"bad batch pair: ($b,$d)")
     }
-    Dedup.clearEmbeddingPairCache()
+    graft.BoundedMemo.clearAll()
     val full = Dedup.embeddingNearDuplicates(emb, "vec_id", "embedding",
       threshold = 0.4, numBits = 48, bands = 8, maxBucket = 1000000)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -1639,28 +1639,24 @@ class OpsSpec extends AnyFunSuite {
       s"survivor algebra removed ids with no verified pair: ${removed diff paired}")
   }
 
-  test("CorpusCounts: memoized per plan (path-keyed), clear() recounts, empty floors at 1") {
-    // the r14-advice memo all auto-sizing sentinels share — its
-    // documented caveat IS the observable: a parquet scan is keyed by
-    // PATH, so overwriting the files leaves the memoized count stale
-    // until clear() (mirrors candidateMemo's contract)
+  test("CorpusCounts: memoized per input files, overwrite re-counts, empty floors at 1") {
+    // the r14-advice memo all auto-sizing sentinels share: a re-read
+    // of unchanged files serves the memo, and an overwrite under the
+    // same PATH changes the files in the key, so it re-counts with no
+    // clear call
     val dir = java.nio.file.Files.createTempDirectory("graft_cc_spec")
       .resolve("t.parquet").toString
     spark.range(10).toDF("id").write.mode("overwrite").parquet(dir)
-    graft.CorpusCounts.clear()
-    val fresh = spark.read.parquet(dir)
-    assert(graft.CorpusCounts.of(fresh) == 10L)
+    assert(graft.CorpusCounts.of(spark.read.parquet(dir)) == 10L)
+    val (again, err) = graft.MemosSpec.stderrOf(graft.CorpusCounts.of(spark.read.parquet(dir)))
+    assert(again == 10L && err.contains("[memo] corpus-count hit key="),
+      s"a re-read of unchanged files must serve the memoized count:\n$err")
     spark.range(20).toDF("id").write.mode("overwrite").parquet(dir)
-    assert(graft.CorpusCounts.of(spark.read.parquet(dir)) == 10L,
-      "second call must serve the memoized count, not re-count")
-    graft.CorpusCounts.clear()
     assert(graft.CorpusCounts.of(spark.read.parquet(dir)) == 20L,
-      "clear() must force a recount")
+      "an overwrite must re-count")
     // sizing formulas divide/log by the count — empty frames floor at 1
     import spark.implicits._
-    graft.CorpusCounts.clear()
     assert(graft.CorpusCounts.of(Seq.empty[Long].toDF("id")) == 1L)
-    graft.CorpusCounts.clear()
   }
 
   test("AutoBits sizes the LSH width from the corpus — the measured defense by default") {
@@ -4154,6 +4150,21 @@ class OpsSpec extends AnyFunSuite {
       "doc_id", "text").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2)))).toMap
     assert(again == got)
+  }
+
+  test("x192 keep-first: a NULL-text doc never survives, as in the oracle's null-unsafe fp join") {
+    val withNull = Seq[(Long, String)](
+      (1L, null),                          // lowest id: would win a NULL/empty group
+      (2L, "hello world"), (3L, "world hello"), // one fingerprint group
+      (4L, "")).toDF("doc_id", "text")
+    // Spark fingerprints a NULL text as md5("") — the same group as the
+    // empty doc — so the keep-first must drop NULL texts itself
+    assert(withNull.filter(col("doc_id") === 1L)
+      .select(TextAnalysis.fingerprint(TextAnalysis.confusableSkeleton(col("text"))))
+      .head().getString(0) != null)
+    val survivors = graft.queries.Extensions.x192Survivors(withNull)
+      .select("doc_id").as[Long].collect().toSet
+    assert(survivors == Set(2L, 4L))
   }
 
   test("evasion audit: planted homoglyph and zero-width dupes collapse, clean corpus zeros") {
