@@ -1,5 +1,6 @@
 package graft.etl
 
+import graft.ops.Concurrency
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Parquet sinks for the star schema (reference spark_elt_emr.py
@@ -11,57 +12,52 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * `usertype`,`birth_year`, the rest unpartitioned overwrites.
   *
   * Improvement over the reference's blind append (SURVEY §4): with
-  * `idempotent=true` we switch `partitionOverwriteMode=dynamic` and
-  * SaveMode.Overwrite, so re-running a month replaces exactly its
-  * `year=/month=` partitions instead of double-appending — the
-  * at-least-once duplicate risk the reference carries. At 100 TB a
-  * re-run that appends duplicates is unrecoverable without a full
-  * rewrite; dynamic overwrite makes month re-runs idempotent for the
-  * cost of the partitions touched.
-  */
+  * `idempotent=true` the fact and time writes use SaveMode.Overwrite
+  * with a per-write `partitionOverwriteMode=dynamic` option, so
+  * re-running a month replaces exactly its `year=/month=` partitions
+  * instead of double-appending — the at-least-once duplicate risk the
+  * reference carries. At 100 TB a re-run that appends duplicates is
+  * unrecoverable without a full rewrite; dynamic overwrite makes month
+  * re-runs idempotent for the cost of the partitions touched. The
+  * session's SQL conf is never touched.
+  *
+  * The seven writes are independent (same plans, disjoint paths), so
+  * they overlap through [[Concurrency.awaitAll]] (cap 4, longest
+  * first) instead of running one after another: each write is a short,
+  * driver-paced job of 1-4 tasks that would otherwise leave the cores
+  * idle. Failure semantics: the first failing write's error is
+  * rethrown and the sibling writes still running are cancelled, but
+  * tables that finished before the failure have already landed — an
+  * idempotent re-run replaces them. */
 object StarSchemaWriter {
 
   def writeAll(spark: SparkSession, staging: Staging, outputDir: String,
       idempotent: Boolean = false, maintainDims: Boolean = false): Unit = {
+    def path(name: String) = s"$outputDir/$name.parquet"
+    // strict map: the maintained dims' eager checkpoints finish before any write starts
     val tables = StarSchema.buildAll(staging)
       .map { case (name, df) =>
-        name -> (if (maintainDims) mergedWithExisting(spark, name, df, s"$outputDir/$name.parquet") else df)
+        name -> (if (maintainDims) mergedWithExisting(spark, name, df, path(name)) else df)
       }
-    val overwriteModeKey = "spark.sql.sources.partitionOverwriteMode"
-    val previousMode = spark.conf.getOption(overwriteModeKey)
-    val incrementalMode =
-      if (idempotent) {
-        spark.conf.set(overwriteModeKey, "dynamic")
-        SaveMode.Overwrite
-      } else SaveMode.Append
-
-    def path(name: String) = s"$outputDir/$name.parquet"
-
-    try {
-      tables("bikeshare_fact_table").write
-        .partitionBy("year", "month").mode(incrementalMode)
-        .parquet(path("bikeshare_fact_table"))
-      tables("dim_time_table").write
-        .partitionBy("year", "month").mode(incrementalMode)
-        .parquet(path("dim_time_table"))
-      // the user dim is a full overwrite regardless of mode — pin
-      // static overwrite so a prior idempotent run's dynamic setting
-      // can't leave stale (usertype, birth_year) partitions behind
+    // the dynamic option only acts under Overwrite, i.e. idempotent runs
+    def monthly(name: String): () => Unit = () =>
+      tables(name).write.option("partitionOverwriteMode", "dynamic")
+        .partitionBy("year", "month")
+        .mode(if (idempotent) SaveMode.Overwrite else SaveMode.Append)
+        .parquet(path(name))
+    // the user dim is a full overwrite regardless of mode — pin static
+    // overwrite so a session preset to dynamic can't leave stale
+    // (usertype, birth_year) partitions behind
+    val userDim: () => Unit = () =>
       tables("dim_user_agg_table").write
         .option("partitionOverwriteMode", "static")
         .partitionBy("usertype", "birth_year").mode(SaveMode.Overwrite)
         .parquet(path("dim_user_agg_table"))
-      Seq("dim_bike_table", "dim_covid_table", "dim_weather_table", "dim_station")
-        .foreach { name =>
-          tables(name).write.mode(SaveMode.Overwrite).parquet(path(name))
-        }
-    } finally {
-      // don't leak the session-wide overwrite mode to later writers
-      if (idempotent) previousMode match {
-        case Some(v) => spark.conf.set(overwriteModeKey, v)
-        case None => spark.conf.unset(overwriteModeKey)
-      }
-    }
+    val smallDims = Seq("dim_bike_table", "dim_covid_table", "dim_weather_table", "dim_station")
+      .map(name => () => tables(name).write.mode(SaveMode.Overwrite).parquet(path(name)))
+    // longest first, so the long fact and user-dim writes start at once
+    Concurrency.awaitAll(spark, "star-schema-writes")(
+      Seq(monthly("bikeshare_fact_table"), userDim, monthly("dim_time_table")) ++ smallDims)
   }
 
   /** Dim maintenance (beyond-parity fix): the reference cleans

@@ -33,8 +33,7 @@ object Concurrency {
     if (chains.length == 1) return Seq(chains.head())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(chains.length, maxConcurrency))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
     val sc = spark.sparkContext
     val group = s"graft-$label-${System.nanoTime()}"
     try {
@@ -43,10 +42,13 @@ object Concurrency {
           sc.setJobGroup(group, s"$label chain $i",
             interruptOnCancel = true)
           try chain() finally sc.clearJobGroup()
-        }
+        }(ec)
       }
+      // combine on the completing thread: after a failure the pool is
+      // shut down and would reject the combinator's callbacks
       scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futures),
+        scala.concurrent.Future.sequence(futures)(implicitly,
+          scala.concurrent.ExecutionContext.parasitic),
         scala.concurrent.duration.Duration.Inf)
     } finally {
       // no-op on success (the group already finished); on failure it

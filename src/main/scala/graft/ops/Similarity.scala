@@ -525,74 +525,33 @@ object Similarity {
         // the driver, so a sequential loop leaves the 32 cores idle
         // between one shard's rounds (the r16 ShardRehearsal localized
         // the residual sharded/flat gap to exactly this S× per-job
-        // fixed overhead). Submitting the builds from a small thread
-        // pool overlaps those driver phases; concurrency is capped at
-        // 4, not `shards`, because each concurrent build holds a
-        // driver-resident (≤ MaxTrainK × dims) centroid model plus an
-        // in-flight training collect — the cap bounds driver memory at
-        // 4 models regardless of the clamp-driven shard count.
+        // fixed overhead). Concurrency.awaitAll overlaps those driver
+        // phases; its default cap of 4, not `shards`, matters because
+        // each concurrent build holds a driver-resident (≤ MaxTrainK ×
+        // dims) centroid model plus an in-flight training collect.
         // Measured (ShardRehearsal ×8 = 4 shards, r17, medians of 3):
         // sharded wall 2.5 → 1.2 s (flat 0.7 — the residual is the
         // split build + the count barriers, fixed latency not data
         // work) and sharded CPU/vector reached flat parity
         // (0.315 vs 0.323; sequential r16 read 0.554) — probe-merge
         // ≡ flat ≡ exact stays spec-pinned at every rehearsal corpus.
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(shards, 4))
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        val sc = split.sparkSession.sparkContext
-        val group = s"graft-ivf-shards-${System.nanoTime()}"
-        try {
-          val futures = (0 until shards).map { s =>
-            scala.concurrent.Future {
-              // job group is thread-local: every job this build
-              // submits lands in `group`, so the failure path below
-              // can CANCEL them (interrupting the pool thread alone
-              // does not stop an already-submitted Spark job — the
-              // DAGScheduler keeps running its stages, r17 review)
-              sc.setJobGroup(group, s"ivf shard $s build",
-                interruptOnCancel = true)
-              try {
-                val idx = ivfIndex(
-                  split.filter(col("__shard") === s).drop("__shard"),
-                  idCol, vecCol, k, iters, trainSample)
-                // materialize THIS shard's (persisted) assignments off
-                // the split cache before the split is released — the
-                // assignment plans are lazy and would otherwise
-                // re-read the source at first probe
-                idx.assignments.count()
-                idx
-              } finally sc.clearJobGroup()
-            }
-          }
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(futures),
-            scala.concurrent.duration.Duration.Inf).toIndexedSeq
-        } finally {
-          // on a failed build, SIBLING shard builds are still running:
-          // letting them continue against a just-unpersisted split
-          // would recompute it from the SOURCE per access — the exact
-          // 2S-scan regression the split exists to prevent (r17
-          // review). Cancel their JOBS (not just their threads), then
-          // drain the pool, then release the split; on the success
-          // path the group is already finished and this is a no-op.
-          sc.cancelJobGroup(group)
-          pool.shutdownNow()
-          val drained = pool.awaitTermination(
-            120, java.util.concurrent.TimeUnit.SECONDS)
-          // a straggler that survives the interrupt past the bound
-          // races the unpersist below and recomputes the split from
-          // SOURCE per access — name the cause loudly so a later
-          // rehearsal's source-rescan regression is attributable
-          // (r17 advice: the timeout expiry was silent)
-          if (!drained)
-            System.err.println("[similarity] WARNING: ivfIndexSharded " +
-              "pool did not drain within 120s after cancellation — a " +
-              "straggler shard build may recompute the unpersisted " +
-              "split from source (expect a source-rescan regression)")
-          split.unpersist(blocking = false)
-        }
+        // The split is released only after awaitAll has cancelled and
+        // drained every sibling build: a build still running against
+        // an unpersisted split would recompute it from the SOURCE per
+        // access — the 2S-scan regression the split exists to prevent.
+        try Concurrency.awaitAll(split.sparkSession, "ivf-shards")(
+          (0 until shards).map { s => () =>
+            val idx = ivfIndex(
+              split.filter(col("__shard") === s).drop("__shard"),
+              idCol, vecCol, k, iters, trainSample)
+            // materialize THIS shard's (persisted) assignments off the
+            // split cache before the split is released — the
+            // assignment plans are lazy and would otherwise re-read
+            // the source at first probe
+            idx.assignments.count()
+            idx
+          }).toIndexedSeq
+        finally split.unpersist(blocking = false)
       }
     ShardedIvfIndex(idxs, shards, idCol, vecCol)
   }

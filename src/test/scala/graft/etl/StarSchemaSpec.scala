@@ -189,20 +189,20 @@ class StarSchemaSpec extends AnyFunSuite {
     }
   }
 
-  test("monthly incremental: append accumulates months; idempotent re-run replaces only its month") {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+  /** A February input: the fixtures' dims plus two new trips. */
+  private lazy val febIn: String = {
+    import java.nio.file.{Paths, StandardCopyOption}
     import scala.jdk.CollectionConverters._
-    // stage a February input: same dims, two new trips
-    val febIn = Files.createTempDirectory("graft_feb").toString
+    val dir = Files.createTempDirectory("graft_feb").toString
     for (sub <- Seq("weathers", "stations", "covids")) {
-      Files.createDirectories(Paths.get(s"$febIn/$sub"))
+      Files.createDirectories(Paths.get(s"$dir/$sub"))
       val listing = Files.list(Paths.get(s"$fixtures/$sub"))
       try listing.iterator().asScala.foreach { f =>
-        Files.copy(f, Paths.get(s"$febIn/$sub/${f.getFileName}"),
+        Files.copy(f, Paths.get(s"$dir/$sub/${f.getFileName}"),
           StandardCopyOption.REPLACE_EXISTING)
       } finally listing.close()
     }
-    Files.createDirectories(Paths.get(s"$febIn/events"))
+    Files.createDirectories(Paths.get(s"$dir/events"))
     val febCsv =
       "tripduration,starttime,stoptime,start station id,start station name," +
         "start station latitude,start station longitude,end station id," +
@@ -211,9 +211,12 @@ class StarSchemaSpec extends AnyFunSuite {
         "300,2020-02-01 09:00:00.0000,,72,st 72,40.7,-74.0,79,st 79,40.8,-73.9,30001,Subscriber,1980,1\n" +
         "400,2020-02-02 10:00:00.0000,,79,st 79,40.7,-74.0,72,st 72,40.8,-73.9,30002,Customer,1991,2\n"
     val gz = new java.util.zip.GZIPOutputStream(
-      Files.newOutputStream(Paths.get(s"$febIn/events/202002-citibike-tripdata.csv.gz")))
+      Files.newOutputStream(Paths.get(s"$dir/events/202002-citibike-tripdata.csv.gz")))
     gz.write(febCsv.getBytes("UTF-8")); gz.close()
+    dir
+  }
 
+  test("monthly incremental: append accumulates months; idempotent re-run replaces only its month") {
     val out = Files.createTempDirectory("graft_elt_months").toString
     StarSchemaWriter.runElt(spark, fixtures, out, idempotent = true)  // January
     StarSchemaWriter.runElt(spark, febIn, out, idempotent = true)     // February
@@ -253,5 +256,57 @@ class StarSchemaSpec extends AnyFunSuite {
     StarSchemaWriter.runElt(spark, febIn, out2, idempotent = true, maintainDims = true)
     assert(spark.read.parquet(s"$out2/dim_bike_table.parquet").count() == 5)
     assert(spark.read.parquet(s"$out2/bikeshare_fact_table.parquet").count() == 10)
+  }
+
+  test("writes leave the session's partitionOverwriteMode as they found it") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    // getAll lists only explicitly set keys (getOption would report the default)
+    def setMode = spark.conf.getAll.get(key)
+    spark.conf.unset(key)
+    StarSchemaWriter.runElt(spark, fixtures,
+      Files.createTempDirectory("graft_elt_conf").toString, idempotent = true)
+    assert(setMode.isEmpty, "an unset conf must stay unset")
+
+    spark.conf.set(key, "static")
+    try {
+      val out = Files.createTempDirectory("graft_elt_static").toString
+      StarSchemaWriter.runElt(spark, fixtures, out, idempotent = true) // January
+      StarSchemaWriter.runElt(spark, febIn, out, idempotent = true)    // February
+      StarSchemaWriter.runElt(spark, febIn, out, idempotent = true)    // February again
+      assert(setMode.contains("static"))
+      val fact = spark.read.parquet(s"$out/bikeshare_fact_table.parquet")
+      assert(fact.filter(col("month") === 1).count() == 8,
+        "a static session must not turn the Feb re-run into a full overwrite")
+      assert(fact.filter(col("month") === 2).count() == 2)
+    } finally spark.conf.unset(key)
+  }
+
+  test("every written table equals its buildAll frame as a multiset, append and idempotent") {
+    val built = StarSchema.buildAll(staging)
+    def assertWritten(out: String, mode: String): Unit =
+      for ((name, df) <- built) {
+        // partition columns come back re-inferred and last: align by name and type
+        val back = spark.read.parquet(s"$out/$name.parquet")
+          .select(df.schema.fields.map(f => col(f.name).cast(f.dataType)).toIndexedSeq: _*)
+        assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty,
+          s"$mode: $name differs from its built frame")
+      }
+    val out = Files.createTempDirectory("graft_elt_witness").toString
+    StarSchemaWriter.writeAll(spark, staging, out)
+    assertWritten(out, "append")
+    // the idempotent re-run over the same output replaces, never doubles
+    StarSchemaWriter.writeAll(spark, staging, out, idempotent = true)
+    assertWritten(out, "idempotent")
+  }
+
+  test("a failing table write is rethrown, not swallowed") {
+    val out = Files.createTempDirectory("graft_elt_fail").toString
+    val blocker = java.nio.file.Paths.get(s"$out/bikeshare_fact_table.parquet")
+    Files.write(blocker, "not a directory".getBytes("UTF-8"))
+    val thrown = intercept[Exception](StarSchemaWriter.writeAll(spark, staging, out))
+    val chain = Iterator.iterate[Throwable](thrown)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(e => String.valueOf(e.getMessage).contains("bikeshare_fact_table.parquet")),
+      s"unexpected failure: $thrown")
+    assert(Files.isRegularFile(blocker))
   }
 }
