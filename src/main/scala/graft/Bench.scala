@@ -311,36 +311,54 @@ object Bench {
     * in BENCH_DETAIL.json. */
   val StdoutBudget = 1800
 
-  /** Shared per-query stage-metrics harness (Bench / ScaleBench /
-    * ScaleProbe): ONE stage listener over shared LongAdders plus the
-    * reflective listenerBus drain, extracted so any fix to metric
-    * attribution lands in every runner at once — three divergent
-    * copies would let rehearsal numbers drift from bench numbers for
-    * reasons invisible in the JSON. `listenerBus` is private[spark]
-    * (= public bytecode): drained via reflection after each query so
-    * stage metrics attribute to the query that ran them; a fixed
-    * sleep would cost runs×200 ms. Call [[remove]] when done — a
-    * leaked listener keeps feeding the adders of a later harness. */
+  /** One completed stage: id, task count, executor run time (ms),
+    * executor CPU (ns), and the first line of its name. */
+  final case class StageRow(id: Int, tasks: Int, runMs: Long, cpuNs: Long,
+      name: String)
+
+  /** Shared per-query stage-metrics harness (Bench, ScaleBench,
+    * ScaleProbe, the rehearsals, ProfileQuery): ONE stage listener over
+    * shared LongAdders plus the reflective listenerBus drain, extracted
+    * so any fix to metric attribution lands in every runner at once —
+    * divergent copies would let rehearsal numbers drift from bench
+    * numbers for reasons invisible in the JSON. `listenerBus` is
+    * private[spark] (= public bytecode): drained via reflection after
+    * each query so stage metrics attribute to the query that ran them;
+    * a fixed sleep would cost runs×200 ms and still let a late event
+    * land in the next query. Call [[remove]] when done — a leaked
+    * listener keeps feeding the adders of a later harness. */
   private[graft] final class StageMetrics(spark: SparkSession) {
     val cpuNs = new java.util.concurrent.atomic.LongAdder
     val runMs = new java.util.concurrent.atomic.LongAdder
+    val gcMs = new java.util.concurrent.atomic.LongAdder
     val stages = new java.util.concurrent.atomic.LongAdder
-    val shufBytes = new java.util.concurrent.atomic.LongAdder
+    val shufRead = new java.util.concurrent.atomic.LongAdder
+    val shufWrite = new java.util.concurrent.atomic.LongAdder
+    val spilled = new java.util.concurrent.atomic.LongAdder
+    val stageRows = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]
     private val listener = new org.apache.spark.scheduler.SparkListener {
       override def onStageCompleted(
           e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
         val m = e.stageInfo.taskMetrics
         if (m != null) {
           cpuNs.add(m.executorCpuTime); runMs.add(m.executorRunTime)
-          shufBytes.add(m.shuffleReadMetrics.totalBytesRead)
-          shufBytes.add(m.shuffleWriteMetrics.bytesWritten)
+          gcMs.add(m.jvmGCTime)
+          shufRead.add(m.shuffleReadMetrics.totalBytesRead)
+          shufWrite.add(m.shuffleWriteMetrics.bytesWritten)
+          spilled.add(m.memoryBytesSpilled + m.diskBytesSpilled)
           stages.increment()
+          stageRows.add(StageRow(e.stageInfo.stageId, e.stageInfo.numTasks,
+            m.executorRunTime, m.executorCpuTime,
+            e.stageInfo.name.takeWhile(_ != '\n').take(80)))
         }
       }
     }
     spark.sparkContext.addSparkListener(listener)
+    /** Shuffle bytes read plus written. */
+    def shufBytes: Long = shufRead.sum + shufWrite.sum
     def reset(): Unit = {
-      cpuNs.reset(); runMs.reset(); stages.reset(); shufBytes.reset()
+      cpuNs.reset(); runMs.reset(); gcMs.reset(); stages.reset()
+      shufRead.reset(); shufWrite.reset(); spilled.reset(); stageRows.clear()
     }
     def drain(): Unit =
       try {
@@ -349,6 +367,27 @@ object Bench {
         bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
       } catch { case _: Throwable => Thread.sleep(100) }
     def remove(): Unit = spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** The `*_FAMILIES` filter of a rehearsal main (ScaleBench,
+    * ScaleProbe, IncrementalRehearsal): the comma-separated entries of
+    * env var `name`, or None when it is unset OR set-but-empty ("" or
+    * only commas — "".split(",") is Array("") and would fail the check
+    * below with an unnamed entry). Every entry must be in `known`: a
+    * typo'd family would otherwise yield a calib-only artifact that
+    * reads like a valid run. */
+  def familyFilter(name: String, known: Iterable[String],
+      env: Map[String, String] = sys.env): Option[Set[String]] = {
+    val fams = env.get(name)
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+      .filter(_.nonEmpty)
+    fams.foreach { fs =>
+      val unknown = fs.diff(known.toSet)
+      require(unknown.isEmpty,
+        s"$name entries unknown: ${unknown.toSeq.sorted.mkString(",")} " +
+          s"(known: ${known.toSeq.sorted.mkString(",")})")
+    }
+    fams
   }
 
   /** The shared session shape for timing mains (Bench/Profile). */
@@ -437,7 +476,7 @@ object Bench {
       val wall = (System.nanoTime() - t0) / 1e9
       sm.drain()
       val stat = QStat(name, wall, sm.cpuNs.sum / 1e9,
-        sm.shufBytes.sum / 1e6, sm.stages.sum)
+        sm.shufBytes / 1e6, sm.stages.sum)
       if (verbose)
         System.err.println(f"[bench-profile] $name wall=$wall%.3f " +
           f"cpu=${stat.cpu}%.3f taskRun=${sm.runMs.sum / 1e3}%.3f " +

@@ -70,7 +70,7 @@ object ClampRehearsal {
         val line =
           f"""{"factor":$factor,"n":$n,"plan":"$plan",""" +
             f""""survivors":$survivors,"wall":$wall%.1f,"cpu":$cpu%.1f,""" +
-            f""""shuffle_mb":${sm.shufBytes.sum / 1e6}%.1f,""" +
+            f""""shuffle_mb":${sm.shufBytes / 1e6}%.1f,""" +
             f""""cpu_per_kvec":${cpu * 1000 / n}%.3f}"""
         println(line); sb.append(line).append('\n')
         System.err.println(f"[clamp] x$factor%-4d n=$n%8d $plan%-18s " +

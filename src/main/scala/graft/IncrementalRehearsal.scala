@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.DataFrame
-import graft.ops.Dedup
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.ops.{Dedup, Layout}
+import graft.streaming.EventStreams
 
 /** Incremental-vs-full rehearsal (r17): the daily-delta claims of the
   * incremental store trio, MEASURED. The scaladocs of
@@ -64,20 +66,9 @@ object IncrementalRehearsal {
     val dirs =
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/graft_scale/x10")
-    val KnownFamilies = Set("exact", "minhash", "embedding", "append",
-      "stream", "streamnd", "streampolicy")
-    // set-but-empty ("" or a trailing comma) means unset, not "no
-    // families" — "".split(",") is Array("") and would fail the
-    // require with an unnamed entry (r17 review)
-    val fams: Option[Set[String]] = sys.env.get("SPARK_GRAFT_INC_FAMILIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    fams.foreach { fs =>
-      val unknown = fs.diff(KnownFamilies)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_INC_FAMILIES entries unknown: ${unknown.mkString(",")} " +
-          s"(known: ${KnownFamilies.toSeq.sorted.mkString(",")})")
-    }
+    val fams = Bench.familyFilter("SPARK_GRAFT_INC_FAMILIES",
+      Set("exact", "minhash", "embedding", "append", "stream", "streamnd",
+        "streampolicy"))
     def want(f: String): Boolean = fams.forall(_.contains(f))
     val spark = Bench.buildSession()
     spark.sparkContext.setLogLevel("WARN")
@@ -97,6 +88,16 @@ object IncrementalRehearsal {
       }
       val byCpu = cells.sortBy(_._2)
       byCpu(byCpu.length / 2)
+    }
+    // median trigger wall (s) over a completed gate run's first and
+    // last 10 non-empty micro-batches
+    def batchWalls(q: StreamingQuery): (Double, Double) = {
+      val trig = q.recentProgress.toSeq
+        .filter(_.numInputRows > 0)
+        .map(p => p.durationMs.get("triggerExecution").toLong / 1000.0)
+      def med(xs: Seq[Double]): Double =
+        if (xs.isEmpty) -1.0 else xs.sorted.apply(xs.length / 2)
+      (med(trig.take(10)), med(trig.takeRight(10)))
     }
 
     def emit(dir: String, family: String, corpus: Long, batch: Long,
@@ -361,46 +362,25 @@ object IncrementalRehearsal {
       val batchRows = math.max(20L, nDocs / 100)
       val base = s"$storeRoot/$tag/stream"
       Dedup.saveDigestStore(docs, "doc_id", "text", s"$base/ledger")
-      val src = TempDirs.createCleaned("graft_inc_stream_src")
       val slice = docs.filter(col("doc_id") < batchRows)
         .select(col("doc_id"), col("text")).localCheckpoint(true)
-      (0 until nBatches).foreach { i =>
-        // novel content per batch (prefixed token) under unique ids:
-        // every batch admits everything -> every batch appends. Batch
-        // ids ride above Shift (1e9) — the x100 corpus carries ids up
-        // to ~99e6, and a colliding intake id violates the gates'
-        // new-ids contract (now guarded loudly; the first x100
-        // streamnd run hit exactly this with 1e6-spaced shifts)
-        val b = slice.select(
+      // novel content per batch (prefixed token) under unique ids:
+      // every batch admits everything -> every batch appends. Batch
+      // ids ride above Shift (1e9) — the x100 corpus carries ids up
+      // to ~99e6, and a colliding intake id violates the gates'
+      // new-ids contract (now guarded loudly; the first x100
+      // streamnd run hit exactly this with 1e6-spaced shifts)
+      val batches = (0 until nBatches).map { i =>
+        slice.select(
           (col("doc_id") + lit(Shift + i * 10000000L)).as("doc_id"),
           concat(lit(s"b$i "), col("text")).as("text"))
-        val tmp = TempDirs.createCleaned(s"graft_inc_stream_stage$i")
-        b.repartition(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(src, f"intake_$i%03d.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        dst.toFile.setLastModified(1600000000000L + i * 60000L)
       }
-      val stream = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      val q = graft.streaming.EventStreams.runIncrementalAdmission(stream,
-        s"$base/ledger", TempDirs.createCleaned("graft_inc_stream_out"),
-        TempDirs.createCleaned("graft_inc_stream_ck"), "doc_id", "text")
-      val trig = q.recentProgress.toSeq
-        .filter(_.numInputRows > 0)
-        .map(p => p.durationMs.get("triggerExecution").toLong / 1000.0)
-      def med(xs: Seq[Double]): Double =
-        if (xs.isEmpty) -1.0 else xs.sorted.apply(xs.length / 2)
-      def files(p: String): Int = new java.io.File(s"$p/digests")
-        .listFiles().count(_.getName.endsWith(".parquet"))
-      val filesFrag = files(s"$base/ledger")
+      val (wallFirst, wallLast) = batchWalls(
+        EventStreams.runIncrementalAdmission(
+          EventStreams.orderedIntake(spark, "graft_inc_stream", batches),
+          s"$base/ledger", TempDirs.createCleaned("graft_inc_stream_out"),
+          TempDirs.createCleaned("graft_inc_stream_ck"), "doc_id", "text"))
+      val filesFrag = Layout.dataFileCount(spark, s"$base/ledger/digests")
       // probe = one more day's intake; load INSIDE the timed body
       val probeB = slice.select(
         (col("doc_id") + lit(Shift + nBatches * 10000000L)).as("doc_id"),
@@ -412,7 +392,7 @@ object IncrementalRehearsal {
           "doc_id", "text").count()
       }
       Dedup.compactDigestStore(spark, s"$base/ledger", s"$base/ledger_c")
-      val filesComp = files(s"$base/ledger_c")
+      val filesComp = Layout.dataFileCount(spark, s"$base/ledger_c/digests")
       val probeComp = medianOf(3) { () =>
         Dedup.incrementalExactDuplicates(
           Dedup.loadDigestStore(spark, s"$base/ledger_c"), probeB,
@@ -430,8 +410,8 @@ object IncrementalRehearsal {
       val line =
         f"""{"dir":"$dir","family":"stream","corpus":$nDocs,""" +
           f""""batches":$nBatches,"batch_rows":${slice.count()},""" +
-          f""""batch_wall_first10":${med(trig.take(10))}%.2f,""" +
-          f""""batch_wall_last10":${med(trig.takeRight(10))}%.2f,""" +
+          f""""batch_wall_first10":$wallFirst%.2f,""" +
+          f""""batch_wall_last10":$wallLast%.2f,""" +
           f""""files_frag":$filesFrag,"files_compact":$filesComp,""" +
           f""""probe_frag_wall":${probeFrag._1}%.2f,""" +
           f""""probe_frag_cpu":${probeFrag._2}%.2f,""" +
@@ -441,7 +421,7 @@ object IncrementalRehearsal {
           f""""equiv":${fragSet == compSet}}"""
       println(line); sb.append(line).append('\n')
       System.err.println(f"[inc] $dir%-26s stream    " +
-        f"batch ${med(trig.take(10))}%.2f->${med(trig.takeRight(10))}%.2fs " +
+        f"batch $wallFirst%.2f->$wallLast%.2fs " +
         f"files $filesFrag->$filesComp probe ${probeFrag._1}%.2f->" +
         f"${probeComp._1}%.2fs equiv=${fragSet == compSet}")
       }
@@ -460,40 +440,20 @@ object IncrementalRehearsal {
       val batchRows = math.max(20L, nDocs / 100)
       val base = s"$storeRoot/$tag/streampolicy"
       Dedup.saveDigestStore(docs, "doc_id", "text", s"$base/ledger")
-      val src = TempDirs.createCleaned("graft_inc_streampol_src")
       val slice = docs.filter(col("doc_id") < batchRows)
         .select(col("doc_id"), col("text")).localCheckpoint(true)
-      (0 until nBatches).foreach { i =>
-        val b = slice.select(
+      val batches = (0 until nBatches).map { i =>
+        slice.select(
           (col("doc_id") + lit(Shift + i * 10000000L)).as("doc_id"),
           concat(lit(s"p$i "), col("text")).as("text"))
-        val tmp = TempDirs.createCleaned(s"graft_inc_streampol_stage$i")
-        b.repartition(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(src, f"intake_$i%03d.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        dst.toFile.setLastModified(1600000000000L + i * 60000L)
       }
-      val stream = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      val q = graft.streaming.EventStreams.runIncrementalAdmission(stream,
-        s"$base/ledger", TempDirs.createCleaned("graft_inc_streampol_out"),
-        TempDirs.createCleaned("graft_inc_streampol_ck"), "doc_id", "text",
-        compactEvery = every)
-      val trig = q.recentProgress.toSeq
-        .filter(_.numInputRows > 0)
-        .map(p => p.durationMs.get("triggerExecution").toLong / 1000.0)
-      def med(xs: Seq[Double]): Double =
-        if (xs.isEmpty) -1.0 else xs.sorted.apply(xs.length / 2)
-      val filesEnd = graft.ops.Layout.dataFileCount(spark,
-        s"$base/ledger/digests")
+      val (wallFirst, wallLast) = batchWalls(
+        EventStreams.runIncrementalAdmission(
+          EventStreams.orderedIntake(spark, "graft_inc_streampol", batches),
+          s"$base/ledger", TempDirs.createCleaned("graft_inc_streampol_out"),
+          TempDirs.createCleaned("graft_inc_streampol_ck"), "doc_id", "text",
+          compactEvery = every))
+      val filesEnd = Layout.dataFileCount(spark, s"$base/ledger/digests")
       // fresh ids carrying the LAST batch's content: every row must
       // flag through the swapped tree (a lost append would admit them)
       val probeB = slice.select(
@@ -507,14 +467,14 @@ object IncrementalRehearsal {
         f"""{"dir":"$dir","family":"streampolicy","corpus":$nDocs,""" +
           f""""batches":$nBatches,"compact_every":$every,""" +
           f""""batch_rows":${slice.count()},""" +
-          f""""batch_wall_first10":${med(trig.take(10))}%.2f,""" +
-          f""""batch_wall_last10":${med(trig.takeRight(10))}%.2f,""" +
+          f""""batch_wall_first10":$wallFirst%.2f,""" +
+          f""""batch_wall_last10":$wallLast%.2f,""" +
           f""""files_end":$filesEnd,""" +
           f""""probe_rows":$probeRows,""" +
           f""""probe_complete":${probeRows == slice.count()}}"""
       println(line); sb.append(line).append('\n')
       System.err.println(f"[inc] $dir%-26s streampol " +
-        f"batch ${med(trig.take(10))}%.2f->${med(trig.takeRight(10))}%.2fs " +
+        f"batch $wallFirst%.2f->$wallLast%.2fs " +
         f"files_end=$filesEnd probe=$probeRows/${slice.count()}")
       }
 
@@ -533,44 +493,23 @@ object IncrementalRehearsal {
       Dedup.saveMinhashSignatures(docs, "doc_id", "text", s"$base/sig")
       docs.select(col("doc_id"), col("text"))
         .write.mode("overwrite").parquet(s"$base/corpus")
-      val src = TempDirs.createCleaned("graft_inc_streamnd_src")
       val slice = docs.filter(col("doc_id") < batchRows)
         .select(col("doc_id"), col("text")).localCheckpoint(true)
-      (0 until nBatches).foreach { i =>
-        // ids above Shift — the x100 id-collision lesson (see stream)
-        val b = slice.select(
+      // ids above Shift — the x100 id-collision lesson (see stream)
+      val batches = (0 until nBatches).map { i =>
+        slice.select(
           (col("doc_id") + lit(Shift + i * 10000000L)).as("doc_id"),
           concat(lit(s"nd$i "), col("text")).as("text"))
-        val tmp = TempDirs.createCleaned(s"graft_inc_streamnd_stage$i")
-        b.repartition(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(src, f"intake_$i%03d.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        dst.toFile.setLastModified(1600000000000L + i * 60000L)
       }
-      val stream = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      val q = graft.streaming.EventStreams.runIncrementalNearDupAdmission(
-        stream, s"$base/sig", s"$base/corpus",
-        TempDirs.createCleaned("graft_inc_streamnd_out"),
-        TempDirs.createCleaned("graft_inc_streamnd_ck"),
-        "doc_id", "text", threshold = 1.0)
-      val trig = q.recentProgress.toSeq
-        .filter(_.numInputRows > 0)
-        .map(p => p.durationMs.get("triggerExecution").toLong / 1000.0)
-      def med(xs: Seq[Double]): Double =
-        if (xs.isEmpty) -1.0 else xs.sorted.apply(xs.length / 2)
-      def filesUnder(p: String): Int = new java.io.File(p)
-        .listFiles().count(_.getName.endsWith(".parquet"))
-      val sigFrag = filesUnder(s"$base/sig/signatures")
-      val txtFrag = filesUnder(s"$base/corpus")
+      val (wallFirst, wallLast) = batchWalls(
+        EventStreams.runIncrementalNearDupAdmission(
+          EventStreams.orderedIntake(spark, "graft_inc_streamnd", batches),
+          s"$base/sig", s"$base/corpus",
+          TempDirs.createCleaned("graft_inc_streamnd_out"),
+          TempDirs.createCleaned("graft_inc_streamnd_ck"),
+          "doc_id", "text", threshold = 1.0))
+      val sigFrag = Layout.dataFileCount(spark, s"$base/sig/signatures")
+      val txtFrag = Layout.dataFileCount(spark, s"$base/corpus")
       // probe = one more day's intake, replicas of the LAST batch's
       // admitted content (must flag through the appended store);
       // load + probe inside the timed body, the stream-family rule
@@ -587,18 +526,18 @@ object IncrementalRehearsal {
         probeCount(s"$base/sig", s"$base/corpus")
       }
       Dedup.compactMinhashSignatures(spark, s"$base/sig", s"$base/sig_c")
-      graft.ops.Layout.compact(spark, s"$base/corpus", s"$base/corpus_c")
+      Layout.compact(spark, s"$base/corpus", s"$base/corpus_c")
       val probeComp = medianOf(3) { () =>
         probeCount(s"$base/sig_c", s"$base/corpus_c")
       }
       val line =
         f"""{"dir":"$dir","family":"streamnd","corpus":$nDocs,""" +
           f""""batches":$nBatches,"batch_rows":${slice.count()},""" +
-          f""""batch_wall_first10":${med(trig.take(10))}%.2f,""" +
-          f""""batch_wall_last10":${med(trig.takeRight(10))}%.2f,""" +
+          f""""batch_wall_first10":$wallFirst%.2f,""" +
+          f""""batch_wall_last10":$wallLast%.2f,""" +
           f""""sig_files_frag":$sigFrag,"txt_files_frag":$txtFrag,""" +
-          f""""sig_files_compact":${filesUnder(s"$base/sig_c/signatures")},""" +
-          f""""txt_files_compact":${filesUnder(s"$base/corpus_c")},""" +
+          f""""sig_files_compact":${Layout.dataFileCount(spark, s"$base/sig_c/signatures")},""" +
+          f""""txt_files_compact":${Layout.dataFileCount(spark, s"$base/corpus_c")},""" +
           f""""probe_frag_wall":${probeFrag._1}%.2f,""" +
           f""""probe_frag_cpu":${probeFrag._2}%.2f,""" +
           f""""probe_compact_wall":${probeComp._1}%.2f,""" +
@@ -607,7 +546,7 @@ object IncrementalRehearsal {
           f""""equiv":${probeFrag._3 == probeComp._3}}"""
       println(line); sb.append(line).append('\n')
       System.err.println(f"[inc] $dir%-26s streamnd  " +
-        f"batch ${med(trig.take(10))}%.2f->${med(trig.takeRight(10))}%.2fs " +
+        f"batch $wallFirst%.2f->$wallLast%.2fs " +
         f"sig files $sigFrag->1 probe ${probeFrag._1}%.2f->" +
         f"${probeComp._1}%.2fs rows=${probeFrag._3}")
       }

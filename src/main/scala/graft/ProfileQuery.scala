@@ -1,18 +1,16 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import java.util.concurrent.atomic.LongAdder
-
 /** Warm-run stage-metrics profiler — the methodology CLAUDE.md/PERF.md
   * prescribe ("`.count()` lies; cold local timings are JIT-dominated;
   * compare warm runs or stage CPU"), packaged as a main so a
   * regression verdict never again rests on one cold wall-clock number.
   *
-  * Per run it reports wall time plus the SparkListener-aggregated
-  * stage metrics: executor CPU, executor run time, shuffle bytes
-  * read/written, spill, and stage count. CPU vs wall separates "the
-  * query does more work" from "the machine was busy"; shuffle bytes
-  * separate plan regressions from noise.
+  * Per run it reports wall time plus the stage metrics aggregated by
+  * the shared [[Bench.StageMetrics]] listener (drained after each run,
+  * so no late event lands in the next one): executor CPU, executor
+  * run time, shuffle bytes read/written, spill, GC, and stage count.
+  * CPU vs wall separates "the query does more work" from "the machine
+  * was busy"; shuffle bytes separate plan regressions from noise.
   *
   * Usage: sbt "runMain graft.ProfileQuery <query> [sfDir] [runs] [stages]"
   * — the optional 4th arg `stages` additionally prints, per run, the
@@ -31,55 +29,28 @@ object ProfileQuery {
       sys.error(s"unknown query '$name'; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
     val spark = Bench.buildSession()
     spark.sparkContext.setLogLevel("WARN")
-    val cpuNs = new LongAdder
-    val runMs = new LongAdder
-    val gcMs = new LongAdder
-    val shufRead = new LongAdder
-    val shufWrite = new LongAdder
-    val spilled = new LongAdder
-    val stages = new LongAdder
-    val stageRows =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long, Long, String)]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          cpuNs.add(m.executorCpuTime)
-          runMs.add(m.executorRunTime)
-          gcMs.add(m.jvmGCTime)
-          shufRead.add(m.shuffleReadMetrics.totalBytesRead)
-          shufWrite.add(m.shuffleWriteMetrics.bytesWritten)
-          spilled.add(m.memoryBytesSpilled + m.diskBytesSpilled)
-          stages.increment()
-          if (dumpStages) stageRows.add((e.stageInfo.stageId,
-            e.stageInfo.numTasks, m.executorRunTime, m.executorCpuTime,
-            e.stageInfo.name.takeWhile(_ != '\n').take(80)))
-        }
-      }
-    })
+    val sm = new Bench.StageMetrics(spark)
     Bench.warmup(spark, sfDir)
+    sm.drain() // warmup's stage events must not land in run 1
     for (i <- 1 to runs) {
-      cpuNs.reset(); runMs.reset(); shufRead.reset(); shufWrite.reset()
-      spilled.reset(); stages.reset(); gcMs.reset(); stageRows.clear()
+      sm.reset()
       val t0 = System.nanoTime()
       Bench.materialize(name, fn(spark, sfDir))
       val wall = (System.nanoTime() - t0) / 1e9
-      // listener events are posted async (the bus-drain API is
-      // private[spark]) — settle before reading the adders
-      Thread.sleep(300)
+      sm.drain()
       println(f"[profile] $name run=$i wall=$wall%.3fs " +
-        f"cpu=${cpuNs.sum / 1e9}%.3fs taskRun=${runMs.sum / 1e3}%.3fs " +
-        f"shufRead=${shufRead.sum / 1e6}%.1fMB shufWrite=${shufWrite.sum / 1e6}%.1fMB " +
-        f"spill=${spilled.sum / 1e6}%.1fMB gc=${gcMs.sum / 1e3}%.3fs stages=${stages.sum}")
+        f"cpu=${sm.cpuNs.sum / 1e9}%.3fs taskRun=${sm.runMs.sum / 1e3}%.3fs " +
+        f"shufRead=${sm.shufRead.sum / 1e6}%.1fMB shufWrite=${sm.shufWrite.sum / 1e6}%.1fMB " +
+        f"spill=${sm.spilled.sum / 1e6}%.1fMB gc=${sm.gcMs.sum / 1e3}%.3fs stages=${sm.stages.sum}")
       if (dumpStages) {
         import scala.jdk.CollectionConverters._
-        stageRows.asScala.toSeq.sortBy(-_._3).take(12).foreach {
-          case (id, tasks, run, cpu, nm) =>
-            println(f"[stage] run=$i id=$id tasks=$tasks " +
-              f"taskRun=${run / 1e3}%.3fs cpu=${cpu / 1e9}%.3fs $nm")
+        sm.stageRows.asScala.toSeq.sortBy(-_.runMs).take(12).foreach { r =>
+          println(f"[stage] run=$i id=${r.id} tasks=${r.tasks} " +
+            f"taskRun=${r.runMs / 1e3}%.3fs cpu=${r.cpuNs / 1e9}%.3fs ${r.name}")
         }
       }
     }
+    sm.remove()
     spark.stop()
   }
 }

@@ -56,18 +56,7 @@ object ScaleBench {
     // family filter (mirrors ScaleProbe): a ×30 rehearsal point only
     // needs the quadratic-adjacent families — the rest are measured
     // linear at ×10 and would burn an hour of CPU re-proving it
-    val famFilter: Option[Set[String]] =
-      sys.env.get("SPARK_GRAFT_SCALE_FAMILIES")
-        .map(_.split(",").map(_.trim).toSet)
-    // a typo'd family name would otherwise silently yield a run with
-    // ONLY the calib line — an artifact easily mistaken for a valid
-    // rehearsal (r14 advice)
-    famFilter.foreach { fs =>
-      val unknown = fs.diff(Families.toSet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_SCALE_FAMILIES entries not in ScaleBench.Families: " +
-          s"${unknown.mkString(",")} (known: ${Families.mkString(",")})")
-    }
+    val famFilter = Bench.familyFilter("SPARK_GRAFT_SCALE_FAMILIES", Families)
     val active = Families.filter(f => famFilter.forall(_.contains(f)))
     val spark = Bench.buildSession()
     spark.sparkContext.setLogLevel("WARN")
@@ -123,7 +112,7 @@ object ScaleBench {
       }
       val wall = (System.nanoTime() - t0) / 1e9
       sm.drain()
-      Run(dir, family, wall, sm.cpuNs.sum / 1e9, sm.shufBytes.sum / 1e6,
+      Run(dir, family, wall, sm.cpuNs.sum / 1e9, sm.shufBytes / 1e6,
         sm.stages.sum, Obs(obsBuckets.sum, obsCapped.sum, obsMax.get), failed)
     }
     def runOne(dir: String, family: String): Run = {

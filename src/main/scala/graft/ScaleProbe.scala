@@ -37,17 +37,8 @@ object ScaleProbe {
       if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/tmp/graft_scale/x3",
         "/tmp/graft_scale/x10")
-    val fams: Option[Set[String]] = sys.env.get("SPARK_GRAFT_PROBE_FAMILIES")
-      .map(_.split(",").map(_.trim).toSet)
-    // fail loudly on a typo'd family: a silent zero-family run writes
-    // a calib-only artifact that reads like a valid probe (r14 advice)
-    val KnownFamilies = Set("x42", "x34", "x161", "x22")
-    fams.foreach { fs =>
-      val unknown = fs.diff(KnownFamilies)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_PROBE_FAMILIES entries unknown to ScaleProbe: " +
-          s"${unknown.mkString(",")} (known: ${KnownFamilies.toSeq.sorted.mkString(",")})")
-    }
+    val fams = Bench.familyFilter("SPARK_GRAFT_PROBE_FAMILIES",
+      Set("x42", "x34", "x161", "x22"))
     def want(f: String): Boolean = fams.forall(_.contains(f))
     val spark = Bench.buildSession()
     spark.sparkContext.setLogLevel("WARN")
@@ -63,11 +54,11 @@ object ScaleProbe {
       sm.drain()
       val line = f"""{"dir":"$dir","phase":"$name","rows":$n,""" +
         f""""wall":$wall%.2f,"cpu":${sm.cpuNs.sum / 1e9}%.2f,""" +
-        f""""shuffle_mb":${sm.shufBytes.sum / 1e6}%.1f}"""
+        f""""shuffle_mb":${sm.shufBytes / 1e6}%.1f}"""
       println(line); sb.append(line).append('\n')
       System.err.println(f"[probe] $dir%-26s $name%-22s rows=$n%10d " +
         f"wall=$wall%7.2f cpu=${sm.cpuNs.sum / 1e9}%8.2f " +
-        f"shuffle=${sm.shufBytes.sum / 1e6}%8.1f MB")
+        f"shuffle=${sm.shufBytes / 1e6}%8.1f MB")
     }
 
     dirs.foreach { dir =>

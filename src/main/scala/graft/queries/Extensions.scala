@@ -8132,25 +8132,34 @@ object Extensions extends QueryModule {
       WHERE id NOT IN (SELECT id FROM fl3)
       ORDER BY doc_id, dup_id"""))
 
-  /** One admission-stream run per (session, sfDir) — the settledStream
-    * memo discipline for a foreachBatch pipeline (its output is a
-    * parquet DIRECTORY, not a memory-sink table, so the shared helper
-    * doesn't apply): day-0 ledger saved, the x209 intake staged as
-    * THREE id-ordered parquet files with strictly increasing mtimes
-    * (FileStreamSource drains oldest-first; path order agrees as a
-    * tiebreak), then
-    * [[graft.streaming.EventStreams.runIncrementalAdmission]] at
-    * maxFilesPerTrigger=1 — three real micro-batches, each probing
-    * the ledger the PREVIOUS batch appended to. */
-  private val x211Runs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** One admission-stream run per (tag, session, sfDir) — the
+    * settledStream memo discipline for the foreachBatch carriers
+    * x211/x215/x216/x218 (their output is a parquet DIRECTORY, not a
+    * memory-sink table, so the shared helper doesn't apply). `run`
+    * gets the per-session store root plus fresh output and checkpoint
+    * dirs and drives its gate over an
+    * [[graft.streaming.EventStreams.orderedIntake]] (one id-ordered
+    * micro-batch per staged batch, each probing the stores the
+    * PREVIOUS batch appended to); the memo returns the output dir.
+    * `run` must not call [[admissionRun]] itself (a recursive update
+    * of the same ConcurrentHashMap); [[storeRootFor]] is a separate
+    * map. */
+  private val admissionRuns = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, String), String]()
+  private def admissionRun(tag: String, s: org.apache.spark.sql.SparkSession,
+      dir: String)(run: (String, String, String) => Any): String =
+    admissionRuns.computeIfAbsent((tag, graft.SessionKeys.of(s), dir), _ => {
+      val out = graft.TempDirs.createCleaned(s"graft_${tag}_out")
+      run(storeRootFor(dir), out, graft.TempDirs.createCleaned(s"graft_${tag}_ck"))
+      out
+    })
+
+  /** x211's run: day-0 digest ledger, then the x209 intake as three
+    * id-ordered batches through
+    * [[graft.streaming.EventStreams.runIncrementalAdmission]]. */
   private def x211OutDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    x211Runs.computeIfAbsent(graft.SessionKeys.of(s) + "|" + dir, _ => {
-      val root = storeRootFor(dir)
-      val src = graft.TempDirs.createCleaned("graft_x211_src")
-      val out = graft.TempDirs.createCleaned("graft_x211_out")
-      val ck = graft.TempDirs.createCleaned("graft_x211_ck")
+    admissionRun("x211", s, dir) { (root, out, ck) =>
       val docs = Tables.documents(s, dir)
       Dedup.saveDigestStore(docs, "doc_id", "text", s"$root/x211_digests")
       def rev(c: org.apache.spark.sql.Column) = concat_ws(" ",
@@ -8167,28 +8176,11 @@ object Extensions extends QueryModule {
           col("text").isNotNull)
         .select((col("doc_id") + lit(2000000L)).as("doc_id"),
           rev(col("text")).as("text"))
-      Seq(dup, novelA, novelB).zipWithIndex.foreach { case (df, i) =>
-        val tmp = graft.TempDirs.createCleaned(s"graft_x211_stage$i")
-        df.repartition(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(src, f"intake_$i%03d.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        // strictly increasing, all within maxFileAge of the newest
-        dst.toFile.setLastModified(1600000000000L + i * 60000L)
-      }
-      val stream = s.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      graft.streaming.EventStreams.runIncrementalAdmission(stream,
+      graft.streaming.EventStreams.runIncrementalAdmission(
+        graft.streaming.EventStreams.orderedIntake(s, "graft_x211",
+          Seq(dup, novelA, novelB)),
         s"$root/x211_digests", out, ck, "doc_id", "text")
-      out
-    })
+    }
 
   /** The x209 admission gate AS A STRUCTURED STREAM (r17 verdict #3):
     * three id-ordered micro-batches pass the persisted digest ledger
@@ -8347,22 +8339,15 @@ object Extensions extends QueryModule {
       FROM probe a JOIN probe b ON a.gk = b.gk AND a.id < b.id
       ORDER BY doc_id, dup_id"""))
 
-  /** One near-dup admission-stream run per (session, sfDir) — the
-    * x211Runs discipline for the SKETCH member: day-0 = minhash
-    * signature store over the corpus + the corpus TEXT store seeded,
-    * then three id-ordered micro-batches through
-    * [[graft.streaming.EventStreams.runIncrementalNearDupAdmission]]
-    * at maxFilesPerTrigger=1 — each batch's admitted docs join BOTH
-    * stores before the next batch probes. */
-  private val x215Runs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** x215's run ([[admissionRun]] for the SKETCH member): day-0 =
+    * minhash signature store over the corpus + the corpus TEXT store
+    * seeded, then three id-ordered batches through
+    * [[graft.streaming.EventStreams.runIncrementalNearDupAdmission]] —
+    * each batch's admitted docs join BOTH stores before the next
+    * batch probes. */
   private def x215OutDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    x215Runs.computeIfAbsent(graft.SessionKeys.of(s) + "|" + dir, _ => {
-      val root = storeRootFor(dir)
-      val src = graft.TempDirs.createCleaned("graft_x215_src")
-      val out = graft.TempDirs.createCleaned("graft_x215_out")
-      val ck = graft.TempDirs.createCleaned("graft_x215_ck")
+    admissionRun("x215", s, dir) { (root, out, ck) =>
       val docs = Tables.documents(s, dir)
       Dedup.saveMinhashSignatures(docs, "doc_id", "text",
         s"$root/x215_minhash")
@@ -8389,28 +8374,12 @@ object Extensions extends QueryModule {
             col("text").isNotNull)
           .select((col("doc_id") + lit(4000000L)).as("doc_id"),
             rev(col("text")).as("text")))
-      Seq(b0, b1, b2).zipWithIndex.foreach { case (df, i) =>
-        val tmp = graft.TempDirs.createCleaned(s"graft_x215_stage$i")
-        df.repartition(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(src, f"intake_$i%03d.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        dst.toFile.setLastModified(1600000000000L + i * 60000L)
-      }
-      val stream = s.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      graft.streaming.EventStreams.runIncrementalNearDupAdmission(stream,
+      graft.streaming.EventStreams.runIncrementalNearDupAdmission(
+        graft.streaming.EventStreams.orderedIntake(s, "graft_x215",
+          Seq(b0, b1, b2)),
         s"$root/x215_minhash", s"$root/x215_corpus", out, ck,
         "doc_id", "text", threshold = 1.0)
-      out
-    })
+    }
 
   /** NEAR-DUP admission as a structured stream — x211's shape for the
     * SKETCH member of the store trio, and the full production loop:
@@ -8489,20 +8458,13 @@ object Extensions extends QueryModule {
       FROM lab WHERE ck IS NULL AND id = ik
       ORDER BY doc_id"""))
 
-  /** One embedding admission-stream run per (session, sfDir) — the
-    * x215Runs discipline for the EMBEDDING member: day-0 = signature
-    * store + corpus VECTOR store seeded, then three id-ordered
-    * micro-batches through [[graft.streaming.EventStreams
-    * .runIncrementalEmbeddingAdmission]] at maxFilesPerTrigger=1. */
-  private val x216Runs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** x216's run ([[admissionRun]] for the EMBEDDING member): day-0 =
+    * signature store + corpus VECTOR store seeded, then three
+    * id-ordered batches through [[graft.streaming.EventStreams
+    * .runIncrementalEmbeddingAdmission]]. */
   private def x216OutDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    x216Runs.computeIfAbsent(graft.SessionKeys.of(s) + "|" + dir, _ => {
-      val root = storeRootFor(dir)
-      val src = graft.TempDirs.createCleaned("graft_x216_src")
-      val out = graft.TempDirs.createCleaned("graft_x216_out")
-      val ck = graft.TempDirs.createCleaned("graft_x216_ck")
+    admissionRun("x216", s, dir) { (root, out, ck) =>
       val emb = Tables.embeddings(s, dir)
       Dedup.saveEmbeddingSignatures(emb, "vec_id", "embedding",
         s"$root/x216_embsig", numBits = 48, bands = 8)
@@ -8525,29 +8487,12 @@ object Extensions extends QueryModule {
           .filter(col("vec_id") >= 350 && col("vec_id") < 400)
           .select((col("vec_id") + lit(4000000L)).as("vec_id"),
             neg(col("embedding")).as("embedding")))
-      Seq(b0, b1, b2).zipWithIndex.foreach { case (df, i) =>
-        val tmp = graft.TempDirs.createCleaned(s"graft_x216_stage$i")
-        df.repartition(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(src, f"intake_$i%03d.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        dst.toFile.setLastModified(1600000000000L + i * 60000L)
-      }
-      val stream = s.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("vec_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("embedding",
-            org.apache.spark.sql.types.ArrayType(
-              org.apache.spark.sql.types.FloatType)))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
       graft.streaming.EventStreams.runIncrementalEmbeddingAdmission(
-        stream, s"$root/x216_embsig", s"$root/x216_corpus", out, ck,
+        graft.streaming.EventStreams.orderedIntake(s, "graft_x216",
+          Seq(b0, b1, b2)),
+        s"$root/x216_embsig", s"$root/x216_corpus", out, ck,
         "vec_id", "embedding", threshold = 0.95)
-      out
-    })
+    }
 
   /** EMBEDDING admission as a structured stream — completing the
     * streaming admission trio (digest x211, text sketch x215, this):
@@ -8719,15 +8664,9 @@ object Extensions extends QueryModule {
     * directly: every sf's docs are long enough that all 400 rows
     * flagged at ≥0.7 and nothing was ever admitted — the
     * greedy/append path never ran.) */
-  private val x218Runs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def x218OutDir(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    x218Runs.computeIfAbsent(graft.SessionKeys.of(s) + "|" + dir, _ => {
-      val root = storeRootFor(dir)
-      val src = graft.TempDirs.createCleaned("graft_x218_src")
-      val out = graft.TempDirs.createCleaned("graft_x218_out")
-      val ck = graft.TempDirs.createCleaned("graft_x218_ck")
+    admissionRun("x218", s, dir) { (root, out, ck) =>
       val docs = Tables.documents(s, dir)
       Dedup.saveMinhashSignatures(docs, "doc_id", "text",
         s"$root/x218_minhash")
@@ -8756,28 +8695,12 @@ object Extensions extends QueryModule {
             col("text").isNotNull)
           .select((col("doc_id") + lit(4000000L)).as("doc_id"),
             rev(col("text")).as("text")))
-      Seq(b0, b1, b2).zipWithIndex.foreach { case (df, i) =>
-        val tmp = graft.TempDirs.createCleaned(s"graft_x218_stage$i")
-        df.repartition(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(src, f"intake_$i%03d.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        dst.toFile.setLastModified(1600000000000L + i * 60000L)
-      }
-      val stream = s.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-      graft.streaming.EventStreams.runIncrementalNearDupAdmission(stream,
+      graft.streaming.EventStreams.runIncrementalNearDupAdmission(
+        graft.streaming.EventStreams.orderedIntake(s, "graft_x218",
+          Seq(b0, b1, b2)),
         s"$root/x218_minhash", s"$root/x218_corpus", out, ck,
         "doc_id", "text", threshold = 0.7)
-      out
-    })
+    }
 
   /** MID-THRESHOLD streaming near-dup admission — the greedy ONLINE
     * regime under the driver (r19 verdict #3). At 0.7 similarity is

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface over the events table.
@@ -225,314 +226,296 @@ object EventStreams {
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
     val q = (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*)
              else writer).start()
     q.awaitTermination()
   }
 
-  /** Stream-static ADMISSION: run the x209 intake gate as a
-    * structured stream — each micro-batch probes the persisted digest
-    * ledger ([[graft.ops.Dedup.incrementalExactDuplicates]] against
-    * the store loaded FRESH per batch, the [[enrichWithDimension]]
-    * stream-static class where the static side is re-listed per
-    * batch), anti-joins the flagged ids off, APPENDS the admitted
-    * survivors' digests into the ledger
-    * ([[graft.ops.Dedup.appendToDigestStore]] — r18, the maintenance
-    * path), and lands one (doc_id, status, dup_id) row per intake doc
-    * under `outDir`. Duplicates carry `dup_id = min` over their
-    * flag rows — the batching-invariant reduction: a later copy of an
-    * admitted doc flags `corpus` through the APPENDED entry whose
-    * keeper equals the batch-mode min-id keeper, so as long as
-    * micro-batches arrive in id order the output is independent of
-    * how the intake splits into batches (EventStreamsSpec pins the
-    * 3-micro-batch stream ≡ the batch pipeline row-for-row, and that
-    * a replayed intake against the grown ledger admits nothing).
+  /** The admission GATE LOOP, shared by the three stream-static
+    * admission gates ([[runIncrementalAdmission]] = digest ledger,
+    * [[runIncrementalNearDupAdmission]] = text sketch,
+    * [[runIncrementalEmbeddingAdmission]] = embedding sketch). Each
+    * micro-batch `body` probes its store loaded FRESH (the
+    * [[enrichWithDimension]] stream-static class where the static side
+    * is re-listed per batch), anti-joins the flagged ids off, commits
+    * one (id, status, min dup_id) row per intake row under `outDir`
+    * ([[writeStatuses]]), then APPENDS the admitted survivors to the
+    * store(s), so the next batch probes the grown store. Duplicates
+    * carry `dup_id = min` over their flag rows — the batching-invariant
+    * reduction: a later copy of an admitted doc flags `corpus` through
+    * the APPENDED entry whose keeper equals the batch-mode min-id
+    * keeper, so with id-ordered micro-batches ([[orderedIntake]]) the
+    * output is independent of how the intake splits into batches.
     *
     * This is `foreachBatch`, not a plan transform: the probe needs a
-    * per-batch localCheckpoint and the append is a side-effecting
-    * write — neither exists in a continuous plan. Failure semantics
+    * per-batch localCheckpoint and the appends are side-effecting
+    * writes — neither exists in a continuous plan. Failure semantics
     * are the standard foreachBatch at-least-once, made FULLY
-    * IDEMPOTENT up to duplicate output rows (r18 advice — the medium
-    * item, closed in two parts): (1) the OUTPUT commits before the
-    * ledger append, so a replay in the window between them re-probes
-    * the identical un-appended ledger and re-emits identical rows;
-    * (2) SELF-rows (batch_id == dup_id) are filtered from the flag
-    * set — admission intake ids are new by contract, so a self-row
-    * can only be the batch's OWN append seen by a replay that failed
-    * after the append committed; with the filter that replay
+    * IDEMPOTENT up to duplicate output rows: (1) the OUTPUT commits
+    * before the appends, so a replay in the window between them
+    * re-probes the identical un-appended store and re-emits identical
+    * rows; (2) SELF-rows (batch_id == dup_id) are filtered from the
+    * flag set — admission intake ids are new by contract, so a
+    * self-row can only be the batch's OWN append seen by a replay that
+    * failed after the append committed; with the filter that replay
     * reproduces the original statuses exactly (other same-batch
-    * matches reduce to the same min keeper) and the append anti-join
-    * then no-ops. Net: any replay appends duplicate-but-CORRECT
-    * output rows — dedup the output on doc_id downstream if the job
-    * ever restarts mid-batch; with the OLD append-first order a
-    * replay flagged its own admitted docs as self-duplicates, an
-    * ambiguity no downstream dedup could resolve. A completed batch
-    * is never re-run (checkpointed offsets).
+    * matches reduce to the same min keeper) and the append no-ops.
+    * Net: any replay appends duplicate-but-CORRECT output rows — dedup
+    * the output on the id downstream if the job ever restarts
+    * mid-batch. A completed batch is never re-run (checkpointed
+    * offsets).
     *
-    * Scale shape: per batch — one intake-sized checkpoint, one
-    * map-only scan of the ledger's 32-byte digests with the tiny
-    * batch broadcast (never a corpus-text rescan), one batch-sized
-    * append; both per-batch checkpoints are released
-    * deterministically at the end of the body
-    * ([[graft.Persistence.release]] — a continuous run would
-    * otherwise accumulate checkpoint blocks until GC, r18 advice).
-    * The stream's steady-state cost is ∝ daily intake, the exact
-    * economics the store trio exists for — except the ledger
-    * LISTING, which grows with the append count (one file per batch)
-    * until [[graft.ops.Dedup.compactDigestStore]] rewrites the tree
-    * (measured: IncrementalRehearsal's `stream` family). Returns the
-    * completed query — `recentProgress` carries per-batch durations
-    * for exactly that measurement.
+    * Scale shape: per batch — one intake-sized probe, a map-only store
+    * scan with the tiny batch broadcast (never a corpus rescan),
+    * batch-sized appends; every per-batch checkpoint is released at
+    * the end of the body ([[graft.Persistence.release]] — a continuous
+    * run would otherwise accumulate checkpoint blocks until GC). The
+    * steady-state cost is ∝ daily intake — except the store LISTING,
+    * which grows one file per append until compaction rewrites the
+    * tree (measured: IncrementalRehearsal's `stream`/`streamnd`
+    * families). The completed query is returned — `recentProgress`
+    * carries per-batch durations for exactly that measurement.
     *
-    * `compactEvery` (r19 verdict #4 — the maintenance CADENCE): when
-    * > 0, after every N committed micro-batches the gate compacts the
-    * ledger blue/green to a fresh temp root and swaps it into place
-    * ([[graft.ops.Layout.swapCompacted]] — metadata-only, and the end
-    * of a foreachBatch body is exactly the no-reader-active window it
-    * requires). Size N from [[graft.ops.Layout.compactionDue]]'s
-    * rule: N ≈ maxFraction × batchWallMs / perFileMs (each batch
-    * appends one+ file; measured ~1.2–2.2 ms/file locally). 0 = never
-    * — run the compaction at your own cadence. A replay after a
-    * completed swap re-probes the compacted tree, which answers
-    * identically (compaction is row-identity). */
-  def runIncrementalAdmission(docs: DataFrame, storePath: String,
-      outDir: String, checkpointDir: String, idCol: String = "doc_id",
-      textCol: String = "text", compactEvery: Int = 0):
-      org.apache.spark.sql.streaming.StreamingQuery = {
+    * `compactEvery` (the maintenance CADENCE): when > 0, after every N
+    * committed micro-batches — after ALL of that batch's effects —
+    * `compact` rewrites the appended tree(s) blue/green and swaps them
+    * into place ([[compactInPlace]]; the end of a foreachBatch body is
+    * exactly the no-reader-active window the swap requires). Size N
+    * from [[graft.ops.Layout.compactionDue]]'s rule:
+    * N ≈ maxFraction × batchWallMs / perFileMs (measured
+    * ~1.2–2.2 ms/file locally). 0 = never — compact at your own
+    * cadence. A replay after a completed swap re-probes the compacted
+    * tree, which answers identically (compaction is row-identity). */
+  private def gateLoop(docs: DataFrame, checkpointDir: String,
+      compactEvery: Int)(body: DataFrame => Unit)(
+      compact: SparkSession => Unit): StreamingQuery = {
     require(docs.isStreaming, "docs must be a streaming DataFrame")
     require(compactEvery >= 0, "compactEvery must be >= 0 (0 = never)")
     val q = docs.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val store = graft.ops.Dedup.loadDigestStore(
-          batch.sparkSession, storePath)
-        // probe's plan leaves include the batch-digest checkpoint made
-        // inside incrementalExactDuplicates — released below once
-        // flagged is eagerly materialized
-        val probe = graft.ops.Dedup.incrementalExactDuplicates(
-          store, batch, idCol, textCol)
-        // drop SELF-rows (batch_id == dup_id): admission intake ids
-        // are new by contract, so a self-row can only be the batch's
-        // own append seen by a replay — filtering it makes replay
-        // fully idempotent in EVERY failure window (see scaladoc; the
-        // revision-check semantics of self-rows belong to the raw
-        // incrementalExactDuplicates, not to admission)
-        val flagged = probe.filter(col("batch_id") =!= col("dup_id"))
-          .localCheckpoint(true)
-        graft.Persistence.release(probe)
-        // admitted feeds the append AND the output union — checkpoint
-        // (the N-subplans rule; a micro-batch is bounded)
-        val admitted = batch
-          .select(col(idCol), col(textCol))
-          .join(flagged.select(col("batch_id").as(idCol)).distinct(),
-            Seq(idCol), "left_anti")
-          .localCheckpoint(true)
-        // output FIRST, append second (see failure semantics above)
-        flagged
-          .groupBy(col("batch_id").as(idCol))
-          .agg(min(col("dup_id")).as("dup_id"))
-          .select(col(idCol), lit("duplicate").as("status"), col("dup_id"))
-          .unionByName(admitted.select(col(idCol),
-            lit("admitted").as("status"),
-            lit(null).cast("bigint").as("dup_id")))
-          .write.mode("append").parquet(outDir)
-        graft.ops.Dedup.appendToDigestStore(store, storePath, admitted,
-          idCol, textCol)
-        graft.Persistence.release(flagged)
-        graft.Persistence.release(admitted)
-        // maintenance cadence (see scaladoc): compact + swap AFTER all
-        // of this batch's effects, while no reader is active
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          val tmp = graft.TempDirs.createCleaned("graft_adm_ledger_c")
-          graft.ops.Dedup.compactDigestStore(batch.sparkSession,
-            storePath, tmp)
-          graft.ops.Layout.swapCompacted(batch.sparkSession, storePath, tmp)
-        }
+        body(batch)
+        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
+          compact(batch.sparkSession)
       }
       .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
     q
   }
 
-  /** Stream-static NEAR-DUP admission — [[runIncrementalAdmission]]'s
-    * shape for the SKETCH member of the store trio (the full
-    * production loop: an admitted doc joins the corpus TEXT store and
-    * the signature store, so later batches dedup against it without
-    * any corpus re-shingle). Per micro-batch:
+  /** The batch rows whose id is not flagged, checkpointed: they feed
+    * both the status output and the append (the N-subplans rule; a
+    * micro-batch is bounded). */
+  private def admittedRows(batch: DataFrame, flagged: DataFrame,
+      idCol: String, valueCol: String): DataFrame =
+    batch
+      .select(col(idCol), col(valueCol))
+      .join(flagged.select(col("batch_id").as(idCol)).distinct(),
+        Seq(idCol), "left_anti")
+      .localCheckpoint(true)
+
+  /** Append one (id, status, dup_id) row per batch row to `outDir`:
+    * flagged ids as `duplicate` with the min over their flag rows,
+    * admitted ids with a NULL dup_id. */
+  private def writeStatuses(flagged: DataFrame, admitted: DataFrame,
+      idCol: String, outDir: String): Unit =
+    flagged
+      .groupBy(col("batch_id").as(idCol))
+      .agg(min(col("dup_id")).as("dup_id"))
+      .select(col(idCol), lit("duplicate").as("status"), col("dup_id"))
+      .unionByName(admitted.select(col(idCol),
+        lit("admitted").as("status"),
+        lit(null).cast("bigint").as("dup_id")))
+      .write.mode("append").parquet(outDir)
+
+  /** Blue/green compaction of `path`: `rewrite` a fresh temp root,
+    * then swap it into place ([[graft.ops.Layout.swapCompacted]]). */
+  private def compactInPlace(spark: SparkSession, path: String,
+      tmpPrefix: String)(rewrite: String => Any): Unit = {
+    val tmp = graft.TempDirs.createCleaned(tmpPrefix)
+    rewrite(tmp)
+    graft.ops.Layout.swapCompacted(spark, path, tmp)
+  }
+
+  /** Stream-static DIGEST admission: the x209 intake gate as a
+    * structured stream over the [[gateLoop]]. Per batch the probe is
+    * [[graft.ops.Dedup.incrementalExactDuplicates]] against the
+    * ledger, and the append is [[graft.ops.Dedup.appendToDigestStore]]
+    * (whose digest anti-join makes a replayed append a no-op);
+    * `compactEvery` rewrites the ledger with
+    * [[graft.ops.Dedup.compactDigestStore]]. EventStreamsSpec pins the
+    * 3-micro-batch stream ≡ the batch pipeline row-for-row, and that a
+    * replayed intake against the grown ledger reproduces the original
+    * statuses. */
+  def runIncrementalAdmission(docs: DataFrame, storePath: String,
+      outDir: String, checkpointDir: String, idCol: String = "doc_id",
+      textCol: String = "text", compactEvery: Int = 0): StreamingQuery =
+    gateLoop(docs, checkpointDir, compactEvery) { batch =>
+      val store = graft.ops.Dedup.loadDigestStore(
+        batch.sparkSession, storePath)
+      // probe's plan leaves include the batch-digest checkpoint made
+      // inside incrementalExactDuplicates — released below once
+      // flagged is eagerly materialized
+      val probe = graft.ops.Dedup.incrementalExactDuplicates(
+        store, batch, idCol, textCol)
+      val flagged = probe.filter(col("batch_id") =!= col("dup_id"))
+        .localCheckpoint(true)
+      graft.Persistence.release(probe)
+      val admitted = admittedRows(batch, flagged, idCol, textCol)
+      writeStatuses(flagged, admitted, idCol, outDir)
+      graft.ops.Dedup.appendToDigestStore(store, storePath, admitted,
+        idCol, textCol)
+      graft.Persistence.release(flagged)
+      graft.Persistence.release(admitted)
+    } { spark =>
+      compactInPlace(spark, storePath, "graft_adm_ledger_c")(
+        graft.ops.Dedup.compactDigestStore(spark, storePath, _))
+    }
+
+  /** The store calls that tell the two SKETCH gates apart, bound to a
+    * store handle loaded for one micro-batch: the stored (id, sig)
+    * frame, the verified probe of a batch against the corpus values,
+    * re-signing rows with the store's own parameters, and the append. */
+  private final case class SketchStore(
+      signatures: DataFrame,
+      probe: (DataFrame, DataFrame) => DataFrame,
+      sign: DataFrame => DataFrame,
+      append: DataFrame => Any)
+
+  /** The SKETCH admission body shared by
+    * [[runIncrementalNearDupAdmission]] and
+    * [[runIncrementalEmbeddingAdmission]], over the [[gateLoop]]. The
+    * full production loop: an admitted row joins the corpus VALUE
+    * store under `corpusPath` (texts or vectors — the verification
+    * side the stream itself grows) AND the signature store, so later
+    * batches dedup against it with no corpus re-sign. Per batch:
     *
-    *   1. probe: [[graft.ops.Dedup.incrementalVerifiedTextDuplicates]]
-    *      through the signature store loaded fresh (store banding is a
-    *      map-only signature scan; shingling runs over the batch plus
-    *      candidate-HIT corpus docs only, via `corpusTextsPath` —
-    *      which the stream itself grows, step 3);
-    *   2. output: one (doc_id, status, min dup_id) row per batch doc,
-    *      committed BEFORE the appends (the replay-ordering rule);
-    *   3. append: admitted docs anti-joined against the store's ids
-    *      (replay-idempotent — the digest-append discipline applied to
-    *      a sketch append whose own contract is new-ids-only), then
-    *      their TEXTS land under `corpusTextsPath` and their
-    *      signatures under the store (texts first: a replay between
-    *      the two can only duplicate text rows, which duplicates
-    *      verify rows the min-reduction collapses — never a signature
-    *      row, so the store stays keyed-unique). SELF-rows are
-    *      filtered from the flag set, so a replay after the sig
-    *      append reproduces the original statuses and the anti-join
-    *      no-ops — the [[runIncrementalAdmission]] idempotence
-    *      argument verbatim.
+    *   1. probe through the store loaded fresh (`load`): banding is a
+    *      map-only signature scan; verification runs over the batch
+    *      plus candidate-HIT corpus rows only. The raw probe is
+    *      checkpointed once (it feeds both orientation branches — two
+    *      filters over the lazy frame would run the verify joins
+    *      twice);
+    *   2. REORIENT batch-internal pairs: the probe emits them with the
+    *      SMALLER id as batch_id (the estimate-probe convention), but
+    *      admission flags the LARGER id against the min keeper —
+    *      without the swap a same-batch dup class would admit its LAST
+    *      member and flag the keeper. Then the self-row filter (replay
+    *      idempotence, the [[gateLoop]] rule);
+    *   3. the appends are made replay-idempotent on the SIGNATURE
+    *      store's ids, resolved BEFORE any effect, and a LOUD
+    *      id-collision guard refuses the batch with nothing written: a
+    *      dropped id must already carry this batch's own signature in
+    *      the store (a replay); a dropped id with a DIFFERENT stored
+    *      signature is an intake id colliding with an existing store
+    *      id (the "intake ids are new" contract violated) — swallowing
+    *      it would emit 'admitted' while the store never learns the
+    *      content, and every later day re-admits it. Short-circuited on
+    *      the normal path: dropped is the difference of two per-batch
+    *      checkpoints, so its emptiness probe never touches the store;
+    *   4. output first, then the corpus values, then the signatures (a
+    *      replay between the two appends can only duplicate value rows,
+    *      which duplicates verify rows the min-reduction collapses —
+    *      never a signature row, so the store stays keyed-unique);
+    *      release every per-batch checkpoint;
+    *   5. `compactEvery` > 0 compacts BOTH appended trees (the
+    *      signature store with `compactSignatures`, the plain value
+    *      dir with [[graft.ops.Layout.compact]]) and swaps each into
+    *      place. */
+  private def runSketchAdmission(docs: DataFrame, storePath: String,
+      corpusPath: String, outDir: String, checkpointDir: String,
+      idCol: String, valueCol: String, compactEvery: Int,
+      tmpPrefix: String)(
+      compactSignatures: (SparkSession, String, String) => Any)(
+      load: SparkSession => SketchStore): StreamingQuery =
+    gateLoop(docs, checkpointDir, compactEvery) { batch =>
+      val spark = batch.sparkSession
+      val store = load(spark)
+      val probe = store.probe(spark.read.parquet(corpusPath), batch)
+      val flaggedRaw = probe.localCheckpoint(true)
+      graft.Persistence.release(probe)
+      val flagged = flaggedRaw.filter(col("dup_in") === "corpus")
+        .select(col("batch_id"), col("dup_id"))
+        .unionByName(flaggedRaw.filter(col("dup_in") === "batch")
+          .select(col("dup_id").as("batch_id"), col("batch_id").as("dup_id")))
+        .filter(col("batch_id") =!= col("dup_id"))
+      val admitted = admittedRows(batch, flagged, idCol, valueCol)
+      val newAdmits = admitted
+        .join(store.signatures.select(col("id").as(idCol)),
+          Seq(idCol), "left_anti")
+        .localCheckpoint(true)
+      val dropped = admitted.join(newAdmits.select(col(idCol)),
+        Seq(idCol), "left_anti")
+      if (dropped.limit(1).collect().nonEmpty) {
+        val collided = store.sign(dropped)
+          .join(store.signatures.select(col("id"), col("sig").as("stored")),
+            Seq("id"))
+          .filter(!(col("sig") <=> col("stored")))
+          .limit(1).collect()
+        require(collided.isEmpty,
+          s"admission intake id ${collided.headOption.map(_.get(0))} " +
+            "already exists in the signature store with different " +
+            "content — intake ids must be NEW (the store-append " +
+            "contract); re-key the intake")
+      }
+      writeStatuses(flagged, admitted, idCol, outDir)
+      newAdmits.write.mode("append").parquet(corpusPath)
+      store.append(newAdmits)
+      graft.Persistence.release(flaggedRaw)
+      graft.Persistence.release(admitted)
+      graft.Persistence.release(newAdmits)
+    } { spark =>
+      compactInPlace(spark, storePath, s"${tmpPrefix}_sig_c")(
+        compactSignatures(spark, storePath, _))
+      compactInPlace(spark, corpusPath, s"${tmpPrefix}_corpus_c")(
+        graft.ops.Layout.compact(spark, corpusPath, _))
+    }
+
+  /** Stream-static NEAR-DUP admission: [[runSketchAdmission]] over the
+    * minhash signature store, with EXACT gram-set verification
+    * ([[graft.ops.Dedup.incrementalVerifiedTextDuplicates]]) against
+    * the corpus TEXT store under `corpusTextsPath`; compaction by
+    * [[graft.ops.Dedup.compactMinhashSignatures]].
     *
     * BATCHING-INVARIANT ONLY AT threshold = 1.0 AND WITH ID-ORDERED
-    * MICRO-BATCHES (the x211 precondition, r19 advisor): verified
-    * Jaccard 1.0 ⇔ identical gram SETS, an equivalence relation, so
-    * the admitted set is the class-minimum rule for any id-ordered
-    * split of the intake (EventStreamsSpec pins stream ≡ the class
-    * algebra; the x215 carrier replays it in SQL). If a LARGER-id
-    * class member arrives in an earlier batch it is admitted and the
-    * later class minimum flags against it — a valid online decision
-    * that diverges from the class-minimum oracle; non-ordered intakes
-    * are rows-only territory. At mid thresholds similarity is not
-    * transitive and greedy online admission depends on the batch
-    * split — outputs are valid online-dedup decisions but carry no
-    * SQL oracle; keep such runs rows-only.
-    *
-    * Scale shape: per batch — one batch shingle+sign pass, one
-    * map-only store banding scan, verification on candidates only,
-    * two batch-sized appends; per-batch checkpoints released at end
-    * of body. BOTH appended trees grow one file per batch — the
-    * signature store ([[graft.ops.Dedup.compactMinhashSignatures]]
-    * is the maintenance pass) and the corpus text dir (a plain
-    * parquet dir: [[graft.ops.Layout.compact]] directly, same
-    * blue/green discipline) — same economics as the digest ledger
-    * (measured: SCALE_REHEARSAL_r19_stream.json). `compactEvery` > 0
-    * runs both compactions + pointer swaps after every N committed
-    * batches ([[runIncrementalAdmission]]'s cadence contract; size N
-    * via [[graft.ops.Layout.compactionDue]]). */
+    * MICRO-BATCHES (the x211 precondition): verified Jaccard 1.0 ⇔
+    * identical gram SETS, an equivalence relation, so the admitted set
+    * is the class-minimum rule for any id-ordered split of the intake
+    * (EventStreamsSpec pins stream ≡ the class algebra; the x215
+    * carrier replays it in SQL). If a LARGER-id class member arrives in
+    * an earlier batch it is admitted and the later class minimum flags
+    * against it — a valid online decision that diverges from the
+    * class-minimum oracle; non-ordered intakes are rows-only
+    * territory. At mid thresholds similarity is not transitive and
+    * greedy online admission depends on the batch split — outputs are
+    * valid online-dedup decisions but carry no SQL oracle; keep such
+    * runs rows-only. */
   def runIncrementalNearDupAdmission(docs: DataFrame, storePath: String,
       corpusTextsPath: String, outDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
-      threshold: Double = 1.0, bands: Int = 32, compactEvery: Int = 0):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    require(docs.isStreaming, "docs must be a streaming DataFrame")
-    require(compactEvery >= 0, "compactEvery must be >= 0 (0 = never)")
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val store = graft.ops.Dedup.loadMinhashSignatures(spark, storePath)
-        val corpusTexts = spark.read.parquet(corpusTextsPath)
-        val probe = graft.ops.Dedup.incrementalVerifiedTextDuplicates(
-          store, corpusTexts, batch, idCol, textCol, threshold, bands)
-        // checkpoint the RAW probe once (it feeds both orientation
-        // branches below — the N-subplans rule: two filters over the
-        // lazy frame would execute the verify joins twice), then free
-        // its internal candidate/gram checkpoints
-        val flaggedRaw = probe.localCheckpoint(true)
-        graft.Persistence.release(probe)
-        // REORIENT batch-internal pairs: the probe emits them with
-        // the SMALLER id as batch_id (the estimate-probe convention),
-        // but admission flags the LARGER id against the min keeper —
-        // without the swap a same-batch dup class would admit its
-        // LAST member and flag the keeper (EventStreamsSpec fixture
-        // caught it; the real corpus has no intra-batch dup classes,
-        // so the carrier alone could not). Then the self-row filter:
-        // replay idempotence, the exact-admission rule. Cheap
-        // projections over the checkpoint — no second checkpoint.
-        val flagged = flaggedRaw.filter(col("dup_in") === "corpus")
-          .unionByName(flaggedRaw.filter(col("dup_in") === "batch")
-            .select(col("dup_id").as("batch_id"),
-              col("batch_id").as("dup_id"), col("jaccard"), col("dup_in")))
-          .filter(col("batch_id") =!= col("dup_id"))
-        val admitted = batch
-          .select(col(idCol), col(textCol))
-          .join(flagged.select(col("batch_id").as(idCol)).distinct(),
-            Seq(idCol), "left_anti")
-          .localCheckpoint(true)
-        // appends made replay-idempotent on the SIGNATURE store's ids,
-        // resolved BEFORE any effect so the collision guard can refuse
-        // the batch with nothing written
-        val newAdmits = admitted
-          .join(store.signatures.select(col("id").as(idCol)),
-            Seq(idCol), "left_anti")
-          .localCheckpoint(true)
-        // LOUD id-collision guard (the ×100 rehearsal finding): the
-        // anti-join above exists for REPLAY idempotence — a dropped id
-        // must therefore already carry this batch's own signature in
-        // the store. A dropped id with a DIFFERENT stored signature is
-        // an intake id colliding with an existing store id (the
-        // "intake ids are new" contract violated): silently swallowing
-        // it would emit 'admitted' while the store never learns the
-        // content, and every later day re-admits it. SHORT-CIRCUITED
-        // on the normal path (r19 advisor): dropped is the difference
-        // of two per-batch checkpoints, so its emptiness probe never
-        // touches the store — only a non-empty dropped set (replay or
-        // collision) pays the signature join's store scan.
-        val dropped = admitted.join(newAdmits.select(col(idCol)),
-          Seq(idCol), "left_anti")
-        if (dropped.limit(1).collect().nonEmpty) {
-          val collided = graft.ops.Dedup.minhashSignatures(dropped, idCol,
-              textCol, store.numHashes, store.shingleSize)
-            .join(store.signatures.select(col("id"), col("sig").as("stored")),
-              Seq("id"))
-            .filter(!(col("sig") <=> col("stored")))
-            .limit(1).collect()
-          require(collided.isEmpty,
-            s"admission intake id ${collided.headOption.map(_.get(0))} " +
-              "already exists in the signature store with different " +
-              "content — intake ids must be NEW (the store-append " +
-              "contract); re-key the intake")
-        }
-        // output FIRST among the effects (the runIncrementalAdmission
-        // replay rule), then the two appends
-        flagged
-          .groupBy(col("batch_id").as(idCol))
-          .agg(min(col("dup_id")).as("dup_id"))
-          .select(col(idCol), lit("duplicate").as("status"), col("dup_id"))
-          .unionByName(admitted.select(col(idCol),
-            lit("admitted").as("status"),
-            lit(null).cast("bigint").as("dup_id")))
-          .write.mode("append").parquet(outDir)
-        newAdmits.write.mode("append").parquet(corpusTextsPath)
-        graft.ops.Dedup.appendToMinhashSignatures(store, storePath,
-          newAdmits, idCol, textCol)
-        graft.Persistence.release(flaggedRaw)
-        graft.Persistence.release(admitted)
-        graft.Persistence.release(newAdmits)
-        // maintenance cadence: BOTH appended trees, after all effects
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          val sigC = graft.TempDirs.createCleaned("graft_ndadm_sig_c")
-          graft.ops.Dedup.compactMinhashSignatures(spark, storePath, sigC)
-          graft.ops.Layout.swapCompacted(spark, storePath, sigC)
-          val txtC = graft.TempDirs.createCleaned("graft_ndadm_txt_c")
-          graft.ops.Layout.compact(spark, corpusTextsPath, txtC)
-          graft.ops.Layout.swapCompacted(spark, corpusTextsPath, txtC)
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      threshold: Double = 1.0, bands: Int = 32,
+      compactEvery: Int = 0): StreamingQuery =
+    runSketchAdmission(docs, storePath, corpusTextsPath, outDir,
+        checkpointDir, idCol, textCol, compactEvery, "graft_ndadm")(
+        graft.ops.Dedup.compactMinhashSignatures(_, _, _)) { spark =>
+      val store = graft.ops.Dedup.loadMinhashSignatures(spark, storePath)
+      SketchStore(store.signatures,
+        graft.ops.Dedup.incrementalVerifiedTextDuplicates(store, _, _,
+          idCol, textCol, threshold, bands),
+        graft.ops.Dedup.minhashSignatures(_, idCol, textCol,
+          store.numHashes, store.shingleSize),
+        graft.ops.Dedup.appendToMinhashSignatures(store, storePath, _,
+          idCol, textCol))
+    }
 
-  /** Stream-static EMBEDDING admission — the third member of the
-    * streaming admission trio ([[runIncrementalAdmission]] = digest,
-    * [[runIncrementalNearDupAdmission]] = text sketch): per
-    * micro-batch, probe the persisted embedding signature store with
-    * EXACT cosine verification
+  /** Stream-static EMBEDDING admission: [[runSketchAdmission]] over the
+    * embedding signature store, with EXACT cosine verification
     * ([[graft.ops.Dedup.incrementalEmbeddingNearDuplicates]] through
     * the handle loaded fresh — width/bands/seed resolve from the meta
-    * sidecar), flag batch vectors whose cosine against the corpus —
-    * or an earlier batch vector — clears `threshold`, and fold the
-    * admitted survivors into BOTH stores (vectors under
-    * `corpusVecsPath`, signatures via
-    * [[graft.ops.Dedup.appendToEmbeddingSignatures]]) before the next
-    * batch probes.
-    *
-    * Same discipline as the text gate, verbatim: batch-internal pairs
-    * REORIENTED to the min keeper (the probe emits them smaller-id
-    * first), SELF-rows filtered (replay idempotence — intake ids are
-    * new by contract), output committed before the appends, appends
-    * anti-joined on the store's ids, per-batch checkpoints released.
+    * sidecar) against the corpus VECTOR store under `corpusVecsPath`;
+    * compaction by [[graft.ops.Dedup.compactEmbeddingSignatures]].
     *
     * Oracle scope (the x212/x215 analysis applied): the output is
     * batching-invariant when flagging induces EQUIVALENCE CLASSES —
@@ -545,80 +528,19 @@ object EventStreams {
   def runIncrementalEmbeddingAdmission(docs: DataFrame, storePath: String,
       corpusVecsPath: String, outDir: String, checkpointDir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      threshold: Double = 0.95, compactEvery: Int = 0):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    require(docs.isStreaming, "docs must be a streaming DataFrame")
-    require(compactEvery >= 0, "compactEvery must be >= 0 (0 = never)")
-    val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        val store = graft.ops.Dedup.loadEmbeddingSignatures(spark, storePath)
-        val corpusVecs = spark.read.parquet(corpusVecsPath)
-        val probe = graft.ops.Dedup.incrementalEmbeddingNearDuplicates(
-          store, corpusVecs, batch, idCol, vecCol, threshold)
-        val flaggedRaw = probe.localCheckpoint(true)
-        graft.Persistence.release(probe)
-        val flagged = flaggedRaw.filter(col("dup_in") === "corpus")
-          .unionByName(flaggedRaw.filter(col("dup_in") === "batch")
-            .select(col("dup_id").as("batch_id"),
-              col("batch_id").as("dup_id"), col("cosine"), col("dup_in")))
-          .filter(col("batch_id") =!= col("dup_id"))
-        val admitted = batch
-          .select(col(idCol), col(vecCol))
-          .join(flagged.select(col("batch_id").as(idCol)).distinct(),
-            Seq(idCol), "left_anti")
-          .localCheckpoint(true)
-        val newAdmits = admitted
-          .join(store.signatures.select(col("id").as(idCol)),
-            Seq(idCol), "left_anti")
-          .localCheckpoint(true)
-        // loud id-collision guard BEFORE any effect, short-circuited
-        // on the normal path — see runIncrementalNearDupAdmission
-        val dropped = admitted.join(newAdmits.select(col(idCol)),
-          Seq(idCol), "left_anti")
-        if (dropped.limit(1).collect().nonEmpty) {
-          val collided = graft.ops.Dedup.embeddingSignatures(dropped, idCol,
-              vecCol, store.numBits, store.bands, store.seed)
-            .join(store.signatures.select(col("id"), col("sig").as("stored")),
-              Seq("id"))
-            .filter(!(col("sig") <=> col("stored")))
-            .limit(1).collect()
-          require(collided.isEmpty,
-            s"admission intake id ${collided.headOption.map(_.get(0))} " +
-              "already exists in the signature store with different " +
-              "content — intake ids must be NEW (the store-append " +
-              "contract); re-key the intake")
-        }
-        flagged
-          .groupBy(col("batch_id").as(idCol))
-          .agg(min(col("dup_id")).as("dup_id"))
-          .select(col(idCol), lit("duplicate").as("status"), col("dup_id"))
-          .unionByName(admitted.select(col(idCol),
-            lit("admitted").as("status"),
-            lit(null).cast("bigint").as("dup_id")))
-          .write.mode("append").parquet(outDir)
-        newAdmits.write.mode("append").parquet(corpusVecsPath)
-        graft.ops.Dedup.appendToEmbeddingSignatures(store, storePath,
-          newAdmits, idCol, vecCol)
-        graft.Persistence.release(flaggedRaw)
-        graft.Persistence.release(admitted)
-        graft.Persistence.release(newAdmits)
-        // maintenance cadence: both appended trees, after all effects
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
-          val sigC = graft.TempDirs.createCleaned("graft_embadm_sig_c")
-          graft.ops.Dedup.compactEmbeddingSignatures(spark, storePath, sigC)
-          graft.ops.Layout.swapCompacted(spark, storePath, sigC)
-          val vecC = graft.TempDirs.createCleaned("graft_embadm_vec_c")
-          graft.ops.Layout.compact(spark, corpusVecsPath, vecC)
-          graft.ops.Layout.swapCompacted(spark, corpusVecsPath, vecC)
-        }
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
-  }
+      threshold: Double = 0.95, compactEvery: Int = 0): StreamingQuery =
+    runSketchAdmission(docs, storePath, corpusVecsPath, outDir,
+        checkpointDir, idCol, vecCol, compactEvery, "graft_embadm")(
+        graft.ops.Dedup.compactEmbeddingSignatures(_, _, _)) { spark =>
+      val store = graft.ops.Dedup.loadEmbeddingSignatures(spark, storePath)
+      SketchStore(store.signatures,
+        graft.ops.Dedup.incrementalEmbeddingNearDuplicates(store, _, _,
+          idCol, vecCol, threshold),
+        graft.ops.Dedup.embeddingSignatures(_, idCol, vecCol,
+          store.numBits, store.bands, store.seed),
+        graft.ops.Dedup.appendToEmbeddingSignatures(store, storePath, _,
+          idCol, vecCol))
+    }
 
   /** Run a streaming query to completion against a static directory
     * (memory sink) and return the result table — the batch-driven
@@ -633,6 +555,40 @@ object EventStreams {
     q.processAllAvailable()
     q.stop()
     spark.table(name)
+  }
+
+  /** Stage `df` as the ONE parquet file `dir/name` with modification
+    * time `mtime` — the unit of a file-stream intake: the file source
+    * drains oldest-mtime first, path order as the tiebreak. */
+  def stageFile(df: DataFrame, dir: String, name: String, mtime: Long): Unit = {
+    val tmp = graft.TempDirs.createCleaned("graft_stage")
+    df.repartition(1).write.mode("overwrite").parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val dst = java.nio.file.Paths.get(dir, name)
+    java.nio.file.Files.copy(part.toPath, dst)
+    dst.toFile.setLastModified(mtime)
+  }
+
+  /** An ORDERED intake stream: batch i is staged as
+    * `intake_%03d.parquet` under a fresh `<prefix>_src` dir with
+    * strictly increasing mtimes (all within the source's maxFileAge of
+    * the newest), then streamed at maxFilesPerTrigger=1 with the first
+    * batch's schema pinned (file streams need one; the file source
+    * forces it nullable) — so staged batch i IS micro-batch i. The
+    * admission gates' id-ordered precondition is met by staging the
+    * batches in id order. */
+  def orderedIntake(spark: SparkSession, prefix: String,
+      batches: Seq[DataFrame]): DataFrame = {
+    require(batches.nonEmpty, "orderedIntake needs at least one batch")
+    val src = graft.TempDirs.createCleaned(s"${prefix}_src")
+    batches.zipWithIndex.foreach { case (df, i) =>
+      stageFile(df, src, f"intake_$i%03d.parquet", 1600000000000L + i * 60000L)
+    }
+    spark.readStream
+      .schema(batches.head.schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(src)
   }
 
   final case class GroupProfile(

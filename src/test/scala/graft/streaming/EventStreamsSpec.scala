@@ -17,6 +17,15 @@ class EventStreamsSpec extends AnyFunSuite {
     dir.toString
   }
 
+  private def rootMsg(t: Throwable): String =
+    Option(t.getCause).map(rootMsg).getOrElse(Option(t.getMessage).getOrElse(""))
+
+  /** An admission gate's (id, status, dup_id) rows; NULL dup_id as -1. */
+  private def statuses(outDir: String): Set[(Long, String, Long)] =
+    spark.read.parquet(outDir).collect()
+      .map(r => (r.getLong(0), r.getString(1),
+        if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
+
   test("hourly windowed counts match the batch equivalent") {
     val stream = EventStreams.fromParquetDir(spark, eventsDir)
     // append mode only emits closed windows; complete mode emits all
@@ -245,6 +254,33 @@ class EventStreamsSpec extends AnyFunSuite {
     assert(streamed == batch, "stream and batch diverged")
   }
 
+  test("orderedIntake: N staged batches stream as N micro-batches, in order") {
+    import spark.implicits._
+    // distinct batch sizes make the order visible in numInputRows
+    val sizes = Seq(3, 1, 4, 2)
+    val batches = sizes.zipWithIndex.map { case (n, i) =>
+      (0 until n).map(j => (i * 10L + j, s"batch $i row $j"))
+        .toDF("doc_id", "text")
+    }
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
+    val q = EventStreams.orderedIntake(spark, "graft_oi", batches)
+      .writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        seen.add(b.select(col("doc_id")).as[Long].collect().toSeq.sorted)
+        ()
+      }
+      .option("checkpointLocation", graft.TempDirs.createCleaned("graft_oi_ck"))
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    val rows = q.recentProgress.toSeq.map(_.numInputRows).filter(_ > 0)
+    assert(rows == sizes.map(_.toLong),
+      s"one micro-batch per staged batch, in staging order: $rows")
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSeq.filter(_.nonEmpty) ==
+      sizes.zipWithIndex.map { case (n, i) => (0 until n).map(i * 10L + _) })
+  }
+
   test("streaming admission equals the batch pipeline; cross-batch appends assign the batch-mode keepers") {
     import graft.ops.Dedup
     // the x209 admission gate as a stream (r17 verdict #3): each
@@ -288,33 +324,15 @@ class EventStreamsSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1),
         if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
     // stream run: three id-ordered files, one per micro-batch
-    val srcDir = graft.TempDirs.createCleaned("graft_adm_src")
-    Seq(dup, novelA, novelRep).zipWithIndex.foreach { case (df, i) =>
-      val tmp = graft.TempDirs.createCleaned(s"graft_adm_stage$i")
-      df.repartition(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = java.nio.file.Paths.get(srcDir, f"intake_$i%03d.parquet")
-      java.nio.file.Files.copy(part.toPath, dst)
-      dst.toFile.setLastModified(1600000000000L + i * 60000L)
-    }
+    val intakeBatches = Seq(dup, novelA, novelRep)
     val storeDir = graft.TempDirs.createCleaned("graft_adm_store")
     Dedup.saveDigestStore(docs, "doc_id", "text", storeDir)
     val outDir = graft.TempDirs.createCleaned("graft_adm_out")
     val ckDir = graft.TempDirs.createCleaned("graft_adm_ck")
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType))))
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    EventStreams.runIncrementalAdmission(stream, storeDir, outDir, ckDir,
-      "doc_id", "text")
-    val got = spark.read.parquet(outDir).collect()
-      .map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
+    EventStreams.runIncrementalAdmission(
+      EventStreams.orderedIntake(spark, "graft_adm", intakeBatches),
+      storeDir, outDir, ckDir, "doc_id", "text")
+    val got = statuses(outDir)
     assert(got.exists(_._2 == "admitted") && got.exists(_._2 == "duplicate"),
       "fixture must exercise both outcomes")
     // the cross-batch rows specifically: every novelRep doc whose
@@ -326,20 +344,12 @@ class EventStreamsSpec extends AnyFunSuite {
     // identical stream run over a FRESH checkpoint admits nothing new
     val outDir2 = graft.TempDirs.createCleaned("graft_adm_out2")
     val ckDir2 = graft.TempDirs.createCleaned("graft_adm_ck2")
-    val stream2 = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("text",
-          org.apache.spark.sql.types.StringType))))
-      .parquet(srcDir)
-    EventStreams.runIncrementalAdmission(stream2, storeDir, outDir2, ckDir2,
-      "doc_id", "text")
+    EventStreams.runIncrementalAdmission(
+      EventStreams.orderedIntake(spark, "graft_adm2", intakeBatches),
+      storeDir, outDir2, ckDir2, "doc_id", "text")
     val ledgerAfterRun1 = Dedup.loadDigestStore(spark, storeDir)
       .digests.count()
-    val rerun = spark.read.parquet(outDir2).collect()
-      .map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
+    val rerun = statuses(outDir2)
     // the r19 idempotent-replay contract (self-rows filtered): a
     // replayed intake REPRODUCES the original statuses exactly —
     // run-1-admitted ids re-admit as pure no-ops (their ledger keeper
@@ -383,30 +393,12 @@ class EventStreamsSpec extends AnyFunSuite {
     val txtDir = graft.TempDirs.createCleaned("graft_nda_txt")
     Dedup.saveMinhashSignatures(corpus, "doc_id", "text", sigDir)
     corpus.write.mode("overwrite").parquet(txtDir)
-    val srcDir = graft.TempDirs.createCleaned("graft_nda_src")
-    Seq(b1, b2).zipWithIndex.foreach { case (df, i) =>
-      val tmp = graft.TempDirs.createCleaned(s"graft_nda_stage$i")
-      df.repartition(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = java.nio.file.Paths.get(srcDir, f"intake_$i%03d.parquet")
-      java.nio.file.Files.copy(part.toPath, dst)
-      dst.toFile.setLastModified(1600000000000L + i * 60000L)
-    }
     val outDir = graft.TempDirs.createCleaned("graft_nda_out")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
     EventStreams.runIncrementalNearDupAdmission(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir),
+      EventStreams.orderedIntake(spark, "graft_nda", Seq(b1, b2)),
       sigDir, txtDir, outDir,
       graft.TempDirs.createCleaned("graft_nda_ck"), "doc_id", "text")
-    val out = spark.read.parquet(outDir).collect()
-      .map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
+    val out = statuses(outDir)
     assert(out == Set(
       (10L, "duplicate", 1L),
       (11L, "admitted", -1L),
@@ -437,37 +429,16 @@ class EventStreamsSpec extends AnyFunSuite {
       Seq((100L + i, "alpha beta gamma"), (10L + i, s"novel content $i"))
         .toDF("doc_id", "text")
     }
-    def stage(): String = {
-      val src = graft.TempDirs.createCleaned("graft_ce_src")
-      batches.zipWithIndex.foreach { case (df, i) =>
-        val tmp = graft.TempDirs.createCleaned(s"graft_ce_stage$i")
-        df.repartition(1).write.mode("overwrite").parquet(tmp)
-        val part = new java.io.File(tmp).listFiles()
-          .filter(_.getName.endsWith(".parquet")).head
-        val dst = java.nio.file.Paths.get(src, f"intake_$i%03d.parquet")
-        java.nio.file.Files.copy(part.toPath, dst)
-        dst.toFile.setLastModified(1600000000000L + i * 60000L)
-      }
-      src
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
     def run(compactEvery: Int): (Set[(Long, String, Long)], String) = {
       val ledger = graft.TempDirs.createCleaned(s"graft_ce_led$compactEvery")
       Dedup.saveDigestStore(corpus, "doc_id", "text", ledger)
       val out = graft.TempDirs.createCleaned(s"graft_ce_out$compactEvery")
       graft.streaming.EventStreams.runIncrementalAdmission(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(stage()),
+        EventStreams.orderedIntake(spark, s"graft_ce$compactEvery", batches),
         ledger, out,
         graft.TempDirs.createCleaned(s"graft_ce_ck$compactEvery"),
         "doc_id", "text", compactEvery = compactEvery)
-      (spark.read.parquet(out).collect()
-        .map(r => (r.getLong(0), r.getString(1),
-          if (r.isNullAt(2)) -1L else r.getLong(2))).toSet, ledger)
+      (statuses(out), ledger)
     }
     val (outPlain, _) = run(0)
     val (outCadence, ledgerC) = run(2)
@@ -516,31 +487,13 @@ class EventStreamsSpec extends AnyFunSuite {
     val txtDir = graft.TempDirs.createCleaned("graft_ndmid_txt")
     Dedup.saveMinhashSignatures(corpus, "doc_id", "text", sigDir)
     corpus.write.mode("overwrite").parquet(txtDir)
-    val srcDir = graft.TempDirs.createCleaned("graft_ndmid_src")
-    Seq(b1, b2).zipWithIndex.foreach { case (df, i) =>
-      val tmp = graft.TempDirs.createCleaned(s"graft_ndmid_stage$i")
-      df.repartition(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = java.nio.file.Paths.get(srcDir, f"intake_$i%03d.parquet")
-      java.nio.file.Files.copy(part.toPath, dst)
-      dst.toFile.setLastModified(1600000000000L + i * 60000L)
-    }
     val outDir = graft.TempDirs.createCleaned("graft_ndmid_out")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
     EventStreams.runIncrementalNearDupAdmission(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(srcDir),
+      EventStreams.orderedIntake(spark, "graft_ndmid", Seq(b1, b2)),
       sigDir, txtDir, outDir,
       graft.TempDirs.createCleaned("graft_ndmid_ck"), "doc_id", "text",
       threshold = 0.7)
-    val out = spark.read.parquet(outDir).collect()
-      .map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
+    val out = statuses(outDir)
     assert(out == Set(
       (10L, "duplicate", 1L),  // mid-regime 0.714 flag
       (11L, "admitted", -1L),
@@ -587,33 +540,107 @@ class EventStreamsSpec extends AnyFunSuite {
     val txtDir = graft.TempDirs.createCleaned("graft_ndg_txt")
     Dedup.saveMinhashSignatures(corpus, "doc_id", "text", sigDir)
     corpus.write.mode("overwrite").parquet(txtDir)
-    val srcDir = graft.TempDirs.createCleaned("graft_ndg_src")
     val bad = Seq((1L, "entirely novel content under a corpus id"))
       .toDF("doc_id", "text")
-    val tmp = graft.TempDirs.createCleaned("graft_ndg_stage")
-    bad.repartition(1).write.mode("overwrite").parquet(tmp)
-    val part = new java.io.File(tmp).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    java.nio.file.Files.copy(part.toPath,
-      java.nio.file.Paths.get(srcDir, "intake_000.parquet"))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       EventStreams.runIncrementalNearDupAdmission(
-        spark.readStream.schema(schema).parquet(srcDir),
+        EventStreams.orderedIntake(spark, "graft_ndg", Seq(bad)),
         sigDir, txtDir, graft.TempDirs.createCleaned("graft_ndg_out"),
         graft.TempDirs.createCleaned("graft_ndg_ck"),
         "doc_id", "text", threshold = 1.0)
     }
-    def rootMsg(t: Throwable): String =
-      Option(t.getCause).map(rootMsg).getOrElse(Option(t.getMessage).getOrElse(""))
     assert(rootMsg(e).contains("must be NEW"),
       s"collision must fail with the named contract: ${rootMsg(e).take(200)}")
     // the store is untouched by the refused batch
     assert(Dedup.loadMinhashSignatures(spark, sigDir).signatures.count() == 1L)
+  }
+
+  test("embedding admission refuses an intake id that collides with a store id; nothing is written") {
+    import graft.ops.{Dedup, Layout}
+    // the near-dup collision guard, pinned for the EMBEDDING gate:
+    // intake id 1 carries the NEGATION of corpus vector 1 — novel
+    // content (cosine -1 to its original; the corpus premise keeps
+    // every other pair inside |cos| < 0.95), so it admits, and the
+    // replay anti-join on store ids would drop it silently. The gate
+    // must refuse the batch before any effect lands.
+    val corpus = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 50)
+      .select(col("vec_id"), col("embedding"))
+    val nCorpus = corpus.count()
+    val sigDir = graft.TempDirs.createCleaned("graft_embg_sig")
+    val vecDir = graft.TempDirs.createCleaned("graft_embg_vec")
+    Dedup.saveEmbeddingSignatures(corpus, "vec_id", "embedding", sigDir,
+      numBits = 48, bands = 8)
+    corpus.write.mode("overwrite").parquet(vecDir)
+    val bad = corpus.filter(col("vec_id") === 1)
+      .select(col("vec_id"), transform(col("embedding"), x => -x).as("embedding"))
+    val outDir = graft.TempDirs.createCleaned("graft_embg_out")
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      EventStreams.runIncrementalEmbeddingAdmission(
+        EventStreams.orderedIntake(spark, "graft_embg", Seq(bad)),
+        sigDir, vecDir, outDir, graft.TempDirs.createCleaned("graft_embg_ck"),
+        "vec_id", "embedding", threshold = 0.95)
+    }
+    assert(rootMsg(e).contains("must be NEW"),
+      s"collision must fail with the named contract: ${rootMsg(e).take(200)}")
+    // nothing written: no output rows, both stores untouched
+    assert(Layout.dataFileCount(spark, outDir) == 0)
+    assert(Dedup.loadEmbeddingSignatures(spark, sigDir).signatures.count() == nCorpus)
+    assert(spark.read.parquet(vecDir).count() == nCorpus)
+  }
+
+  test("embedding admission compactEvery: identical output, both trees end compacted") {
+    import graft.ops.{Dedup, Layout}
+    // the digest cadence spec for the EMBEDDING gate: 6 single-file
+    // batches, each one corpus replica (flags its original) and one
+    // negated corpus vector (novel -> admitted into BOTH trees).
+    // compactEvery=2 fires after batches 2/4/6 — the last after batch
+    // 6's appends — so the signature and vector trees each end at one
+    // file; the output must match the cadence-off run row for row, and
+    // a probe through the swapped trees must flag batch 6's content.
+    val emb = Tables.embeddings(spark, sfDir)
+      .select(col("vec_id"), col("embedding"))
+    val corpus = emb.filter(col("vec_id") < 40)
+    def neg(c: org.apache.spark.sql.Column) = transform(c, x => -x)
+    val batches = (0 until 6).map { i =>
+      emb.filter(col("vec_id") === i)
+        .select((col("vec_id") + lit(1000L)).as("vec_id"), col("embedding"))
+        .unionByName(emb.filter(col("vec_id") === 20 + i)
+          .select((col("vec_id") + lit(2000L)).as("vec_id"),
+            neg(col("embedding")).as("embedding")))
+    }
+    def run(compactEvery: Int): (Set[(Long, String, Long)], String, String) = {
+      val sig = graft.TempDirs.createCleaned(s"graft_embce_sig$compactEvery")
+      val vec = graft.TempDirs.createCleaned(s"graft_embce_vec$compactEvery")
+      Dedup.saveEmbeddingSignatures(corpus, "vec_id", "embedding", sig,
+        numBits = 48, bands = 8)
+      corpus.write.mode("overwrite").parquet(vec)
+      val out = graft.TempDirs.createCleaned(s"graft_embce_out$compactEvery")
+      EventStreams.runIncrementalEmbeddingAdmission(
+        EventStreams.orderedIntake(spark, s"graft_embce$compactEvery", batches),
+        sig, vec, out,
+        graft.TempDirs.createCleaned(s"graft_embce_ck$compactEvery"),
+        "vec_id", "embedding", threshold = 0.95, compactEvery = compactEvery)
+      (statuses(out), sig, vec)
+    }
+    val (outPlain, _, _) = run(0)
+    val (outCadence, sigC, vecC) = run(2)
+    assert(outPlain == (0 until 6).flatMap(i => Seq(
+      (1000L + i, "duplicate", i.toLong),
+      (2020L + i, "admitted", -1L))).toSet, s"got $outPlain")
+    assert(outCadence == outPlain,
+      "the maintenance cadence must not change a single admission row")
+    assert(Layout.dataFileCount(spark, s"$sigC/signatures") == 1,
+      "compactEvery=2 over 6 batches must leave the signature tree compacted")
+    assert(Layout.dataFileCount(spark, vecC) == 1,
+      "compactEvery=2 over 6 batches must leave the vector tree compacted")
+    val probe = emb.filter(col("vec_id") === 25)
+      .select(lit(3000L).as("vec_id"), neg(col("embedding")).as("embedding"))
+    val flags = Dedup.incrementalEmbeddingNearDuplicates(
+        Dedup.loadEmbeddingSignatures(spark, sigC), spark.read.parquet(vecC),
+        probe, "vec_id", "embedding", threshold = 0.95)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(flags == Set((3000L, 2025L)),
+      s"the swapped trees must still hold batch 6's append: $flags")
   }
 
   test("near-dup admission stop -> compact -> restart: compacted roots serve the grown history") {
@@ -634,28 +661,13 @@ class EventStreamsSpec extends AnyFunSuite {
     Dedup.saveMinhashSignatures(corpus, "doc_id", "text", sigDir)
     corpus.write.mode("overwrite").parquet(txtDir)
     val srcDir = graft.TempDirs.createCleaned("graft_ndc_src")
-    def stage(df: org.apache.spark.sql.DataFrame, name: String,
-        mtime: Long): Unit = {
-      val tmp = graft.TempDirs.createCleaned("graft_ndc_stage")
-      df.repartition(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = java.nio.file.Paths.get(srcDir, name)
-      java.nio.file.Files.copy(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
     val outDir = graft.TempDirs.createCleaned("graft_ndc_out")
     val ckDir = graft.TempDirs.createCleaned("graft_ndc_ck")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
     def runOnce(sig: String, txt: String): Unit =
       EventStreams.runIncrementalNearDupAdmission(
-        spark.readStream.schema(schema).parquet(srcDir),
+        spark.readStream.schema(b1.schema).parquet(srcDir),
         sig, txt, outDir, ckDir, "doc_id", "text", threshold = 1.0)
-    stage(b1, "intake_000.parquet", 1600000000000L)
+    EventStreams.stageFile(b1, srcDir, "intake_000.parquet", 1600000000000L)
     runOnce(sigDir, txtDir)
     val n1 = spark.read.parquet(outDir).count()
     assert(n1 == 1L) // 10 admitted
@@ -665,11 +677,9 @@ class EventStreamsSpec extends AnyFunSuite {
     Dedup.compactMinhashSignatures(spark, sigDir, sigC)
     graft.ops.Layout.compact(spark, txtDir, txtC)
     // RESTART against the compacted roots, same checkpoint
-    stage(b2, "intake_001.parquet", 1600000060000L)
+    EventStreams.stageFile(b2, srcDir, "intake_001.parquet", 1600000060000L)
     runOnce(sigC, txtC)
-    val out = spark.read.parquet(outDir).collect()
-      .map(r => (r.getLong(0), r.getString(1),
-        if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
+    val out = statuses(outDir)
     assert(out == Set(
       (10L, "admitted", -1L),
       (20L, "duplicate", 10L), // through the COMPACTED store's appended row
@@ -697,30 +707,15 @@ class EventStreamsSpec extends AnyFunSuite {
       .select((col("doc_id") + lit(3000000L)).as("doc_id"),
         rev(col("text")).as("text"))
     val srcDir = graft.TempDirs.createCleaned("graft_acr_src")
-    def stage(df: org.apache.spark.sql.DataFrame, name: String,
-        mtime: Long): Unit = {
-      val tmp = graft.TempDirs.createCleaned("graft_acr_stage")
-      df.repartition(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = java.nio.file.Paths.get(srcDir, name)
-      java.nio.file.Files.copy(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
     val storeDir = graft.TempDirs.createCleaned("graft_acr_store")
     val compactDir = graft.TempDirs.createCleaned("graft_acr_store_c")
     Dedup.saveDigestStore(docs, "doc_id", "text", storeDir)
     val outDir = graft.TempDirs.createCleaned("graft_acr_out")
     val ckDir = graft.TempDirs.createCleaned("graft_acr_ck")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
     def runOnce(store: String): Unit = EventStreams.runIncrementalAdmission(
-      spark.readStream.schema(schema).parquet(srcDir),
+      spark.readStream.schema(day2.schema).parquet(srcDir),
       store, outDir, ckDir, "doc_id", "text")
-    stage(day2, "intake_000.parquet", 1600000000000L)
+    EventStreams.stageFile(day2, srcDir, "intake_000.parquet", 1600000000000L)
     runOnce(storeDir)
     val n1 = spark.read.parquet(outDir).count()
     // STOP -> monthly maintenance: blue/green rewrite of the grown tree
@@ -729,7 +724,7 @@ class EventStreamsSpec extends AnyFunSuite {
     assert(compacted.digests.count() == grownRows,
       "compaction must carry the day-2 appends into the new root")
     // RESTART against the compacted root, same checkpoint
-    stage(day3, "intake_001.parquet", 1600000060000L)
+    EventStreams.stageFile(day3, srcDir, "intake_001.parquet", 1600000060000L)
     runOnce(compactDir)
     val out2 = spark.read.parquet(outDir).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
@@ -763,36 +758,21 @@ class EventStreamsSpec extends AnyFunSuite {
       .select((col("doc_id") + lit(3000000L)).as("doc_id"),
         rev(col("text")).as("text"))
     val srcDir = graft.TempDirs.createCleaned("graft_admr_src")
-    def stage(df: org.apache.spark.sql.DataFrame, name: String,
-        mtime: Long): Unit = {
-      val tmp = graft.TempDirs.createCleaned("graft_admr_stage")
-      df.repartition(1).write.mode("overwrite").parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      val dst = java.nio.file.Paths.get(srcDir, name)
-      java.nio.file.Files.copy(part.toPath, dst)
-      dst.toFile.setLastModified(mtime)
-    }
     val storeDir = graft.TempDirs.createCleaned("graft_admr_store")
     Dedup.saveDigestStore(docs, "doc_id", "text", storeDir)
     val outDir = graft.TempDirs.createCleaned("graft_admr_out")
     val ckDir = graft.TempDirs.createCleaned("graft_admr_ck")
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text",
-        org.apache.spark.sql.types.StringType)))
     def runOnce(): Unit = EventStreams.runIncrementalAdmission(
-      spark.readStream.schema(schema).parquet(srcDir),
+      spark.readStream.schema(day2.schema).parquet(srcDir),
       storeDir, outDir, ckDir, "doc_id", "text")
-    stage(day2, "intake_000.parquet", 1600000000000L)
+    EventStreams.stageFile(day2, srcDir, "intake_000.parquet", 1600000000000L)
     runOnce()
     val after1 = spark.read.parquet(outDir).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(after1.map(_._1).toSet == day2.select(col("doc_id"))
       .collect().map(_.getLong(0)).toSet,
       "run 1 must emit exactly one row per day-2 doc")
-    stage(day3, "intake_001.parquet", 1600000060000L)
+    EventStreams.stageFile(day3, srcDir, "intake_001.parquet", 1600000060000L)
     runOnce() // restart on the SAME checkpoint
     val after2 = spark.read.parquet(outDir).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
