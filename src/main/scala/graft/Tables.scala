@@ -7,7 +7,8 @@ import org.apache.spark.sql.types.LongType
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
   * Every table is a single parquet file under `sfDir`. Loading goes
-  * through `spark.read.parquet` so Catalyst sees a plain
+  * through [[ParquetReader]] (a plain parquet read whose schema is
+  * inferred once per file identity) so Catalyst sees a plain
   * `LogicalRelation` — column pruning and filter pushdown reach the
   * scan for free. At 100 TB these would be hive-partitioned
   * directories; the API stays the same, so `sfDir` is the only thing
@@ -19,7 +20,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    ParquetReader.read(spark, s"$sfDir/$name.parquet")
 
   def region(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "region")
   def nation(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "nation")

@@ -1,5 +1,7 @@
 package graft.quality
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -60,14 +62,19 @@ object DataQuality {
     isNull("dim_weather_table", "weather_id"))
 
   /** Run checks against parquet outputs under `outputDir`
-    * (reference table_validate, spark_check_emr.py:20-47). Throws
+    * (reference table_validate, spark_check_emr.py:20-47), in suite
+    * order, reading each table once per call. Throws
     * [[QualityViolation]] on the first failure. */
   def validate(spark: SparkSession, outputDir: String,
-      checks: Seq[QualityCheck] = referenceSuite): Unit =
+      checks: Seq[QualityCheck] = referenceSuite): Unit = {
+    val tables = mutable.Map.empty[String, DataFrame]
     checks.foreach { c =>
-      val df = spark.read.parquet(s"$outputDir/${c.tableName}.parquet")
-      runCheck(c, df)
+      runCheck(c, tables.getOrElseUpdate(c.tableName, readTable(spark, outputDir, c.tableName)))
     }
+  }
+
+  private def readTable(spark: SparkSession, outputDir: String, name: String): DataFrame =
+    graft.ParquetReader.read(spark, s"$outputDir/$name.parquet")
 
   /** Count of non-null fact foreign keys with no matching dimension
     * row — an anti-join, so it scales like any key join. */
@@ -122,7 +129,7 @@ object DataQuality {
     val partitioned =
       Set("bikeshare_fact_table", "dim_time_table", "dim_user_agg_table")
     graft.etl.Schemas.byTable.foreach { case (table, schema) =>
-      val df = spark.read.parquet(s"$outputDir/$table.parquet")
+      val df = readTable(spark, outputDir, table)
       if (partitioned.contains(table)) {
         val got = df.schema.fields.map(f => f.name -> f.dataType).toMap
         val want = schema.fields.map(f => f.name -> f.dataType).toMap
