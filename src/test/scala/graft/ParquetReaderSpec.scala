@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.types.StringType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.etl.{Schemas, StarSchemaWriter}
@@ -49,6 +50,13 @@ class ParquetReaderSpec extends AnyFunSuite {
     val plain = s.read.parquet(path)
     assert(got.schema == plain.schema, path)
     assert(sameRows(got, plain), path)
+  }
+
+  /** The seven star-schema tables, written once from the fixtures. */
+  private lazy val starOut: String = {
+    val out = Files.createTempDirectory("graft_reader_star").toString
+    StarSchemaWriter.runElt(spark, getClass.getResource("/citibike").getPath, out)
+    out
   }
 
   private def tempTable(prefix: String): String =
@@ -130,12 +138,21 @@ class ParquetReaderSpec extends AnyFunSuite {
     val plain = s.read.parquet(path).schema
     assert(plain != ntz)
     assert(ParquetReader.read(s, path).schema == plain)
+
+    // partition typing: a hit would pin the partition column types it
+    // memoized, so a session that turns partition typing off must miss
+    val dim = s"$starOut/dim_user_agg_table.parquet"
+    val typed = ParquetReader.read(spark, dim).schema
+    val u = spark.newSession()
+    u.conf.set("spark.sql.sources.partitionColumnTypeInference.enabled", "false")
+    val untyped = u.read.parquet(dim).schema
+    assert(typed("birth_year").dataType != StringType)
+    assert(untyped("birth_year").dataType == StringType)
+    assert(ParquetReader.read(u, dim).schema == untyped)
   }
 
   test("equality witness: star-schema and lake tables read with the memoized schema") {
-    val out = Files.createTempDirectory("graft_reader_star").toString
-    StarSchemaWriter.runElt(spark, getClass.getResource("/citibike").getPath, out)
-    val paths = Schemas.byTable.keys.toSeq.sorted.map(t => s"$out/$t.parquet") ++
+    val paths = Schemas.byTable.keys.toSeq.sorted.map(t => s"$starOut/$t.parquet") ++
       Tables.all.map(t => s"$sfDir/$t.parquet")
     assert(paths.size == 17)
     paths.foreach { p =>
@@ -147,10 +164,8 @@ class ParquetReaderSpec extends AnyFunSuite {
   }
 
   test("DataQuality.validate reads each table once per call") {
-    val out = Files.createTempDirectory("graft_reader_quality").toString
-    StarSchemaWriter.runElt(spark, getClass.getResource("/citibike").getPath, out)
     val (_, err) = MemosSpec.stderrOf(
-      DataQuality.validate(spark, out, DataQuality.extendedSuite))
+      DataQuality.validate(spark, starOut, DataQuality.extendedSuite))
     val reads = err.linesIterator.count(_.startsWith("[memo] parquet-schema "))
     assert(DataQuality.extendedSuite.size == 11)
     assert(reads == DataQuality.extendedSuite.map(_.tableName).distinct.size)

@@ -3,15 +3,15 @@
 
 Usage (from the repository root):
 
-    python3 tools/benchpairs.py PARENT_REF --workload elt_month|lake_queries \\
-        --pairs N [--seconds S]
+    python3 tools/benchpairs.py PARENT_REF --workload elt_month|lake_queries --pairs N
 
 Exports PARENT_REF with ``git archive`` into a temporary directory and
 runs N pairs of ``perfbench/run.py --trace 0``, one run on the parent
-tree and one on the current checkout per pair, with seeds 1..N. Odd
-seeds run the parent first and even seeds the change first, so a drift
-of the machine over the session loads both sides alike. Each run builds
-its own tree into that tree's ``.bench_build/``.
+tree and one on the current checkout per pair, with seeds 1..N and the
+benchmark's own run length. Odd seeds run the parent first and even
+seeds the change first, so a drift of the machine over the session
+loads both sides alike. Each run builds its own tree into that tree's
+``.bench_build/``.
 
 For every end-to-end metric of ``BENCHMARK.json`` it prints the parent's
 median (quartiles), the change's median (quartiles), the ratio of the
@@ -107,11 +107,11 @@ def export(ref, dest):
             t.extractall(dest)
 
 
-def run_once(tree, workload, seed, seconds):
+def run_once(tree, workload, seed):
     """Metrics of one ``perfbench/run.py`` run in ``tree``, or None when
     it failed; also returns the failed-operation count."""
     r = subprocess.run([sys.executable, "perfbench/run.py", "--workload", workload,
-                        "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"],
+                        "--seed", str(seed), "--trace", "0"],
                        cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = r.stdout.strip().splitlines()
     if r.returncode != 0 or not lines:
@@ -127,12 +127,9 @@ def main():
     ap.add_argument("parent", help="git ref of the parent commit")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
-    ap.add_argument("--seconds", type=float, default=None,
-                    help="run length per run (default: BENCHMARK.json run_seconds)")
     args = ap.parse_args()
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    seconds = args.seconds if args.seconds is not None else bench.get("run_seconds", 10)
     tmp = tempfile.mkdtemp(prefix="benchpairs-")
     try:
         export(args.parent, tmp)
@@ -144,7 +141,7 @@ def main():
             order = ("parent", "change") if seed % 2 else ("change", "parent")
             got = {}
             for side in order:
-                got[side], f = run_once(trees[side], args.workload, seed, seconds)
+                got[side], f = run_once(trees[side], args.workload, seed)
                 failed_ops[side] += f
             if got["parent"] is None or got["change"] is None:
                 failed_runs += 1
