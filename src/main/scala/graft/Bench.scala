@@ -316,12 +316,11 @@ object Bench {
   final case class StageRow(id: Int, tasks: Int, runMs: Long, cpuNs: Long,
       name: String)
 
-  /** Shared per-query stage-metrics harness (Bench, ScaleBench,
-    * ScaleProbe, the rehearsals, ProfileQuery): ONE stage listener over
-    * shared LongAdders plus the reflective listenerBus drain, extracted
-    * so any fix to metric attribution lands in every runner at once —
-    * divergent copies would let rehearsal numbers drift from bench
-    * numbers for reasons invisible in the JSON. `listenerBus` is
+  /** Shared per-query stage-metrics harness: ONE stage listener over
+    * shared LongAdders plus the reflective listenerBus drain, so any
+    * fix to metric attribution lands in every runner at once —
+    * divergent copies would let one runner's numbers drift from
+    * another's for reasons invisible in the JSON. `listenerBus` is
     * private[spark] (= public bytecode): drained via reflection after
     * each query so stage metrics attribute to the query that ran them;
     * a fixed sleep would cost runs×200 ms and still let a late event
@@ -369,28 +368,8 @@ object Bench {
     def remove(): Unit = spark.sparkContext.removeSparkListener(listener)
   }
 
-  /** The `*_FAMILIES` filter of a rehearsal main (ScaleBench,
-    * ScaleProbe, IncrementalRehearsal): the comma-separated entries of
-    * env var `name`, or None when it is unset OR set-but-empty ("" or
-    * only commas — "".split(",") is Array("") and would fail the check
-    * below with an unnamed entry). Every entry must be in `known`: a
-    * typo'd family would otherwise yield a calib-only artifact that
-    * reads like a valid run. */
-  def familyFilter(name: String, known: Iterable[String],
-      env: Map[String, String] = sys.env): Option[Set[String]] = {
-    val fams = env.get(name)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    fams.foreach { fs =>
-      val unknown = fs.diff(known.toSet)
-      require(unknown.isEmpty,
-        s"$name entries unknown: ${unknown.toSeq.sorted.mkString(",")} " +
-          s"(known: ${known.toSeq.sorted.mkString(",")})")
-    }
-    fams
-  }
-
-  /** The shared session shape for timing mains (Bench/Profile). */
+  /** The one session shape of the graft mains (`EltMain` keeps its
+    * own 4-cpu defaults). */
   def buildSession(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     SparkSession.builder()
@@ -407,12 +386,8 @@ object Bench {
     * initialization (class loading, codegen compiler, broadcast env). */
   def warmup(spark: SparkSession, sfDir: String): Unit = {
     Tables.all.foreach { t =>
-      // events needs the nanos-timestamp repair — go through its
-      // loader, or the warmup read throws and silently skips the table
-      try {
-        if (t == "events") Tables.events(spark, sfDir).limit(1).count()
-        else Tables.load(spark, sfDir, t).limit(1).count()
-      } catch { case _: Throwable => () }
+      try Tables.load(spark, sfDir, t).limit(1).count()
+      catch { case _: Throwable => () }
     }
     import org.apache.spark.sql.functions._
     spark.range(1000).groupBy((col("id") % 10).as("k"))

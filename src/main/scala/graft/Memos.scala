@@ -253,7 +253,7 @@ object BoundedMemo {
   private def register(m: BoundedMemo[_, _]): Unit = registry.synchronized(registry.add(m))
 
   /** Empty every memo in the JVM, releasing each value with its memo's
-    * `onClear` — the one reset between rehearsal reps and after a
+    * `onClear` — the one reset between timed cells and after a
     * suite, so the next cell starts cold. */
   def clearAll(): Unit =
     registry.synchronized(registry.asScala.toList).foreach(_.clear())

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` of declared queries to files — the
   * optimization-round evidence trail (plans/rNN/<query>_{before,after}
   * .txt). Unlike [[Plans]] (curated PLANS.md at the headline set),
@@ -23,14 +21,7 @@ object PlanDump {
     val (opts, names) = args.drop(2).partition(_.startsWith("--sf="))
     val sfDir = opts.headOption.map(_.stripPrefix("--sf="))
       .getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Bench.buildSession()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -29,20 +28,11 @@ object Tables {
   def part(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "part")
   def orders(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "orders")
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "lineitem")
-  /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark's vectorized
-    * reader rejects outright. We flip the legacy knob so the scan
-    * yields the raw long and normalize to a microsecond TimestampType
-    * ourselves (integer `div` — double division would lose precision
-    * at 1.7e18 nanos). DuckDB's ns→us CAST truncates the same way, so
-    * oracle SQL that does `CAST(ts AS TIMESTAMP)` agrees bit-for-bit.
-    */
-  def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(spark, sfDir, "events")
-    if (raw.schema("ts").dataType == LongType)
-      raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else raw.withColumn("ts", col("ts").cast("timestamp"))
-  }
+  /** `events.ts` is parquet TIMESTAMP(MICROS, isAdjustedToUTC=false),
+    * which Spark reads as TIMESTAMP_NTZ; cast it to the session-zone
+    * `timestamp` every events query works in. */
+  def events(spark: SparkSession, sfDir: String): DataFrame =
+    load(spark, sfDir, "events").withColumn("ts", col("ts").cast("timestamp"))
   def documents(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
 }

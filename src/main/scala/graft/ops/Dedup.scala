@@ -178,8 +178,9 @@ object Dedup {
       // r12 scale-rehearsal ask): bucket count, how many buckets
       // tripped the star-pair cap, and the largest bucket ride the
       // stats aggregate as a CollectMetrics observation — zero extra
-      // jobs, harvested by any QueryExecutionListener (ScaleBench
-      // aggregates them per run). Name unique per CALL (two distinct
+      // jobs, harvested by any QueryExecutionListener (the
+      // buckets/capped_buckets/max_bucket columns of
+      // SCALE_REHEARSAL_r18.json). Name unique per CALL (two distinct
       // CollectMetrics nodes sharing a name in one plan is an
       // analysis error; the counter never collides across memoized
       // frames reused in one query).
@@ -693,13 +694,13 @@ object Dedup {
     * UNHINTED: the checkpointed batch carries accurate size stats,
     * so AQE broadcasts the (tiny) batch digest side and the ledger
     * STREAMS — never shuffles — while a 10⁶-row intake falls back to
-    * a shuffle join on its own (the IncrementalRehearsal first
-    * measured the hinted shuffle-hash form at CPU parity with the
-    * full recompute: forcing the 50k-row ledger through an exchange
-    * against a 1k-row batch threw away exactly the asymmetry the
-    * ledger exists for). Corpus cost is the ledger scan alone —
-    * which is the real 100 TB win: the full recompute rescans corpus
-    * TEXT, the probe scans 32-byte digests. */
+    * a shuffle join on its own (the hinted shuffle-hash form first
+    * measured at CPU parity with the full recompute,
+    * SCALE_REHEARSAL_r17_incremental.json: forcing the 50k-row
+    * ledger through an exchange against a 1k-row batch threw away
+    * exactly the asymmetry the ledger exists for). Corpus cost is the
+    * ledger scan alone — which is the real 100 TB win: the full
+    * recompute rescans corpus TEXT, the probe scans 32-byte digests. */
   def incrementalExactDuplicates(store: DigestStore, batch: DataFrame,
       idCol: String, textCol: String): DataFrame = {
     val b = batch
@@ -893,7 +894,7 @@ object Dedup {
     // Σ C(F_distinct, 2) per near-dup family: at ×100 (ScaleData's
     // ~60-copy families, half exact copies) the doc-level form
     // overflowed 76 GB of shuffle spill and died; the collapsed form
-    // completes (SCALE_REHEARSAL_r18). NAMED EXPIRY: the remaining
+    // completes (SCALE_REHEARSAL_r18.json). NAMED EXPIRY: the remaining
     // rep-pair mass Σ C(F_distinct, 2) is the operator's inherent
     // output-adjacent cost — exact all-pairs over a corpus whose
     // NEAR-dup (distinct-content) families keep growing is

@@ -457,10 +457,10 @@ object Similarity {
     ivfShardsFor(corpus, MaxTrainK.toLong * MaxTrainK)
 
   /** Boundary-knob form of [[ivfShardsFor]] — `perShard` overrides the
-    * MaxTrainK² production boundary so [[graft.ShardRehearsal]] can
-    * engage the AUTO shard path at rehearsal corpus sizes (the true
-    * boundary needs 16.7M vectors × 4096-centroid argmax passes — not
-    * a local measurement; the ClampRehearsal boundary-knob pattern).
+    * MaxTrainK² production boundary so OpsSpec's "AutoShards engages
+    * past the boundary knob" case can drive the AUTO shard path on a
+    * test-sized corpus (the true boundary needs 16.7M vectors ×
+    * 4096-centroid argmax passes — not a local measurement).
     * Production callers never pass it: [[ivfIndexSharded]] reaches
     * this only through the default-boundary form above. */
   private[graft] def ivfShardsFor(corpus: Long, perShard: Long): Int = {
@@ -483,11 +483,11 @@ object Similarity {
     ivfIndexShardedWithBoundary(df, idCol, vecCol, numShards, k, iters,
       trainSample, MaxTrainK.toLong * MaxTrainK)
 
-  /** [[ivfIndexSharded]] with the rehearsal boundary knob exposed —
-    * identical code path (ONE definition; the public form delegates
-    * with the production MaxTrainK² boundary), so what
-    * [[graft.ShardRehearsal]] measures under a lowered `perShard` is
-    * exactly what a >16.7M-vector corpus executes in production. */
+  /** [[ivfIndexSharded]] with the boundary knob exposed — identical
+    * code path (ONE definition; the public form delegates with the
+    * production MaxTrainK² boundary), so what OpsSpec's AutoShards case
+    * checks under a lowered `perShard` is exactly what a >16.7M-vector
+    * corpus executes in production. */
   private[graft] def ivfIndexShardedWithBoundary(df: DataFrame,
       idCol: String, vecCol: String, numShards: Int, k: Int,
       iters: Int, trainSample: Int, perShard: Long): ShardedIvfIndex = {
@@ -511,10 +511,11 @@ object Similarity {
         // pass) reads the materialized columnar split instead of
         // re-scanning the source per shard — pmod(xxhash64(id)) never
         // reaches parquet as a pushed filter, so the old per-shard
-        // filter-on-source form cost 2S full corpus reads (the r16
-        // ShardRehearsal measured it at 1.6-1.7x the flat build's
-        // CPU/vector; at the real 16.7M-vector boundary S grows with
-        // the corpus and the re-reads would dominate the build)
+        // filter-on-source form cost 2S full corpus reads (measured at
+        // 1.6-1.7x the flat build's CPU/vector under a lowered
+        // boundary, SCALE_REHEARSAL_r16_shards.json; at the real
+        // 16.7M-vector boundary S grows with the corpus and the
+        // re-reads would dominate the build)
         val split = df.select(col(idCol), col(vecCol),
           pmod(xxhash64(col(idCol)), lit(shards)).as("__shard"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -523,14 +524,14 @@ object Similarity {
         // lock by design), but each is DRIVER-PACED — Lloyd-round
         // sample collects and assignment-job submissions serialize on
         // the driver, so a sequential loop leaves the 32 cores idle
-        // between one shard's rounds (the r16 ShardRehearsal localized
-        // the residual sharded/flat gap to exactly this S× per-job
-        // fixed overhead). Concurrency.awaitAll overlaps those driver
-        // phases; its default cap of 4, not `shards`, matters because
+        // between one shard's rounds (SCALE_REHEARSAL_r16_shards.json
+        // localized the residual sharded/flat gap to exactly this S×
+        // per-job fixed overhead). Concurrency.awaitAll overlaps those
+        // driver phases; its default cap of 4, not `shards`, matters because
         // each concurrent build holds a driver-resident (≤ MaxTrainK ×
         // dims) centroid model plus an in-flight training collect.
-        // Measured (ShardRehearsal ×8 = 4 shards, r17, medians of 3):
-        // sharded wall 2.5 → 1.2 s (flat 0.7 — the residual is the
+        // Measured (×8 = 4 shards, SCALE_REHEARSAL_r17_shards.json,
+        // medians of 3): sharded wall 2.5 → 1.2 s (flat 0.7 — the residual is the
         // split build + the count barriers, fixed latency not data
         // work) and sharded CPU/vector reached flat parity
         // (0.315 vs 0.323; sequential r16 read 0.554) — probe-merge

@@ -23,19 +23,6 @@ import org.apache.spark.sql.types._
   */
 object EventStreams {
 
-  /** Schema of the events parquet as the streaming source sees it
-    * when the file carries TIMESTAMP(NANOS) (read as long under
-    * `nanosAsLong`; normalized in [[fromParquetDir]]). Generations of
-    * the table that write TIMESTAMP(MICROS) read as a plain
-    * timestamp instead — [[fromParquetDir]] sniffs the file. */
-  val rawSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", LongType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   /** Streaming read of a documents parquet directory — the
     * ingest-side curation source (file streams need a pinned
     * schema; inference is batch-only). */
@@ -49,43 +36,19 @@ object EventStreams {
         StructField("n_chars", LongType))))
       .parquet(path)
 
-  /** Streaming read of an events parquet directory.
-    *
-    * File streams need a pinned schema, and the events table has
-    * shipped with `ts` as both TIMESTAMP(NANOS) (reads as a long
-    * under `nanosAsLong` → needs the /1000 repair) and
-    * TIMESTAMP(MICROS) (reads as a native timestamp — the repair
-    * would collapse every value toward the epoch). Sniff the actual
-    * file type with a batch schema read once, then pin the matching
-    * stream schema — the same both-generations tolerance
-    * `Tables.events` applies on the batch side. */
-  def fromParquetDir(spark: SparkSession, path: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // sniff failures must NOT silently pin the NANOS schema: an empty
-    // source directory at stream start (common for file streams) would
-    // lock MICROS files arriving later onto a LongType read. Default
-    // only when the path genuinely has no parquet yet (documented
-    // NANOS-generation assumption); anything else — missing `ts`,
-    // unreadable files — is a real error and rethrows. (r7 advisor)
-    val nanosAsLong =
-      try spark.read.parquet(path).schema("ts").dataType == LongType
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getMessage != null
-              && e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") =>
-          true // empty dir: no files to sniff — assume the NANOS repair
-      }
-    if (nanosAsLong)
-      spark.readStream
-        .schema(rawSchema)
-        .parquet(path)
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    else
-      spark.readStream
-        .schema(StructType(rawSchema.map(f =>
-          if (f.name == "ts") f.copy(dataType = TimestampType) else f)))
-        .parquet(path)
-  }
+  /** Streaming read of an events parquet directory; `ts` is
+    * TIMESTAMP(MICROS) on disk, pinned as `timestamp` like the batch
+    * side's `Tables.events`. */
+  def fromParquetDir(spark: SparkSession, path: String): DataFrame =
+    spark.readStream
+      .schema(StructType(Seq(
+        StructField("event_id", LongType),
+        StructField("ts", TimestampType),
+        StructField("user_id", LongType),
+        StructField("event_type", StringType),
+        StructField("value", DoubleType),
+        StructField("props", StringType))))
+      .parquet(path)
 
   /** Watermarked sliding-window counts per event type — the
     * continuous analog of the reference's hourly bucketing (J2). */
@@ -273,9 +236,10 @@ object EventStreams {
     * run would otherwise accumulate checkpoint blocks until GC). The
     * steady-state cost is ∝ daily intake — except the store LISTING,
     * which grows one file per append until compaction rewrites the
-    * tree (measured: IncrementalRehearsal's `stream`/`streamnd`
-    * families). The completed query is returned — `recentProgress`
-    * carries per-batch durations for exactly that measurement.
+    * tree (measured: the `stream`/`streamnd` families of
+    * SCALE_REHEARSAL_r19_stream.json). The completed query is
+    * returned — `recentProgress` carries per-batch durations for
+    * exactly that measurement.
     *
     * `compactEvery` (the maintenance CADENCE): when > 0, after every N
     * committed micro-batches — after ALL of that batch's effects —

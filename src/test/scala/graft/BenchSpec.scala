@@ -477,14 +477,4 @@ class BenchSpec extends AnyFunSuite {
     assert(intr == Set("x45", "x94", "x97", "x106", "x207"),
       s"intrinsic rows must report by name: $line")
   }
-
-  test("family filter: unset or set-but-empty means every family; unknown entries fail by name") {
-    val known = Seq("x34", "x42")
-    def parse(v: String) = Bench.familyFilter("FAMS", known, Map("FAMS" -> v))
-    assert(Bench.familyFilter("FAMS", known, Map.empty).isEmpty)
-    assert(parse("").isEmpty && parse(" , ,").isEmpty)
-    assert(parse("x42, x34,") == Some(Set("x34", "x42")))
-    val e = intercept[IllegalArgumentException](parse("x42,x9"))
-    assert(e.getMessage.contains("FAMS entries unknown: x9"), e.getMessage)
-  }
 }

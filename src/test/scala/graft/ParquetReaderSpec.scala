@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -77,6 +77,22 @@ class ParquetReaderSpec extends AnyFunSuite {
       Tables.load(spark, sfDir, "lineitem").schema
       Tables.events(spark, sfDir).schema
     }
+    assert(jobs == 0)
+  }
+
+  test("an events read leaves the session conf alone, so a later lineitem read starts no job") {
+    val s = spark.newSession()
+    s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    // copies: a path no earlier case has memoized under any conf
+    val dir = Files.createTempDirectory("graft_reader_events").toString
+    Seq("lineitem", "events").foreach { t =>
+      Files.copy(Paths.get(s"$sfDir/$t.parquet"), Paths.get(s"$dir/$t.parquet"))
+    }
+    Tables.load(s, dir, "lineitem")
+    val before = s.conf.getAll
+    Tables.events(s, dir)
+    assert(s.conf.getAll == before)
+    val (_, jobs) = jobsDuring(Tables.load(s, dir, "lineitem").schema)
     assert(jobs == 0)
   }
 

@@ -9,7 +9,6 @@ object SparkTestSession {
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft_wh").toString)
     .config("spark.ui.enabled", "false")

@@ -38,14 +38,21 @@ class ConcurrencySpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val taskRunning = new CountDownLatch(1)
     val sleeperJob = new AtomicReference[Option[Int]](None)
+    val sleeperStages = new AtomicReference[Set[Int]](Set.empty)
     val sleeperEnd = new CountDownLatch(1)
     val failed = new AtomicReference[Option[Boolean]](None)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(p =>
-            Option(p.getProperty("spark.job.description")).contains("cancel-spec sleeper")))
+            Option(p.getProperty("spark.job.description")).contains("cancel-spec sleeper"))) {
+          sleeperStages.set(e.stageIds.toSet)
           sleeperJob.set(Some(e.jobId))
-      override def onTaskStart(e: SparkListenerTaskStart): Unit = taskRunning.countDown()
+        }
+      // only the sleeper's own tasks: a task still running from an
+      // earlier case would let the sibling fail before the sleeper
+      // job exists, and the cancel would then find nothing to cancel
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        if (sleeperStages.get.contains(e.stageId)) taskRunning.countDown()
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (sleeperJob.get.contains(e.jobId)) {
           failed.set(Some(e.jobResult != JobSucceeded))

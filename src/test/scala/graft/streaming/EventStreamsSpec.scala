@@ -20,6 +20,20 @@ class EventStreamsSpec extends AnyFunSuite {
   private def rootMsg(t: Throwable): String =
     Option(t.getCause).map(rootMsg).getOrElse(Option(t.getMessage).getOrElse(""))
 
+  /** Epoch micros of h:m on 1970-01-01. */
+  private def us(h: Int, m: Int): Long = (h * 3600L + m * 60L) * 1000000L
+
+  /** Events rows (`ts` in epoch micros) as one parquet file in `dir`,
+    * `ts` stored as the shipped table stores it:
+    * TIMESTAMP(MICROS, isAdjustedToUTC=false). */
+  private def writeEvents(dir: String,
+      rows: Seq[(Long, Long, Long, String, Double, String)]): Unit = {
+    import spark.implicits._
+    rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .withColumn("ts", timestamp_micros(col("ts")).cast("timestamp_ntz"))
+      .coalesce(1).write.parquet(dir)
+  }
+
   /** An admission gate's (id, status, dup_id) rows; NULL dup_id as -1. */
   private def statuses(outDir: String): Set[(Long, String, Long)] =
     spark.read.parquet(outDir).collect()
@@ -67,14 +81,11 @@ class EventStreamsSpec extends AnyFunSuite {
 
   test("file sink + checkpoint: restart consumes only new files, no dupes; watermark drops late rows") {
     import java.nio.file.Files
-    import spark.implicits._
     val srcDir = Files.createTempDirectory("graft_sink_src").toString
     val outDir = Files.createTempDirectory("graft_sink_out").toString
     val ckDir = Files.createTempDirectory("graft_sink_ck").toString
-    def ns(h: Int, m: Int): Long = (h * 3600L + m * 60L) * 1000000000L
     def writeBatch(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit =
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.parquet(s"$srcDir/$name")
+      writeEvents(s"$srcDir/$name", rows)
     def run(): Unit = {
       val stream = EventStreams.fromParquetDir(spark, s"$srcDir/*")
       EventStreams.runToParquet(
@@ -84,11 +95,11 @@ class EventStreamsSpec extends AnyFunSuite {
     // batch 1: hours 0 (two rows), 1, 2, plus a 03:30 tail that moves
     // the 30-min watermark to 03:00 — closing windows 0, 1, 2
     writeBatch("b1", Seq(
-      (1L, ns(0, 10), 1L, "a", 1.0, "{}"),
-      (2L, ns(0, 40), 2L, "a", 2.0, "{}"),
-      (3L, ns(1, 20), 1L, "a", 10.0, "{}"),
-      (4L, ns(2, 15), 3L, "a", 5.0, "{}"),
-      (5L, ns(3, 30), 1L, "a", 7.0, "{}")))
+      (1L, us(0, 10), 1L, "a", 1.0, "{}"),
+      (2L, us(0, 40), 2L, "a", 2.0, "{}"),
+      (3L, us(1, 20), 1L, "a", 10.0, "{}"),
+      (4L, us(2, 15), 3L, "a", 5.0, "{}"),
+      (5L, us(3, 30), 1L, "a", 7.0, "{}")))
     run()
     val afterFirst = spark.read.parquet(outDir)
     assert(afterFirst.count() == 3) // hours 0,1,2 closed; [3,4) still open
@@ -96,8 +107,8 @@ class EventStreamsSpec extends AnyFunSuite {
     // past 04:00, and one LATE row in hour 0 (00:50 < watermark 03:00)
     // that a blind re-aggregation would count
     writeBatch("b2", Seq(
-      (6L, ns(5, 40), 2L, "b", 3.0, "{}"),
-      (7L, ns(0, 50), 9L, "a", 99.0, "{}")))
+      (6L, us(5, 40), 2L, "b", 3.0, "{}"),
+      (7L, us(0, 50), 9L, "a", 99.0, "{}")))
     run() // same checkpoint: resumes, consuming only b2
     val out = spark.read.parquet(outDir)
     // no duplicated windows across the restart
@@ -160,16 +171,13 @@ class EventStreamsSpec extends AnyFunSuite {
     import java.nio.file.Files
     import spark.implicits._
     val srcDir = Files.createTempDirectory("graft_dedup_src").toString
-    def ns(h: Int, m: Int): Long = (h * 3600L + m * 60L) * 1000000000L
     // event 1 appears three times (replayed file / re-crawl shape),
     // event 2 once; all within one watermark horizon
-    Seq(
-      (1L, ns(0, 10), 1L, "a", 1.0, "{}"),
-      (1L, ns(0, 12), 1L, "a", 1.0, "{}"),
-      (1L, ns(0, 20), 1L, "a", 1.0, "{}"),
-      (2L, ns(0, 15), 2L, "a", 2.0, "{}"))
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.parquet(s"$srcDir/b1")
+    writeEvents(s"$srcDir/b1", Seq(
+      (1L, us(0, 10), 1L, "a", 1.0, "{}"),
+      (1L, us(0, 12), 1L, "a", 1.0, "{}"),
+      (1L, us(0, 20), 1L, "a", 1.0, "{}"),
+      (2L, us(0, 15), 2L, "a", 2.0, "{}")))
     val stream = EventStreams.fromParquetDir(spark, s"$srcDir/*")
     val got = EventStreams.runToMemory(spark,
       EventStreams.dedupWithinWatermark(stream, Seq("event_id")),
@@ -185,14 +193,12 @@ class EventStreamsSpec extends AnyFunSuite {
     val srcDir = root.resolve("src").toString
     val outDir = root.resolve("out").toString
     val ckpt = root.resolve("ckpt").toString
-    def ns(h: Int, m: Int): Long = (h * 3600L + m * 60L) * 1000000000L
     def write(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit =
-      rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.parquet(s"$srcDir/$name")
+      writeEvents(s"$srcDir/$name", rows)
     // run 1: two events land and commit to the file sink
     write("b1", Seq(
-      (1L, ns(0, 10), 1L, "a", 1.0, "{}"),
-      (2L, ns(0, 15), 2L, "a", 2.0, "{}")))
+      (1L, us(0, 10), 1L, "a", 1.0, "{}"),
+      (2L, us(0, 15), 2L, "a", 2.0, "{}")))
     def runOnce(): Unit = EventStreams.runToParquet(
       EventStreams.dedupWithinWatermark(
         EventStreams.fromParquetDir(spark, s"$srcDir/*"), Seq("event_id")),
@@ -203,9 +209,9 @@ class EventStreamsSpec extends AnyFunSuite {
     // must be swallowed by the checkpointed dedup state, the new
     // event emitted once
     write("b2", Seq(
-      (1L, ns(0, 10), 1L, "a", 1.0, "{}"),
-      (2L, ns(0, 15), 2L, "a", 2.0, "{}"),
-      (3L, ns(0, 16), 3L, "a", 3.0, "{}")))
+      (1L, us(0, 10), 1L, "a", 1.0, "{}"),
+      (2L, us(0, 15), 2L, "a", 2.0, "{}"),
+      (3L, us(0, 16), 3L, "a", 3.0, "{}")))
     runOnce()
     val got = spark.read.parquet(outDir)
     assert(got.count() == 3, s"duplicates leaked: ${got.collect().toSeq}")
