@@ -383,11 +383,14 @@ object Bench {
 
   /** Warmup: touch every table and exercise the scan/shuffle/codegen
     * machinery once so the first timed query doesn't absorb session
-    * initialization (class loading, codegen compiler, broadcast env). */
+    * initialization (class loading, codegen compiler, broadcast env).
+    * A table that fails to load is reported on stderr and skipped. */
   def warmup(spark: SparkSession, sfDir: String): Unit = {
     Tables.all.foreach { t =>
       try Tables.load(spark, sfDir, t).limit(1).count()
-      catch { case _: Throwable => () }
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] warmup: $t failed: $e")
+      }
     }
     import org.apache.spark.sql.functions._
     spark.range(1000).groupBy((col("id") % 10).as("k"))

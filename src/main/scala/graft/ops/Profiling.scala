@@ -111,35 +111,28 @@ object Profiling {
     * without touching a single value.
     *
     * The v2 reader + pushdown flags are session confs, so they are
-    * set only around PLANNING and restored in a finally — the single
-    * result row (bounded by construction: one row, 1 + 2·|cols|
-    * scalars) is collected eagerly under the flags and handed back as
-    * a local frame; no other query in the session ever sees the
-    * changed confs. MIN/MAX pushdown covers orderable primitive
-    * columns; strings are fine, nested/variant types are not (Spark
-    * falls back to a real scan — still correct, just not
-    * metadata-only).
+    * set on a child session ([[org.apache.spark.sql.SparkSession
+    * .newSession]]: same SparkContext and cache, its own conf) — the
+    * single result row (bounded by construction: one row, 1 + 2·|cols|
+    * scalars) is collected there and handed back as a local frame in
+    * the caller's session, whose conf never changes (so no reader key
+    * that folds in `spark.sql.parquet.*` moves). MIN/MAX pushdown
+    * covers orderable primitive columns; strings are fine,
+    * nested/variant types are not (Spark falls back to a real scan —
+    * still correct, just not metadata-only).
     */
   def metadataStats(spark: org.apache.spark.sql.SparkSession, path: String,
       cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile at least one column")
-    val conf = spark.conf
-    val oldV1 = conf.get("spark.sql.sources.useV1SourceList")
-    val oldPush = conf.get("spark.sql.parquet.aggregatePushdown", "false")
-    conf.set("spark.sql.sources.useV1SourceList", "")
-    conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    try {
-      val aggs = count(lit(1)).cast("long").as("n_rows") +:
-        cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"),
-          max(col(c)).as(s"max_$c")))
-      val row = spark.read.parquet(path).agg(aggs.head, aggs.tail: _*)
-      val out = row.collect() // one row, under the pushdown confs
-      spark.createDataFrame(
-        java.util.Arrays.asList(out: _*), row.schema)
-    } finally {
-      conf.set("spark.sql.sources.useV1SourceList", oldV1)
-      conf.set("spark.sql.parquet.aggregatePushdown", oldPush)
-    }
+    val scoped = spark.newSession()
+    scoped.conf.set("spark.sql.sources.useV1SourceList", "")
+    scoped.conf.set("spark.sql.parquet.aggregatePushdown", "true")
+    val aggs = count(lit(1)).cast("long").as("n_rows") +:
+      cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"),
+        max(col(c)).as(s"max_$c")))
+    val row = scoped.read.parquet(path).agg(aggs.head, aggs.tail: _*)
+    spark.createDataFrame(
+      java.util.Arrays.asList(row.collect(): _*), row.schema)
   }
 
   /** Population Stability Index between a reference slice and a

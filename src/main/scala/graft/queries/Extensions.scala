@@ -94,6 +94,20 @@ object Extensions extends QueryModule {
       FROM scored GROUP BY 1 ORDER BY 1"""
     })
 
+  /** DuckDB exact cosine of list columns `a` and `b`, rounded to 4 —
+    * the replay of `round(VectorMath.cosineSimilarity(a, b), 4)` in
+    * explicit double lambdas (`list_cosine_similarity` is float32);
+    * continuation lines are indented by `indent` spaces. */
+  private def cosineSql(a: String, b: String, indent: Int): String =
+    s"""round(
+  list_sum(list_transform(range(1, len($a) + 1),
+    i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))
+  / (sqrt(list_sum(list_transform($a,
+       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
+     * sqrt(list_sum(list_transform($b,
+       x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4)""".replace(
+      "\n", "\n" + " " * indent)
+
   /** Brute-force cosine top-k against the corpus's own vec 0 — the
     * exact-search baseline. The oracle mirrors the double-precision
     * element-wise math (DuckDB's list_cosine_similarity is float32 —
@@ -106,52 +120,39 @@ object Extensions extends QueryModule {
         .select(col("embedding")).head().getSeq[Float](0).toArray
       Similarity.bruteForceTopK(emb, "vec_id", "embedding", query, k = 10)
     },
-    Some("""WITH q AS (SELECT embedding AS e FROM embeddings WHERE vec_id = 0)
+    Some(s"""WITH q AS (SELECT embedding AS e FROM embeddings WHERE vec_id = 0)
       SELECT vec_id,
-        round(
-          list_sum(list_transform(range(1, len(embedding) + 1),
-            i -> CAST(embedding[i] AS DOUBLE) * CAST(q.e[i] AS DOUBLE)))
-          / (sqrt(list_sum(list_transform(embedding,
-               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-             * sqrt(list_sum(list_transform(q.e,
-               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS cosine
+        ${cosineSql("embedding", "q.e", 8)} AS cosine
       FROM embeddings, q
       ORDER BY cosine DESC, vec_id ASC LIMIT 10"""))
+
+  /** x7's exact cosine pairs over vec_id < 200 (`id_a < id_b`,
+    * cosine rounded to 4, >= 0.3) — the pair set x7 reports and
+    * [[dupClustersFor]] clusters; [[cosineReachSql]] replays it. */
+  private def cosinePairs(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    val emb = Tables.embeddings(s, dir).filter(col("vec_id") < 200)
+      .select(col("vec_id"), col("embedding"))
+    val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("vec_a"))
+    val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("vec_b"))
+    a.join(b, col("id_a") < col("id_b"))
+      .withColumn("cosine",
+        round(graft.functions.VectorMath.cosineSimilarity(col("vec_a"), col("vec_b")), 4))
+      .filter(col("cosine") >= 0.3)
+  }
 
   /** Embedding near-dup pairs on a bounded subset, exact cosine —
     * oracle-checkable; the unbounded scale path is the LSH variant
     * below. */
   private val x7EmbeddingPairs = GraftQuery(
     "x7_embedding_pairs",
-    (s, dir) => {
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") < 200)
-        .select(col("vec_id"), col("embedding"))
-      val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("vec_a"))
-      val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("vec_b"))
-      a.join(b, col("id_a") < col("id_b"))
-        .withColumn("cosine",
-          round(graft.functions.VectorMath.cosineSimilarity(col("vec_a"), col("vec_b")), 4))
-        .filter(col("cosine") >= 0.3)
-        .select(col("id_a"), col("id_b"), col("cosine"))
-        .orderBy(col("id_a"), col("id_b"))
-    },
-    Some("""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        round(
-          list_sum(list_transform(range(1, len(a.embedding) + 1),
-            i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-          / (sqrt(list_sum(list_transform(a.embedding,
-               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-             * sqrt(list_sum(list_transform(b.embedding,
-               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS cosine
+    (s, dir) => cosinePairs(s, dir)
+      .select(col("id_a"), col("id_b"), col("cosine"))
+      .orderBy(col("id_a"), col("id_b")),
+    Some(s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+        ${cosineSql("a.embedding", "b.embedding", 8)} AS cosine
       FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
       WHERE a.vec_id < 200 AND b.vec_id < 200
-        AND round(
-          list_sum(list_transform(range(1, len(a.embedding) + 1),
-            i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-          / (sqrt(list_sum(list_transform(a.embedding,
-               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-             * sqrt(list_sum(list_transform(b.embedding,
-               x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) >= 0.3
+        AND ${cosineSql("a.embedding", "b.embedding", 8)} >= 0.3
       ORDER BY id_a, id_b"""))
 
   /** MinHash+LSH near-dup candidates (sketch-based, engine-side). */
@@ -496,21 +497,18 @@ object Extensions extends QueryModule {
         round(quantile_cont(n_chars, 0.9), 4) AS p90_chars
       FROM documents GROUP BY source ORDER BY source"""))
 
-  /** Sessionization over the events table (30-min inactivity gap) —
-    * native session_window vs a lag/cumulative-sum SQL replay. */
-  private val x27Sessions = GraftQuery(
-    "x27_sessions",
-    (s, dir) => graft.ops.Sessionize.sessionStats(
-      Tables.events(s, dir), "user_id", "ts", "value")
-      .orderBy(col("user_id"), col("session_start")),
-    Some("""WITH ev AS (
+  /** DuckDB sessionization (30-minute inactivity gap, window named
+    * `win`) and the per-session stats select, ungrouped tail left to
+    * the caller — the x27 replay, reused by x72's settled stream. */
+  private def sessionsSql(win: String): String =
+    s"""ev AS (
         SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value FROM events),
       marked AS (
         SELECT user_id, t, value,
-          CASE WHEN lag(t) OVER w IS NULL
-                 OR t - lag(t) OVER w > INTERVAL '30 minutes'
+          CASE WHEN lag(t) OVER $win IS NULL
+                 OR t - lag(t) OVER $win > INTERVAL '30 minutes'
                THEN 1 ELSE 0 END AS new_s
-        FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY t)),
+        FROM ev WINDOW $win AS (PARTITION BY user_id ORDER BY t)),
       sess AS (
         SELECT user_id, t, value,
           sum(new_s) OVER (PARTITION BY user_id ORDER BY t
@@ -518,8 +516,42 @@ object Extensions extends QueryModule {
         FROM marked)
       SELECT user_id, min(t) AS session_start,
              count(*) AS n_events, round(sum(value), 2) AS session_value
-      FROM sess GROUP BY user_id, sid
+      FROM sess GROUP BY user_id, sid"""
+
+  /** Sessionization over the events table (30-min inactivity gap) —
+    * native session_window vs a lag/cumulative-sum SQL replay. */
+  private val x27Sessions = GraftQuery(
+    "x27_sessions",
+    (s, dir) => graft.ops.Sessionize.sessionStats(
+      Tables.events(s, dir), "user_id", "ts", "value")
+      .orderBy(col("user_id"), col("session_start")),
+    Some(s"""WITH ${sessionsSql("w")}
       ORDER BY user_id, session_start"""))
+
+  /** DuckDB connected components of the undirected `pairs(id_a,
+    * id_b)`: `edges` both ways and the recursive min-label closure
+    * `reach(id, r)` (needs `WITH RECURSIVE`) — the recursive-CTE
+    * replay of [[graft.ops.Dedup.duplicateClusters]]. */
+  private val reachSql =
+    """edges AS (
+        SELECT id_a AS src, id_b AS dst FROM pairs
+        UNION
+        SELECT id_b, id_a FROM pairs),
+      reach(id, r) AS (
+        SELECT src, src FROM edges
+        UNION
+        SELECT e.src, rr.r FROM edges e JOIN reach rr ON rr.id = e.dst)"""
+
+  /** The x28 exact cosine pairs (vec_id < 200, cosine >= 0.3) and
+    * their [[reachSql]] components — x28/x29/x98/x130 replay the
+    * memoized [[dupClustersFor]] clusters through this. */
+  private val cosineReachSql =
+    s"""pairs AS (
+        SELECT a.vec_id AS id_a, b.vec_id AS id_b
+        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
+        WHERE a.vec_id < 200 AND b.vec_id < 200
+          AND ${cosineSql("a.embedding", "b.embedding", 10)} >= 0.3),
+      $reachSql"""
 
   /** Duplicate-cluster formation: connected components (min-label
     * propagation) over x7's exact near-dup pairs, oracled by a
@@ -534,40 +566,14 @@ object Extensions extends QueryModule {
     new graft.BoundedMemo[(String, String), org.apache.spark.sql.DataFrame](8, "dup-clusters")
   private def dupClustersFor(s: org.apache.spark.sql.SparkSession, dir: String) =
     clusterMemo.getOrBuild((graft.SessionKeys.of(s), dir)) {
-      val emb = Tables.embeddings(s, dir).filter(col("vec_id") < 200)
-        .select(col("vec_id"), col("embedding"))
-      val a = emb.select(col("vec_id").as("id_a"), col("embedding").as("vec_a"))
-      val b = emb.select(col("vec_id").as("id_b"), col("embedding").as("vec_b"))
-      val pairs = a.join(b, col("id_a") < col("id_b"))
-        .withColumn("cosine",
-          round(graft.functions.VectorMath.cosineSimilarity(col("vec_a"), col("vec_b")), 4))
-        .filter(col("cosine") >= 0.3)
-        .select(col("id_a"), col("id_b"))
+      val pairs = cosinePairs(s, dir).select(col("id_a"), col("id_b"))
       Dedup.duplicateClusters(pairs, "id_a", "id_b")
     }
 
   private val x28DupClusters = GraftQuery(
     "x28_dup_clusters",
     (s, dir) => dupClustersFor(s, dir).orderBy(col("id")),
-    Some("""WITH RECURSIVE pairs AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        WHERE a.vec_id < 200 AND b.vec_id < 200
-          AND round(
-            list_sum(list_transform(range(1, len(a.embedding) + 1),
-              i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-            / (sqrt(list_sum(list_transform(a.embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-               * sqrt(list_sum(list_transform(b.embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) >= 0.3),
-      edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION
-        SELECT id_b, id_a FROM pairs),
-      reach(id, r) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, rr.r FROM edges e JOIN reach rr ON rr.id = e.dst)
+    Some(s"""WITH RECURSIVE $cosineReachSql
       SELECT id, min(r) AS cluster_id FROM reach GROUP BY id ORDER BY id"""))
 
   /** Semantic dedup end-to-end: near-dup pairs → connected
@@ -585,25 +591,7 @@ object Extensions extends QueryModule {
         .select(col("vec_id"), col("label"))
         .orderBy(col("vec_id"))
     },
-    Some("""WITH RECURSIVE pairs AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        WHERE a.vec_id < 200 AND b.vec_id < 200
-          AND round(
-            list_sum(list_transform(range(1, len(a.embedding) + 1),
-              i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-            / (sqrt(list_sum(list_transform(a.embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-               * sqrt(list_sum(list_transform(b.embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) >= 0.3),
-      edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION
-        SELECT id_b, id_a FROM pairs),
-      reach(id, r) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, rr.r FROM edges e JOIN reach rr ON rr.id = e.dst),
+    Some(s"""WITH RECURSIVE $cosineReachSql,
       clusters AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
       SELECT vec_id, label FROM embeddings em
       WHERE vec_id < 200
@@ -844,6 +832,55 @@ object Extensions extends QueryModule {
         AND len(list_intersect(a.grams, b.grams)) >= 2
       ORDER BY train_id, eval_id"""))
 
+  /** The x38 repetition replay's CTEs over the token lists `toks.t`,
+    * one definition for x38 and the x41/x200 gates: unigram counts
+    * `uni`, bigram lists `big`, and bigram counts `bi` (bigram column
+    * named `g`). */
+  private val uniSql =
+    """uni AS (
+        SELECT doc_id, tok, count(*) AS c
+        FROM (SELECT doc_id, unnest(t) AS tok FROM toks) GROUP BY doc_id, tok)"""
+
+  private val bigSql =
+    """big AS (
+        SELECT doc_id, CASE WHEN len(t) < 2 THEN [array_to_string(t, ' ')]
+          ELSE list_transform(range(1, len(t)),
+            i -> array_to_string(t[i:i+1], ' ')) END AS grams
+        FROM toks)"""
+
+  private def biSql(g: String): String =
+    s"""bi AS (
+        SELECT doc_id, $g, count(*) AS c
+        FROM (SELECT doc_id, unnest(grams) AS $g FROM big) GROUP BY doc_id, $g)"""
+
+  /** The x41/x200 repetition gate's per-doc counts: `uagg` (tokens,
+    * top token) and `bagg` (bigrams, distinct bigrams). */
+  private def repetitionGateSql(g: String): String =
+    s"""$uniSql,
+      uagg AS (
+        SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tok, max(c) AS top_c
+        FROM uni GROUP BY doc_id),
+      $bigSql,
+      ${biSql(g)},
+      bagg AS (
+        SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_big,
+               count(*) AS n_distinct_big
+        FROM bi GROUP BY doc_id)"""
+
+  /** The x40 packing replay over per-doc `n_tokens` in CTE `t`: the
+    * naive running-sum window into 512-token chunks (x40/x41/x200). */
+  private def packingSql(t: String): String =
+    s"""o AS (
+        SELECT doc_id, n_tokens,
+          COALESCE(CAST(sum(n_tokens) OVER (ORDER BY doc_id
+            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
+            AS start_offset
+        FROM $t)
+      SELECT doc_id, n_tokens, start_offset,
+        start_offset // 512 AS start_chunk,
+        (start_offset + greatest(n_tokens, 1) - 1) // 512 AS end_chunk
+      FROM o ORDER BY doc_id"""
+
   /** Repetition filters (Gopher/C4): distinct-token ratio, top-token
     * share, duplicate-bigram fraction — fully SQL-replayable. */
   private val x38RepetitionStats = GraftQuery(
@@ -851,25 +888,17 @@ object Extensions extends QueryModule {
     (s, dir) => TextAnalysis.repetitionStats(
       Tables.documents(s, dir), "doc_id", "text")
       .orderBy(col("doc_id")),
-    Some("""WITH toks AS (
+    Some(s"""WITH toks AS (
         SELECT doc_id,
-          list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS t
+          list_filter(string_split_regex(lower(text), '\\s+'), x -> len(x) > 0) AS t
         FROM documents),
-      uni AS (
-        SELECT doc_id, tok, count(*) AS c
-        FROM (SELECT doc_id, unnest(t) AS tok FROM toks) GROUP BY doc_id, tok),
+      $uniSql,
       uagg AS (
         SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
                count(*) AS n_distinct, max(c) AS top_c
         FROM uni GROUP BY doc_id),
-      big AS (
-        SELECT doc_id, CASE WHEN len(t) < 2 THEN [array_to_string(t, ' ')]
-          ELSE list_transform(range(1, len(t)),
-            i -> array_to_string(t[i:i+1], ' ')) END AS grams
-        FROM toks),
-      bi AS (
-        SELECT doc_id, g, count(*) AS c
-        FROM (SELECT doc_id, unnest(grams) AS g FROM big) GROUP BY doc_id, g),
+      $bigSql,
+      ${biSql("g")},
       bagg AS (
         SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
                count(*) AS n_distinct_bigrams
@@ -918,19 +947,21 @@ object Extensions extends QueryModule {
     (s, dir) => graft.ops.Packing.chunkAssignments(
       Tables.documents(s, dir), "doc_id", "text", budget = 512)
       .orderBy(col("doc_id")),
-    Some("""WITH t AS (
+    Some(s"""WITH t AS (
         SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
         FROM documents),
-      o AS (
-        SELECT doc_id, n_tokens,
-          COALESCE(CAST(sum(n_tokens) OVER (ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-            AS start_offset
-        FROM t)
-      SELECT doc_id, n_tokens, start_offset,
-        start_offset // 512 AS start_chunk,
-        (start_offset + greatest(n_tokens, 1) - 1) // 512 AS end_chunk
-      FROM o ORDER BY doc_id"""))
+      ${packingSql("t")}"""))
+
+  /** DuckDB replay of [[TextAnalysis.scrubPii]] over `text` as
+    * `clean_text` (RE2 email → IPv4 → phone rewrites, the x39
+    * patterns); continuation lines are indented by `indent` spaces. */
+  private def piiScrubSql(indent: Int): String =
+    """regexp_replace(
+  regexp_replace(
+    regexp_replace(text,
+      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
+    '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g'),
+  '\+?\d[\d ()-]{6,}\d', '<PHONE>', 'g') AS clean_text""".replace("\n", "\n" + " " * indent)
 
   /** End-to-end corpus preparation — the composition a pretraining
     * data pipeline actually ships: exact keep-first dedup →
@@ -953,39 +984,17 @@ object Extensions extends QueryModule {
       graft.ops.Packing.chunkAssignments(cleaned, "doc_id", "clean_text", budget = 512)
         .orderBy(col("doc_id"))
     },
-    Some("""WITH survivors AS (
+    Some(s"""WITH survivors AS (
         SELECT doc_id,
-          regexp_replace(
-            regexp_replace(
-              regexp_replace(text,
-                '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-              '\b(?:\d{1,3}\.){3}\d{1,3}\b', '<IP>', 'g'),
-            '\+?\d[\d ()-]{6,}\d', '<PHONE>', 'g') AS clean_text,
+          ${piiScrubSql(10)},
           text
         FROM documents
         WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY md5(text))),
       toks AS (
         SELECT doc_id,
-          list_filter(string_split_regex(lower(text), '\s+'), x -> len(x) > 0) AS t
+          list_filter(string_split_regex(lower(text), '\\s+'), x -> len(x) > 0) AS t
         FROM survivors),
-      uni AS (
-        SELECT doc_id, tok, count(*) AS c
-        FROM (SELECT doc_id, unnest(t) AS tok FROM toks) GROUP BY doc_id, tok),
-      uagg AS (
-        SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tok, max(c) AS top_c
-        FROM uni GROUP BY doc_id),
-      big AS (
-        SELECT doc_id, CASE WHEN len(t) < 2 THEN [array_to_string(t, ' ')]
-          ELSE list_transform(range(1, len(t)),
-            i -> array_to_string(t[i:i+1], ' ')) END AS grams
-        FROM toks),
-      bi AS (
-        SELECT doc_id, g, count(*) AS c
-        FROM (SELECT doc_id, unnest(grams) AS g FROM big) GROUP BY doc_id, g),
-      bagg AS (
-        SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_big,
-               count(*) AS n_distinct_big
-        FROM bi GROUP BY doc_id),
+      ${repetitionGateSql("g")},
       kept AS (
         SELECT s.doc_id, s.clean_text
         FROM survivors s
@@ -997,16 +1006,7 @@ object Extensions extends QueryModule {
         SELECT doc_id,
           CAST(len(string_split(clean_text, ' ')) AS BIGINT) AS n_tokens
         FROM kept),
-      o AS (
-        SELECT doc_id, n_tokens,
-          COALESCE(CAST(sum(n_tokens) OVER (ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-            AS start_offset
-        FROM t2)
-      SELECT doc_id, n_tokens, start_offset,
-        start_offset // 512 AS start_chunk,
-        (start_offset + greatest(n_tokens, 1) - 1) // 512 AS end_chunk
-      FROM o ORDER BY doc_id"""))
+      ${packingSql("t2")}"""))
 
   /** The documents corpus plus exact replicas of the doc_id < 1000
     * slice on a disjoint id range — [[replicatedEmbeddings]]' pattern
@@ -1079,6 +1079,22 @@ object Extensions extends QueryModule {
         SELECT doc_id, source, min(doc_id) OVER (PARTITION BY gk) AS m
         FROM g) WHERE doc_id = m ORDER BY doc_id""")))
 
+  /** The bounded exact trigram-Jaccard pairs (docs < 300, >= 0.7) —
+    * the replay of [[trigramJaccardPairs]] that x43/x114/x127 feed;
+    * [[trigramReachSql]] adds their [[reachSql]] components. */
+  private val trigramPairsSql =
+    s"""g AS (
+        ${trigramGramsSql("doc_id < 300")}),
+      pairs AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b
+        FROM g a JOIN g b ON a.doc_id < b.doc_id
+        WHERE round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
+          / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))),
+          4) >= 0.7)"""
+
+  private val trigramReachSql = s"""$trigramPairsSql,
+      $reachSql"""
+
   /** Exact fuzzy-dedup twin (the x28/x29 oracle pattern on TEXT):
     * all-pairs trigram Jaccard over a bounded doc slice → recursive-
     * CTE reachability clusters → survivors, fully SQL-replayable —
@@ -1092,22 +1108,7 @@ object Extensions extends QueryModule {
         .select(col("doc_id"), col("source"))
         .orderBy(col("doc_id"))
     },
-    Some(s"""WITH RECURSIVE g AS (
-        ${trigramGramsSql("doc_id < 300")}),
-      pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM g a JOIN g b ON a.doc_id < b.doc_id
-        WHERE round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-          / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))),
-          4) >= 0.7),
-      edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION
-        SELECT id_b, id_a FROM pairs),
-      reach(id, r) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, rr.r FROM edges e JOIN reach rr ON rr.id = e.dst),
+    Some(s"""WITH RECURSIVE $trigramReachSql,
       clusters AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
       SELECT doc_id, source FROM documents d
       WHERE doc_id < 300
@@ -2040,24 +2041,9 @@ object Extensions extends QueryModule {
           graft.streaming.EventStreams.fromParquetDir(s, streamSrcDir(dir)))
       }.orderBy(col("user_id"), col("session_start"))
     },
-    Some("""WITH wm AS (SELECT max(CAST(ts AS TIMESTAMP)) - INTERVAL '30 minutes' AS w
+    Some(s"""WITH wm AS (SELECT max(CAST(ts AS TIMESTAMP)) - INTERVAL '30 minutes' AS w
                         FROM events),
-      ev AS (
-        SELECT user_id, CAST(ts AS TIMESTAMP) AS t, value FROM events),
-      marked AS (
-        SELECT user_id, t, value,
-          CASE WHEN lag(t) OVER win IS NULL
-                 OR t - lag(t) OVER win > INTERVAL '30 minutes'
-               THEN 1 ELSE 0 END AS new_s
-        FROM ev WINDOW win AS (PARTITION BY user_id ORDER BY t)),
-      sess AS (
-        SELECT user_id, t, value,
-          sum(new_s) OVER (PARTITION BY user_id ORDER BY t
-                           ROWS UNBOUNDED PRECEDING) AS sid
-        FROM marked)
-      SELECT user_id, min(t) AS session_start,
-             count(*) AS n_events, round(sum(value), 2) AS session_value
-      FROM sess GROUP BY user_id, sid
+      ${sessionsSql("win")}
       HAVING max(t) + INTERVAL '30 minutes' <= (SELECT w FROM wm)
       ORDER BY user_id, session_start"""))
 
@@ -2158,20 +2144,11 @@ object Extensions extends QueryModule {
       FROM r JOIN c USING (source)
       ORDER BY schedule_key, source, doc_id"""))
 
-  /** BM25 top-k ([[graft.ops.TextAnalysis.bm25TopK]]): lexical
-    * retrieval over the corpus for a fixed bag-of-terms query — the
-    * sparse twin of the dense ANN family. Hash-green: the full
-    * scoring pipeline (exact avgdl quotient, Lucene +1 idf, sorted
-    * per-doc fold) is replayed in SQL with the identical IEEE
-    * expression tree; rank on the unrounded score, round only the
-    * output. */
-  private val x76Bm25TopK = GraftQuery(
-    "x76_bm25_topk",
-    (s, dir) => TextAnalysis.bm25TopK(Tables.documents(s, dir),
-      "doc_id", "text", Seq("vector", "stream", "query"), k = 10)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id")),
-    Some("""WITH toks AS (
+  /** DuckDB replay of [[TextAnalysis.bm25TopK]]'s per-term BM25
+    * contributions `scored(doc_id, ts)` for the query terms
+    * (vector, stream, query), k1 = 1.2, b = 0.75 (x76, x133). */
+  private val bm25ScoredSql =
+    """toks AS (
         SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS term
         FROM documents),
       tok2 AS (SELECT * FROM toks WHERE length(term) > 0),
@@ -2190,7 +2167,22 @@ object Extensions extends QueryModule {
             * (tf * (1.2 + 1.0))
             / (tf + 1.2 * ((1.0 - 0.75)
                 + 0.75 * (dl / (CAST(tot AS DOUBLE) / n_docs)))) AS ts
-        FROM tf JOIN dl USING (doc_id) JOIN dfreq USING (term), stats),
+        FROM tf JOIN dl USING (doc_id) JOIN dfreq USING (term), stats)"""
+
+  /** BM25 top-k ([[graft.ops.TextAnalysis.bm25TopK]]): lexical
+    * retrieval over the corpus for a fixed bag-of-terms query — the
+    * sparse twin of the dense ANN family. Hash-green: the full
+    * scoring pipeline (exact avgdl quotient, Lucene +1 idf, sorted
+    * per-doc fold) is replayed in SQL with the identical IEEE
+    * expression tree; rank on the unrounded score, round only the
+    * output. */
+  private val x76Bm25TopK = GraftQuery(
+    "x76_bm25_topk",
+    (s, dir) => TextAnalysis.bm25TopK(Tables.documents(s, dir),
+      "doc_id", "text", Seq("vector", "stream", "query"), k = 10)
+      .withColumnRenamed("id", "doc_id")
+      .orderBy(col("doc_id")),
+    Some(s"""WITH $bm25ScoredSql,
       agg AS (
         SELECT doc_id, list_sum(list_sort(list(ts))) AS score,
                CAST(count(*) AS BIGINT) AS terms_matched
@@ -2421,21 +2413,20 @@ object Extensions extends QueryModule {
       QUALIFY row_number() OVER (ORDER BY pmi DESC, w1, w2) <= 20
       ORDER BY w1, w2"""))
 
-  /** Funnel analysis ([[graft.ops.Funnel.funnel]]): first-occurrence
-    * view → click → purchase reach per user, with step conversions.
-    * Hash-green: timestamps and integer-ratio divisions only. */
-  private val x83Funnel = GraftQuery(
-    "x83_funnel",
-    (s, dir) => graft.ops.Funnel.funnel(Tables.events(s, dir),
-      "user_id", "ts", "event_type", Seq("view", "click", "purchase")),
-    Some("""WITH ev AS (
+  /** DuckDB replay of [[graft.ops.Funnel.funnel]] over the steps
+    * view → click → purchase, each step within `within` of the
+    * previous when given (x83, x86). */
+  private def funnelSql(within: Option[String]): String = {
+    def bound(t: String) =
+      within.fold("")(w => s"\n               AND t <= $t + INTERVAL '$w'")
+    s"""WITH ev AS (
         SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS t FROM events),
       s1 AS (SELECT user_id, min(t) AS t1 FROM ev
              WHERE event_type = 'view' GROUP BY 1),
       s2 AS (SELECT ev.user_id, min(t) AS t2 FROM ev JOIN s1 USING (user_id)
-             WHERE event_type = 'click' AND t > t1 GROUP BY 1),
+             WHERE event_type = 'click' AND t > t1${bound("t1")} GROUP BY 1),
       s3 AS (SELECT ev.user_id, min(t) AS t3 FROM ev JOIN s2 USING (user_id)
-             WHERE event_type = 'purchase' AND t > t2 GROUP BY 1),
+             WHERE event_type = 'purchase' AND t > t2${bound("t2")} GROUP BY 1),
       n AS (
         SELECT 1 AS step, 'view' AS step_name,
                CAST(count(*) AS BIGINT) AS n_users FROM s1
@@ -2446,7 +2437,17 @@ object Extensions extends QueryModule {
           AS conv_from_first,
         round(n_users / COALESCE(lag(n_users) OVER (ORDER BY step), n_users), 6)
           AS conv_from_prev
-      FROM n ORDER BY step"""))
+      FROM n ORDER BY step"""
+  }
+
+  /** Funnel analysis ([[graft.ops.Funnel.funnel]]): first-occurrence
+    * view → click → purchase reach per user, with step conversions.
+    * Hash-green: timestamps and integer-ratio divisions only. */
+  private val x83Funnel = GraftQuery(
+    "x83_funnel",
+    (s, dir) => graft.ops.Funnel.funnel(Tables.events(s, dir),
+      "user_id", "ts", "event_type", Seq("view", "click", "purchase")),
+    Some(funnelSql(None)))
 
   /** Distinctive terms per source
     * ([[graft.ops.TextAnalysis.distinctiveTerms]]): Dirichlet
@@ -2515,27 +2516,7 @@ object Extensions extends QueryModule {
     (s, dir) => graft.ops.Funnel.funnel(Tables.events(s, dir),
       "user_id", "ts", "event_type", Seq("view", "click", "purchase"),
       within = Some("12 hours")),
-    Some("""WITH ev AS (
-        SELECT user_id, event_type, CAST(ts AS TIMESTAMP) AS t FROM events),
-      s1 AS (SELECT user_id, min(t) AS t1 FROM ev
-             WHERE event_type = 'view' GROUP BY 1),
-      s2 AS (SELECT ev.user_id, min(t) AS t2 FROM ev JOIN s1 USING (user_id)
-             WHERE event_type = 'click' AND t > t1
-               AND t <= t1 + INTERVAL '12 hours' GROUP BY 1),
-      s3 AS (SELECT ev.user_id, min(t) AS t3 FROM ev JOIN s2 USING (user_id)
-             WHERE event_type = 'purchase' AND t > t2
-               AND t <= t2 + INTERVAL '12 hours' GROUP BY 1),
-      n AS (
-        SELECT 1 AS step, 'view' AS step_name,
-               CAST(count(*) AS BIGINT) AS n_users FROM s1
-        UNION ALL SELECT 2, 'click', CAST(count(*) AS BIGINT) FROM s2
-        UNION ALL SELECT 3, 'purchase', CAST(count(*) AS BIGINT) FROM s3)
-      SELECT step, step_name, n_users,
-        round(n_users / first_value(n_users) OVER (ORDER BY step), 6)
-          AS conv_from_first,
-        round(n_users / COALESCE(lag(n_users) OVER (ORDER BY step), n_users), 6)
-          AS conv_from_prev
-      FROM n ORDER BY step"""))
+    Some(funnelSql(Some("12 hours"))))
 
   /** Weekly churn ([[graft.ops.Funnel.weeklyChurn]]): share of each
     * week's active users absent the following week. Hash-green. */
@@ -2871,25 +2852,7 @@ object Extensions extends QueryModule {
         .select(col("vec_id"), col("label")),
       "vec_id", dupClustersFor(s, dir), holdoutPct = 20)
       .orderBy(col("vec_id")),
-    Some("""WITH RECURSIVE pairs AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        WHERE a.vec_id < 200 AND b.vec_id < 200
-          AND round(
-            list_sum(list_transform(range(1, len(a.embedding) + 1),
-              i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-            / (sqrt(list_sum(list_transform(a.embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-               * sqrt(list_sum(list_transform(b.embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) >= 0.3),
-      edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION
-        SELECT id_b, id_a FROM pairs),
-      reach(id, r) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, rr.r FROM edges e JOIN reach rr ON rr.id = e.dst),
+    Some(s"""WITH RECURSIVE $cosineReachSql,
       clusters AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
       assigned AS (
         SELECT e.vec_id, e.label,
@@ -2901,6 +2864,37 @@ object Extensions extends QueryModule {
                   % 4294967296 % 100 < 20
              THEN 'holdout' ELSE 'train' END AS split
       FROM assigned ORDER BY vec_id"""))
+
+  /** DuckDB replay of [[TextAnalysis.qualityScore]] (English stopword
+    * list): per-doc `metrics` over `from`, the `scored` ratios, and the
+    * `quality` CTE's leading columns through `quality_score` — a
+    * caller opens `metrics` with its SELECT list and closes `quality`
+    * (x103, x20). */
+  private def qualityMetricsSql(from: String): String = {
+    val enList = graft.ops.Stopwords.en.map("'" + _ + "'").mkString(",")
+    s"""string_split(lower(text), ' ') AS t,
+          CAST(length(text) AS DOUBLE) AS nc,
+          CAST(len(string_split(lower(text), ' ')) AS DOUBLE) AS nt,
+          CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) AS alpha,
+          CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) AS digits
+        FROM $from),
+      scored AS (
+        SELECT *,
+          round(CASE WHEN nc > 0 THEN alpha / nc ELSE 0 END, 4) AS alpha_ratio,
+          round(CASE WHEN nc > 0 THEN digits / nc ELSE 0 END, 4) AS digit_ratio,
+          round(CASE WHEN nt > 0 THEN nc / nt ELSE 0 END, 4) AS mean_token_len,
+          round(CASE WHEN nt > 0 THEN
+            CAST(len(list_intersect(t, [$enList])) AS DOUBLE) / nt ELSE 0 END, 4)
+            AS stopword_ratio
+        FROM metrics),
+      quality AS (
+        SELECT *,
+          round(greatest(0.0, least(1.0,
+            alpha_ratio * 0.4
+            + least(stopword_ratio * 4.0, 1.0) * 0.3
+            + CASE WHEN mean_token_len BETWEEN 3.0 AND 12.0 THEN 0.2 ELSE 0.0 END
+            + CASE WHEN digit_ratio < 0.2 THEN 0.1 ELSE 0.0 END)), 4) AS quality_score"""
+  }
 
   /** End-to-end capped curation — the round-6 operators composed the
     * way a real pre-training prep runs: exact dedup → segment-level
@@ -3007,43 +3001,14 @@ object Extensions extends QueryModule {
             TextAnalysis.scrubPii(col("text")).as("clean_text"))
       }.orderBy(col("doc_id"))
     },
-    Some {
-      val enList = graft.ops.Stopwords.en.map("'" + _ + "'").mkString(",")
-      s"""WITH metrics AS (
+    Some(s"""WITH metrics AS (
         SELECT doc_id, lang, source, text,
-          string_split(lower(text), ' ') AS t,
-          CAST(length(text) AS DOUBLE) AS nc,
-          CAST(len(string_split(lower(text), ' ')) AS DOUBLE) AS nt,
-          CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) AS alpha,
-          CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) AS digits
-        FROM documents),
-      scored AS (
-        SELECT *,
-          round(CASE WHEN nc > 0 THEN alpha / nc ELSE 0 END, 4) AS alpha_ratio,
-          round(CASE WHEN nc > 0 THEN digits / nc ELSE 0 END, 4) AS digit_ratio,
-          round(CASE WHEN nt > 0 THEN nc / nt ELSE 0 END, 4) AS mean_token_len,
-          round(CASE WHEN nt > 0 THEN
-            CAST(len(list_intersect(t, [$enList])) AS DOUBLE) / nt ELSE 0 END, 4)
-            AS stopword_ratio
-        FROM metrics),
-      quality AS (
-        SELECT *,
-          round(greatest(0.0, least(1.0,
-            alpha_ratio * 0.4
-            + least(stopword_ratio * 4.0, 1.0) * 0.3
-            + CASE WHEN mean_token_len BETWEEN 3.0 AND 12.0 THEN 0.2 ELSE 0.0 END
-            + CASE WHEN digit_ratio < 0.2 THEN 0.1 ELSE 0.0 END)), 4) AS quality_score
+          ${qualityMetricsSql("documents")}
         FROM scored)
       SELECT doc_id, lang, source, quality_score,
-        regexp_replace(
-          regexp_replace(
-            regexp_replace(text,
-              '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-            '\\b(?:\\d{1,3}\\.){3}\\d{1,3}\\b', '<IP>', 'g'),
-          '\\+?\\d[\\d ()-]{6,}\\d', '<PHONE>', 'g') AS clean_text
+        ${piiScrubSql(8)}
       FROM quality WHERE quality_score >= 0.66
-      ORDER BY doc_id"""
-    })
+      ORDER BY doc_id"""))
 
   /** Embedding-space outlier screening ([[graft.ops.Similarity
     * .embeddingOutliers]]): per-label centroid distance, robust-z'd
@@ -3509,7 +3474,7 @@ object Extensions extends QueryModule {
         "vec_id", "label", "embedding", k = 3)
         .orderBy(col("anchor_id"), col("rank"))
     },
-    Some("""WITH a AS MATERIALIZED (
+    Some(s"""WITH a AS MATERIALIZED (
         SELECT vec_id AS anchor_id, label AS al, embedding AS av
         FROM embeddings WHERE vec_id < 50),
       c AS MATERIALIZED (
@@ -3517,13 +3482,7 @@ object Extensions extends QueryModule {
         FROM embeddings),
       p AS MATERIALIZED (
         SELECT anchor_id, neg_id,
-          round(
-            list_sum(list_transform(range(1, len(av) + 1),
-              i -> CAST(av[i] AS DOUBLE) * CAST(nv[i] AS DOUBLE)))
-            / (sqrt(list_sum(list_transform(av,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-               * sqrt(list_sum(list_transform(nv,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4)
+          ${cosineSql("av", "nv", 10)}
             AS cosine
         FROM a JOIN c ON a.al <> c.nl),
       r AS MATERIALIZED (
@@ -3566,22 +3525,7 @@ object Extensions extends QueryModule {
         .select(col("doc_id"), col("source"), col("n_chars"))
         .orderBy(col("doc_id"))
     },
-    Some(s"""WITH RECURSIVE g AS (
-        ${trigramGramsSql("doc_id < 300")}),
-      pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM g a JOIN g b ON a.doc_id < b.doc_id
-        WHERE round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-          / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))),
-          4) >= 0.7),
-      edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION
-        SELECT id_b, id_a FROM pairs),
-      reach(id, r) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, rr.r FROM edges e JOIN reach rr ON rr.id = e.dst),
+    Some(s"""WITH RECURSIVE $trigramReachSql,
       clusters AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
       lbl AS (
         SELECT d.doc_id, d.source, d.n_chars,
@@ -3808,18 +3752,12 @@ object Extensions extends QueryModule {
         "vec_id", "label", "embedding", "embedding")
         .orderBy(col("doc"))
     },
-    Some("""WITH q AS MATERIALIZED (
+    Some(s"""WITH q AS MATERIALIZED (
         SELECT vec_id AS qid, embedding AS qv
         FROM embeddings WHERE vec_id < 4),
       sc AS MATERIALIZED (
         SELECT e.label AS doc, q.qid,
-          round(
-            list_sum(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))
-            / (sqrt(list_sum(list_transform(e.embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-               * sqrt(list_sum(list_transform(q.qv,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS c
+          ${cosineSql("e.embedding", "q.qv", 10)} AS c
         FROM embeddings e CROSS JOIN q),
       m AS MATERIALIZED (
         SELECT doc, qid, max(c) AS m FROM sc GROUP BY doc, qid)
@@ -3979,14 +3917,7 @@ object Extensions extends QueryModule {
         "id_a", "id_b", docs, "doc_id", "source")
         .orderBy(col("label_a"), col("label_b"))
     },
-    Some(s"""WITH g AS (
-        ${trigramGramsSql("doc_id < 300")}),
-      pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM g a JOIN g b ON a.doc_id < b.doc_id
-        WHERE round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE)
-          / (len(a.grams) + len(b.grams) - len(list_intersect(a.grams, b.grams))),
-          4) >= 0.7)
+    Some(s"""WITH $trigramPairsSql
       SELECT least(da.source, db.source) AS label_a,
         greatest(da.source, db.source) AS label_b,
         CAST(count(*) AS BIGINT) AS n_pairs
@@ -4010,7 +3941,7 @@ object Extensions extends QueryModule {
         "vec_id", "label", "embedding", k = 5)
         .orderBy(col("vec_id"))
     },
-    Some("""WITH l AS MATERIALIZED (
+    Some(s"""WITH l AS MATERIALIZED (
         SELECT vec_id AS nn_id, label AS nn_label, embedding AS lv
         FROM embeddings WHERE vec_id < 100),
       c AS MATERIALIZED (
@@ -4018,13 +3949,7 @@ object Extensions extends QueryModule {
         FROM embeddings WHERE vec_id >= 100),
       p AS MATERIALIZED (
         SELECT id, nn_id, nn_label,
-          round(
-            list_sum(list_transform(range(1, len(cv) + 1),
-              i -> CAST(cv[i] AS DOUBLE) * CAST(lv[i] AS DOUBLE)))
-            / (sqrt(list_sum(list_transform(cv,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-               * sqrt(list_sum(list_transform(lv,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4)
+          ${cosineSql("cv", "lv", 10)}
             AS cos
         FROM c CROSS JOIN l),
       topk AS MATERIALIZED (
@@ -4094,25 +4019,7 @@ object Extensions extends QueryModule {
     "x130_cluster_histogram",
     (s, dir) => graft.ops.Dedup.clusterSizeHistogram(dupClustersFor(s, dir))
       .orderBy(col("cluster_size")),
-    Some("""WITH RECURSIVE pairs AS (
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b
-        FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-        WHERE a.vec_id < 200 AND b.vec_id < 200
-          AND round(
-            list_sum(list_transform(range(1, len(a.embedding) + 1),
-              i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-            / (sqrt(list_sum(list_transform(a.embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-               * sqrt(list_sum(list_transform(b.embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) >= 0.3),
-      edges AS (
-        SELECT id_a AS src, id_b AS dst FROM pairs
-        UNION
-        SELECT id_b, id_a FROM pairs),
-      reach(id, r) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.src, rr.r FROM edges e JOIN reach rr ON rr.id = e.dst),
+    Some(s"""WITH RECURSIVE $cosineReachSql,
       clusters AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
       sizes AS (
         SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
@@ -4247,26 +4154,7 @@ object Extensions extends QueryModule {
       Similarity.rrfFuse(lex, dense, "id", "rank", k0 = 60, topK = 10)
         .orderBy(col("id"))
     },
-    Some("""WITH toks AS (
-        SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS term
-        FROM documents),
-      tok2 AS (SELECT * FROM toks WHERE length(term) > 0),
-      dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-             FROM tok2 GROUP BY 1),
-      stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                       CAST(sum(dl) AS BIGINT) AS tot FROM dl),
-      tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-             FROM tok2 WHERE term IN ('vector', 'stream', 'query')
-             GROUP BY 1, 2),
-      dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS dfr
-                FROM tf GROUP BY 1),
-      scored AS (
-        SELECT doc_id,
-          ln((CAST(n_docs AS DOUBLE) - dfr + 0.5) / (dfr + 0.5) + 1.0)
-            * (tf * (1.2 + 1.0))
-            / (tf + 1.2 * ((1.0 - 0.75)
-                + 0.75 * (dl / (CAST(tot AS DOUBLE) / n_docs)))) AS ts
-        FROM tf JOIN dl USING (doc_id) JOIN dfreq USING (term), stats),
+    Some(s"""WITH $bm25ScoredSql,
       agg AS (
         SELECT doc_id, list_sum(list_sort(list(ts))) AS score
         FROM scored GROUP BY 1),
@@ -4280,13 +4168,7 @@ object Extensions extends QueryModule {
       q AS (SELECT embedding AS e FROM embeddings WHERE vec_id = 0),
       cos AS (
         SELECT vec_id,
-          round(
-            list_sum(list_transform(range(1, len(embedding) + 1),
-              i -> CAST(embedding[i] AS DOUBLE) * CAST(q.e[i] AS DOUBLE)))
-            / (sqrt(list_sum(list_transform(embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-               * sqrt(list_sum(list_transform(q.e,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS cosine
+          ${cosineSql("embedding", "q.e", 10)} AS cosine
         FROM embeddings, q),
       dense AS (
         SELECT vec_id AS id, CAST(row_number() OVER (
@@ -4305,6 +4187,21 @@ object Extensions extends QueryModule {
       QUALIFY row_number() OVER (ORDER BY s DESC, id) <= 10
       ORDER BY id"""))
 
+  /** DuckDB replay of the x135 content-defined anchor predicate
+    * (base-31 rolling hash over 8 chars, `% 16 = 0`) as the list of
+    * anchor end positions of text `s`; `pos` is the char index
+    * expression; continuation lines are indented by `indent` more
+    * spaces. Shared by x135 and the x197–x200 anchor windows. */
+  private def cdcAnchorsSql(pos: String, indent: Int = 0): String =
+    s"""CASE WHEN length(text) >= 8 THEN
+            list_filter(range(8, length(text)+1), i ->
+              (CAST(list_sum(list_transform(range(0, 8), j ->
+                ascii(substr(s, $pos, 1))
+                  * ([27512614111,887503681,28629151,923521,
+                      29791,961,31,1][j+1])))
+               AS BIGINT) % 16) = 0)
+          ELSE [] END""".replace("\n", "\n" + " " * indent)
+
   /** Content-defined chunking dedup profile ([[graft.ops.Dedup
     * .cdcDedupProfile]]): rolling-hash chunk boundaries (window 8,
     * mod 16), per-doc chunk counts and the corpus-shared-chunk
@@ -4319,17 +4216,10 @@ object Extensions extends QueryModule {
       Tables.documents(s, dir), "doc_id", "text")
       .withColumnRenamed("id", "doc_id")
       .orderBy(col("doc_id")),
-    Some("""WITH b AS (
+    Some(s"""WITH b AS (
         SELECT doc_id, text AS s, length(text) AS n,
           list_sort(list_distinct(list_append(
-            CASE WHEN length(text) >= 8 THEN
-              list_filter(range(8, length(text)+1), i ->
-                (CAST(list_sum(list_transform(range(0, 8), j ->
-                  ascii(substr(s, i-7+j, 1))
-                    * ([27512614111,887503681,28629151,923521,
-                        29791,961,31,1][j+1])))
-                 AS BIGINT) % 16) = 0)
-            ELSE [] END,
+            ${cdcAnchorsSql("i-7+j", 2)},
             length(text)))) AS bounds
         FROM documents),
       c AS (
@@ -4363,18 +4253,12 @@ object Extensions extends QueryModule {
       Tables.embeddings(s, dir), "vec_id", "embedding",
       nQueries = 8, dims = 16, k = 10)
       .orderBy(col("query_id")),
-    Some("""WITH q AS (
+    Some(s"""WITH q AS (
         SELECT vec_id AS query_id, embedding AS qv
         FROM embeddings WHERE vec_id < 8),
       s AS (
         SELECT q.query_id, e.vec_id AS neighbor_id,
-          round(
-            list_sum(list_transform(range(1, len(e.embedding) + 1),
-              i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))
-            / (sqrt(list_sum(list_transform(e.embedding,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-               * sqrt(list_sum(list_transform(q.qv,
-                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS cos_full,
+          ${cosineSql("e.embedding", "q.qv", 10)} AS cos_full,
           round(
             list_sum(list_transform(range(1, 17),
               i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.qv[i] AS DOUBLE)))
@@ -5301,17 +5185,10 @@ object Extensions extends QueryModule {
         round(mn, 6) AS min_v, round(mx, 6) AS max_v
       FROM agg ORDER BY dim"""))
 
-  /** Top-k session paths ([[graft.ops.Sessionize.topSessionPaths]]):
-    * k-step behavioral patterns via ANSI-replayable gaps-and-islands
-    * sessions (lag flag + running sum share one user exchange; the
-    * session collect groups on a superset of that partitioning —
-    * no second shuffle; top-k is TakeOrdered). Total (count DESC,
-    * path) order makes the k-cut deterministic. */
-  private val x165SessionPaths = GraftQuery(
-    "x165_session_paths",
-    (s, dir) => Sessionize.topSessionPaths(Tables.events(s, dir),
-      "user_id", "ts", "event_id", "event_type"),
-    Some("""WITH ev AS (
+  /** DuckDB 30-minute sessions `s(u, t, eid, et, sid)` over events
+    * in (ts, event_id) order — the x165 session CTEs, reused by x181. */
+  private val eventSessionsSql =
+    """ev AS (
         SELECT user_id AS u, CAST(ts AS TIMESTAMP) AS t,
           event_id AS eid, event_type AS et
         FROM events),
@@ -5324,7 +5201,19 @@ object Extensions extends QueryModule {
       s AS (
         SELECT u, t, eid, et,
           sum(ns) OVER (PARTITION BY u ORDER BY t, eid) AS sid
-        FROM f),
+        FROM f)"""
+
+  /** Top-k session paths ([[graft.ops.Sessionize.topSessionPaths]]):
+    * k-step behavioral patterns via ANSI-replayable gaps-and-islands
+    * sessions (lag flag + running sum share one user exchange; the
+    * session collect groups on a superset of that partitioning —
+    * no second shuffle; top-k is TakeOrdered). Total (count DESC,
+    * path) order makes the k-cut deterministic. */
+  private val x165SessionPaths = GraftQuery(
+    "x165_session_paths",
+    (s, dir) => Sessionize.topSessionPaths(Tables.events(s, dir),
+      "user_id", "ts", "event_id", "event_type"),
+    Some(s"""WITH $eventSessionsSql,
       p AS (
         SELECT u, sid,
           array_to_string(list(et ORDER BY t, eid)[1:5], '>') AS path
@@ -5489,6 +5378,21 @@ object Extensions extends QueryModule {
         round(CAST(sum(n_chars) AS DOUBLE) / count(*), 6) AS mean_chars
       FROM assigned GROUP BY 1, 2 ORDER BY lang, fold"""))
 
+  /** DuckDB corpus bigram counts `c(w1, w2, c12)` over non-empty
+    * lowercased whitespace tokens — the x169/x173 replay base. */
+  private val bigramCountsSql =
+    """toks AS (
+        SELECT list_filter(string_split_regex(lower(text), '\s+'),
+          t -> length(t) > 0) AS ts
+        FROM documents),
+      grams AS (
+        SELECT unnest(list_transform(range(1, len(ts)),
+          i -> struct_pack(w1 := ts[i], w2 := ts[i + 1]))) AS g
+        FROM toks WHERE len(ts) >= 2),
+      c AS (
+        SELECT g.w1 AS w1, g.w2 AS w2, CAST(count(*) AS BIGINT) AS c12
+        FROM grams GROUP BY 1, 2)"""
+
   /** Interpolated Kneser–Ney bigram LM
     * ([[graft.ops.TextAnalysis.kneserNeyBigrams]]) — the production
     * LM-smoothing twin of x31's add-one toy. Oracle: identical
@@ -5500,17 +5404,7 @@ object Extensions extends QueryModule {
     (s, dir) => TextAnalysis.kneserNeyBigrams(
         Tables.documents(s, dir), "text", discount = 0.75, k = 30)
       .orderBy(col("n").desc, col("w1"), col("w2")),
-    Some("""WITH toks AS (
-        SELECT list_filter(string_split_regex(lower(text), '\s+'),
-          t -> length(t) > 0) AS ts
-        FROM documents),
-      grams AS (
-        SELECT unnest(list_transform(range(1, len(ts)),
-          i -> struct_pack(w1 := ts[i], w2 := ts[i + 1]))) AS g
-        FROM toks WHERE len(ts) >= 2),
-      c AS (
-        SELECT g.w1 AS w1, g.w2 AS w2, CAST(count(*) AS BIGINT) AS c12
-        FROM grams GROUP BY 1, 2),
+    Some(s"""WITH $bigramCountsSql,
       lw AS (
         SELECT w1, CAST(sum(c12) AS BIGINT) AS c1,
           CAST(count(*) AS BIGINT) AS n1fw
@@ -5707,17 +5601,7 @@ object Extensions extends QueryModule {
     (s, dir) => TextAnalysis.branchingEntropy(
         Tables.documents(s, dir), "text", k = 30)
       .orderBy(col("n_ctx").desc, col("w1")),
-    Some("""WITH toks AS (
-        SELECT list_filter(string_split_regex(lower(text), '\s+'),
-          t -> length(t) > 0) AS ts
-        FROM documents),
-      grams AS (
-        SELECT unnest(list_transform(range(1, len(ts)),
-          i -> struct_pack(w1 := ts[i], w2 := ts[i + 1]))) AS g
-        FROM toks WHERE len(ts) >= 2),
-      c AS (
-        SELECT g.w1 AS w1, g.w2 AS w2, CAST(count(*) AS BIGINT) AS c12
-        FROM grams GROUP BY 1, 2),
+    Some(s"""WITH $bigramCountsSql,
       agg AS (
         SELECT w1, CAST(sum(c12) AS BIGINT) AS n_ctx,
           CAST(count(*) AS BIGINT) AS n_succ,
@@ -6063,20 +5947,7 @@ object Extensions extends QueryModule {
     (s, dir) => Sessionize.episodeSupport(Tables.events(s, dir),
         "user_id", "ts", "event_id", "event_type")
       .orderBy(col("a"), col("b")),
-    Some("""WITH ev AS (
-        SELECT user_id AS u, CAST(ts AS TIMESTAMP) AS t,
-          event_id AS eid, event_type AS et
-        FROM events),
-      f AS (
-        SELECT u, t, eid, et,
-          CASE WHEN lag(t) OVER w IS NULL
-            OR epoch_us(t) - epoch_us(lag(t) OVER w) > 1800000000
-            THEN 1 ELSE 0 END AS ns
-        FROM ev WINDOW w AS (PARTITION BY u ORDER BY t, eid)),
-      s AS (
-        SELECT u, t, eid, et,
-          sum(ns) OVER (PARTITION BY u ORDER BY t, eid) AS sid
-        FROM f),
+    Some(s"""WITH $eventSessionsSql,
       p AS (
         SELECT u, sid, et,
           row_number() OVER (PARTITION BY u, sid ORDER BY t, eid) AS pos
@@ -6251,23 +6122,14 @@ object Extensions extends QueryModule {
       JOIN diag d2 ON cov.j = d2.dd
       ORDER BY i, j"""))
 
-  /** KN-model document scoring with real backoff
-    * ([[graft.ops.TextAnalysis.knLogProb]]): the model trains on the
-    * even-id half, every doc scores against it — odd docs exercise
-    * the unseen-bigram/unseen-context arms a self-scored corpus
-    * never hits. Oracle: same model marginals, the same three-arm
-    * CASE over the x169 division tree, ln over exact-BIGINT
-    * rationals (x31 class), position-keyed sorted doc folds (x94). */
-  private val x185KnLogprob = GraftQuery(
-    "x185_kn_logprob",
-    (s, dir) => {
-      val docs = Tables.documents(s, dir)
-      TextAnalysis.knLogProb(docs.filter(col("doc_id") % 2 === 0),
-          docs, "doc_id", "text")
-        .orderBy(col("doc_id"))
-    },
-    Some("""WITH ttoks AS (
-        SELECT list_filter(string_split_regex(lower(text), '\s+'),
+  /** DuckDB replay of [[TextAnalysis.knLogProb]] trained on the even
+    * docs: bigram counts `c`, continuation counts `lw`/`rw`/`tot`,
+    * and the per-bigram interpolated log-probs
+    * `scoredg(doc_id, pos, term)` of the docs in CTE/table `scored`
+    * (x185, x192). */
+  private def knScoredSql(scored: String): String =
+    s"""ttoks AS (
+        SELECT list_filter(string_split_regex(lower(text), '\\s+'),
           t -> length(t) > 0) AS ts
         FROM documents WHERE doc_id % 2 = 0),
       tgrams AS (
@@ -6285,9 +6147,9 @@ object Extensions extends QueryModule {
         SELECT w2, CAST(count(*) AS BIGINT) AS n1bw FROM c GROUP BY 1),
       tot AS (SELECT CAST(count(*) AS BIGINT) AS n1all FROM c),
       stoks AS (
-        SELECT doc_id, list_filter(string_split_regex(lower(text), '\s+'),
+        SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'),
           t -> length(t) > 0) AS ts
-        FROM documents),
+        FROM $scored),
       grams AS (
         SELECT doc_id, unnest(range(1, len(ts))) AS pos,
           unnest(list_transform(range(1, len(ts)),
@@ -6313,7 +6175,24 @@ object Extensions extends QueryModule {
         LEFT JOIN c ON grams.g.w1 = c.w1 AND grams.g.w2 = c.w2
         LEFT JOIN lw ON grams.g.w1 = lw.w1
         LEFT JOIN rw ON grams.g.w2 = rw.w2
-        CROSS JOIN tot)
+        CROSS JOIN tot)"""
+
+  /** KN-model document scoring with real backoff
+    * ([[graft.ops.TextAnalysis.knLogProb]]): the model trains on the
+    * even-id half, every doc scores against it — odd docs exercise
+    * the unseen-bigram/unseen-context arms a self-scored corpus
+    * never hits. Oracle: same model marginals, the same three-arm
+    * CASE over the x169 division tree, ln over exact-BIGINT
+    * rationals (x31 class), position-keyed sorted doc folds (x94). */
+  private val x185KnLogprob = GraftQuery(
+    "x185_kn_logprob",
+    (s, dir) => {
+      val docs = Tables.documents(s, dir)
+      TextAnalysis.knLogProb(docs.filter(col("doc_id") % 2 === 0),
+          docs, "doc_id", "text")
+        .orderBy(col("doc_id"))
+    },
+    Some(s"""WITH ${knScoredSql("documents")}
       SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
         round(list_sum(list_transform(
           list_sort(list(struct_pack(k := pos, v := term))),
@@ -6637,54 +6516,7 @@ object Extensions extends QueryModule {
         FROM skel s JOIN (
           SELECT fp, min(doc_id) AS keep_id FROM skel GROUP BY 1) k
           ON s.fp = k.fp AND s.doc_id = k.keep_id),
-      ttoks AS (
-        SELECT list_filter(string_split_regex(lower(text), '\\s+'),
-          t -> length(t) > 0) AS ts
-        FROM documents WHERE doc_id % 2 = 0),
-      tgrams AS (
-        SELECT unnest(list_transform(range(1, len(ts)),
-          i -> struct_pack(w1 := ts[i], w2 := ts[i + 1]))) AS g
-        FROM ttoks WHERE len(ts) >= 2),
-      c AS MATERIALIZED (
-        SELECT g.w1 AS w1, g.w2 AS w2, CAST(count(*) AS BIGINT) AS c12
-        FROM tgrams GROUP BY 1, 2),
-      lw AS MATERIALIZED (
-        SELECT w1, CAST(sum(c12) AS BIGINT) AS c1,
-          CAST(count(*) AS BIGINT) AS n1fw
-        FROM c GROUP BY 1),
-      rw AS MATERIALIZED (
-        SELECT w2, CAST(count(*) AS BIGINT) AS n1bw FROM c GROUP BY 1),
-      tot AS (SELECT CAST(count(*) AS BIGINT) AS n1all FROM c),
-      stoks AS (
-        SELECT doc_id, list_filter(string_split_regex(lower(text), '\\s+'),
-          t -> length(t) > 0) AS ts
-        FROM survivors),
-      grams AS (
-        SELECT doc_id, unnest(range(1, len(ts))) AS pos,
-          unnest(list_transform(range(1, len(ts)),
-            i -> struct_pack(w1 := ts[i], w2 := ts[i + 1]))) AS g
-        FROM stoks WHERE len(ts) >= 2),
-      scoredg AS (
-        SELECT doc_id, pos,
-          ln(greatest(
-            CASE WHEN c.c12 IS NOT NULL THEN
-              greatest(CAST(c.c12 AS DOUBLE) - 0.75, 0.0)
-                / CAST(lw.c1 AS DOUBLE)
-              + ((0.75 * CAST(lw.n1fw AS DOUBLE)) / CAST(lw.c1 AS DOUBLE))
-                * (CAST(COALESCE(rw.n1bw, 0) AS DOUBLE)
-                  / CAST(tot.n1all AS DOUBLE))
-            WHEN lw.c1 IS NOT NULL THEN
-              ((0.75 * CAST(lw.n1fw AS DOUBLE)) / CAST(lw.c1 AS DOUBLE))
-                * (CAST(COALESCE(rw.n1bw, 0) AS DOUBLE)
-                  / CAST(tot.n1all AS DOUBLE))
-            ELSE CAST(COALESCE(rw.n1bw, 0) AS DOUBLE)
-              / CAST(tot.n1all AS DOUBLE)
-            END, 1e-10)) AS term
-        FROM grams
-        LEFT JOIN c ON grams.g.w1 = c.w1 AND grams.g.w2 = c.w2
-        LEFT JOIN lw ON grams.g.w1 = lw.w1
-        LEFT JOIN rw ON grams.g.w2 = rw.w2
-        CROSS JOIN tot),
+      ${knScoredSql("survivors")},
       ml AS MATERIALIZED (
         SELECT doc_id,
           round(list_sum(list_transform(
@@ -6870,6 +6702,63 @@ object Extensions extends QueryModule {
         FROM c GROUP BY 1, 2 ORDER BY source, phrase"""))
   }
 
+  /** The x197–x200 anchor-window replay: anchors `b` (CTE header
+    * `b`, char index expression `pos`), 40-char windows `w`/`e` at
+    * each anchor, and first-occurrence ranks `r` (rn > 1 = a window
+    * seen earlier in (doc_id, pos) order). */
+  private def anchorWindowsSql(b: String, pos: String): String =
+    s"""$b (
+        SELECT doc_id, text AS s, length(text) AS len,
+          ${cdcAnchorsSql(pos)} AS anchors
+        FROM documents WHERE length(text) > 0),
+      w AS MATERIALIZED (
+        SELECT doc_id, s,
+          unnest(list_filter(anchors, a -> a + 40 <= len)) AS pos
+        FROM b),
+      e AS MATERIALIZED (
+        SELECT doc_id, pos,
+          substring(s, CAST(pos + 1 AS INT), 40) AS seg
+        FROM w),
+      r AS (
+        SELECT doc_id, pos,
+          row_number() OVER (PARTITION BY seg ORDER BY doc_id, pos) AS rn
+        FROM e)"""
+
+  /** x198/x200: the repeated windows of `r` merged into spans `iv`
+    * (gaps-and-islands, break at pos − lag(pos) > 40). */
+  private val anchorSpansSql =
+    """d AS (SELECT doc_id, pos FROM r WHERE rn > 1),
+      g AS (
+        SELECT doc_id, pos,
+          CASE WHEN pos - coalesce(lag(pos) OVER
+              (PARTITION BY doc_id ORDER BY pos), -100) > 40
+            THEN 1 ELSE 0 END AS brk
+        FROM d),
+      isl AS (
+        SELECT doc_id, pos,
+          sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
+            ROWS UNBOUNDED PRECEDING) AS island
+        FROM g),
+      iv AS (
+        SELECT doc_id, min(pos) AS st, max(pos) + 40 AS en
+        FROM isl GROUP BY doc_id, island)"""
+
+  /** x198/x200: `b.s` with the sorted spans `v.ivs` cut out, as
+    * `clean_text`; continuation lines are indented by `indent` more
+    * spaces. */
+  private def cleanTextSql(indent: Int): String =
+    """CASE WHEN v.doc_id IS NULL THEN b.s
+        ELSE array_to_string(
+            list_transform(v.ivs, (x, i) -> substring(b.s,
+              CAST((CASE WHEN i = 1 THEN 0
+                    ELSE struct_extract(v.ivs[i-1], 'en') END) + 1 AS INT),
+              CAST(struct_extract(x, 'st') -
+                   (CASE WHEN i = 1 THEN 0
+                    ELSE struct_extract(v.ivs[i-1], 'en') END) AS INT))), '')
+          || substring(b.s,
+               CAST(struct_extract(v.ivs[len(v.ivs)], 'en') + 1 AS INT))
+        END AS clean_text""".replace("\n", "\n" + " " * indent)
+
   /** Shift-robust exact duplicate-content profile
     * ([[graft.ops.Dedup.anchorWindowProfile]] — content-defined
     * anchors via the x135 rolling-hash predicate, 40-char exact
@@ -6891,29 +6780,7 @@ object Extensions extends QueryModule {
       Tables.documents(s, dir), "doc_id", "text",
       n = 40, window = 8, mod = 16)
       .orderBy(col("doc_id")),
-    Some("""WITH b AS (
-        SELECT doc_id, text AS s, length(text) AS len,
-          CASE WHEN length(text) >= 8 THEN
-            list_filter(range(8, length(text)+1), i ->
-              (CAST(list_sum(list_transform(range(0, 8), j ->
-                ascii(substr(s, i-7+j, 1))
-                  * ([27512614111,887503681,28629151,923521,
-                      29791,961,31,1][j+1])))
-               AS BIGINT) % 16) = 0)
-          ELSE [] END AS anchors
-        FROM documents WHERE length(text) > 0),
-      w AS MATERIALIZED (
-        SELECT doc_id, s,
-          unnest(list_filter(anchors, a -> a + 40 <= len)) AS pos
-        FROM b),
-      e AS MATERIALIZED (
-        SELECT doc_id, pos,
-          substring(s, CAST(pos + 1 AS INT), 40) AS seg
-        FROM w),
-      r AS (
-        SELECT doc_id, pos,
-          row_number() OVER (PARTITION BY seg ORDER BY doc_id, pos) AS rn
-        FROM e)
+    Some(s"""WITH ${anchorWindowsSql("b AS", "i-7+j")}
       SELECT doc_id, CAST(count(*) AS BIGINT) AS n_windows,
         CAST(sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) AS BIGINT)
           AS n_dup_windows,
@@ -6945,44 +6812,8 @@ object Extensions extends QueryModule {
     // `b` is referenced twice (by `w` and the final SELECT) — r11
     // advice: MATERIALIZED, or DuckDB inlines the anchor scan into
     // both consumers and runs the O(len·window) arithmetic twice
-    Some("""WITH b AS MATERIALIZED (
-        SELECT doc_id, text AS s, length(text) AS len,
-          CASE WHEN length(text) >= 8 THEN
-            list_filter(range(8, length(text)+1), i ->
-              (CAST(list_sum(list_transform(range(0, 8), j ->
-                ascii(substr(s, CAST(i-7+j AS INT), 1))
-                  * ([27512614111,887503681,28629151,923521,
-                      29791,961,31,1][j+1])))
-               AS BIGINT) % 16) = 0)
-          ELSE [] END AS anchors
-        FROM documents WHERE length(text) > 0),
-      w AS MATERIALIZED (
-        SELECT doc_id, s,
-          unnest(list_filter(anchors, a -> a + 40 <= len)) AS pos
-        FROM b),
-      e AS MATERIALIZED (
-        SELECT doc_id, pos,
-          substring(s, CAST(pos + 1 AS INT), 40) AS seg
-        FROM w),
-      r AS (
-        SELECT doc_id, pos,
-          row_number() OVER (PARTITION BY seg ORDER BY doc_id, pos) AS rn
-        FROM e),
-      d AS (SELECT doc_id, pos FROM r WHERE rn > 1),
-      g AS (
-        SELECT doc_id, pos,
-          CASE WHEN pos - coalesce(lag(pos) OVER
-              (PARTITION BY doc_id ORDER BY pos), -100) > 40
-            THEN 1 ELSE 0 END AS brk
-        FROM d),
-      isl AS (
-        SELECT doc_id, pos,
-          sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-            ROWS UNBOUNDED PRECEDING) AS island
-        FROM g),
-      iv AS (
-        SELECT doc_id, min(pos) AS st, max(pos) + 40 AS en
-        FROM isl GROUP BY doc_id, island),
+    Some(s"""WITH ${anchorWindowsSql("b AS MATERIALIZED", "CAST(i-7+j AS INT)")},
+      $anchorSpansSql,
       v AS (
         SELECT doc_id,
           list_sort(list(struct_pack(st := st, en := en))) AS ivs,
@@ -6991,17 +6822,7 @@ object Extensions extends QueryModule {
       SELECT b.doc_id,
         CAST(coalesce(v.nspans, 0) AS BIGINT) AS n_dup_spans,
         CAST(coalesce(v.removed, 0) AS BIGINT) AS chars_removed,
-        CASE WHEN v.doc_id IS NULL THEN b.s
-        ELSE array_to_string(
-            list_transform(v.ivs, (x, i) -> substring(b.s,
-              CAST((CASE WHEN i = 1 THEN 0
-                    ELSE struct_extract(v.ivs[i-1], 'en') END) + 1 AS INT),
-              CAST(struct_extract(x, 'st') -
-                   (CASE WHEN i = 1 THEN 0
-                    ELSE struct_extract(v.ivs[i-1], 'en') END) AS INT))), '')
-          || substring(b.s,
-               CAST(struct_extract(v.ivs[len(v.ivs)], 'en') + 1 AS INT))
-        END AS clean_text
+        ${cleanTextSql(0)}
       FROM b LEFT JOIN v USING (doc_id) ORDER BY doc_id"""))
 
   /** Doc-LEVEL shift-robust keep-first dedup
@@ -7025,29 +6846,7 @@ object Extensions extends QueryModule {
       Tables.documents(s, dir), "doc_id", "text",
       n = 40, window = 8, mod = 16)
       .orderBy(col("doc_id")),
-    Some("""WITH b AS (
-        SELECT doc_id, text AS s, length(text) AS len,
-          CASE WHEN length(text) >= 8 THEN
-            list_filter(range(8, length(text)+1), i ->
-              (CAST(list_sum(list_transform(range(0, 8), j ->
-                ascii(substr(s, i-7+j, 1))
-                  * ([27512614111,887503681,28629151,923521,
-                      29791,961,31,1][j+1])))
-               AS BIGINT) % 16) = 0)
-          ELSE [] END AS anchors
-        FROM documents WHERE length(text) > 0),
-      w AS MATERIALIZED (
-        SELECT doc_id, s,
-          unnest(list_filter(anchors, a -> a + 40 <= len)) AS pos
-        FROM b),
-      e AS MATERIALIZED (
-        SELECT doc_id, pos,
-          substring(s, CAST(pos + 1 AS INT), 40) AS seg
-        FROM w),
-      r AS (
-        SELECT doc_id, pos,
-          row_number() OVER (PARTITION BY seg ORDER BY doc_id, pos) AS rn
-        FROM e),
+    Some(s"""WITH ${anchorWindowsSql("b AS", "i-7+j")},
       flagged AS (
         SELECT doc_id FROM r GROUP BY doc_id
         HAVING 2 * sum(CASE WHEN rn > 1 THEN 1 ELSE 0 END) > count(*))
@@ -7084,85 +6883,22 @@ object Extensions extends QueryModule {
       graft.ops.Packing.chunkAssignments(kept, "doc_id", "clean_text", budget = 512)
         .orderBy(col("doc_id"))
     },
-    Some("""WITH b AS MATERIALIZED (
-        SELECT doc_id, text AS s, length(text) AS len,
-          CASE WHEN length(text) >= 8 THEN
-            list_filter(range(8, length(text)+1), i ->
-              (CAST(list_sum(list_transform(range(0, 8), j ->
-                ascii(substr(s, CAST(i-7+j AS INT), 1))
-                  * ([27512614111,887503681,28629151,923521,
-                      29791,961,31,1][j+1])))
-               AS BIGINT) % 16) = 0)
-          ELSE [] END AS anchors
-        FROM documents WHERE length(text) > 0),
-      w AS MATERIALIZED (
-        SELECT doc_id, s,
-          unnest(list_filter(anchors, a -> a + 40 <= len)) AS pos
-        FROM b),
-      e AS MATERIALIZED (
-        SELECT doc_id, pos,
-          substring(s, CAST(pos + 1 AS INT), 40) AS seg
-        FROM w),
-      r AS (
-        SELECT doc_id, pos,
-          row_number() OVER (PARTITION BY seg ORDER BY doc_id, pos) AS rn
-        FROM e),
-      d AS (SELECT doc_id, pos FROM r WHERE rn > 1),
-      g AS (
-        SELECT doc_id, pos,
-          CASE WHEN pos - coalesce(lag(pos) OVER
-              (PARTITION BY doc_id ORDER BY pos), -100) > 40
-            THEN 1 ELSE 0 END AS brk
-        FROM d),
-      isl AS (
-        SELECT doc_id, pos,
-          sum(brk) OVER (PARTITION BY doc_id ORDER BY pos
-            ROWS UNBOUNDED PRECEDING) AS island
-        FROM g),
-      iv AS (
-        SELECT doc_id, min(pos) AS st, max(pos) + 40 AS en
-        FROM isl GROUP BY doc_id, island),
+    Some(s"""WITH ${anchorWindowsSql("b AS MATERIALIZED", "CAST(i-7+j AS INT)")},
+      $anchorSpansSql,
       v AS (
         SELECT doc_id,
           list_sort(list(struct_pack(st := st, en := en))) AS ivs
         FROM iv GROUP BY doc_id),
       cln AS MATERIALIZED (
         SELECT b.doc_id,
-          CASE WHEN v.doc_id IS NULL THEN b.s
-          ELSE array_to_string(
-              list_transform(v.ivs, (x, i) -> substring(b.s,
-                CAST((CASE WHEN i = 1 THEN 0
-                      ELSE struct_extract(v.ivs[i-1], 'en') END) + 1 AS INT),
-                CAST(struct_extract(x, 'st') -
-                     (CASE WHEN i = 1 THEN 0
-                      ELSE struct_extract(v.ivs[i-1], 'en') END) AS INT))), '')
-            || substring(b.s,
-                 CAST(struct_extract(v.ivs[len(v.ivs)], 'en') + 1 AS INT))
-          END AS clean_text
+          ${cleanTextSql(2)}
         FROM b LEFT JOIN v USING (doc_id)),
       toks AS MATERIALIZED (
         SELECT doc_id,
-          list_filter(string_split_regex(lower(clean_text), '\s+'),
+          list_filter(string_split_regex(lower(clean_text), '\\s+'),
             x -> len(x) > 0) AS t
         FROM cln),
-      uni AS (
-        SELECT doc_id, tok, count(*) AS c
-        FROM (SELECT doc_id, unnest(t) AS tok FROM toks) GROUP BY doc_id, tok),
-      uagg AS (
-        SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tok, max(c) AS top_c
-        FROM uni GROUP BY doc_id),
-      big AS (
-        SELECT doc_id, CASE WHEN len(t) < 2 THEN [array_to_string(t, ' ')]
-          ELSE list_transform(range(1, len(t)),
-            i -> array_to_string(t[i:i+1], ' ')) END AS grams
-        FROM toks),
-      bi AS (
-        SELECT doc_id, gr, count(*) AS c
-        FROM (SELECT doc_id, unnest(grams) AS gr FROM big) GROUP BY doc_id, gr),
-      bagg AS (
-        SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_big,
-               count(*) AS n_distinct_big
-        FROM bi GROUP BY doc_id),
+      ${repetitionGateSql("gr")},
       kept AS (
         SELECT c.doc_id, c.clean_text
         FROM cln c
@@ -7173,19 +6909,10 @@ object Extensions extends QueryModule {
             <= 0.06),
       t2 AS (
         SELECT doc_id,
-          CAST(len(string_split_regex(clean_text, '\s+')) AS BIGINT)
+          CAST(len(string_split_regex(clean_text, '\\s+')) AS BIGINT)
             AS n_tokens
         FROM kept),
-      o AS (
-        SELECT doc_id, n_tokens,
-          COALESCE(CAST(sum(n_tokens) OVER (ORDER BY doc_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS BIGINT), 0)
-            AS start_offset
-        FROM t2)
-      SELECT doc_id, n_tokens, start_offset,
-        start_offset // 512 AS start_chunk,
-        (start_offset + greatest(n_tokens, 1) - 1) // 512 AS end_chunk
-      FROM o ORDER BY doc_id"""))
+      ${packingSql("t2")}"""))
   // ^ t2 MUST be the regex split, not x40's literal string_split(' '):
   // TextAnalysis.tokenCount splits on the whitespace CLASS, and span
   // removal can leave adjacent/leading/trailing spaces in clean_text
@@ -7309,33 +7036,12 @@ object Extensions extends QueryModule {
       FROM embeddings WHERE vec_id < 100
       ORDER BY batch_id, dup_id, dup_in"""))
 
-  /** Train-once / score-the-intake classifier split
-    * ([[graft.ops.Classifier.logRegTrain]] on the labeled doc_id<250
-    * slice, [[graft.ops.Classifier.logRegApply]] on everything else —
-    * the production half of x97's fused train-and-score: at 100 TB
-    * the reference-vs-crawl model trains once on the curated set and
-    * each day's intake pays ONE broadcast join of the ≤64-row weight
-    * vector plus a per-doc fold, no retraining; the model persists
-    * via saveLogRegModel/loadLogRegModel, spec'd like the signature
-    * stores). HASH-GREEN: the oracle replays the ENTIRE 2-round
-    * training loop over the train slice (x97's unrolled CTE chain,
-    * same sorted folds and round-9 pins) and then scores the apply
-    * slice through the same inner weight join — a drifted feature
-    * hash, a label leak across the split, or a broken apply fold
-    * breaks the hash. */
-  private val x207ClassifierApplySplit = GraftQuery(
-    "x207_classifier_apply_split",
-    (s, dir) => {
-      val docs = Tables.documents(s, dir)
-        .withColumn("is_target", col("source") === "src0")
-      val model = graft.ops.Classifier.logRegTrain(
-        docs.filter(col("doc_id") < 250), "doc_id", "text", "is_target",
-        numBuckets = 64, eta = 0.5, iters = 2)
-      graft.ops.Classifier.logRegApply(model,
-        docs.filter(col("doc_id") >= 250), "doc_id", "text")
-        .orderBy(col("doc_id"))
-    },
-    Some("""WITH norm AS MATERIALIZED (
+  /** DuckDB replay of the 2-round order-pinned logreg training on
+    * docs < 250 (labels `source = 'src0'`, 64 bigram buckets): the
+    * `norm` texts, training features `ftrain` and round weights `w1`,
+    * `p1`, `w2` that x207 and x209 score with. */
+  private val logRegTrainSql =
+    """norm AS MATERIALIZED (
         SELECT doc_id,
           CASE WHEN source = 'src0' THEN 1.0 ELSE 0.0 END AS y,
           regexp_replace(lower(text), '\s+', ' ', 'g') AS s
@@ -7369,7 +7075,35 @@ object Extensions extends QueryModule {
             s -> struct_extract(s, 'v'))), 9) AS w
         FROM ftrain f JOIN p1 ON f.doc_id = p1.doc_id
                      JOIN w1 ON f.b = w1.b
-        GROUP BY f.b),
+        GROUP BY f.b)"""
+
+  /** Train-once / score-the-intake classifier split
+    * ([[graft.ops.Classifier.logRegTrain]] on the labeled doc_id<250
+    * slice, [[graft.ops.Classifier.logRegApply]] on everything else —
+    * the production half of x97's fused train-and-score: at 100 TB
+    * the reference-vs-crawl model trains once on the curated set and
+    * each day's intake pays ONE broadcast join of the ≤64-row weight
+    * vector plus a per-doc fold, no retraining; the model persists
+    * via saveLogRegModel/loadLogRegModel, spec'd like the signature
+    * stores). HASH-GREEN: the oracle replays the ENTIRE 2-round
+    * training loop over the train slice (x97's unrolled CTE chain,
+    * same sorted folds and round-9 pins) and then scores the apply
+    * slice through the same inner weight join — a drifted feature
+    * hash, a label leak across the split, or a broken apply fold
+    * breaks the hash. */
+  private val x207ClassifierApplySplit = GraftQuery(
+    "x207_classifier_apply_split",
+    (s, dir) => {
+      val docs = Tables.documents(s, dir)
+        .withColumn("is_target", col("source") === "src0")
+      val model = graft.ops.Classifier.logRegTrain(
+        docs.filter(col("doc_id") < 250), "doc_id", "text", "is_target",
+        numBuckets = 64, eta = 0.5, iters = 2)
+      graft.ops.Classifier.logRegApply(model,
+        docs.filter(col("doc_id") >= 250), "doc_id", "text")
+        .orderBy(col("doc_id"))
+    },
+    Some(s"""WITH $logRegTrainSql,
       gapply AS MATERIALIZED (
         SELECT doc_id,
           unnest(list_transform(range(1, length(s)),
@@ -7817,6 +7551,76 @@ object Extensions extends QueryModule {
       SELECT 'pq_model', r, true FROM range(0, 32) t(r)
       ORDER BY store, id"""))
 
+  /** Token reversal — the x209 family's replayable "novel content"
+    * generator; [[revTextSql]] is its DuckDB replay (the equality
+    * argument is in x209's scaladoc). */
+  private def rev(c: org.apache.spark.sql.Column) = concat_ws(" ",
+    reverse(split(c, graft.ops.TextAnalysis.WhitespaceClass)))
+
+  private val revTextSql =
+    """array_to_string(list_reverse(string_split_regex(text, '\s+')), ' ')"""
+
+  /** One x209-family intake slice: the `keep` docs with non-NULL text
+    * (the reversed form diverges on NULLs, r17 rule — gated on both
+    * sides), ids shifted by `shift`, `text` as the text column. */
+  private def intakeSlice(docs: org.apache.spark.sql.DataFrame,
+      keep: org.apache.spark.sql.Column, shift: Long,
+      text: org.apache.spark.sql.Column = col("text")) =
+    docs.filter(keep && col("text").isNotNull)
+      .select((col("doc_id") + lit(shift)).as("doc_id"), text)
+
+  /** Token-reversed docs `lo <= doc_id < hi` as an [[intakeSlice]];
+    * [[reversedSliceSql]] is its DuckDB replay. */
+  private def reversedSlice(docs: org.apache.spark.sql.DataFrame,
+      lo: Int, hi: Int, shift: Long) =
+    intakeSlice(docs, col("doc_id") >= lo && col("doc_id") < hi, shift,
+      rev(col("text")).as("text"))
+
+  private def reversedSliceSql(shift: Int, lo: Int, hi: Int): String =
+    s"""SELECT doc_id + $shift,
+          $revTextSql
+        FROM documents
+        WHERE doc_id >= $lo AND doc_id < $hi AND text IS NOT NULL"""
+
+  /** The x209 intake: exact replicas of docs 0..100 (+10⁶ ids) and
+    * token-reversed docs 300..400 (+2·10⁶); [[x209IntakeSql]] is the
+    * DuckDB replay (the body of an `intake` CTE). */
+  private def x209Intake(docs: org.apache.spark.sql.DataFrame) =
+    intakeSlice(docs, col("doc_id") < 100, 1000000L)
+      .unionByName(reversedSlice(docs, 300, 400, 2000000L))
+
+  private val x209IntakeSql =
+    s"""SELECT doc_id + 1000000 AS id, text FROM documents
+        WHERE doc_id < 100 AND text IS NOT NULL
+        UNION ALL
+        ${reversedSliceSql(2000000, 300, 400)}"""
+
+  /** The x209-family flag prefix: corpus digest keepers `cd`, the x209
+    * intake, and the intake digests `ib`. */
+  private def x209IntakeCtesSql(cd: String, intake: String,
+      ib: String): String =
+    s"""$cd AS MATERIALIZED (
+        SELECT md5(text) AS digest, min(doc_id) AS keeper
+        FROM documents GROUP BY md5(text)),
+      $intake AS MATERIALIZED (
+        $x209IntakeSql),
+      $ib AS MATERIALIZED (SELECT id, md5(text) AS digest FROM $intake)"""
+
+  /** Flag `intake` against the digest `store` and anti-join the flagged
+    * ids out: (flagged, admitted). flagged feeds TWO subplans (the
+    * output union AND the admission anti-join, with divergent pruning
+    * — no exchange reuse): checkpoint it or the ledger join + keeper
+    * aggregate execute twice (the CLAUDE.md N-subplans rule; flagged
+    * is batch-bounded, so the checkpoint is tiny). */
+  private def flagAndAdmit(store: Dedup.DigestStore,
+      intake: org.apache.spark.sql.DataFrame) = {
+    val flagged = Dedup.incrementalExactDuplicates(
+      store, intake, "doc_id", "text").localCheckpoint(true)
+    (flagged, intake.join(
+      flagged.select(col("batch_id").as("doc_id")).distinct(),
+      Seq("doc_id"), "left_anti"))
+  }
+
   /** Day-2 intake admission pipeline, end-to-end through PERSISTED
     * day-0 artifacts — the production composition the incremental
     * stores exist for (the reference's whole incrementality story is
@@ -7874,25 +7678,7 @@ object Extensions extends QueryModule {
       // keeps NULL — so regenerated testdata with null texts would
       // hash-red with no named cause; gate them out of the intake on
       // both sides instead (today's corpora have none)
-      val dup = docs.filter(col("doc_id") < 100 && col("text").isNotNull)
-        .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
-      val novel = docs
-        .filter(col("doc_id") >= 300 && col("doc_id") < 400 &&
-          col("text").isNotNull)
-        .select((col("doc_id") + lit(2000000L)).as("doc_id"),
-          concat_ws(" ", reverse(split(col("text"),
-            graft.ops.TextAnalysis.WhitespaceClass))).as("text"))
-      val intake = dup.unionByName(novel)
-      // flagged feeds TWO subplans (the output union AND the
-      // admission anti-join, with divergent pruning — no exchange
-      // reuse): checkpoint it or the ledger join + keeper aggregate
-      // execute twice (the CLAUDE.md N-subplans rule; flagged is
-      // batch-bounded, so the checkpoint is tiny)
-      val flagged = Dedup.incrementalExactDuplicates(
-        ledger, intake, "doc_id", "text").localCheckpoint(true)
-      val admitted = intake.join(
-        flagged.select(col("batch_id").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
+      val (flagged, admitted) = flagAndAdmit(ledger, x209Intake(docs))
       val scored = graft.ops.Classifier.logRegApply(
         lrStore, admitted, "doc_id", "text")
       flagged
@@ -7904,18 +7690,7 @@ object Extensions extends QueryModule {
           lit(null).cast("bigint").as("dup_id"), col("score")))
         .orderBy(col("doc_id"), col("dup_id"))
     },
-    Some("""WITH cd AS MATERIALIZED (
-        SELECT md5(text) AS digest, min(doc_id) AS keeper
-        FROM documents GROUP BY md5(text)),
-      intake AS MATERIALIZED (
-        SELECT doc_id + 1000000 AS id, text FROM documents
-        WHERE doc_id < 100 AND text IS NOT NULL
-        UNION ALL
-        SELECT doc_id + 2000000,
-          array_to_string(list_reverse(string_split_regex(text, '\s+')), ' ')
-        FROM documents
-        WHERE doc_id >= 300 AND doc_id < 400 AND text IS NOT NULL),
-      ib AS MATERIALIZED (SELECT id, md5(text) AS digest FROM intake),
+    Some(s"""WITH ${x209IntakeCtesSql("cd", "intake", "ib")},
       corpus_hits AS (
         SELECT ib.id, cd.keeper AS dup_id, 'corpus' AS dup_in
         FROM ib JOIN cd ON ib.digest = cd.digest),
@@ -7928,43 +7703,9 @@ object Extensions extends QueryModule {
       admitted AS MATERIALIZED (
         SELECT id, text FROM intake
         WHERE id NOT IN (SELECT id FROM flagged)),
-      norm AS MATERIALIZED (
-        SELECT doc_id,
-          CASE WHEN source = 'src0' THEN 1.0 ELSE 0.0 END AS y,
-          regexp_replace(lower(text), '\s+', ' ', 'g') AS s
-        FROM documents WHERE text IS NOT NULL),
-      gtrain AS MATERIALIZED (
-        SELECT doc_id, y,
-          unnest(list_transform(range(1, length(s)),
-            i -> (ascii(substr(s, CAST(i AS INT), 1)) * 31
-                  + ascii(substr(s, CAST(i AS INT) + 1, 1))) % 64)) AS b
-        FROM norm WHERE length(s) >= 2 AND doc_id < 250),
-      ftrain AS MATERIALIZED (
-        SELECT doc_id, y, b,
-          CAST(count(*) AS DOUBLE)
-            / CAST(sum(count(*)) OVER (PARTITION BY doc_id) AS DOUBLE) AS x
-        FROM gtrain GROUP BY doc_id, y, b),
-      w1 AS MATERIALIZED (
-        SELECT b, round(0.5 * list_sum(list_transform(
-            list_sort(list(struct_pack(k := doc_id, v := x * (y - 0.5)))),
-            s -> struct_extract(s, 'v'))), 9) AS w
-        FROM ftrain GROUP BY b),
-      p1 AS MATERIALIZED (
-        SELECT f.doc_id,
-          round(1.0 / (1.0 + exp(-(round(list_sum(list_transform(
-            list_sort(list(struct_pack(k := f.b, v := w1.w * f.x))),
-            s -> struct_extract(s, 'v'))), 9)))), 9) AS p
-        FROM ftrain f JOIN w1 ON f.b = w1.b GROUP BY f.doc_id),
-      w2 AS MATERIALIZED (
-        SELECT f.b, round(min(w1.w) + 0.5 * list_sum(list_transform(
-            list_sort(list(struct_pack(k := f.doc_id,
-                                       v := f.x * (f.y - p1.p)))),
-            s -> struct_extract(s, 'v'))), 9) AS w
-        FROM ftrain f JOIN p1 ON f.doc_id = p1.doc_id
-                     JOIN w1 ON f.b = w1.b
-        GROUP BY f.b),
+      $logRegTrainSql,
       anorm AS MATERIALIZED (
-        SELECT id, regexp_replace(lower(text), '\s+', ' ', 'g') AS s
+        SELECT id, regexp_replace(lower(text), '\\s+', ' ', 'g') AS s
         FROM admitted WHERE text IS NOT NULL),
       gapply AS MATERIALIZED (
         SELECT id,
@@ -7990,6 +7731,79 @@ object Extensions extends QueryModule {
       UNION ALL
       SELECT id, 'admitted', CAST(NULL AS BIGINT), score FROM scored
       ORDER BY doc_id, dup_id"""))
+
+  private val intakeDay3Sql =
+    s"""WITH ${x209IntakeCtesSql("cd0", "i2", "ib2")},
+      ch2 AS (SELECT ib2.id FROM ib2 JOIN cd0 USING (digest)),
+      kb2 AS (SELECT digest, min(id) AS k FROM ib2 GROUP BY digest),
+      bh2 AS (SELECT ib2.id FROM ib2 JOIN kb2 USING (digest)
+        WHERE ib2.id > kb2.k),
+      fl2 AS MATERIALIZED (SELECT id FROM ch2 UNION SELECT id FROM bh2),
+      app2 AS MATERIALIZED (
+        SELECT digest, min(id) AS keeper FROM ib2
+        WHERE id NOT IN (SELECT id FROM fl2)
+          AND digest NOT IN (SELECT digest FROM cd0 WHERE digest IS NOT NULL)
+        GROUP BY digest),
+      led2 AS MATERIALIZED (
+        SELECT digest, keeper FROM cd0
+        UNION ALL SELECT digest, keeper FROM app2),
+      i3 AS MATERIALIZED (
+        SELECT doc_id + 3000000 AS id,
+          $revTextSql
+          AS text
+        FROM documents
+        WHERE doc_id >= 300 AND doc_id < 400 AND text IS NOT NULL
+        UNION ALL
+        SELECT doc_id + 4000000, text FROM documents
+        WHERE doc_id >= 100 AND doc_id < 150 AND text IS NOT NULL
+        UNION ALL
+        ${reversedSliceSql(5000000, 400, 500)}),
+      ib3 AS MATERIALIZED (SELECT id, md5(text) AS digest FROM i3),
+      ch3 AS (SELECT ib3.id, led2.keeper AS dup_id
+        FROM ib3 JOIN led2 USING (digest)),
+      kb3 AS (SELECT digest, min(id) AS k FROM ib3 GROUP BY digest),
+      bh3 AS (SELECT ib3.id, kb3.k AS dup_id
+        FROM ib3 JOIN kb3 USING (digest) WHERE ib3.id > kb3.k),
+      fl3 AS MATERIALIZED (
+        SELECT * FROM ch3 UNION ALL SELECT * FROM bh3)
+      SELECT id AS doc_id, 'duplicate' AS status, dup_id FROM fl3
+      UNION ALL
+      SELECT id, 'admitted', CAST(NULL AS BIGINT) FROM i3
+      WHERE id NOT IN (SELECT id FROM fl3)
+      ORDER BY doc_id, dup_id"""
+
+  /** The x210/x214 three-day history over the digest ledger `store`
+    * under the store root: day-0 save, the x209 intake flagged,
+    * admitted and APPENDED on day 2, then the day-3 intake (x210's
+    * scaladoc names its three slices) flagged through
+    * `day3(path, ledger2)` — x210 probes the appended ledger, x214 its
+    * compaction. [[intakeDay3Sql]] is the one oracle of both. */
+  private def intakeDay3(s: org.apache.spark.sql.SparkSession, dir: String,
+      store: String)(
+      day3: (String, Dedup.DigestStore) => Dedup.DigestStore) = {
+    val path = s"${storeRootFor(dir)}/$store"
+    val docs = Tables.documents(s, dir)
+    // day-0 save is mode("overwrite"), the appends below re-apply on
+    // top — a re-invocation replays the identical 3-day history
+    val ledger0 = Dedup.saveDigestStore(docs, "doc_id", "text", path)
+    // day-2: the x209 intake construction (NULL-text gating on both
+    // sides — the reversed form diverges on NULLs, r17 rule)
+    val (_, admitted2) = flagAndAdmit(ledger0, x209Intake(docs))
+    val ledger3 = day3(path, Dedup.appendToDigestStore(ledger0, path,
+      admitted2, "doc_id", "text"))
+    val intake3 = reversedSlice(docs, 300, 400, 3000000L)
+      .unionByName(intakeSlice(docs,
+        col("doc_id") >= 100 && col("doc_id") < 150, 4000000L))
+      .unionByName(reversedSlice(docs, 400, 500, 5000000L))
+    val (flagged3, admitted3) = flagAndAdmit(ledger3, intake3)
+    flagged3
+      .select(col("batch_id").as("doc_id"),
+        lit("duplicate").as("status"), col("dup_id"))
+      .unionByName(admitted3.select(col("doc_id"),
+        lit("admitted").as("status"),
+        lit(null).cast("bigint").as("dup_id")))
+      .orderBy(col("doc_id"), col("dup_id"))
+  }
 
   /** Day-3 intake through an APPENDED digest ledger — the maintenance
     * composition the r17 verdict named as the one functional gap:
@@ -8022,115 +7836,8 @@ object Extensions extends QueryModule {
     * sides. */
   private val x210IncrementalIntakeDay3 = GraftQuery(
     "x210_incremental_intake_day3",
-    (s, dir) => {
-      val root = storeRootFor(dir)
-      val docs = Tables.documents(s, dir)
-      def rev(c: org.apache.spark.sql.Column) = concat_ws(" ",
-        reverse(split(c, graft.ops.TextAnalysis.WhitespaceClass)))
-      // day-0 save is mode("overwrite"), the appends below re-apply on
-      // top — a re-invocation replays the identical 3-day history
-      val ledger0 = Dedup.saveDigestStore(docs, "doc_id", "text",
-        s"$root/x210_digests")
-      // day-2: the x209 intake construction (NULL-text gating on both
-      // sides — the reversed form diverges on NULLs, r17 rule)
-      val dup2 = docs.filter(col("doc_id") < 100 && col("text").isNotNull)
-        .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
-      val novel2 = docs
-        .filter(col("doc_id") >= 300 && col("doc_id") < 400 &&
-          col("text").isNotNull)
-        .select((col("doc_id") + lit(2000000L)).as("doc_id"),
-          rev(col("text")).as("text"))
-      val intake2 = dup2.unionByName(novel2)
-      val flagged2 = Dedup.incrementalExactDuplicates(
-        ledger0, intake2, "doc_id", "text").localCheckpoint(true)
-      val admitted2 = intake2.join(
-        flagged2.select(col("batch_id").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      val ledger2 = Dedup.appendToDigestStore(ledger0,
-        s"$root/x210_digests", admitted2, "doc_id", "text")
-      // day-3 intake (see scaladoc for the three slices)
-      val rep3 = docs
-        .filter(col("doc_id") >= 300 && col("doc_id") < 400 &&
-          col("text").isNotNull)
-        .select((col("doc_id") + lit(3000000L)).as("doc_id"),
-          rev(col("text")).as("text"))
-      val dup3 = docs
-        .filter(col("doc_id") >= 100 && col("doc_id") < 150 &&
-          col("text").isNotNull)
-        .select((col("doc_id") + lit(4000000L)).as("doc_id"), col("text"))
-      val new3 = docs
-        .filter(col("doc_id") >= 400 && col("doc_id") < 500 &&
-          col("text").isNotNull)
-        .select((col("doc_id") + lit(5000000L)).as("doc_id"),
-          rev(col("text")).as("text"))
-      val intake3 = rep3.unionByName(dup3).unionByName(new3)
-      // the N-subplans rule: flagged3 feeds the output union AND the
-      // admission anti-join
-      val flagged3 = Dedup.incrementalExactDuplicates(
-        ledger2, intake3, "doc_id", "text").localCheckpoint(true)
-      val admitted3 = intake3.join(
-        flagged3.select(col("batch_id").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      flagged3
-        .select(col("batch_id").as("doc_id"),
-          lit("duplicate").as("status"), col("dup_id"))
-        .unionByName(admitted3.select(col("doc_id"),
-          lit("admitted").as("status"),
-          lit(null).cast("bigint").as("dup_id")))
-        .orderBy(col("doc_id"), col("dup_id"))
-    },
-    Some("""WITH cd0 AS MATERIALIZED (
-        SELECT md5(text) AS digest, min(doc_id) AS keeper
-        FROM documents GROUP BY md5(text)),
-      i2 AS MATERIALIZED (
-        SELECT doc_id + 1000000 AS id, text FROM documents
-        WHERE doc_id < 100 AND text IS NOT NULL
-        UNION ALL
-        SELECT doc_id + 2000000,
-          array_to_string(list_reverse(string_split_regex(text, '\s+')), ' ')
-        FROM documents
-        WHERE doc_id >= 300 AND doc_id < 400 AND text IS NOT NULL),
-      ib2 AS MATERIALIZED (SELECT id, md5(text) AS digest FROM i2),
-      ch2 AS (SELECT ib2.id FROM ib2 JOIN cd0 USING (digest)),
-      kb2 AS (SELECT digest, min(id) AS k FROM ib2 GROUP BY digest),
-      bh2 AS (SELECT ib2.id FROM ib2 JOIN kb2 USING (digest)
-        WHERE ib2.id > kb2.k),
-      fl2 AS MATERIALIZED (SELECT id FROM ch2 UNION SELECT id FROM bh2),
-      app2 AS MATERIALIZED (
-        SELECT digest, min(id) AS keeper FROM ib2
-        WHERE id NOT IN (SELECT id FROM fl2)
-          AND digest NOT IN (SELECT digest FROM cd0 WHERE digest IS NOT NULL)
-        GROUP BY digest),
-      led2 AS MATERIALIZED (
-        SELECT digest, keeper FROM cd0
-        UNION ALL SELECT digest, keeper FROM app2),
-      i3 AS MATERIALIZED (
-        SELECT doc_id + 3000000 AS id,
-          array_to_string(list_reverse(string_split_regex(text, '\s+')), ' ')
-          AS text
-        FROM documents
-        WHERE doc_id >= 300 AND doc_id < 400 AND text IS NOT NULL
-        UNION ALL
-        SELECT doc_id + 4000000, text FROM documents
-        WHERE doc_id >= 100 AND doc_id < 150 AND text IS NOT NULL
-        UNION ALL
-        SELECT doc_id + 5000000,
-          array_to_string(list_reverse(string_split_regex(text, '\s+')), ' ')
-        FROM documents
-        WHERE doc_id >= 400 AND doc_id < 500 AND text IS NOT NULL),
-      ib3 AS MATERIALIZED (SELECT id, md5(text) AS digest FROM i3),
-      ch3 AS (SELECT ib3.id, led2.keeper AS dup_id
-        FROM ib3 JOIN led2 USING (digest)),
-      kb3 AS (SELECT digest, min(id) AS k FROM ib3 GROUP BY digest),
-      bh3 AS (SELECT ib3.id, kb3.k AS dup_id
-        FROM ib3 JOIN kb3 USING (digest) WHERE ib3.id > kb3.k),
-      fl3 AS MATERIALIZED (
-        SELECT * FROM ch3 UNION ALL SELECT * FROM bh3)
-      SELECT id AS doc_id, 'duplicate' AS status, dup_id FROM fl3
-      UNION ALL
-      SELECT id, 'admitted', CAST(NULL AS BIGINT) FROM i3
-      WHERE id NOT IN (SELECT id FROM fl3)
-      ORDER BY doc_id, dup_id"""))
+    (s, dir) => intakeDay3(s, dir, "x210_digests")((_, ledger2) => ledger2),
+    Some(intakeDay3Sql))
 
   /** One admission-stream run per (tag, session, sfDir) — the
     * settledStream memo discipline for the foreachBatch carriers
@@ -8162,23 +7869,11 @@ object Extensions extends QueryModule {
     admissionRun("x211", s, dir) { (root, out, ck) =>
       val docs = Tables.documents(s, dir)
       Dedup.saveDigestStore(docs, "doc_id", "text", s"$root/x211_digests")
-      def rev(c: org.apache.spark.sql.Column) = concat_ws(" ",
-        reverse(split(c, graft.ops.TextAnalysis.WhitespaceClass)))
-      val dup = docs.filter(col("doc_id") < 100 && col("text").isNotNull)
-        .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
-      val novelA = docs
-        .filter(col("doc_id") >= 300 && col("doc_id") < 350 &&
-          col("text").isNotNull)
-        .select((col("doc_id") + lit(2000000L)).as("doc_id"),
-          rev(col("text")).as("text"))
-      val novelB = docs
-        .filter(col("doc_id") >= 350 && col("doc_id") < 400 &&
-          col("text").isNotNull)
-        .select((col("doc_id") + lit(2000000L)).as("doc_id"),
-          rev(col("text")).as("text"))
       graft.streaming.EventStreams.runIncrementalAdmission(
         graft.streaming.EventStreams.orderedIntake(s, "graft_x211",
-          Seq(dup, novelA, novelB)),
+          Seq(intakeSlice(docs, col("doc_id") < 100, 1000000L),
+            reversedSlice(docs, 300, 350, 2000000L),
+            reversedSlice(docs, 350, 400, 2000000L))),
         s"$root/x211_digests", out, ck, "doc_id", "text")
     }
 
@@ -8198,18 +7893,7 @@ object Extensions extends QueryModule {
     "x211_streaming_admission",
     (s, dir) => s.read.parquet(x211OutDir(s, dir))
       .orderBy(col("doc_id")),
-    Some("""WITH cd AS MATERIALIZED (
-        SELECT md5(text) AS digest, min(doc_id) AS keeper
-        FROM documents GROUP BY md5(text)),
-      intake AS MATERIALIZED (
-        SELECT doc_id + 1000000 AS id, text FROM documents
-        WHERE doc_id < 100 AND text IS NOT NULL
-        UNION ALL
-        SELECT doc_id + 2000000,
-          array_to_string(list_reverse(string_split_regex(text, '\s+')), ' ')
-        FROM documents
-        WHERE doc_id >= 300 AND doc_id < 400 AND text IS NOT NULL),
-      ib AS MATERIALIZED (SELECT id, md5(text) AS digest FROM intake),
+    Some(s"""WITH ${x209IntakeCtesSql("cd", "intake", "ib")},
       ch AS (SELECT ib.id, cd.keeper AS dup_id FROM ib JOIN cd USING (digest)),
       kb AS (SELECT digest, min(id) AS k FROM ib GROUP BY digest),
       bh AS (SELECT ib.id, kb.k AS dup_id
@@ -8274,6 +7958,24 @@ object Extensions extends QueryModule {
       FROM embeddings WHERE vec_id < 100
       ORDER BY vec_id, dup_id"""))
 
+  /** DuckDB sorted-trigram-set key `gk` (the x42 gram-key form) per
+    * `id` over the token lists `t` of `from` — a CTE body. */
+  private def gramKeySql(id: String, from: String): String =
+    s"""SELECT $id, list_sort(list_distinct(CASE WHEN len(t) < 3
+          THEN [array_to_string(t, ' ')]
+          ELSE list_transform(range(1, len(t) - 1),
+            i -> array_to_string(t[i:i+2], ' ')) END)) AS gk
+        FROM $from"""
+
+  /** The corpus gram keys `g` (over tokens `tok`, NULL texts dropped)
+    * that the x213/x215 oracles match intake keys against. */
+  private val corpusGramKeysSql =
+    s"""tok AS MATERIALIZED (
+        SELECT doc_id, string_split_regex(lower(text), '\\s+') AS t
+        FROM documents WHERE text IS NOT NULL),
+      g AS MATERIALIZED (
+        ${gramKeySql("doc_id", "tok")})"""
+
   /** Probe THROUGH an appended MINHASH signature store — x212's
     * symmetry for the TEXT sketch member (r18 verdict #2), closing
     * the store-trio probe matrix (digest x210, embedding x212,
@@ -8300,31 +8002,21 @@ object Extensions extends QueryModule {
       val docs = Tables.documents(s, dir)
       val store0 = Dedup.saveMinhashSignatures(docs, "doc_id", "text",
         s"$root/x213_minhash")
-      val day2 = docs.filter(col("doc_id") < 100 && col("text").isNotNull)
-        .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
+      val day2 = intakeSlice(docs, col("doc_id") < 100, 1000000L)
       val store1 = Dedup.appendToMinhashSignatures(store0,
         s"$root/x213_minhash", day2, "doc_id", "text")
       // verification texts must cover every store id (originals + the
       // appended copies) — the x212 corpusVecs rule
       val corpusTexts = docs.select(col("doc_id"), col("text"))
         .unionByName(day2)
-      val probe = docs.filter(col("doc_id") < 100 && col("text").isNotNull)
-        .select((col("doc_id") + lit(2000000L)).as("doc_id"), col("text"))
+      val probe = intakeSlice(docs, col("doc_id") < 100, 2000000L)
       Dedup.incrementalVerifiedTextDuplicates(store1, corpusTexts, probe,
           "doc_id", "text", threshold = 1.0)
         .select(col("batch_id").as("doc_id"), col("dup_id"),
           col("jaccard"), col("dup_in"))
         .orderBy(col("doc_id"), col("dup_id"))
     },
-    Some("""WITH tok AS MATERIALIZED (
-        SELECT doc_id, string_split_regex(lower(text), '\s+') AS t
-        FROM documents WHERE text IS NOT NULL),
-      g AS MATERIALIZED (
-        SELECT doc_id, list_sort(list_distinct(CASE WHEN len(t) < 3
-          THEN [array_to_string(t, ' ')]
-          ELSE list_transform(range(1, len(t) - 1),
-            i -> array_to_string(t[i:i+2], ' ')) END)) AS gk
-        FROM tok),
+    Some(s"""WITH $corpusGramKeysSql,
       store AS MATERIALIZED (
         SELECT doc_id AS id, gk FROM g
         UNION ALL
@@ -8355,25 +8047,10 @@ object Extensions extends QueryModule {
       // itself grows); overwrite = a re-invocation replays day-0
       docs.select(col("doc_id"), col("text"))
         .write.mode("overwrite").parquet(s"$root/x215_corpus")
-      def rev(c: org.apache.spark.sql.Column) = concat_ws(" ",
-        reverse(split(c, graft.ops.TextAnalysis.WhitespaceClass)))
-      val b0 = docs.filter(col("doc_id") < 100 && col("text").isNotNull)
-        .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
-      val b1 = docs
-        .filter(col("doc_id") >= 300 && col("doc_id") < 400 &&
-          col("text").isNotNull)
-        .select((col("doc_id") + lit(2000000L)).as("doc_id"),
-          rev(col("text")).as("text"))
-      val b2 = docs
-        .filter(col("doc_id") >= 300 && col("doc_id") < 400 &&
-          col("text").isNotNull)
-        .select((col("doc_id") + lit(3000000L)).as("doc_id"),
-          rev(col("text")).as("text"))
-        .unionByName(docs
-          .filter(col("doc_id") >= 400 && col("doc_id") < 500 &&
-            col("text").isNotNull)
-          .select((col("doc_id") + lit(4000000L)).as("doc_id"),
-            rev(col("text")).as("text")))
+      val b0 = intakeSlice(docs, col("doc_id") < 100, 1000000L)
+      val b1 = reversedSlice(docs, 300, 400, 2000000L)
+      val b2 = reversedSlice(docs, 300, 400, 3000000L)
+        .unionByName(reversedSlice(docs, 400, 500, 4000000L))
       graft.streaming.EventStreams.runIncrementalNearDupAdmission(
         graft.streaming.EventStreams.orderedIntake(s, "graft_x215",
           Seq(b0, b1, b2)),
@@ -8409,41 +8086,17 @@ object Extensions extends QueryModule {
     "x215_streaming_neardup_admission",
     (s, dir) => s.read.parquet(x215OutDir(s, dir))
       .orderBy(col("doc_id")),
-    Some("""WITH tok AS MATERIALIZED (
-        SELECT doc_id, string_split_regex(lower(text), '\s+') AS t
-        FROM documents WHERE text IS NOT NULL),
-      g AS MATERIALIZED (
-        SELECT doc_id, list_sort(list_distinct(CASE WHEN len(t) < 3
-          THEN [array_to_string(t, ' ')]
-          ELSE list_transform(range(1, len(t) - 1),
-            i -> array_to_string(t[i:i+2], ' ')) END)) AS gk
-        FROM tok),
+    Some(s"""WITH $corpusGramKeysSql,
       intake AS MATERIALIZED (
-        SELECT doc_id + 1000000 AS id, text FROM documents
-        WHERE doc_id < 100 AND text IS NOT NULL
+        $x209IntakeSql
         UNION ALL
-        SELECT doc_id + 2000000,
-          array_to_string(list_reverse(string_split_regex(text, '\s+')), ' ')
-        FROM documents
-        WHERE doc_id >= 300 AND doc_id < 400 AND text IS NOT NULL
+        ${reversedSliceSql(3000000, 300, 400)}
         UNION ALL
-        SELECT doc_id + 3000000,
-          array_to_string(list_reverse(string_split_regex(text, '\s+')), ' ')
-        FROM documents
-        WHERE doc_id >= 300 AND doc_id < 400 AND text IS NOT NULL
-        UNION ALL
-        SELECT doc_id + 4000000,
-          array_to_string(list_reverse(string_split_regex(text, '\s+')), ' ')
-        FROM documents
-        WHERE doc_id >= 400 AND doc_id < 500 AND text IS NOT NULL),
+        ${reversedSliceSql(4000000, 400, 500)}),
       itok AS MATERIALIZED (
-        SELECT id, string_split_regex(lower(text), '\s+') AS t FROM intake),
+        SELECT id, string_split_regex(lower(text), '\\s+') AS t FROM intake),
       ig AS MATERIALIZED (
-        SELECT id, list_sort(list_distinct(CASE WHEN len(t) < 3
-          THEN [array_to_string(t, ' ')]
-          ELSE list_transform(range(1, len(t) - 1),
-            i -> array_to_string(t[i:i+2], ' ')) END)) AS gk
-        FROM itok),
+        ${gramKeySql("id", "itok")}),
       cmin AS MATERIALIZED (SELECT gk, min(doc_id) AS k FROM g GROUP BY gk),
       imin AS MATERIALIZED (SELECT gk, min(id) AS k FROM ig GROUP BY gk),
       lab AS MATERIALIZED (
@@ -8541,112 +8194,11 @@ object Extensions extends QueryModule {
     * plan scans the compacted root, not the fragmented one. */
   private val x214CompactedLedgerProbe = GraftQuery(
     "x214_compacted_ledger_probe",
-    (s, dir) => {
-      val root = storeRootFor(dir)
-      val docs = Tables.documents(s, dir)
-      def rev(c: org.apache.spark.sql.Column) = concat_ws(" ",
-        reverse(split(c, graft.ops.TextAnalysis.WhitespaceClass)))
-      val ledger0 = Dedup.saveDigestStore(docs, "doc_id", "text",
-        s"$root/x214_digests")
-      val dup2 = docs.filter(col("doc_id") < 100 && col("text").isNotNull)
-        .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
-      val novel2 = docs
-        .filter(col("doc_id") >= 300 && col("doc_id") < 400 &&
-          col("text").isNotNull)
-        .select((col("doc_id") + lit(2000000L)).as("doc_id"),
-          rev(col("text")).as("text"))
-      val intake2 = dup2.unionByName(novel2)
-      val flagged2 = Dedup.incrementalExactDuplicates(
-        ledger0, intake2, "doc_id", "text").localCheckpoint(true)
-      val admitted2 = intake2.join(
-        flagged2.select(col("batch_id").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      Dedup.appendToDigestStore(ledger0, s"$root/x214_digests",
-        admitted2, "doc_id", "text")
-      // monthly maintenance: rewrite the fragmented tree blue/green;
-      // day 3 reads ONLY the compacted root
-      val compacted = Dedup.compactDigestStore(s, s"$root/x214_digests",
-        s"$root/x214_digests_compact")
-      val rep3 = docs
-        .filter(col("doc_id") >= 300 && col("doc_id") < 400 &&
-          col("text").isNotNull)
-        .select((col("doc_id") + lit(3000000L)).as("doc_id"),
-          rev(col("text")).as("text"))
-      val dup3 = docs
-        .filter(col("doc_id") >= 100 && col("doc_id") < 150 &&
-          col("text").isNotNull)
-        .select((col("doc_id") + lit(4000000L)).as("doc_id"), col("text"))
-      val new3 = docs
-        .filter(col("doc_id") >= 400 && col("doc_id") < 500 &&
-          col("text").isNotNull)
-        .select((col("doc_id") + lit(5000000L)).as("doc_id"),
-          rev(col("text")).as("text"))
-      val intake3 = rep3.unionByName(dup3).unionByName(new3)
-      val flagged3 = Dedup.incrementalExactDuplicates(
-        compacted, intake3, "doc_id", "text").localCheckpoint(true)
-      val admitted3 = intake3.join(
-        flagged3.select(col("batch_id").as("doc_id")).distinct(),
-        Seq("doc_id"), "left_anti")
-      flagged3
-        .select(col("batch_id").as("doc_id"),
-          lit("duplicate").as("status"), col("dup_id"))
-        .unionByName(admitted3.select(col("doc_id"),
-          lit("admitted").as("status"),
-          lit(null).cast("bigint").as("dup_id")))
-        .orderBy(col("doc_id"), col("dup_id"))
-    },
-    Some("""WITH cd0 AS MATERIALIZED (
-        SELECT md5(text) AS digest, min(doc_id) AS keeper
-        FROM documents GROUP BY md5(text)),
-      i2 AS MATERIALIZED (
-        SELECT doc_id + 1000000 AS id, text FROM documents
-        WHERE doc_id < 100 AND text IS NOT NULL
-        UNION ALL
-        SELECT doc_id + 2000000,
-          array_to_string(list_reverse(string_split_regex(text, '\s+')), ' ')
-        FROM documents
-        WHERE doc_id >= 300 AND doc_id < 400 AND text IS NOT NULL),
-      ib2 AS MATERIALIZED (SELECT id, md5(text) AS digest FROM i2),
-      ch2 AS (SELECT ib2.id FROM ib2 JOIN cd0 USING (digest)),
-      kb2 AS (SELECT digest, min(id) AS k FROM ib2 GROUP BY digest),
-      bh2 AS (SELECT ib2.id FROM ib2 JOIN kb2 USING (digest)
-        WHERE ib2.id > kb2.k),
-      fl2 AS MATERIALIZED (SELECT id FROM ch2 UNION SELECT id FROM bh2),
-      app2 AS MATERIALIZED (
-        SELECT digest, min(id) AS keeper FROM ib2
-        WHERE id NOT IN (SELECT id FROM fl2)
-          AND digest NOT IN (SELECT digest FROM cd0 WHERE digest IS NOT NULL)
-        GROUP BY digest),
-      led2 AS MATERIALIZED (
-        SELECT digest, keeper FROM cd0
-        UNION ALL SELECT digest, keeper FROM app2),
-      i3 AS MATERIALIZED (
-        SELECT doc_id + 3000000 AS id,
-          array_to_string(list_reverse(string_split_regex(text, '\s+')), ' ')
-          AS text
-        FROM documents
-        WHERE doc_id >= 300 AND doc_id < 400 AND text IS NOT NULL
-        UNION ALL
-        SELECT doc_id + 4000000, text FROM documents
-        WHERE doc_id >= 100 AND doc_id < 150 AND text IS NOT NULL
-        UNION ALL
-        SELECT doc_id + 5000000,
-          array_to_string(list_reverse(string_split_regex(text, '\s+')), ' ')
-        FROM documents
-        WHERE doc_id >= 400 AND doc_id < 500 AND text IS NOT NULL),
-      ib3 AS MATERIALIZED (SELECT id, md5(text) AS digest FROM i3),
-      ch3 AS (SELECT ib3.id, led2.keeper AS dup_id
-        FROM ib3 JOIN led2 USING (digest)),
-      kb3 AS (SELECT digest, min(id) AS k FROM ib3 GROUP BY digest),
-      bh3 AS (SELECT ib3.id, kb3.k AS dup_id
-        FROM ib3 JOIN kb3 USING (digest) WHERE ib3.id > kb3.k),
-      fl3 AS MATERIALIZED (
-        SELECT * FROM ch3 UNION ALL SELECT * FROM bh3)
-      SELECT id AS doc_id, 'duplicate' AS status, dup_id FROM fl3
-      UNION ALL
-      SELECT id, 'admitted', CAST(NULL AS BIGINT) FROM i3
-      WHERE id NOT IN (SELECT id FROM fl3)
-      ORDER BY doc_id, dup_id"""))
+    // monthly maintenance: rewrite the fragmented tree blue/green;
+    // day 3 reads ONLY the compacted root
+    (s, dir) => intakeDay3(s, dir, "x214_digests")((path, _) =>
+      Dedup.compactDigestStore(s, path, s"${path}_compact")),
+    Some(intakeDay3Sql))
 
   /** One MID-THRESHOLD near-dup admission run per (session, sfDir) —
     * x215's harness at the production-realistic threshold 0.7 (r19
@@ -8672,29 +8224,15 @@ object Extensions extends QueryModule {
         s"$root/x218_minhash")
       docs.select(col("doc_id"), col("text"))
         .write.mode("overwrite").parquet(s"$root/x218_corpus")
-      def rev(c: org.apache.spark.sql.Column) = concat_ws(" ",
-        reverse(split(c, graft.ops.TextAnalysis.WhitespaceClass)))
       def truncRev(c: org.apache.spark.sql.Column) = {
         val toks = reverse(split(c, graft.ops.TextAnalysis.WhitespaceClass))
         concat_ws(" ", slice(toks, lit(1), greatest(size(toks) - 1, lit(1))))
       }
-      val b0 = docs.filter(col("doc_id") < 100 && col("text").isNotNull)
-        .select((col("doc_id") + lit(1000000L)).as("doc_id"), col("text"))
-      val b1 = docs
-        .filter(col("doc_id") >= 300 && col("doc_id") < 400 &&
-          col("text").isNotNull)
-        .select((col("doc_id") + lit(2000000L)).as("doc_id"),
-          rev(col("text")).as("text"))
-      val b2 = docs
-        .filter(col("doc_id") >= 300 && col("doc_id") < 400 &&
-          col("text").isNotNull)
-        .select((col("doc_id") + lit(3000000L)).as("doc_id"),
-          truncRev(col("text")).as("text"))
-        .unionByName(docs
-          .filter(col("doc_id") >= 400 && col("doc_id") < 500 &&
-            col("text").isNotNull)
-          .select((col("doc_id") + lit(4000000L)).as("doc_id"),
-            rev(col("text")).as("text")))
+      val b0 = intakeSlice(docs, col("doc_id") < 100, 1000000L)
+      val b1 = reversedSlice(docs, 300, 400, 2000000L)
+      val b2 = intakeSlice(docs, col("doc_id") >= 300 && col("doc_id") < 400,
+          3000000L, truncRev(col("text")).as("text"))
+        .unionByName(reversedSlice(docs, 400, 500, 4000000L))
       graft.streaming.EventStreams.runIncrementalNearDupAdmission(
         graft.streaming.EventStreams.orderedIntake(s, "graft_x218",
           Seq(b0, b1, b2)),
@@ -8970,34 +8508,12 @@ object Extensions extends QueryModule {
         val list = words.map("'" + _ + "'").mkString(",")
         s"printf('%03d', len(list_intersect(t, [$list]))) || '$lang'"
       }.mkString(",\n          ")
-      val enList = graft.ops.Stopwords.en.map("'" + _ + "'").mkString(",")
       s"""WITH survivors AS (
         SELECT * FROM documents
         WHERE doc_id IN (SELECT min(doc_id) FROM documents GROUP BY md5(text))),
       metrics AS (
         SELECT *,
-          string_split(lower(text), ' ') AS t,
-          CAST(length(text) AS DOUBLE) AS nc,
-          CAST(len(string_split(lower(text), ' ')) AS DOUBLE) AS nt,
-          CAST(length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS DOUBLE) AS alpha,
-          CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) AS digits
-        FROM survivors),
-      scored AS (
-        SELECT *,
-          round(CASE WHEN nc > 0 THEN alpha / nc ELSE 0 END, 4) AS alpha_ratio,
-          round(CASE WHEN nc > 0 THEN digits / nc ELSE 0 END, 4) AS digit_ratio,
-          round(CASE WHEN nt > 0 THEN nc / nt ELSE 0 END, 4) AS mean_token_len,
-          round(CASE WHEN nt > 0 THEN
-            CAST(len(list_intersect(t, [$enList])) AS DOUBLE) / nt ELSE 0 END, 4)
-            AS stopword_ratio
-        FROM metrics),
-      quality AS (
-        SELECT *,
-          round(greatest(0.0, least(1.0,
-            alpha_ratio * 0.4
-            + least(stopword_ratio * 4.0, 1.0) * 0.3
-            + CASE WHEN mean_token_len BETWEEN 3.0 AND 12.0 THEN 0.2 ELSE 0.0 END
-            + CASE WHEN digit_ratio < 0.2 THEN 0.1 ELSE 0.0 END)), 4) AS quality_score,
+          ${qualityMetricsSql("survivors")},
           greatest(
           $stopArms) AS vote
         FROM scored),

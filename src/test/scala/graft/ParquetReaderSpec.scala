@@ -96,6 +96,21 @@ class ParquetReaderSpec extends AnyFunSuite {
     assert(jobs == 0)
   }
 
+  test("a metadata-stats read leaves the session conf alone, so a later documents read starts no job") {
+    val s = spark.newSession()
+    // a copy: a path no earlier case has memoized under any conf
+    val dir = Files.createTempDirectory("graft_reader_stats").toString
+    Files.copy(Paths.get(s"$sfDir/documents.parquet"),
+      Paths.get(s"$dir/documents.parquet"))
+    Tables.load(s, dir, "documents")
+    val before = s.conf.getAll
+    graft.ops.Profiling.metadataStats(s, s"$dir/documents.parquet",
+      Seq("doc_id", "n_chars"))
+    assert(s.conf.getAll == before)
+    val (_, jobs) = jobsDuring(Tables.load(s, dir, "documents").schema)
+    assert(jobs == 0)
+  }
+
   test("an overwrite under the same path that adds a column shows it, with no clear") {
     import spark.implicits._
     val path = tempTable("graft_reader_over")

@@ -37,6 +37,16 @@ class RelationalSpec extends AnyFunSuite {
     assert(unknown.isEmpty, s"oracleSql keys without queries: $unknown")
   }
 
+  test("no oracle string holds an unapplied interpolation or a doubled backslash") {
+    // an oracle composed from shared fragments is an s-interpolated
+    // string: a `${` left in the output was never interpolated, and
+    // `\\` is a `\\s` written where no escape processing happens
+    val bad = SparkEntry.oracleSql.filter { case (_, sql) =>
+      sql.contains("${") || sql.contains("\\\\")
+    }.keySet
+    assert(bad.isEmpty, s"oracle strings with an unapplied fragment: $bad")
+  }
+
   test("q1_agg groups are complete and counts add up to the table size") {
     import org.apache.spark.sql.functions._
     val q1 = SparkEntry.queries("q1_agg")(spark, sfDir)

@@ -6418,8 +6418,12 @@ class OpsSpec extends AnyFunSuite {
   test("metadata stats: pushdown answers match a real scan, confs restored") {
     import graft.SparkTestSession.sfDir
     val path = s"$sfDir/documents.parquet"
+    val confBefore = spark.conf.getAll
     val got = Profiling.metadataStats(spark, path, Seq("doc_id", "n_chars"))
       .head()
+    // the v2/pushdown flags must not leak into the session: no key set,
+    // changed or left explicitly at its default
+    assert(spark.conf.getAll == confBefore)
     val ref = spark.read.parquet(path)
       .agg(count(lit(1)), min("doc_id"), max("doc_id"),
         min("n_chars"), max("n_chars")).head()
@@ -6428,8 +6432,6 @@ class OpsSpec extends AnyFunSuite {
     assert(got.getAs[Long]("max_doc_id") == ref.getLong(2))
     assert(got.getAs[Long]("min_n_chars") == ref.getLong(3))
     assert(got.getAs[Long]("max_n_chars") == ref.getLong(4))
-    // the v2/pushdown flags must not leak into the session
-    assert(spark.conf.get("spark.sql.sources.useV1SourceList").contains("parquet"))
     // and the pushdown actually happens: same agg under the flags
     // plans a footer-only BatchScan
     spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
