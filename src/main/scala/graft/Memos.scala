@@ -93,38 +93,52 @@ object PlanKeys {
 }
 
 /** The one parquet reader for stable tables ([[Tables.load]] and the
-  * quality gate): a path's schema is inferred once per file identity.
+  * quality gate): a path is resolved once per session and file
+  * identity, and its schema is inferred once per file identity.
   *
   * A bare `spark.read.parquet(path)` runs a one-task schema-inference
   * job on every call, even over a single file (Spark's
-  * `mergeSchemasInParallel` parallelizes the footer reads), and the
-  * star queries and the quality checks re-read the same tables many
-  * times a pass. A hit hands the memoized schema to
-  * `spark.read.schema(...)`, which lists the files but infers nothing.
+  * `mergeSchemasInParallel` parallelizes the footer reads), and builds
+  * a fresh `InMemoryFileIndex`, which lists the table again: past 32
+  * paths (the 130-partition user dim) that listing is a parallel job
+  * of one task per partition directory. The star queries and the
+  * quality checks re-read the same tables many times a pass.
   *
-  * Key: the qualified path, plus a digest of every file under it
-  * ([[PlanKeys.fileLine]]) and of the session's explicitly set confs
-  * that change what inference returns. A schema depends on nothing
-  * else, so the key names no session: every session that reads the
-  * same files under the same confs shares one entry, and an overwrite
-  * or append changes the key, so the next read re-infers with no clear.
+  * Two memos stack, each keyed by the qualified path plus a digest of
+  * every file under it ([[PlanKeys.fileLine]]) and of the session's
+  * explicitly set confs that change what inference returns; an
+  * overwrite or append changes the digest, so the next read resolves
+  * afresh with no clear.
+  *  - `parquet-relation` (keyed by session as well) holds the
+  *    `HadoopFsRelation` Spark resolved, file index included. A hit is
+  *    `spark.baseRelationToDataFrame(relation)`, the plan a plain read
+  *    builds, with fresh attribute ids: no listing job, no inference
+  *    job, no data-source resolution. The relation and its index hold
+  *    the session that built them, and scans read that session's conf,
+  *    so one is never served to another session.
+  *  - `parquet-schema` holds the inferred schema and names no session,
+  *    since a schema depends on nothing else: on a relation miss, a
+  *    schema hit reads with `spark.read.schema(...)`, which lists the
+  *    files but infers nothing, so a fresh session infers nothing.
   *
-  * The listing is a recursive `listStatus` walk. Hadoop's located
-  * listings build a `LocatedFileStatus` per file, which on the local
-  * file system loads each file's owner and permissions: on the
-  * 130-partition user dim that measured 770-880 ms a call against
-  * 11-19 ms for the walk.
+  * The file-identity listing is a recursive `listStatus` walk.
+  * Hadoop's located listings build a `LocatedFileStatus` per file,
+  * which on the local file system loads each file's owner and
+  * permissions: on the 130-partition user dim that measured 770-880 ms
+  * a call against 11-19 ms for the walk.
   *
-  * A miss returns the very frame that did the inference: resolving the
-  * path a second time would list a partitioned table twice. A path
+  * A miss returns the very frame that resolved the relation: resolving
+  * the path a second time would list a partitioned table twice. A path
   * with no files to identify (missing, empty directory, glob) goes
   * straight to `spark.read.parquet`, and a failed inference propagates
   * from the build, so every failing read throws exactly as a plain one
   * does and stores nothing.
   */
 object ParquetReader {
-  private[graft] val memo =
+  private[graft] val schemas =
     new BoundedMemo[(String, String), StructType](256, "parquet-schema")
+  private[graft] val relations =
+    new BoundedMemo[(String, String, String), HadoopFsRelation](256, "parquet-relation")
 
   def read(spark: SparkSession, path: String): DataFrame = {
     val root = new Path(path)
@@ -132,15 +146,30 @@ object ParquetReader {
     val files = walk(fs, root)
     if (files.isEmpty) spark.read.parquet(path)
     else {
-      var inferred: Option[DataFrame] = None
-      val schema = memo.getOrBuild(key(spark, fs.makeQualified(root), files)) {
-        val df = spark.read.parquet(path)
-        inferred = Some(df)
-        df.schema
+      val (qualified, digest) = key(spark, fs.makeQualified(root), files)
+      var resolved: Option[DataFrame] = None
+      val relation = relations.getOrBuild((SessionKeys.of(spark), qualified, digest)) {
+        var inferred: Option[DataFrame] = None
+        val schema = schemas.getOrBuild((qualified, digest)) {
+          val df = spark.read.parquet(path)
+          inferred = Some(df)
+          df.schema
+        }
+        val df = inferred.getOrElse(spark.read.schema(schema).parquet(path))
+        resolved = Some(df)
+        relationOf(df, path)
       }
-      inferred.getOrElse(spark.read.schema(schema).parquet(path))
+      resolved.getOrElse(spark.baseRelationToDataFrame(relation))
     }
   }
+
+  /** The file relation at the root of a frame read from `path`. */
+  private[graft] def relationOf(df: DataFrame, path: String): HadoopFsRelation =
+    df.queryExecution.analyzed match {
+      case LogicalRelation(rel: HadoopFsRelation, _, _, _, _) => rel
+      case other => throw new IllegalStateException(
+        s"parquet read of $path resolved to no file relation:\n$other")
+    }
 
   private def walk(fs: FileSystem, p: Path): Seq[FileStatus] =
     (try fs.listStatus(p).toSeq catch { case _: FileNotFoundException => Nil })

@@ -3213,30 +3213,46 @@ object Extensions extends QueryModule {
     * `max(cnt*1e6 + (999999 - label))` (valid while labels <
     * 1e6, which doc_id-seeded labels on this corpus are), the same
     * total order. Rounds unroll as MATERIALIZED CTEs (the x78 /
-    * CLAUDE.md rule — inlined chains go exponential). */
-  private val x107LabelPropagation = GraftQuery(
-    "x107_label_propagation",
-    (s, dir) => {
-      // the oracle's struct-max encoding (cnt*1e6 + (999999-label))
-      // silently corrupts the tie-break if any id reaches 1e6 — fail
-      // loudly IN the scan instead of hash-mismatching at a larger SF
-      // (the epochShuffle raise_error pattern; r7 advisor item)
-      val docs = Tables.documents(s, dir).select(
-        when(col("doc_id") >= 1000000L, raise_error(lit(
-          "x107: doc_id >= 1e6 breaks the oracle's packed tie-break " +
-            "encoding — widen the encoding before scaling up")))
-          .otherwise(col("doc_id")).as("doc_id"))
-      val edges = docs
-        .select(col("doc_id").as("src"),
-          explode(sequence(lit(1), lit(3))).as("k"))
-        .select(col("src"),
-          (expr("src div 50") * 50 +
-            pmod(pmod(col("src"), lit(50)) + col("k") * 7, lit(50))).as("dst"))
-      graft.ops.Graph.labelPropagation(edges, iters = 3)
-        .select(col("id").as("doc_id"), col("label").as("community"))
-        .orderBy(col("doc_id"))
-    },
-    Some("""WITH edges0 AS MATERIALIZED (
+    * CLAUDE.md rule — inlined chains go exponential), generated one
+    * per round by `rounds`. */
+  private val x107LabelPropagation = {
+    val iters = 3
+    def rounds(n: Int): String = (1 to n).map { r =>
+      s"""r$r AS MATERIALIZED (
+        SELECT n.id, COALESCE(w.new_label, p.label) AS label
+        FROM allnodes n JOIN r${r - 1} p USING (id)
+        LEFT JOIN (
+          SELECT dst AS id,
+            999999 - (max(cnt * 1000000 + (999999 - label)) % 1000000)
+              AS new_label
+          FROM (
+            SELECT e.dst, r.label, CAST(count(*) AS BIGINT) AS cnt
+            FROM e JOIN r${r - 1} r ON e.src = r.id GROUP BY 1, 2)
+          GROUP BY 1) w USING (id))"""
+    }.mkString(",\n      ")
+    GraftQuery(
+      "x107_label_propagation",
+      (s, dir) => {
+        // the oracle's struct-max encoding (cnt*1e6 + (999999-label))
+        // silently corrupts the tie-break if any id reaches 1e6 — fail
+        // loudly IN the scan instead of hash-mismatching at a larger SF
+        // (the epochShuffle raise_error pattern; r7 advisor item)
+        val docs = Tables.documents(s, dir).select(
+          when(col("doc_id") >= 1000000L, raise_error(lit(
+            "x107: doc_id >= 1e6 breaks the oracle's packed tie-break " +
+              "encoding — widen the encoding before scaling up")))
+            .otherwise(col("doc_id")).as("doc_id"))
+        val edges = docs
+          .select(col("doc_id").as("src"),
+            explode(sequence(lit(1), lit(3))).as("k"))
+          .select(col("src"),
+            (expr("src div 50") * 50 +
+              pmod(pmod(col("src"), lit(50)) + col("k") * 7, lit(50))).as("dst"))
+        graft.ops.Graph.labelPropagation(edges, iters = iters)
+          .select(col("id").as("doc_id"), col("label").as("community"))
+          .orderBy(col("doc_id"))
+      },
+      Some(s"""WITH edges0 AS MATERIALIZED (
         SELECT doc_id AS src,
           (doc_id // 50) * 50 + ((doc_id % 50) + k * 7) % 50 AS dst
         FROM documents CROSS JOIN (SELECT unnest([1, 2, 3]) AS k)),
@@ -3248,40 +3264,9 @@ object Extensions extends QueryModule {
         SELECT DISTINCT id FROM (
           SELECT src AS id FROM e UNION ALL SELECT dst AS id FROM e)),
       r0 AS MATERIALIZED (SELECT id, id AS label FROM allnodes),
-      r1 AS MATERIALIZED (
-        SELECT n.id, COALESCE(w.new_label, p.label) AS label
-        FROM allnodes n JOIN r0 p USING (id)
-        LEFT JOIN (
-          SELECT dst AS id,
-            999999 - (max(cnt * 1000000 + (999999 - label)) % 1000000)
-              AS new_label
-          FROM (
-            SELECT e.dst, r.label, CAST(count(*) AS BIGINT) AS cnt
-            FROM e JOIN r0 r ON e.src = r.id GROUP BY 1, 2)
-          GROUP BY 1) w USING (id)),
-      r2 AS MATERIALIZED (
-        SELECT n.id, COALESCE(w.new_label, p.label) AS label
-        FROM allnodes n JOIN r1 p USING (id)
-        LEFT JOIN (
-          SELECT dst AS id,
-            999999 - (max(cnt * 1000000 + (999999 - label)) % 1000000)
-              AS new_label
-          FROM (
-            SELECT e.dst, r.label, CAST(count(*) AS BIGINT) AS cnt
-            FROM e JOIN r1 r ON e.src = r.id GROUP BY 1, 2)
-          GROUP BY 1) w USING (id)),
-      r3 AS MATERIALIZED (
-        SELECT n.id, COALESCE(w.new_label, p.label) AS label
-        FROM allnodes n JOIN r2 p USING (id)
-        LEFT JOIN (
-          SELECT dst AS id,
-            999999 - (max(cnt * 1000000 + (999999 - label)) % 1000000)
-              AS new_label
-          FROM (
-            SELECT e.dst, r.label, CAST(count(*) AS BIGINT) AS cnt
-            FROM e JOIN r2 r ON e.src = r.id GROUP BY 1, 2)
-          GROUP BY 1) w USING (id))
-      SELECT id AS doc_id, label AS community FROM r3 ORDER BY doc_id"""))
+      ${rounds(iters)}
+      SELECT id AS doc_id, label AS community FROM r$iters ORDER BY doc_id"""))
+  }
 
   /** Johnson–Lindenstrauss projection
     * ([[graft.ops.Similarity.randomProjection]]): 64-dim embeddings
@@ -5270,28 +5255,49 @@ object Extensions extends QueryModule {
 
   /** HITS hubs & authorities ([[graft.ops.Graph.hits]]) over the
     * deterministic synthetic citation graph (x78's modular-arithmetic
-    * family, different multiplier — no dangling nodes). Oracle: all
-    * four half-rounds unrolled as MATERIALIZED CTEs — per-node sorted
+    * family, different multiplier — no dangling nodes). Oracle: every
+    * half-round unrolled as MATERIALIZED CTEs by `rounds` — per-node sorted
     * contribution folds (the x78 rule), keyed sorted global
     * normalizer folds (the x94 pattern), and a round-9 pin at every
     * half-round boundary (the x97 iterative-float discipline) so the
     * two engines feed bit-identical inputs into each round. */
-  private val x167Hits = GraftQuery(
-    "x167_hits",
-    (s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val cnt = broadcast(docs.agg(count(lit(1)).as("n")))
-      val edges = docs.crossJoin(cnt)
-        .select(col("doc_id").as("src"),
-          explode(sequence(lit(1), lit(3))).as("k"), col("n"))
-        .select(col("src"),
-          pmod(col("src") * 17 + col("k"), col("n")).as("dst"))
-      graft.ops.Graph.hits(edges,
-          nodes = Some(docs.select(col("doc_id").as("id"))))
-        .select(col("id").as("doc_id"), col("hub"), col("auth"))
-        .orderBy(col("doc_id"))
-    },
-    Some("""WITH cnt AS MATERIALIZED (
+  private val x167Hits = {
+    val iters = 2
+    // one half-round: scores `name` from the previous half-round
+    // `from`, summed along edges from their `on` end to their `out` end
+    def half(name: String, from: String, out: String, on: String): String = {
+      val al = from.take(1)
+      s"""${name}r AS MATERIALIZED (
+        SELECT e.$out AS id, list_sum(list_sort(list($al.s))) AS raw
+        FROM edges e JOIN $from $al ON e.$on = $al.id GROUP BY 1),
+      ${name}t AS MATERIALIZED (
+        SELECT list_sum(list_transform(
+          list_sort(list(struct_pack(k := id, v := raw))),
+          x -> struct_extract(x, 'v'))) AS total FROM ${name}r),
+      $name AS MATERIALIZED (
+        SELECT nodes.id, round(CASE WHEN total > 0
+            THEN COALESCE(raw, 0.0) / total ELSE 0.0 END, 9) AS s
+        FROM nodes LEFT JOIN ${name}r USING (id) CROSS JOIN ${name}t)"""
+    }
+    def rounds(n: Int): String = (1 to n).flatMap(r =>
+      Seq(half(s"a$r", s"h${r - 1}", "dst", "src"), half(s"h$r", s"a$r", "src", "dst")))
+      .mkString(",\n      ")
+    GraftQuery(
+      "x167_hits",
+      (s, dir) => {
+        val docs = Tables.documents(s, dir).select(col("doc_id"))
+        val cnt = broadcast(docs.agg(count(lit(1)).as("n")))
+        val edges = docs.crossJoin(cnt)
+          .select(col("doc_id").as("src"),
+            explode(sequence(lit(1), lit(3))).as("k"), col("n"))
+          .select(col("src"),
+            pmod(col("src") * 17 + col("k"), col("n")).as("dst"))
+        graft.ops.Graph.hits(edges,
+            nodes = Some(docs.select(col("doc_id").as("id"))), iters = iters)
+          .select(col("id").as("doc_id"), col("hub"), col("auth"))
+          .orderBy(col("doc_id"))
+      },
+      Some(s"""WITH cnt AS MATERIALIZED (
         SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
       nodes AS MATERIALIZED (SELECT doc_id AS id FROM documents),
       edges AS MATERIALIZED (
@@ -5299,52 +5305,10 @@ object Extensions extends QueryModule {
         FROM documents CROSS JOIN cnt
         CROSS JOIN (SELECT unnest([1, 2, 3]) AS k)),
       h0 AS MATERIALIZED (SELECT id, 1.0 AS s FROM nodes),
-      a1r AS MATERIALIZED (
-        SELECT e.dst AS id, list_sum(list_sort(list(h.s))) AS raw
-        FROM edges e JOIN h0 h ON e.src = h.id GROUP BY 1),
-      a1t AS MATERIALIZED (
-        SELECT list_sum(list_transform(
-          list_sort(list(struct_pack(k := id, v := raw))),
-          x -> struct_extract(x, 'v'))) AS total FROM a1r),
-      a1 AS MATERIALIZED (
-        SELECT nodes.id, round(CASE WHEN total > 0
-            THEN COALESCE(raw, 0.0) / total ELSE 0.0 END, 9) AS s
-        FROM nodes LEFT JOIN a1r USING (id) CROSS JOIN a1t),
-      h1r AS MATERIALIZED (
-        SELECT e.src AS id, list_sum(list_sort(list(a.s))) AS raw
-        FROM edges e JOIN a1 a ON e.dst = a.id GROUP BY 1),
-      h1t AS MATERIALIZED (
-        SELECT list_sum(list_transform(
-          list_sort(list(struct_pack(k := id, v := raw))),
-          x -> struct_extract(x, 'v'))) AS total FROM h1r),
-      h1 AS MATERIALIZED (
-        SELECT nodes.id, round(CASE WHEN total > 0
-            THEN COALESCE(raw, 0.0) / total ELSE 0.0 END, 9) AS s
-        FROM nodes LEFT JOIN h1r USING (id) CROSS JOIN h1t),
-      a2r AS MATERIALIZED (
-        SELECT e.dst AS id, list_sum(list_sort(list(h.s))) AS raw
-        FROM edges e JOIN h1 h ON e.src = h.id GROUP BY 1),
-      a2t AS MATERIALIZED (
-        SELECT list_sum(list_transform(
-          list_sort(list(struct_pack(k := id, v := raw))),
-          x -> struct_extract(x, 'v'))) AS total FROM a2r),
-      a2 AS MATERIALIZED (
-        SELECT nodes.id, round(CASE WHEN total > 0
-            THEN COALESCE(raw, 0.0) / total ELSE 0.0 END, 9) AS s
-        FROM nodes LEFT JOIN a2r USING (id) CROSS JOIN a2t),
-      h2r AS MATERIALIZED (
-        SELECT e.src AS id, list_sum(list_sort(list(a.s))) AS raw
-        FROM edges e JOIN a2 a ON e.dst = a.id GROUP BY 1),
-      h2t AS MATERIALIZED (
-        SELECT list_sum(list_transform(
-          list_sort(list(struct_pack(k := id, v := raw))),
-          x -> struct_extract(x, 'v'))) AS total FROM h2r),
-      h2 AS MATERIALIZED (
-        SELECT nodes.id, round(CASE WHEN total > 0
-            THEN COALESCE(raw, 0.0) / total ELSE 0.0 END, 9) AS s
-        FROM nodes LEFT JOIN h2r USING (id) CROSS JOIN h2t)
-      SELECT h2.id AS doc_id, h2.s AS hub, a2.s AS auth
-      FROM h2 JOIN a2 ON h2.id = a2.id ORDER BY doc_id"""))
+      ${rounds(iters)}
+      SELECT h$iters.id AS doc_id, h$iters.s AS hub, a$iters.s AS auth
+      FROM h$iters JOIN a$iters ON h$iters.id = a$iters.id ORDER BY doc_id"""))
+  }
 
   /** Stratified k-fold CV assignment
     * ([[graft.ops.Sampling.stratifiedKfold]]), reported as per

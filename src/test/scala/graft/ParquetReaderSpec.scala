@@ -11,10 +11,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.{Schemas, StarSchemaWriter}
 import graft.quality.DataQuality
 
-/** [[ParquetReader]]: a path's schema is inferred once per file
-  * identity, a changed file set re-infers with no clear, a failing
-  * read throws as a plain one does, and a memoized-schema read equals
-  * a plain read. */
+/** [[ParquetReader]]: a path is resolved once per session and file
+  * identity and its schema inferred once per file identity, a changed
+  * file set re-resolves with no clear, a failing read throws as a
+  * plain one does, and a memoized read equals a plain read. */
 class ParquetReaderSpec extends AnyFunSuite {
   import SparkTestSession.{sfDir, spark}
 
@@ -61,6 +61,18 @@ class ParquetReaderSpec extends AnyFunSuite {
 
   private def tempTable(prefix: String): String =
     s"${Files.createTempDirectory(prefix)}/t.parquet"
+
+  /** Writes `parts` hive partitions (two rows each) to `path`: past
+    * Spark's 32-path threshold a plain read lists them with a job. */
+  private def writeWide(path: String, parts: Int, mode: String = "errorifexists"): String = {
+    import spark.implicits._
+    (0 until 2 * parts).map(i => (i.toLong, i % parts)).toDF("id", "p")
+      .coalesce(1).write.mode(mode).partitionBy("p").parquet(path)
+    path
+  }
+
+  /** How many entries each reader memo holds: (schemas, relations). */
+  private def stored: (Int, Int) = (ParquetReader.schemas.size, ParquetReader.relations.size)
 
   /** What `body` threw: its class and message. */
   private def thrown(body: => Any): (Class[_], String) = {
@@ -140,21 +152,21 @@ class ParquetReaderSpec extends AnyFunSuite {
   test("a missing path throws as spark.read.parquet does and memoizes nothing") {
     import spark.implicits._
     val path = tempTable("graft_reader_missing")
-    val stored = ParquetReader.memo.size
+    val before = stored
     val err = thrown(ParquetReader.read(spark, path))
     assert(err._1 == classOf[AnalysisException])
     assert(err == thrown(spark.read.parquet(path)))
-    assert(ParquetReader.memo.size == stored)
+    assert(stored == before)
 
     // a table written at the path, then removed, then written anew with
     // another schema: the removed state throws, the new one reads fresh
     Seq((1L, "a")).toDF("id", "x").write.parquet(path)
     assert(ParquetReader.read(spark, path).columns.toSeq == Seq("id", "x"))
     new java.io.File(path).listFiles().foreach(_.delete())
-    val emptied = ParquetReader.memo.size
+    val emptied = stored
     assert(thrown(ParquetReader.read(spark, path)) == thrown(spark.read.parquet(path)),
       "an empty directory")
-    assert(ParquetReader.memo.size == emptied)
+    assert(stored == emptied)
     Seq((2L, 7)).toDF("id", "z").write.mode("overwrite").parquet(path)
     val got = ParquetReader.read(spark, path)
     assert(got.columns.toSeq == Seq("id", "z"))
@@ -197,17 +209,73 @@ class ParquetReaderSpec extends AnyFunSuite {
   test("DataQuality.validate reads each table once per call") {
     val (_, err) = MemosSpec.stderrOf(
       DataQuality.validate(spark, starOut, DataQuality.extendedSuite))
-    val reads = err.linesIterator.count(_.startsWith("[memo] parquet-schema "))
+    val reads = err.linesIterator.count(_.startsWith("[memo] parquet-relation "))
     assert(DataQuality.extendedSuite.size == 11)
     assert(reads == DataQuality.extendedSuite.map(_.tableName).distinct.size)
   }
 
   test("BoundedMemo.clearAll empties the schema memo") {
     Tables.load(spark, sfDir, "orders")
-    assert(ParquetReader.memo.size > 0)
+    assert(ParquetReader.schemas.size > 0 && ParquetReader.relations.size > 0)
     BoundedMemo.clearAll()
-    assert(ParquetReader.memo.size == 0)
+    assert(stored == ((0, 0)))
     val (_, jobs) = jobsDuring(Tables.load(spark, sfDir, "orders"))
-    assert(jobs >= 1, "a cleared memo must infer again")
+    assert(jobs >= 1, "cleared memos must infer again")
+  }
+
+  test("a repeated read of a wide partitioned table lists nothing and equals a plain read") {
+    val path = writeWide(tempTable("graft_reader_wide"), parts = 48)
+    val (_, plainJobs) = jobsDuring(spark.read.parquet(path).inputFiles)
+    assert(plainJobs >= 1, "a plain read lists 48 partitions with a job")
+    ParquetReader.read(spark, path)
+    val (hit, jobs) = jobsDuring {
+      val df = ParquetReader.read(spark, path)
+      df.schema
+      df.inputFiles
+      df
+    }
+    assert(jobs == 0, "the second read must resolve nothing")
+    assertEqualsPlain(spark, path, hit)
+    assert(hit.inputFiles.sorted.toSeq == spark.read.parquet(path).inputFiles.sorted.toSeq)
+  }
+
+  test("a read in another session resolves a relation bound to that session") {
+    val path = s"$starOut/dim_user_agg_table.parquet"
+    def session(df: DataFrame) = ParquetReader.relationOf(df, path).sparkSession
+    assert(session(ParquetReader.read(spark, path)) eq spark)
+    val s = spark.newSession()
+    val got = ParquetReader.read(s, path)
+    assert(session(got) eq s)
+    assert(session(ParquetReader.read(s, path)) eq s)
+    assertEqualsPlain(s, path, got)
+  }
+
+  test("a session that reads parquet through DataSource V2 fails loudly, naming the path") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.sources.useV1SourceList", "")
+    val path = s"$sfDir/region.parquet"
+    val relations = ParquetReader.relations.size
+    val e = intercept[IllegalStateException](ParquetReader.read(s, path))
+    assert(e.getMessage.contains(path))
+    assert(ParquetReader.relations.size == relations)
+  }
+
+  test("two concurrent reads of a fresh path equal a plain read and store one relation") {
+    val path = writeWide(tempTable("graft_reader_race"), parts = 40)
+    val before = ParquetReader.relations.size
+    val got = graft.ops.Concurrency.awaitAll(spark, "reader-race")(
+      Seq.fill(2)(() => ParquetReader.read(spark, path)))
+    assert(ParquetReader.relations.size == before + 1)
+    got.foreach(assertEqualsPlain(spark, path, _))
+  }
+
+  test("overwriting a wide table with one partition fewer re-resolves with no clear") {
+    val path = writeWide(tempTable("graft_reader_shrink"), parts = 48)
+    ParquetReader.read(spark, path)
+    assert(ParquetReader.read(spark, path).select("p").distinct().count() == 48)
+    writeWide(path, parts = 47, mode = "overwrite")
+    val got = ParquetReader.read(spark, path)
+    assert(got.select("p").distinct().count() == 47)
+    assertEqualsPlain(spark, path, got)
   }
 }

@@ -6433,20 +6433,17 @@ class OpsSpec extends AnyFunSuite {
     assert(got.getAs[Long]("min_n_chars") == ref.getLong(3))
     assert(got.getAs[Long]("max_n_chars") == ref.getLong(4))
     // and the pushdown actually happens: same agg under the flags
-    // plans a footer-only BatchScan
-    spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-    val oldV1 = spark.conf.get("spark.sql.sources.useV1SourceList")
-    spark.conf.set("spark.sql.sources.useV1SourceList", "")
-    try {
-      val df = spark.read.parquet(path)
-        .agg(count(lit(1)), min("n_chars"), max("n_chars"))
-      df.collect()
-      assert(df.queryExecution.executedPlan.toString
-        .contains("PushedAggregation: [COUNT(*), MIN(n_chars), MAX(n_chars)]"))
-    } finally {
-      spark.conf.set("spark.sql.sources.useV1SourceList", oldV1)
-      spark.conf.set("spark.sql.parquet.aggregatePushdown", "false")
-    }
+    // plans a footer-only BatchScan (set on a child session, so the
+    // shared session's conf is never touched)
+    val pushed = spark.newSession()
+    pushed.conf.set("spark.sql.parquet.aggregatePushdown", "true")
+    pushed.conf.set("spark.sql.sources.useV1SourceList", "")
+    val df = pushed.read.parquet(path)
+      .agg(count(lit(1)), min("n_chars"), max("n_chars"))
+    df.collect()
+    assert(df.queryExecution.executedPlan.toString
+      .contains("PushedAggregation: [COUNT(*), MIN(n_chars), MAX(n_chars)]"))
+    assert(spark.conf.getAll == confBefore)
   }
 
   test("dimension stats: hand-checked mean/std, constant dim std 0, approx twin") {
