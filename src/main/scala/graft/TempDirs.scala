@@ -1,10 +1,10 @@
 package graft
 
-/** JVM-exit cleanup for temp STORE TREES (r17 review): plain
-  * `File.deleteOnExit` on a directory silently never deletes a
-  * non-empty one, and parquet part-file names don't exist at
-  * registration time — so the stagedStreamDir file-by-file discipline
-  * cannot apply to store roots that are populated later. One shutdown
+/** JVM-exit cleanup for temp trees — store roots and staged stream
+  * fixtures alike (r17 review): plain `File.deleteOnExit` on a
+  * directory silently never deletes a non-empty one, and parquet
+  * part-file names don't exist at registration time, so no per-file
+  * registration can cover a tree that is populated later. One shutdown
   * hook, recursive delete, registration idempotent per path. */
 object TempDirs {
 

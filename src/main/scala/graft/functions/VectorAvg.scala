@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder, Encoders}
+import org.apache.spark.sql.Encoder
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Native typed aggregate for element-wise vector mean — the
@@ -53,7 +53,4 @@ object VectorAvg extends Aggregator[Seq[Float], (Array[Double], Long), Seq[Doubl
 
   override def outputEncoder: Encoder[Seq[Double]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Double]]()
-
-  /** Column form usable in untyped groupBy().agg(...). */
-  def asColumn: Column = VectorAvg.toColumn
 }

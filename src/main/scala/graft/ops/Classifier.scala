@@ -236,10 +236,8 @@ object Classifier {
   def saveLogRegModel(model: LogRegModel, path: String): LogRegModel = {
     model.weights.write.mode("overwrite").parquet(s"$path/weights")
     val spark = model.weights.sparkSession
-    import spark.implicits._
-    Seq((model.numBuckets, model.eta, model.iters))
-      .toDF("num_buckets", "eta", "iters")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+    Layout.writeMeta(spark, path, (model.numBuckets, model.eta, model.iters),
+      "num_buckets", "eta", "iters")
     loadLogRegModel(spark, path)
   }
 
@@ -247,10 +245,8 @@ object Classifier {
     * row), weights lazily (scoring broadcasts them per batch). */
   def loadLogRegModel(spark: org.apache.spark.sql.SparkSession,
       path: String): LogRegModel = {
-    val m = spark.read.parquet(s"$path/meta").collect()
-    require(m.length == 1,
-      s"model meta at $path/meta must be one row, got ${m.length}")
-    val numBuckets = m(0).getAs[Int]("num_buckets")
+    val m = Layout.readMeta(spark, path)
+    val numBuckets = m.getAs[Int]("num_buckets")
     val weights = spark.read.parquet(s"$path/weights")
     // re-validate weights against meta (the loadPqModel/loadBpeRules
     // geometry discipline, r16 review): a weights dir from a
@@ -271,7 +267,7 @@ object Classifier {
         s"range [${v.get(2)}, ${v.get(3)}]) inconsistent with " +
         s"num_buckets=$numBuckets — stale meta or mixed write")
     LogRegModel(weights,
-      numBuckets, m(0).getAs[Double]("eta"), m(0).getAs[Int]("iters"))
+      numBuckets, m.getAs[Double]("eta"), m.getAs[Int]("iters"))
   }
 
   /** Reliability curve + per-bucket Brier decomposition for a scored

@@ -258,6 +258,13 @@ object Dedup {
           slice(col("sig"), col("band") * rowsPerBand + 1, lit(rowsPerBand))))
       .drop("sig")
 
+  /** Estimated Jaccard of the `sig_a`/`sig_b` minhash columns: the
+    * share of agreeing slots, rounded to 4. */
+  private def estJaccard(numHashes: Int): Column =
+    round(aggregate(
+      zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
+      lit(0), (acc, x) => acc + x).cast("double") / numHashes, 4)
+
   private def minhashCandidatesUncached(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int, bands: Int, shingleSize: Int, maxBucket: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
@@ -280,10 +287,7 @@ object Dedup {
         .hint("shuffle_hash"), "id_a")
       .join(sig.select(col("id").as("id_b"), col("sig").as("sig_b"))
         .hint("shuffle_hash"), "id_b")
-      .withColumn("est_jaccard",
-        round(aggregate(
-          zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x).cast("double") / numHashes, 4))
+      .withColumn("est_jaccard", estJaccard(numHashes))
       .select(col("id_a"), col("id_b"), col("est_jaccard"))
       // the candidate list is O(|near-dup pairs|) — tiny relative to
       // the corpus. Persisting it stops downstream threshold filters
@@ -341,54 +345,75 @@ object Dedup {
     // truncated band slices and zip nulls into the estimate — most
     // real duplicates would fall below threshold with no error. One
     // row from one split; negligible against the join that follows.
-    corpusSigs.select(size(col("sig")).as("w")).limit(1).collect().headOption
-      .foreach { row =>
-        require(row.getInt(0) == numHashes,
-          s"signature store width ${row.getInt(0)} != numHashes $numHashes — " +
-            "rebuild the store or pass the width it was written with")
-      }
-    // the delta is bounded (a day's intake): checkpoint once — it
-    // feeds its own banding, the self-pairs, and two signature rejoins
-    val batchSig = minhashSignatures(batch, idCol, textCol, numHashes, shingleSize)
-      .localCheckpoint(true)
-    val batchBanded = bandedOf(batchSig, bands, r)
-    val corpusBanded = bandedOf(corpusSigs.select(col("id"), col("sig")), bands, r)
-    val bAside = batchBanded.select(col("band"), col("bucket"), col("id").as("batch_id"))
-    // batch × corpus candidates (orientation fixed: batch on the
-    // left). batch_id == dup_id is KEPT: a revised doc re-ingested
-    // under its existing id compares against its own stored version —
-    // the similarity of new-vs-old is exactly what the delta pattern
-    // wants to know.
-    val bc = bAside.hint("shuffle_hash")
-      .join(corpusBanded.select(col("band"), col("bucket"), col("id").as("dup_id"))
-        .hint("shuffle_hash"), Seq("band", "bucket"))
-      .select(col("batch_id"), col("dup_id")).distinct()
-      .withColumn("dup_in", lit("corpus"))
-    // batch-internal candidates (each unordered pair once)
-    val bb = bAside.hint("shuffle_hash")
-      .join(batchBanded.select(col("band"), col("bucket"), col("id").as("dup_id"))
-        .hint("shuffle_hash"), Seq("band", "bucket"))
-      .filter(col("batch_id") < col("dup_id"))
-      .select(col("batch_id"), col("dup_id")).distinct()
-      .withColumn("dup_in", lit("batch"))
-    // sig_b resolves per PROVENANCE (corpus rows against the store,
-    // batch rows against the delta) — a single union lookup would
-    // fan out and mis-score any id present on both sides
-    def scored(cand: DataFrame, bSide: DataFrame): DataFrame = cand
-      .hint("shuffle_hash")
-      .join(batchSig.select(col("id").as("batch_id"), col("sig").as("sig_a"))
-        .hint("shuffle_hash"), "batch_id")
-      .join(bSide.select(col("id").as("dup_id"), col("sig").as("sig_b"))
-        .hint("shuffle_hash"), "dup_id")
-      .withColumn("est_jaccard",
-        round(aggregate(
-          zip_with(col("sig_a"), col("sig_b"), (x, y) => when(x === y, 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x).cast("double") / numHashes, 4))
-      .filter(col("est_jaccard") >= threshold)
-      .select(col("batch_id"), col("dup_id"), col("est_jaccard"), col("dup_in"))
-    scored(bc, corpusSigs.select(col("id"), col("sig")))
-      .unionByName(scored(bb, batchSig))
+    storedWidth(corpusSigs).foreach(w => require(w == numHashes,
+      s"signature store width $w != numHashes $numHashes — " +
+        "rebuild the store or pass the width it was written with"))
+    bandedIncrementalProbe(
+      minhashSignatures(batch, idCol, textCol, numHashes, shingleSize),
+      corpusSigs, bandedOf(_, bands, r), "bucket", "sig",
+      corpusSigs.select(col("id").as("dup_id"), col("sig").as("sig_b")),
+      "est_jaccard", threshold)(_.withColumn("est_jaccard", estJaccard(numHashes)))
   }
+
+  /** The `sig` array width of a signature store's first row (None
+    * for an empty store): one row from one split. */
+  private def storedWidth(corpusSigs: DataFrame): Option[Int] =
+    corpusSigs.select(size(col("sig")).as("w")).limit(1).collect()
+      .headOption.map(_.getInt(0))
+
+  /** The banded incremental probe both raw-frame sketch probes share.
+    * `batchSig` is the batch's (id, sig, …) signature frame — bounded
+    * (a day's intake), so it is checkpointed once: it feeds its own
+    * banding, the batch-internal pairs and two `payload` rejoins.
+    * `band` turns an (id, sig) frame into (id, band, `key`) rows and
+    * bands the batch and the store alike. Candidates are the batch ×
+    * corpus bucket pairs (orientation fixed: batch on the left;
+    * batch_id == dup_id is KEPT — a revised doc re-ingested under its
+    * existing id compares against its stored version, the new-vs-old
+    * revision check) and the batch-internal ones (each unordered pair
+    * once), bare ids through the `distinct` (a pair may collide in
+    * several bands). [[verifiedPairs]] scores each against the side it
+    * came from: the batch's own `payload`, or `corpusPayload`
+    * (dup_id, `payload`_b). */
+  private def bandedIncrementalProbe(batchSig: DataFrame,
+      corpusSigs: DataFrame, band: DataFrame => DataFrame, key: String,
+      payload: String, corpusPayload: DataFrame, scoreCol: String,
+      threshold: Double)(score: DataFrame => DataFrame): DataFrame = {
+    val b = batchSig.localCheckpoint(true)
+    val batchBanded = band(b.select(col("id"), col("sig")))
+    val bAside = batchBanded.select(col("band"), col(key), col("id").as("batch_id"))
+    def cands(side: DataFrame, in: String, keep: Option[Column]): DataFrame = {
+      val joined = bAside.hint("shuffle_hash")
+        .join(side.select(col("band"), col(key), col("id").as("dup_id"))
+          .hint("shuffle_hash"), Seq("band", key))
+      keep.fold(joined)(k => joined.filter(k))
+        .select(col("batch_id"), col("dup_id")).distinct()
+        .withColumn("dup_in", lit(in))
+    }
+    def verified(cand: DataFrame, bSide: DataFrame): DataFrame =
+      verifiedPairs(cand, b.select(col("id").as("batch_id"),
+        col(payload).as(s"${payload}_a")), bSide, scoreCol, threshold)(score)
+    verified(cands(band(corpusSigs.select(col("id"), col("sig"))), "corpus", None),
+      corpusPayload)
+      .unionByName(verified(
+        cands(batchBanded, "batch", Some(col("batch_id") < col("dup_id"))),
+        b.select(col("id").as("dup_id"), col(payload).as(s"${payload}_b"))))
+  }
+
+  /** Verify candidate (batch_id, dup_id, dup_in) pairs: `aSide` is
+    * (batch_id, a) over the batch and `bSide` (dup_id, b) over the
+    * side the candidates CAME FROM — resolving per provenance, since a
+    * single union lookup would fan out and mis-score any id present
+    * in both the store and the batch. `score` adds `scoreCol`; pairs
+    * below `threshold` drop. */
+  private def verifiedPairs(cand: DataFrame, aSide: DataFrame,
+      bSide: DataFrame, scoreCol: String, threshold: Double)(
+      score: DataFrame => DataFrame): DataFrame =
+    score(cand.hint("shuffle_hash")
+        .join(aSide.hint("shuffle_hash"), "batch_id")
+        .join(bSide.hint("shuffle_hash"), "dup_id"))
+      .filter(col(scoreCol) >= threshold)
+      .select(col("batch_id"), col("dup_id"), col(scoreCol), col("dup_in"))
 
   /** A persisted [[minhashSignatures]] store handle — the
     * [[EmbeddingSignatureStore]] shape for the TEXT family: the
@@ -419,22 +444,18 @@ object Dedup {
       shingleSize: Int = 3): MinhashSignatureStore = {
     minhashSignatures(df, idCol, textCol, numHashes, shingleSize)
       .write.mode("overwrite").parquet(s"$path/signatures")
-    val spark = df.sparkSession
-    import spark.implicits._
-    Seq((numHashes, shingleSize)).toDF("num_hashes", "shingle_size")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
-    loadMinhashSignatures(spark, path)
+    Layout.writeMeta(df.sparkSession, path, (numHashes, shingleSize),
+      "num_hashes", "shingle_size")
+    loadMinhashSignatures(df.sparkSession, path)
   }
 
   /** Load a [[saveMinhashSignatures]]-persisted store: meta eagerly
     * (one row), the signature frame lazily. */
   def loadMinhashSignatures(spark: org.apache.spark.sql.SparkSession,
       path: String): MinhashSignatureStore = {
-    val m = spark.read.parquet(s"$path/meta").collect()
-    require(m.length == 1,
-      s"minhash store meta at $path/meta must be one row, got ${m.length}")
+    val m = Layout.readMeta(spark, path)
     MinhashSignatureStore(spark.read.parquet(s"$path/signatures"),
-      m(0).getAs[Int]("num_hashes"), m(0).getAs[Int]("shingle_size"))
+      m.getAs[Int]("num_hashes"), m.getAs[Int]("shingle_size"))
   }
 
   /** Fold a day's ADMITTED batch into a persisted minhash signature
@@ -476,11 +497,8 @@ object Dedup {
   def compactMinhashSignatures(spark: org.apache.spark.sql.SparkSession,
       path: String, outPath: String,
       targetFileBytes: Long = 128L << 20): MinhashSignatureStore = {
-    Layout.requireFreshRoot(spark, path, outPath)
-    Layout.compact(spark, s"$path/signatures", s"$outPath/signatures",
-      targetFileBytes)
-    spark.read.parquet(s"$path/meta").repartition(1)
-      .write.mode("overwrite").parquet(s"$outPath/meta")
+    Layout.rewriteStore(spark, path, outPath, "signatures")(
+      Layout.compact(spark, _, _, targetFileBytes))
     loadMinhashSignatures(spark, outPath)
   }
 
@@ -545,20 +563,16 @@ object Dedup {
       .join(cands.filter(col("dup_in") === "corpus")
         .select(col("dup_id").as("id")).distinct(), Seq("id"), "leftsemi")
       .select(col("id"), grams(col("t")).as("g"))
-    // gram_b resolves per PROVENANCE (the estimate probe's rule: a
-    // single union lookup would fan out on ids present on both sides)
-    def verified(c: DataFrame, bSide: DataFrame): DataFrame = c
-      .hint("shuffle_hash")
-      .join(batchGrams.select(col("id").as("batch_id"), col("g").as("ga"))
-        .hint("shuffle_hash"), "batch_id")
-      .join(bSide.select(col("id").as("dup_id"), col("g").as("gb"))
-        .hint("shuffle_hash"), "dup_id")
-      .withColumn("inter", size(array_intersect(col("ga"), col("gb"))))
-      // |a∪b| = |a|+|b|−|a∩b| — never materialize a union array
-      .withColumn("jaccard", round(col("inter").cast("double")
-        / (size(col("ga")) + size(col("gb")) - col("inter")), 4))
-      .filter(col("jaccard") >= threshold)
-      .select(col("batch_id"), col("dup_id"), col("jaccard"), col("dup_in"))
+    // gram_b resolves per PROVENANCE ([[verifiedPairs]])
+    def verified(c: DataFrame, bSide: DataFrame): DataFrame =
+      verifiedPairs(c, batchGrams.select(col("id").as("batch_id"),
+          col("g").as("ga")),
+        bSide.select(col("id").as("dup_id"), col("g").as("gb")),
+        "jaccard", threshold)(_
+        .withColumn("inter", size(array_intersect(col("ga"), col("gb"))))
+        // |a∪b| = |a|+|b|−|a∩b| — never materialize a union array
+        .withColumn("jaccard", round(col("inter").cast("double")
+          / (size(col("ga")) + size(col("gb")) - col("inter")), 4)))
     verified(cands.filter(col("dup_in") === "corpus"), corpusGrams)
       .unionByName(
         verified(cands.filter(col("dup_in") === "batch"), batchGrams))
@@ -668,9 +682,8 @@ object Dedup {
   def compactDigestStore(spark: org.apache.spark.sql.SparkSession,
       path: String, outPath: String,
       targetFileBytes: Long = 128L << 20): DigestStore = {
-    Layout.requireFreshRoot(spark, path, outPath)
-    Layout.compact(spark, s"$path/digests", s"$outPath/digests",
-      targetFileBytes)
+    Layout.rewriteStore(spark, path, outPath, "digests", sidecar = None)(
+      Layout.compact(spark, _, _, targetFileBytes))
     loadDigestStore(spark, outPath)
   }
 
@@ -1342,6 +1355,7 @@ object Dedup {
 
   private def duplicateClustersUncached(pairs: DataFrame, idACol: String,
       idBCol: String, maxIters: Int): DataFrame = {
+    import org.apache.spark.sql.graftbridge.SessionBridge
     import org.apache.spark.storage.StorageLevel
     // r21: the cached edge layout is sized by the EDGE LIST (~1M
     // 16-byte rows ≈ 16 MB per partition), not the core count — every
@@ -1354,8 +1368,27 @@ object Dedup {
     // pair build before anything here materializes.
     val pairRows = graft.CorpusCounts.of(pairs)
     val edgeWidth = math.max(1L, (2L * pairRows + 999999L) / 1000000L).toInt
-    val edges = pairs.select(col(idACol).as("src"), col(idBCol).as("dst"))
-      .union(pairs.select(col(idBCol).as("src"), col(idACol).as("dst")))
+    // r21: the rounds coalesce by SIZE, not parallelism. The per-round
+    // frames are O(|clustered docs|) — tiny relative to the machine —
+    // but AQE's default parallelismFirst keeps every round stage at
+    // ~defaultParallelism tasks, so per-task fixed overhead SCALES
+    // WITH CORES on latency-dominated rounds (profiled, r21: the
+    // 64-task propagation stages read 3.9 s CPU / 11 s task time at 32
+    // cores vs 0.28 s / 0.8 s at 8 — the 32c>8c inversion the r20
+    // verdict flagged). parallelismFirst=false is scoped to the loop
+    // by running it on a CLONE of the caller's session (its shared
+    // state and cache, a copy of every conf the caller set) — the
+    // caller's conf never changes, so concurrent users of that session
+    // never see the key. Rounds bigger than the advisory partition size
+    // still go wide, so nothing changes at corpus scale. The edge list
+    // (and the shared upstream pair-table build, which the first
+    // action here would otherwise trigger) materializes BEFORE the key
+    // is set so memo-shared artifacts build identically no matter
+    // which consumer runs first.
+    val sess = SessionBridge.cloneOf(pairs.sparkSession)
+    val p = SessionBridge.rehome(sess, pairs)
+    val edges = p.select(col(idACol).as("src"), col(idBCol).as("dst"))
+      .union(p.select(col(idBCol).as("src"), col(idACol).as("dst")))
       .repartition(edgeWidth, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // localCheckpoint, not persist: each round's plan references the
@@ -1369,27 +1402,10 @@ object Dedup {
     // folded into the initialization aggregate (one round saved)
     // unpersist in finally: the non-convergence throw below must not
     // leave the edge list pinned for the session lifetime
-    //
-    // r21: the rounds coalesce by SIZE, not parallelism. The per-round
-    // frames are O(|clustered docs|) — tiny relative to the machine —
-    // but AQE's default parallelismFirst keeps every round stage at
-    // ~defaultParallelism tasks, so per-task fixed overhead SCALES
-    // WITH CORES on latency-dominated rounds (profiled, r21: the
-    // 64-task propagation stages read 3.9 s CPU / 11 s task time at 32
-    // cores vs 0.28 s / 0.8 s at 8 — the 32c>8c inversion the r20
-    // verdict flagged). parallelismFirst=false is scoped to the loop:
-    // rounds bigger than the advisory partition size still go wide, so
-    // nothing changes at corpus scale. The edge list (and the shared
-    // upstream pair-table build, which the first action here would
-    // otherwise trigger) materializes BEFORE the scope so memo-shared
-    // artifacts build identically no matter which consumer runs first.
-    val sess = pairs.sparkSession
-    val pfKey = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
     try {
       edges.count()
-      val prevPf = sess.conf.get(pfKey, "true")
-      sess.conf.set(pfKey, "false")
-      try {
+      sess.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst",
+        "false")
       var labels = edges.groupBy(col("src"))
         .agg(least(col("src"), min(col("dst"))).as("cluster_id"))
         .select(col("src").as("id"), col("cluster_id"))
@@ -1427,8 +1443,7 @@ object Dedup {
         // retries can only OVER-count an accumulator, and over-count
         // merely schedules one more (no-op) round — never a premature
         // stop — so the fold is convergence-safe.
-        val acc = pairs.sparkSession.sparkContext.longAccumulator(
-          s"graft.cc.changed.$iter")
+        val acc = sess.sparkContext.longAccumulator(s"graft.cc.changed.$iter")
         val improvedAt = nextPlan.schema.fieldNames.length
         val enc = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
           org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(nextPlan.schema))
@@ -1454,8 +1469,7 @@ object Dedup {
           s"duplicateClusters did not converge in $maxIters rounds " +
             s"($changed labels still improving) — raise maxIters; near-dup " +
             "components are normally shallow, so this signals pathological input")
-      labels
-      } finally sess.conf.set(pfKey, prevPf)
+      SessionBridge.rehome(pairs.sparkSession, labels)
     } finally edges.unpersist()
   }
 
@@ -2609,11 +2623,9 @@ object Dedup {
     val bits = resolvedNumBits(df, numBits, bands)
     embeddingSignatures(df, idCol, vecCol, bits, bands, seed)
       .write.mode("overwrite").parquet(s"$path/signatures")
-    val spark = df.sparkSession
-    import spark.implicits._
-    Seq((bits, bands, seed)).toDF("num_bits", "bands", "seed")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
-    loadEmbeddingSignatures(spark, path)
+    Layout.writeMeta(df.sparkSession, path, (bits, bands, seed),
+      "num_bits", "bands", "seed")
+    loadEmbeddingSignatures(df.sparkSession, path)
   }
 
   /** Load a [[saveEmbeddingSignatures]]-persisted store: meta eagerly
@@ -2621,12 +2633,9 @@ object Dedup {
     * at banding time). */
   def loadEmbeddingSignatures(spark: org.apache.spark.sql.SparkSession,
       path: String): EmbeddingSignatureStore = {
-    val m = spark.read.parquet(s"$path/meta").collect()
-    require(m.length == 1,
-      s"signature store meta at $path/meta must be one row, got ${m.length}")
+    val m = Layout.readMeta(spark, path)
     EmbeddingSignatureStore(spark.read.parquet(s"$path/signatures"),
-      m(0).getAs[Int]("num_bits"), m(0).getAs[Int]("bands"),
-      m(0).getAs[Long]("seed"))
+      m.getAs[Int]("num_bits"), m.getAs[Int]("bands"), m.getAs[Long]("seed"))
   }
 
   /** Fold a day's ADMITTED batch into a persisted embedding signature
@@ -2660,11 +2669,8 @@ object Dedup {
   def compactEmbeddingSignatures(spark: org.apache.spark.sql.SparkSession,
       path: String, outPath: String,
       targetFileBytes: Long = 128L << 20): EmbeddingSignatureStore = {
-    Layout.requireFreshRoot(spark, path, outPath)
-    Layout.compact(spark, s"$path/signatures", s"$outPath/signatures",
-      targetFileBytes)
-    spark.read.parquet(s"$path/meta").repartition(1)
-      .write.mode("overwrite").parquet(s"$outPath/meta")
+    Layout.rewriteStore(spark, path, outPath, "signatures")(
+      Layout.compact(spark, _, _, targetFileBytes))
     loadEmbeddingSignatures(spark, outPath)
   }
 
@@ -2735,58 +2741,19 @@ object Dedup {
         require(numBits > 64,
           s"packed probe (numBits=$numBits) against a WIDE (array<long>) " +
             "store — rebuild the store or pass the width it was written with")
-        corpusSigs.select(size(col("sig")).as("w")).limit(1).collect()
-          .headOption.foreach { row =>
-            require(row.getInt(0) == bands,
-              s"wide store carries ${row.getInt(0)} band signatures != " +
-                s"bands $bands — rebuild the store or pass the banding it " +
-                "was written with")
-          }
+        storedWidth(corpusSigs).foreach(w => require(w == bands,
+          s"wide store carries $w band signatures != bands $bands — " +
+            "rebuild the store or pass the banding it was written with"))
       case other => throw new IllegalArgumentException(
         s"signature store 'sig' column must be long or array<long>, got $other")
     }
-    // the delta is bounded (a day's intake): checkpoint once — it
-    // feeds its own banding, the batch-internal pairs, and two
-    // vector rejoins
-    val batchSig = Parallelism.ensure(batch)
-      .select(col(idCol).as("id"), col(vecCol).as("vec"),
-        lshSignature(col(vecCol), numBits, bands, seed).as("sig"))
-      .localCheckpoint(true)
-    val batchBanded = lshBandChunks(
-      batchSig.select(col("id"), col("sig")), numBits, bands)
-    val corpusBanded = lshBandChunks(
-      corpusSigs.select(col("id"), col("sig")), numBits, bands)
-    val bAside = batchBanded.select(
-      col("band"), col("chunk"), col("id").as("batch_id"))
-    // batch × corpus candidates (orientation fixed: batch on the
-    // left); batch_id == dup_id KEPT — the revision check
-    val bc = bAside.hint("shuffle_hash")
-      .join(corpusBanded.select(col("band"), col("chunk"),
-        col("id").as("dup_id")).hint("shuffle_hash"), Seq("band", "chunk"))
-      .select(col("batch_id"), col("dup_id")).distinct()
-      .withColumn("dup_in", lit("corpus"))
-    // batch-internal candidates (each unordered pair once)
-    val bb = bAside.hint("shuffle_hash")
-      .join(batchBanded.select(col("band"), col("chunk"),
-        col("id").as("dup_id")).hint("shuffle_hash"), Seq("band", "chunk"))
-      .filter(col("batch_id") < col("dup_id"))
-      .select(col("batch_id"), col("dup_id")).distinct()
-      .withColumn("dup_in", lit("batch"))
-    // vec_b resolves per PROVENANCE (the minhash rule: a single union
-    // lookup would fan out and mis-verify any id present on both sides)
-    def verified(cand: DataFrame, bSide: DataFrame): DataFrame = cand
-      .hint("shuffle_hash")
-      .join(batchSig.select(col("id").as("batch_id"), col("vec").as("vec_a"))
-        .hint("shuffle_hash"), "batch_id")
-      .join(bSide.hint("shuffle_hash"), "dup_id")
-      .withColumn("cosine",
-        round(VectorMath.cosineSimilarity(col("vec_a"), col("vec_b")), 4))
-      .filter(col("cosine") >= threshold)
-      .select(col("batch_id"), col("dup_id"), col("cosine"), col("dup_in"))
-    verified(bc, corpusVecs.select(col(idCol).as("dup_id"),
-        col(vecCol).as("vec_b")))
-      .unionByName(verified(bb,
-        batchSig.select(col("id").as("dup_id"), col("vec").as("vec_b"))))
+    bandedIncrementalProbe(
+      Parallelism.ensure(batch).select(col(idCol).as("id"), col(vecCol).as("vec"),
+        lshSignature(col(vecCol), numBits, bands, seed).as("sig")),
+      corpusSigs, lshBandChunks(_, numBits, bands), "chunk", "vec",
+      corpusVecs.select(col(idCol).as("dup_id"), col(vecCol).as("vec_b")),
+      "cosine", threshold)(_.withColumn("cosine",
+        round(VectorMath.cosineSimilarity(col("vec_a"), col("vec_b")), 4)))
   }
 
   /** [[incrementalEmbeddingNearDuplicates]] against a store HANDLE:

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Data-layout operators: how rows are ARRANGED across files decides
@@ -35,7 +35,7 @@ object Layout {
     * direction): it resolves `..` segments and symlinks, which
     * Hadoop Path normalization does not. */
   private[graft] def requireFreshRoot(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       inDir: String, outDir: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     def q(d: String) = {
@@ -51,6 +51,41 @@ object Layout {
       s"rewrite must target a fresh directory (blue/green): '$outDir' " +
         s"resolves to the same location as '$inDir' and an in-place " +
         "rewrite would overwrite the files it is reading")
+  }
+
+  /** Write a persisted store's one-row `meta` sidecar under `path`:
+    * the sizing parameters (`names`, in `row`'s order) a store was
+    * WRITTEN with, so every later load, append and probe resolves
+    * them from the store instead of from its caller. */
+  private[graft] def writeMeta[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      spark: SparkSession, path: String, row: T, names: String*): Unit =
+    spark.createDataFrame(Seq(row)).toDF(names: _*)
+      .repartition(1).write.mode("overwrite").parquet(s"$path/meta")
+
+  /** Read a store's [[writeMeta]] sidecar — eagerly, and loudly: a
+    * sidecar with zero or several rows (a partial or mixed write)
+    * would size every later probe from an arbitrary or missing row. */
+  private[graft] def readMeta(spark: SparkSession, path: String): Row = {
+    val m = spark.read.parquet(s"$path/meta").collect()
+    require(m.length == 1,
+      s"store meta at $path/meta must be one row, got ${m.length}")
+    m(0)
+  }
+
+  /** The blue/green rewrite every persisted store's compaction and
+    * erasure share: refuse an in-place target ([[requireFreshRoot]]),
+    * `rewrite` the store's `data` tree from `path/data` into
+    * `outPath/data`, then copy the `sidecar` tree (the one-row meta,
+    * the IVF centroids) verbatim — a rewrite never re-sizes or
+    * re-centres; that is a rebuild. The caller reloads its handle from
+    * `outPath`. */
+  private[graft] def rewriteStore(spark: SparkSession, path: String,
+      outPath: String, data: String, sidecar: Option[String] = Some("meta"))(
+      rewrite: (String, String) => Unit): Unit = {
+    requireFreshRoot(spark, path, outPath)
+    rewrite(s"$path/$data", s"$outPath/$data")
+    sidecar.foreach(s => spark.read.parquet(s"$path/$s").repartition(1)
+      .write.mode("overwrite").parquet(s"$outPath/$s"))
   }
 
   /** Morton (Z-curve) value: interleaves the low `bits` bits of each
@@ -109,7 +144,7 @@ object Layout {
     * is one round-robin repartition + write. Returns the output file
     * count. Idempotent: re-compacting compacted output is a no-op
     * rewrite to the same count. */
-  def compact(spark: org.apache.spark.sql.SparkSession, inDir: String,
+  def compact(spark: SparkSession, inDir: String,
       outDir: String, targetFileBytes: Long = 128L << 20): Int = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     // blue/green only (r19, the store-compaction rule)
@@ -142,7 +177,7 @@ object Layout {
     * size — no target-size knob can split within a value; a store
     * whose single partition outgrows a task is a re-layout decision
     * (finer partition key), not a compaction one. */
-  def compactPartitioned(spark: org.apache.spark.sql.SparkSession,
+  def compactPartitioned(spark: SparkSession,
       inDir: String, outDir: String, partitionCols: Seq[String]): Unit = {
     require(partitionCols.nonEmpty, "partitionCols must be non-empty")
     requireFreshRoot(spark, inDir, outDir)
@@ -156,7 +191,7 @@ object Layout {
     * compaction-cadence decision starts from (no Spark job). Hidden
     * files (`_` and `.` prefixes — commit markers, local-FS CRC
     * sidecars) are excluded, matching what a Spark scan lists. */
-  def dataFileCount(spark: org.apache.spark.sql.SparkSession,
+  def dataFileCount(spark: SparkSession,
       dir: String): Int = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -206,7 +241,7 @@ object Layout {
     * tree in) by hand. A foreachBatch REPLAY after a completed swap
     * re-probes the compacted tree, which answers identically
     * (compaction is row-identity — OpsSpec). */
-  def swapCompacted(spark: org.apache.spark.sql.SparkSession,
+  def swapCompacted(spark: SparkSession,
       livePath: String, compactedPath: String): Unit = {
     requireFreshRoot(spark, livePath, compactedPath)
     val conf = spark.sparkContext.hadoopConfiguration

@@ -131,21 +131,23 @@ object Privacy {
       outPath: String, subjects: DataFrame, subjectIdCol: String,
       remainingCorpus: DataFrame, idCol: String,
       textCol: String): Dedup.DigestStore = {
-    Layout.requireFreshRoot(spark, path, outPath)
-    val ledger = Dedup.loadDigestStore(spark, path).digests
-    val subj = subjects.select(col(subjectIdCol).as("keeper_id")).distinct()
-    val retained = ledger.join(subj, Seq("keeper_id"), "left_anti")
-    val affected = ledger.join(subj, Seq("keeper_id"), "leftsemi")
-      .select(col("content_hash"))
-    val reElected = erase(remainingCorpus, idCol, subjects, subjectIdCol)
-      .select(md5(col(textCol)).as("content_hash"),
-        col(idCol).as("keeper_id"))
-      .join(affected, Seq("content_hash"), "leftsemi")
-      .groupBy(col("content_hash"))
-      .agg(min(col("keeper_id")).as("keeper_id"))
-    retained.select(col("content_hash"), col("keeper_id"))
-      .unionByName(reElected)
-      .write.mode("overwrite").parquet(s"$outPath/digests")
+    Layout.rewriteStore(spark, path, outPath, "digests", sidecar = None) {
+      (in, out) =>
+        val ledger = spark.read.parquet(in)
+        val subj = subjects.select(col(subjectIdCol).as("keeper_id")).distinct()
+        val retained = ledger.join(subj, Seq("keeper_id"), "left_anti")
+        val affected = ledger.join(subj, Seq("keeper_id"), "leftsemi")
+          .select(col("content_hash"))
+        val reElected = erase(remainingCorpus, idCol, subjects, subjectIdCol)
+          .select(md5(col(textCol)).as("content_hash"),
+            col(idCol).as("keeper_id"))
+          .join(affected, Seq("content_hash"), "leftsemi")
+          .groupBy(col("content_hash"))
+          .agg(min(col("keeper_id")).as("keeper_id"))
+        retained.select(col("content_hash"), col("keeper_id"))
+          .unionByName(reElected)
+          .write.mode("overwrite").parquet(out)
+    }
     Dedup.loadDigestStore(spark, outPath)
   }
 
@@ -171,16 +173,12 @@ object Privacy {
 
   /** Shared signature-tree rewrite: both sketch stores are
     * (signatures keyed by `id`, one-row meta) — drop subject rows,
-    * carry meta verbatim. */
+    * carry meta verbatim ([[Layout.rewriteStore]]). */
   private def eraseSignatureTree(spark: SparkSession, path: String,
-      outPath: String, subjects: DataFrame, subjectIdCol: String): Unit = {
-    Layout.requireFreshRoot(spark, path, outPath)
-    erase(spark.read.parquet(s"$path/signatures"), "id",
-        subjects, subjectIdCol)
-      .write.mode("overwrite").parquet(s"$outPath/signatures")
-    spark.read.parquet(s"$path/meta").repartition(1)
-      .write.mode("overwrite").parquet(s"$outPath/meta")
-  }
+      outPath: String, subjects: DataFrame, subjectIdCol: String): Unit =
+    Layout.rewriteStore(spark, path, outPath, "signatures")((in, out) =>
+      erase(spark.read.parquet(in), "id", subjects, subjectIdCol)
+        .write.mode("overwrite").parquet(out))
 
   /** Per-STORE erasure audit — [[erasureAudit]] fanned across every
     * store root a family maintains: one (store, subject_id,

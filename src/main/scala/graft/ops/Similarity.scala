@@ -300,11 +300,9 @@ object Similarity {
     * (OpsSpec + the x208 `ivf_compact` section pin it). */
   def compactIvfIndex(spark: SparkSession, path: String, outPath: String,
       idCol: String, vecCol: String): IvfIndex = {
-    Layout.requireFreshRoot(spark, path, outPath)
-    Layout.compactPartitioned(spark, s"$path/assignments",
-      s"$outPath/assignments", Seq("cluster"))
-    spark.read.parquet(s"$path/centroids").repartition(1)
-      .write.mode("overwrite").parquet(s"$outPath/centroids")
+    Layout.rewriteStore(spark, path, outPath, "assignments",
+        sidecar = Some("centroids"))(
+      Layout.compactPartitioned(spark, _, _, Seq("cluster")))
     loadIvfIndex(spark, outPath, idCol, vecCol)
   }
 
@@ -689,15 +687,7 @@ object Similarity {
     }
   }
 
-  /** Per-label centroids of an embedding column: posexplode to
-    * (label, dim, value), two-phase avg per (label, dim), regroup into
-    * ordered arrays. Shuffle volume = rows × dims scalars — fine for
-    * moderate dims; a TypedImperativeAggregate buffer is the upgrade
-    * path for very wide vectors. */
-  def centroids(df: DataFrame, labelCol: String, vecCol: String): DataFrame =
-    centroidsTyped(df, labelCol, vecCol)
-
-  /** Centroids via the native typed [[graft.functions.VectorAvg]]
+  /** Per-label centroids via the native typed [[graft.functions.VectorAvg]]
     * aggregator: the buffer is one (sums, count) per group per
     * partition, so the shuffle carries |groups| × dims doubles — the
     * scale-correct plan. */

@@ -181,7 +181,7 @@ object Extensions extends QueryModule {
 
   /** Per-label embedding centroids via the typed VectorAvg
     * aggregator, emitted as SCALAR (label, pos, mean) rows: the
-    * array-returning API ([[Similarity.centroids]]) stays, but a
+    * array-returning API ([[Similarity.centroidsTyped]]) stays, but a
     * generic row-compare harness can't sort/hash array cells, so the
     * registered query posexplodes — 1-based pos to match DuckDB's
     * generate_subscripts. */
@@ -287,30 +287,26 @@ object Extensions extends QueryModule {
       ORDER BY hour_start, event_type"""))
 
   /** FileStreamSource needs a directory; testdata ships one file per
-    * table — stage a per-sfDir copy once. */
-  private val streamDirs = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * table — stage a copy once per (prefix, sfDir). */
+  private val streamDirs =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
-  /** Stage `srcFiles` from `sfDir` into a fresh temp dir registered
-    * for JVM-exit deletion (dir registered BEFORE its files:
-    * deleteOnExit runs in reverse registration order, so files go
-    * first, then the emptied dir) — per-sfDir staging dirs must not
-    * accumulate for the machine lifetime. */
+  /** Stage `srcFiles` (source name -> staged name) from `sfDir` into a
+    * [[graft.TempDirs.createCleaned]] dir, whose whole tree is removed
+    * at JVM exit — per-sfDir staging dirs must not accumulate for the
+    * machine lifetime. One dir per (prefix, sfDir). */
   private def stagedStreamDir(prefix: String, sfDir: String,
-      srcFiles: (String, String)*): String = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    dir.toFile.deleteOnExit()
-    srcFiles.foreach { case (src, dst) =>
-      val staged = dir.resolve(dst)
-      staged.toFile.deleteOnExit()
-      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/$src"), staged)
-    }
-    dir.toString
-  }
+      srcFiles: (String, String)*): String =
+    streamDirs.computeIfAbsent((prefix, sfDir), _ => {
+      val dir = graft.TempDirs.createCleaned(prefix)
+      srcFiles.foreach { case (src, dst) => java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$sfDir/$src"), java.nio.file.Paths.get(dir, dst)) }
+      dir
+    })
 
   private def streamSrcDir(sfDir: String): String =
-    streamDirs.computeIfAbsent(sfDir,
-      stagedStreamDir("graft_stream_src", _,
-        "events.parquet" -> "events.parquet"))
+    stagedStreamDir("graft_stream_src", sfDir,
+      "events.parquet" -> "events.parquet")
 
   /** A completed memory-sink stream: the settled table PLUS its sink
     * temp-view name, so eviction and race losers can actually drop
@@ -2292,18 +2288,6 @@ object Extensions extends QueryModule {
       SELECT id AS doc_id, round(rank, 9) AS rank
       FROM r5 ORDER BY doc_id"""))
 
-  /** Replayed-ingest fixture for x79: the SAME events file staged
-    * twice — the crashed-and-rerun loader / re-crawled shard shape.
-    * Separate from [[streamSrcDir]] so x16/x72 keep their
-    * single-copy semantics. */
-  private val replayStreamDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def replayStreamSrcDir(sfDir: String): String =
-    replayStreamDirs.computeIfAbsent(sfDir,
-      stagedStreamDir("graft_stream_replay", _,
-        "events.parquet" -> "events.parquet",
-        "events.parquet" -> "events_replay.parquet"))
-
   private val x79Results = streamMemo("x79-stream")
 
   /** Streaming exact dedup
@@ -2319,8 +2303,13 @@ object Extensions extends QueryModule {
     (s, dir) => {
       settledStream(x79Results, s, dir, "x79_dedup") {
         graft.streaming.EventStreams.dedupWithinWatermark(
-          graft.streaming.EventStreams.fromParquetDir(
-            s, replayStreamSrcDir(dir)),
+          // the SAME events file staged twice — the crashed-and-rerun
+          // loader / re-crawled shard shape; its own dir so x16/x72
+          // keep their single-copy semantics
+          graft.streaming.EventStreams.fromParquetDir(s,
+            stagedStreamDir("graft_stream_replay", dir,
+              "events.parquet" -> "events.parquet",
+              "events.parquet" -> "events_replay.parquet")),
           Seq("event_id"))
       }.select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"), col("props"))
@@ -2969,12 +2958,6 @@ object Extensions extends QueryModule {
       ORDER BY lang, doc_id"""))
 
   private val x103Results = streamMemo("x103-stream")
-  private val docStreamDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def docStreamSrcDir(sfDir: String): String =
-    docStreamDirs.computeIfAbsent(sfDir,
-      stagedStreamDir("graft_docstream_src", _,
-        "documents.parquet" -> "documents.parquet"))
 
   /** Streaming ingest-side curation: documents arrive as files, each
     * micro-batch scores ([[graft.ops.TextAnalysis.qualityScore]]),
@@ -2989,8 +2972,9 @@ object Extensions extends QueryModule {
     "x103_streaming_curation",
     (s, dir) => {
       settledStream(x103Results, s, dir, "x103_curation") {
-        val stream = graft.streaming.EventStreams.docsFromParquetDir(
-          s, docStreamSrcDir(dir))
+        val stream = graft.streaming.EventStreams.docsFromParquetDir(s,
+          stagedStreamDir("graft_docstream_src", dir,
+            "documents.parquet" -> "documents.parquet"))
         TextAnalysis.qualityScore(stream)
           // 0.66 ≈ the test corpus's median score — the gate BINDS
           // (scores cluster 0.62-0.83 here; a real corpus keeps the

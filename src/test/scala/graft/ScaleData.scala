@@ -36,7 +36,7 @@ import org.apache.spark.sql.functions._
   * with the rewritten text, so the corpus-quality gate is green on
   * the derived corpus too.
   *
-  * Usage: sbt "runMain graft.ScaleData [srcDir] [outDir] [factor]"
+  * Usage: sbt "Test/runMain graft.ScaleData [srcDir] [outDir] [factor]"
   * Default: /root/testdata/sf0.1 -> /tmp/graft_scale/x10 at 10×.
   */
 object ScaleData {

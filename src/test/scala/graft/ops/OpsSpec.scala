@@ -441,6 +441,40 @@ class OpsSpec extends AnyFunSuite {
     assert(hits(esC) == hits(es) && hits(esC) == Set((20L, 1L), (20L, 10L)))
   }
 
+  test("store meta sidecar: zero or two rows fail loudly and name the path") {
+    // every store with sizing parameters reads its one-row meta through
+    // Layout.readMeta; a partial (empty) or mixed (two-row) sidecar
+    // must refuse the load, never size probes from an arbitrary row
+    val corpus = Seq((1L, "the quick brown fox"), (2L, "a database engine"))
+      .toDF("doc_id", "text")
+    val emb = Seq((1L, Array(1.0f, 0.0f)), (2L, Array(0.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    val stores: Seq[(String, (String => Any, String => Any))] = Seq(
+      "minhash" -> ((d: String) => Dedup.saveMinhashSignatures(corpus,
+          "doc_id", "text", d, numHashes = 32),
+        (d: String) => Dedup.loadMinhashSignatures(spark, d)),
+      "embedding" -> ((d: String) => Dedup.saveEmbeddingSignatures(emb,
+          "vec_id", "embedding", d, numBits = 16, bands = 4),
+        (d: String) => Dedup.loadEmbeddingSignatures(spark, d)),
+      "logreg" -> ((d: String) => Classifier.saveLogRegModel(
+          Classifier.LogRegModel(Seq((0, 0.5)).toDF("b", "w"), 4, 0.5, 1), d),
+        (d: String) => Classifier.loadLogRegModel(spark, d)))
+    for ((name, (save, load)) <- stores; rows <- Seq(0, 2)) {
+      val dir = graft.TempDirs.createCleaned(s"meta_${name}_$rows")
+      save(dir)
+      val meta = spark.read.parquet(s"$dir/meta").collect().toSeq
+      val bad = Seq.fill(rows)(meta.head)
+      spark.createDataFrame(java.util.Arrays.asList(bad: _*),
+          spark.read.parquet(s"$dir/meta").schema)
+        .write.mode("overwrite").parquet(s"$dir/meta_bad")
+      spark.read.parquet(s"$dir/meta_bad").write.mode("overwrite")
+        .parquet(s"$dir/meta")
+      val e = intercept[IllegalArgumentException](load(dir))
+      assert(e.getMessage.contains(s"$dir/meta") &&
+        e.getMessage.contains(s"got $rows"), s"$name/$rows: ${e.getMessage}")
+    }
+  }
+
   test("incrementalVerifiedTextDuplicates: exact jaccard through the store, per-provenance") {
     // corpus: 1 and 3 exact dups, 2 near-dup of 1, 4 unrelated
     val corpus = Seq(
@@ -2222,6 +2256,29 @@ class OpsSpec extends AnyFunSuite {
     val ok = Dedup.duplicateClusters(longChain, "id_a", "id_b", maxIters = 10)
       .as[(Long, Long)].collect().toMap
     assert(ok.size == 200 && ok.values.toSet == Set(1L))
+  }
+
+  test("duplicate clusters: the caller's session conf is untouched, labels unchanged") {
+    // the loop coalesces rounds with parallelismFirst=false on a clone
+    // of the caller's session; the caller's own conf must read the
+    // same before and after, whatever it had set
+    val key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+    // a fresh pair list per case (offset ids): the label memo would
+    // otherwise answer the second call without running the loop
+    for ((set, off) <- Seq((None, 0L), (Some("true"), 100L))) {
+      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L))
+        .map { case (a, b) => (a + off, b + off) }.toDF("id_a", "id_b")
+      set.foreach(spark.conf.set(key, _))
+      try {
+        val before = spark.conf.getAll
+        val got = Dedup.duplicateClusters(pairs, "id_a", "id_b")
+        assert(spark.conf.getAll == before, s"conf moved with $key=$set")
+        assert(got.sparkSession eq spark, "labels belong to the caller's session")
+        assert(got.as[(Long, Long)].collect().toMap == Map(1L -> 1L, 2L -> 1L,
+          3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L)
+          .map { case (i, c) => (i + off, c + off) })
+      } finally spark.conf.unset(key)
+    }
   }
 
   test("sampling strata ceiling: row-scoped stratum column fails loudly, not with a driver OOM") {
