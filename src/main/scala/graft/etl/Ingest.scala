@@ -43,29 +43,6 @@ object Ingest {
     normalizeLower(
       spark.read.option("header", "true").csv(s"$inputDir/covids/*.csv.gz"))
 
-  /** Schema-evolution read: parquet snapshots written over time gain
-    * columns (a crawler adds a field; an enrichment lands). With
-    * `mergeSchema` the scan unions every file footer's schema —
-    * missing columns surface as NULLs per file, types must agree
-    * per column name (a true conflict fails loudly, correctly).
-    * Spark's default (first-footer schema) would silently DROP the
-    * new columns from old-reader queries; evolution must be opt-in
-    * per read because footer-merging lists every file's metadata. */
-  def readEvolvedParquet(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(dir)
-
-  /** S3+: ORC interchange — the second columnar format Spark ships
-    * natively (vectorized reader, predicate pushdown, column pruning:
-    * the same scan properties the parquet path relies on). Completes
-    * the format matrix for pipelines whose upstream warehouse
-    * (Hive/Trino) emits ORC instead of parquet. */
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").orc(path)
-
-  /** ORC scan — schema from file footers, splittable stripes. */
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
   /** All four staging tables, registered as temp views under the
     * reference's names (S4) so `spark.sql` parity queries also run. */
   def stageAll(spark: SparkSession, inputDir: String): Staging = {

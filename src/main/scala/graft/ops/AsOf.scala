@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * partition keys, then a linear in-partition sort+scan — the same
   * cost class as a sort-merge join, with no range-explosion. Skewed
   * keys behave like any window: AQE handles moderate skew; extreme
-  * skew calls for pre-salting the key (see [[Skew.saltedJoin]]).
+  * skew calls for pre-salting the key (see [[Skew.keySkewStats]]).
   * `partitionKeys` must be non-empty for distributed execution — an
   * empty key set degenerates to a single-partition window (correct,
   * but serialized; callers get a loud require instead).

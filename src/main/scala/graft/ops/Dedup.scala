@@ -329,7 +329,7 @@ object Dedup {
     * Scale shape: the store-side banding is a map-only projection
     * over the signature parquet; the bucket join is shuffle-hash on
     * (band, bucket) — write the store bucketed by those keys
-    * (etl/Bucketing.scala) and the corpus side of the join is
+    * (Spark's `bucketBy`) and the corpus side of the join is
     * co-located, leaving ONE shuffle of the (tiny) banded batch.
     * Broadcasting the batch's bucket keys for a semi-join prune is
     * deliberately NOT done here: at 10⁶ batch docs × bands that key
@@ -1248,45 +1248,8 @@ object Dedup {
   case class EvalBloomFilter(bytes: Option[Array[Byte]], k: Int,
       window: Int, maxEvalDocFreq: Int, fpp: Double)
 
-  /** Build the eval-side filter as a first-class value — the
-    * persistable form of [[bloomDecontaminate]]'s internal build
-    * (same winnowing, stop-cap and distributed `stat.bloomFilter`
-    * aggregate), for the build-once / reuse-across-daily-batches
-    * pattern: [[saveEvalBloomFilter]] it after the eval suite is
-    * frozen, then each day's intake is ONE map-only
-    * [[bloomDecontaminateWith]] pass with no eval-side jobs at
-    * all — the x49 incremental story for decontamination. */
-  def buildEvalBloomFilter(eval: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, window: Int = 4, maxEvalDocFreq: Int = 20,
-      fpp: Double = 0.01): EvalBloomFilter =
-    EvalBloomFilter(
-      buildEvalBloom(eval, idCol, textCol, k, window, maxEvalDocFreq, fpp),
-      k, window, maxEvalDocFreq, fpp)
-
-  /** Persist a built [[EvalBloomFilter]] as one-row parquet (bytes +
-    * params — ~10 bits per eval fingerprint, a few MB for real eval
-    * suites). The [[saveIvfIndex]] pattern. */
-  def saveEvalBloomFilter(bloom: EvalBloomFilter, spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    import spark.implicits._
-    Seq((bloom.bytes, bloom.k, bloom.window, bloom.maxEvalDocFreq,
-        bloom.fpp))
-      .toDF("bytes", "k", "window", "max_eval_doc_freq", "fpp")
-      .repartition(1).write.mode("overwrite").parquet(path)
-  }
-
-  /** Load a [[saveEvalBloomFilter]]-persisted filter (one driver-side
-    * row; params travel with the bytes). */
-  def loadEvalBloomFilter(spark: org.apache.spark.sql.SparkSession,
-      path: String): EvalBloomFilter = {
-    val r = spark.read.parquet(path).head()
-    EvalBloomFilter(Option(r.getAs[Array[Byte]]("bytes")),
-      r.getAs[Int]("k"), r.getAs[Int]("window"),
-      r.getAs[Int]("max_eval_doc_freq"), r.getAs[Double]("fpp"))
-  }
-
-  /** Train-side decontamination pass against a pre-built (possibly
-    * [[loadEvalBloomFilter]]-loaded) filter: one codegen'd
+  /** Train-side decontamination pass against a pre-built filter
+    * (the one [[bloomDecontaminate]] memoizes): one codegen'd
     * projection per row — winnowing runs once with the FILTER'S OWN
     * sketch params, the membership test folds over the in-row
     * fingerprint array, the filter rides the plan as a binary
@@ -2250,21 +2213,6 @@ object Dedup {
     df.join(flagged.hint("shuffle_hash"), Seq(idCol), "left_anti")
   }
 
-  /** [[dedupByAnchorProfile]] behind the x46 `text_ascii_only` gate
-    * (r12 verdict #5 — gate ORDER made structural): the gate's one
-    * aggregate scan runs EAGERLY at call time, so a non-ASCII corpus
-    * fails the NAMED corpus check before a single anchor window is
-    * hashed. The production entry point for untrusted corpora; the
-    * x199 carrier stays ungated because the driver's corpus is
-    * x46-verified every round (and a bench row must not pay the gate
-    * scan twice). */
-  def dedupByAnchorProfileGated(df: DataFrame, idCol: String,
-      textCol: String, n: Int = 40, window: Int = 8,
-      mod: Int = 16): DataFrame = {
-    graft.quality.CorpusQuality.requireAsciiParity(df, textCol)
-    dedupByAnchorProfile(df, idCol, textCol, n, window, mod)
-  }
-
   /** Paragraph-level exact dedup across the corpus — the Dolma /
     * CCNet line-dedup granularity (Dolma: Soldaini et al. 2024,
     * arXiv:2402.00159 §4, paragraph dedup via Bloom filter; CCNet:
@@ -2611,7 +2559,7 @@ object Dedup {
 
   /** Persist a signature store for incremental embedding dedup:
     * signatures land as parquet (bucket the production copy by the
-    * banding keys — etl/Bucketing — when the store outgrows one
+    * banding keys with Spark's `bucketBy` when the store outgrows one
     * shuffle), and the (num_bits, bands, seed) meta rides alongside
     * as one small parquet — the [[graft.ops.Similarity.saveIvfIndex]]
     * sidecar shape. [[AutoBits]] resolves against THIS frame before

@@ -35,11 +35,4 @@ object Diff {
           .when(!(col("h_old") <=> col("h_new")), lit("changed"))
           .otherwise(lit("unchanged")).as("status"))
   }
-
-  /** Roll-up of [[corpusDiff]]: one row per status with its count. */
-  def corpusDiffSummary(oldDf: DataFrame, newDf: DataFrame,
-      idCol: String, textCol: String): DataFrame =
-    corpusDiff(oldDf, newDf, idCol, textCol)
-      .groupBy(col("status")).agg(count(lit(1)).as("n"))
-      .orderBy(col("status"))
 }

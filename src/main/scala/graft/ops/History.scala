@@ -1,18 +1,16 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Slowly-changing-dimension history and changeset application — the
-  * warehouse-maintenance operators the reference's append-only monthly
-  * reloads (spark_elt_emr.py:150-170's blind partition append) never
-  * needed, but any incremental 100 TB lakehouse does: turn a change
-  * log into SCD Type-2 validity intervals, and apply an
-  * upsert/delete changeset to a base snapshot (the MERGE INTO shape)
-  * without a table format.
+/** Slowly-changing-dimension history — the warehouse-maintenance
+  * operator the reference's append-only monthly reloads
+  * (spark_elt_emr.py:150-170's blind partition append) never needed,
+  * but any incremental 100 TB lakehouse does: turn a change log into
+  * SCD Type-2 validity intervals.
   *
-  * Scale notes: every operator here shuffles exactly once on the
+  * Scale notes: the operator shuffles exactly once on the
   * entity key; all windows share that partitioning (one exchange,
   * Catalyst reuses it across the lag/row_number/lead trio). State per
   * task is one entity's history — bounded by per-key cardinality, not
@@ -47,39 +45,5 @@ object History {
         when(col("valid_to").isNull, 1).otherwise(0).cast("int"))
       .select(col(keyCol), col("version"), col("valid_from"),
         col("valid_to"), col("is_current"), col(attrCol))
-  }
-
-  /** Apply an upsert/delete changeset to a base snapshot — MERGE INTO
-    * semantics without a table format. The latest change per key wins
-    * (`orderCol` descending, `tieCol` descending as the total
-    * tie-break); a winning change with `deleteCol = true` removes the
-    * key, any other change replaces the base row's `attrCols`, and
-    * change rows for unseen keys insert. Base rows with no change
-    * pass through untouched.
-    *
-    * Plan shape: one window shuffle on the changeset (small side — the
-    * delta, not the snapshot) and one outer equi-join on the key; the
-    * base table is scanned once and never window-sorted. At scale the
-    * changeset is typically ≪ base, so the join broadcasts or
-    * shuffle-hashes with the snapshot as the streamed side.
-    */
-  def applyChangeSet(base: DataFrame, changes: DataFrame, keyCol: String,
-      orderCol: String, tieCol: String, deleteCol: String,
-      attrCols: Seq[String]): DataFrame = {
-    val latest = changes
-      .withColumn("_rn", row_number().over(
-        Window.partitionBy(col(keyCol))
-          .orderBy(col(orderCol).desc, col(tieCol).desc)))
-      .filter(col("_rn") === 1)
-      .select((col(keyCol).as("_ck") +: col(deleteCol).cast("boolean").as("_del") +:
-        attrCols.map(c => col(c).as(s"_c_$c"))): _*)
-    val joined = base.join(latest, base(keyCol) === latest("_ck"), "full_outer")
-    val kept = joined.filter(col("_del").isNull || !col("_del"))
-    val out = attrCols.foldLeft(kept) { (df, c) =>
-      df.withColumn(c, when(col("_ck").isNotNull, col(s"_c_$c")).otherwise(df(c)))
-    }
-    out
-      .withColumn(keyCol, coalesce(base(keyCol), col("_ck")))
-      .select(keyCol, attrCols: _*)
   }
 }

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   *
   * Cost model: one range-partitioning shuffle + in-partition sort,
   * paid once at write time, amortized over every future pruned scan —
-  * the same economics as the engine's bucketing (etl/Bucketing.scala)
-  * but aimed at RANGE predicates instead of join co-location.
+  * the same economics as Spark's `bucketBy` layout, but aimed at
+  * RANGE predicates instead of join co-location.
   */
 object Layout {
 
@@ -207,26 +207,6 @@ object Layout {
     }
   }
 
-  /** The compaction-cadence RULE, as arithmetic (r19 verdict #4):
-    * compact when the tree's file count times the measured marginal
-    * per-file probe cost exceeds `maxFraction` of the per-batch wall
-    * the caller wants to protect. The marginal cost is
-    * MEASURED, not assumed: SCALE_REHEARSAL_r19_stream.json put it at
-    * ~1.2–2.2 ms/file locally (listing + one scan split per append
-    * file; re-measure on the production filesystem — object-store
-    * listing is slower). Equivalently, a fixed `compactEvery = N`
-    * batches holds per-batch wall flat when
-    * N ≈ maxFraction × batchWallMs / perFileMs (each batch appends
-    * one+ file per store tree) — the form the admission gates wire
-    * (their batch cadence is fixed, so the file count between
-    * compactions is too). */
-  def compactionDue(fileCount: Int, perFileMs: Double,
-      batchWallMs: Double, maxFraction: Double = 0.2): Boolean = {
-    require(perFileMs > 0 && batchWallMs > 0 && maxFraction > 0,
-      "compactionDue needs positive cost/wall/fraction")
-    fileCount * perFileMs > maxFraction * batchWallMs
-  }
-
   /** Swap a freshly-compacted tree into the live path — the pointer
     * swap that completes the blue/green lifecycle WITHOUT violating
     * the fresh-root rule: the rewrite already landed under
@@ -255,21 +235,5 @@ object Layout {
       s"swapCompacted: cannot move $compactedPath into $live " +
         s"(the previous tree is preserved at $old)")
     fs.delete(old, true)
-  }
-
-  /** Re-lays `df` out along the Z-curve of `colNames`: one range
-    * shuffle on the z-value (contiguous curve segments per
-    * partition → per-file min/max tight on EVERY participating
-    * column), then an in-partition sort so row groups inside each
-    * file stay tight too. Write the result with any sink; the z-value
-    * itself is dropped — it is a layout key, not data. */
-  def zorderBy(df: DataFrame, colNames: Seq[String], bits: Int = 21,
-      numPartitions: Option[Int] = None): DataFrame = {
-    val z = zValue(colNames.map(col), bits)
-    val ranged = numPartitions match {
-      case Some(n) => df.repartitionByRange(n, z)
-      case None    => df.repartitionByRange(z)
-    }
-    ranged.sortWithinPartitions(z)
   }
 }

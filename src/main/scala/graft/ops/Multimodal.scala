@@ -477,49 +477,6 @@ object Multimodal {
     }
   }
 
-  /** Resize for image rows — REAL pixels: decode via
-    * [[ImageCodec]], bilinear-scale to `targetWidth` (height keeps
-    * aspect), re-encode PNG, and write back the TRUE decoded
-    * dimensions into the metadata columns. Non-image rows and
-    * already-small images pass through untouched; undecodable image
-    * bytes fall back to the deterministic byte-subsample stub (task
-    * never fails on a corrupt blob). Output is again `MediaRow`, so
-    * resize composes with [[extractFeatures]] / [[sampleFrames]] in
-    * one pipeline. Same mapPartitions batch shape (per-partition
-    * scaler init). */
-  def resize(media: Dataset[MediaRow], targetWidth: Int): Dataset[MediaRow] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { rows =>
-      rows.map { r =>
-        val bytes0 = if (r.content == null) Array.empty[Byte] else r.content
-        if (r.kind != "image" || r.width <= targetWidth || bytes0.isEmpty) r
-        else ImageCodec.decode(bytes0) match {
-          case Some(img) if img.getWidth <= targetWidth =>
-            // recorded metadata overstated the decoded size — repair
-            // it from the pixels, keep the bytes
-            r.copy(width = img.getWidth, height = img.getHeight)
-          case Some(img) =>
-            val scaled = ImageCodec.resizeTo(img, targetWidth)
-            // re-encode is PNG whatever the input container was — the
-            // format column must stay truthful or downstream
-            // format-grouped stats report bytes that don't match
-            r.copy(format = "png",
-              width = scaled.getWidth, height = scaled.getHeight,
-              content = ImageCodec.encodePng(scaled))
-          case None =>
-            // undecodable: deterministic byte-subsample stand-in
-            val ratio = r.width.toDouble / targetWidth
-            val outLen = math.max(1, (bytes0.length / ratio).toInt)
-            val content = Array.tabulate(outLen)(
-              i => bytes0(math.min(bytes0.length - 1, (i * ratio).toInt)))
-            r.copy(width = targetWidth,
-              height = math.max(1, (r.height / ratio).toInt),
-              content = content)
-        }
-      }
-    }
-  }
-
   /** Frame sampling for video rows: explodes each video into ≤ n frame
     * rows (media_id, frame_idx, frame_bytes). MJPEG AVIs yield REAL
     * frames ([[VideoCodec]]): n evenly spaced JPEG payloads, each
@@ -678,16 +635,6 @@ object Multimodal {
         AudioCodec.encodeWav(samples, sampleRate))
     }
   }
-
-  /** Metadata-only projection — demonstrates that scalar metadata is
-    * readable with the binary column pruned away (check the plan's
-    * ReadSchema: no `content`). */
-  def metadataSummary(df: DataFrame): DataFrame =
-    df.groupBy(col("kind"), col("format"))
-      .agg(count(lit(1)).as("n"),
-        avg(col("width")).as("avg_width"),
-        avg(col("duration_ms")).as("avg_duration_ms"))
-      .orderBy(col("kind"), col("format"))
 
   /** Deterministic synthetic media table for tests/demos. Image rows
     * carry REAL PNGs (seeded pixel noise, encoded by the JDK writer),

@@ -83,17 +83,6 @@ object Packing {
         col("start_chunk"), col("end_chunk"))
   }
 
-  /** Chunk-level packing summary over an assignment table: how many
-    * docs start in each chunk and how many of the budgeted token
-    * slots the chunk's starting docs claim. One two-phase aggregate. */
-  def chunkSummary(assignments: DataFrame): DataFrame =
-    assignments
-      .select(col("start_chunk").as("chunk"), col("n_tokens"))
-      .groupBy(col("chunk"))
-      .agg(count(lit(1)).as("n_docs_starting"),
-        sum(col("n_tokens")).as("tokens_starting"))
-      .orderBy(col("chunk"))
-
   /** Sliding-window chunking with overlap — the long-document
     * SPLITTING op (RAG passage windows, context-limit handling),
     * complementing [[packedChunks]]' concatenation: each doc yields

@@ -20,12 +20,6 @@ object Privacy {
   private def cells(df: DataFrame, dims: Seq[Column]): DataFrame =
     df.groupBy(dims: _*).agg(count(lit(1)).as("n"))
 
-  /** The releasable aggregate: cells with population >= k. */
-  def releasableCells(df: DataFrame, dims: Seq[Column], k: Long): DataFrame = {
-    require(k >= 1, "k must be >= 1")
-    cells(df, dims).filter(col("n") >= k)
-  }
-
   /** Suppression accounting per `reportCol` (one of the release
     * dimensions): how many cells the release withholds and how many
     * underlying rows that hides — the table a data-release review

@@ -15,24 +15,10 @@ object Sampling {
   /** Ceiling on driver-resident per-stratum state (count maps,
     * threshold literals): strata are domains / languages / sources —
     * thousands in real mixes, never row-scoped. The operators that
-    * collect a per-stratum count enforce this so a high-cardinality
+    * hold a per-stratum map or count enforce this so a high-cardinality
     * stratum column (url, doc_id) fails loudly instead of OOMing the
     * driver — the Similarity train-collect contract (r7). */
   val MaxStrata: Int = 65536
-
-  /** Per-stratum counts with the cardinality gate: the aggregate is
-    * LIMITed to MaxStrata+1 rows BEFORE the collect, so the probe
-    * itself stays driver-safe no matter the true cardinality. */
-  private def boundedStratumCounts(df: DataFrame,
-      stratumCol: String): Array[org.apache.spark.sql.Row] = {
-    val rows = df.groupBy(col(stratumCol)).agg(count(lit(1)).as("__n"))
-      .limit(MaxStrata + 1).collect()
-    require(rows.length <= MaxStrata,
-      s"more than $MaxStrata distinct '$stratumCol' strata — stratum " +
-        "columns must be bounded (domain/language/source), not " +
-        "row-scoped (url/doc_id)")
-    rows
-  }
 
   /** Stratified sample: per-stratum keep-fractions via `sampleBy`
     * (seeded per-row Bernoulli). Strata absent from the map are
@@ -67,35 +53,8 @@ object Sampling {
   }
 
   /** Temperature-flattened source mixture (the multilingual /
-    * multi-domain re-weighting every pretraining mix uses): keep
-    * fraction per stratum ∝ n^(α−1), scaled so the rarest stratum
-    * keeps everything. α=1 → natural distribution (keep all),
-    * α=0 → equal kept counts per stratum (rarest size), 0<α<1 →
-    * partially flattened. Membership is [[stratifiedByHash]] —
-    * stable across relayout/re-ingestion.
-    *
-    * Scale shape: one two-phase count aggregate whose result is
-    * |strata| rows (driver-collected behind the [[MaxStrata]] gate —
-    * a row-scoped stratum column fails loudly, not with a driver
-    * OOM), then the map-only hash filter. */
-  def temperatureMixture(df: DataFrame, stratumCol: String, idCol: String,
-      alpha: Double, seed: Long = 42L): DataFrame = {
-    require(alpha >= 0.0 && alpha <= 1.0, "alpha must be in [0, 1]")
-    // null strata are dropped by stratifiedByHash's equality filter
-    // anyway — excluded here too, or the null-keyed count row would
-    // NPE the driver-side fraction map
-    val counts = boundedStratumCounts(
-      df.filter(col(stratumCol).isNotNull), stratumCol)
-      .map(r => r.get(0).toString -> r.getLong(1)).toMap
-    require(counts.nonEmpty, "no strata to mix")
-    val raw = counts.map { case (s, n) => s -> math.pow(n.toDouble, alpha - 1.0) }
-    val scale = 1.0 / raw.values.max
-    val fractions = raw.map { case (s, f) => s -> math.min(1.0, f * scale) }
-    stratifiedByHash(df, stratumCol, idCol, fractions, seed)
-  }
-
-  /** [[temperatureMixture]] with EXACT rational thresholds and an
-    * ANSI-replayable scramble — the hash-green variant: membership is
+    * multi-domain re-weighting every pretraining mix uses) with EXACT
+    * rational thresholds and an ANSI-replayable scramble: membership is
     * decidable in pure integer arithmetic on both engines, so a
     * DuckDB oracle replays it bit-for-bit (no `pow`, whose last-ulp
     * libm differences could flip a boundary row silently).
@@ -113,9 +72,9 @@ object Sampling {
     *
     * Scale shape: one two-phase count aggregate (|strata| rows,
     * broadcast back with the global min) — the corpus side is a
-    * map-only filter, never shuffled, and unlike [[temperatureMixture]]
-    * nothing is collected to the driver. Membership is a pure
-    * function of (id, stratum sizes): stable across relayout.
+    * map-only filter, never shuffled, and nothing is collected to the
+    * driver. Membership is a pure function of (id, stratum sizes):
+    * stable across relayout.
     * Requires a non-negative numeric id. */
   def replayableMixture(df: DataFrame, stratumCol: String, idCol: String,
       alphaHalf: Boolean = true): DataFrame = {
@@ -243,7 +202,7 @@ object Sampling {
   /** Cluster-balanced sample: cap each cluster's contribution at
     * `maxPerCluster` rows, keeping the lowest ids (deterministic —
     * no coin flips, so membership is stable by construction). The
-    * "diversify the mix" counterpart to [[temperatureMixture]]: feed
+    * "diversify the mix" counterpart to [[replayableMixture]]: feed
     * it [[Similarity.kmeansAssign]]'s output and over-dense embedding
     * clusters (boilerplate, templates) stop dominating the corpus.
     *
@@ -498,8 +457,8 @@ object Sampling {
     * with the stratum prepended to the key — rows bucket into
     * `parts` contiguous hash ranges per stratum, the
     * ≤ strata × parts (stratum, bucket) counts collect to the driver
-    * (BOUNDED: probed via limit and `require`d ≤ `maxStrata` strata,
-    * the boundedStratumCounts discipline), and the per-bucket windows
+    * (BOUNDED: probed via limit and `require`d ≤ `maxStrata` strata
+    * before the collect), and the per-bucket windows
     * sort at most |stratum|/parts rows each — NO stratum ever
     * funnels through a single task's sort, which a naive
     * `row_number() OVER (PARTITION BY stratum)` would force.

@@ -580,17 +580,6 @@ object Similarity {
         round(col("__cos"), 4).as("cosine"))
   }
 
-  /** Probe-all-shards single-query ANN: per-shard [[ivfTopK]] results
-    * merged by the SAME (rounded cosine DESC, id ASC) order the flat
-    * [[bruteForceTopK]] tail uses — shard-local top-k on a total
-    * order preserves the global top-k, so full probing is exact. */
-  def ivfShardedTopK(index: ShardedIvfIndex, query: Array[Float],
-      topK: Int = 10, nprobe: Int = 4): DataFrame =
-    index.shards.map(s => ivfTopK(s, query, topK, nprobe))
-      .reduce(_.unionByName(_))
-      .orderBy(col("cosine").desc, col(index.idCol).asc)
-      .limit(topK)
-
   /** IVF-PQ batch ANN (Jégou et al., TPAMI 2011, §IV): probe `nprobe`
     * clusters per query, score every member by ASYMMETRIC DISTANCE
     * over its m PQ codes, keep the best `refine` candidates, then

@@ -3,76 +3,20 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Skew mitigation for joins — the salting pattern for keys whose
-  * frequency distribution would otherwise funnel one join partition
-  * through a single task at scale.
-  *
-  * `saltedEquiJoin(big, small, key, saltFactor)`: the big (skewed)
-  * side gets a uniform random-free salt — derived from the caller's
-  * stable id column (`saltSourceCol`) when given, else from physical
-  * row position (see [[saltExpr]] for why NOT a whole-row hash); the
-  * small side is replicated `saltFactor` times so every salted key
-  * still finds its match. The join key becomes (key, salt), spreading
-  * each hot key over `saltFactor` partitions. Replication multiplies
-  * the small side by `saltFactor` — use for dimension-sized right
-  * sides (when the small side fits in a broadcast anyway, prefer
-  * `broadcast()`; salting is for the mid-size case where neither
-  * broadcast nor a plain shuffle behaves).
+/** Join-key skew diagnosis — measures whether a key's frequency
+  * distribution would funnel one join partition through a single task
+  * at scale.
   *
   * AQE's skew-join handling (`spark.sql.adaptive.skewJoin`) covers
-  * moderate skew automatically; explicit salting is the heavy hammer
-  * for the single-hot-key regimes (null-heavy foreign keys, celebrity
-  * entities) where even split partitions stay hot.
+  * moderate skew automatically; salting the key (a per-row salt on the
+  * big side, the small side replicated once per salt value) is the
+  * heavy hammer for the single-hot-key regimes (null-heavy foreign
+  * keys, celebrity entities) where even split partitions stay hot.
   */
 object Skew {
 
-  /** The big side's salt bucket. `saltSourceCol` (a caller-supplied
-    * stable per-row id) is the right derivation: deterministic
-    * across re-runs AND distinct on duplicate rows. Hashing the
-    * whole row is wrong twice over — duplicate rows (precisely the
-    * hot-key regime salting exists for) hash identically and
-    * collapse into ONE salt bucket, and at scale the hash evaluates
-    * over the full row width when one column suffices. Without an
-    * id column the fallback salts by physical position
-    * (spark_partition_id + monotonically_increasing_id): spreads
-    * everything including duplicates, at the price of layout
-    * determinism — a retried task may salt a row differently, which
-    * is harmless here (any bucket finds its replicated match). */
-  private[ops] def saltExpr(df: DataFrame, saltSourceCol: Option[String],
-      saltFactor: Int) =
-    pmod(saltSourceCol match {
-      case Some(c) => xxhash64(df(c))
-      case None => xxhash64(spark_partition_id(), monotonically_increasing_id())
-    }, lit(saltFactor)).cast("int")
-
-  def saltedEquiJoin(
-      big: DataFrame,
-      small: DataFrame,
-      key: String,
-      saltFactor: Int = 8,
-      joinType: String = "inner",
-      saltSourceCol: Option[String] = None): DataFrame = {
-    require(saltFactor >= 1, "saltFactor must be >= 1")
-    require(saltSourceCol.forall(c => big.columns.contains(c)),
-      s"saltSourceCol ${saltSourceCol.orNull} not a column of the big side")
-    // right/full outer would emit one copy of an unmatched small-side
-    // row PER SALT REPLICA — silently wrong, so refuse them
-    require(Set("inner", "left", "left_outer", "leftouter", "left_semi", "leftsemi",
-      "left_anti", "leftanti").contains(joinType.toLowerCase),
-      s"saltedEquiJoin replicates the small side; joinType '$joinType' would " +
-        "duplicate unmatched small-side rows (use inner/left/semi/anti)")
-    val bigSalted = big.withColumn("__salt",
-      saltExpr(big, saltSourceCol, saltFactor))
-    val saltValues = (0 until saltFactor).toArray
-    val smallReplicated = small
-      .withColumn("__salt", explode(lit(saltValues)))
-    bigSalted
-      .join(smallReplicated, Seq(key, "__salt"), joinType)
-      .drop("__salt")
-  }
-
   /** Join-key skew diagnosis — the measurement that decides between a
-    * plain shuffle, AQE's skew handling, and [[saltedEquiJoin]]: one
+    * plain shuffle, AQE's skew handling, and salting the key: one
     * row of distribution statistics over the key's per-value counts
     * (top-1 share, median and p99 key size, their ratio) plus the
     * salting verdict at `saltThreshold` (top-1 share ≥ threshold ⇒

@@ -39,15 +39,6 @@ object TextAnalysis {
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(tokens(text))
 
-  /** BPE-ish subword count: words + digit runs + punctuation runs
-    * counted separately (a cheap proxy for tokenizer load, the way
-    * pre-tokenizers split on category boundaries). */
-  def subwordCount(text: Column): Column =
-    size(filter(
-      split(lower(text),
-        "(?<=[a-z])(?=[0-9])|(?<=[0-9])(?=[a-z])|(?=[^a-z0-9])|(?<=[^a-z0-9])"),
-      t => length(trim(t)) > 0))
-
   /** Corpus vocabulary: the k most frequent tokens with counts — the
     * frequency table a tokenizer build (BPE seed vocab, stopword
     * discovery) starts from.
@@ -82,8 +73,8 @@ object TextAnalysis {
     * per doc — the corpus never shuffles its text. */
   def bigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // The gram build is the classic Generate trap, twice over:
-    // `explode(charShingles(text))` re-evaluates the array per output
-    // row, AND charShingles' lambda embeds the regexp_replace — which
+    // exploding a lambda-built shingle array re-evaluates the array
+    // per output row, AND the lambda embeds the regexp_replace — which
     // then re-runs over the whole document per element (measured 60 s
     // for what is a 2 s job). So: normalize once, materialize at an
     // exchange, explode the INDEX, and take each bigram with a
@@ -161,6 +152,30 @@ object TextAnalysis {
         col("mean_logprob"), col("ppl_bucket"))
   }
 
+  /** Whole-doc bucket array in ONE code-point pass: the hashed
+    * char-bigram bucket ((c1·31 + c2) mod B over the two code points,
+    * pure arithmetic so every consumer — [[importanceWeights]],
+    * [[graft.ops.Classifier]] — replays bit-identically in ANSI SQL)
+    * at every position (r21: the per-position
+    * `substr(s, i)` SEEKS on a UTF8String, making the exploded form
+    * O(len²) per doc — 40–55 s CPU at sf0.1 in the x97/x94 feature
+    * builds). BigramExprSpec pins array == the substr/ascii form.
+    * Callers materialize the array at an exchange before exploding
+    * (the minhashSignatures Generate rule). */
+  private[ops] def bigramBuckets(s: Column, numBuckets: Int): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    column(graft.functions.BigramBuckets(expression(s), numBuckets))
+  }
+
+  /** Whole-doc char-bigram array in one byte-boundary pass — the
+    * native form of the exploded `substr(i, 2)` gram build (same
+    * O(len²) seek pathology as [[bigramBuckets]]; same edge
+    * semantics: "" → [""], 1-char → [s]). */
+  private[ops] def charBigrams(s: Column): Column = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
+    column(graft.functions.CharBigrams(expression(s)))
+  }
+
   /** DSIR-style hashed n-gram importance weights (Xie et al. 2023,
     * "Data Selection for Language Models via Importance Resampling",
     * arXiv:2302.03169): score every document by how target-like its
@@ -188,38 +203,6 @@ object TextAnalysis {
     * (broadcast), the two totals are scalars (broadcast); scoring
     * is a broadcast join + one per-doc aggregate. The corpus text
     * never shuffles. */
-  /** The shared hashed char-bigram bucket: pure arithmetic over the
-    * two code points ((c1·31 + c2) mod B) so every consumer
-    * ([[importanceWeights]], [[graft.ops.Classifier]]) replays
-    * bit-identically in ANSI SQL. `s` is the normalized text, `i`
-    * the 1-based gram start index. */
-  private[ops] def bigramBucket(s: Column, i: Column,
-      numBuckets: Int): Column =
-    pmod(
-      ascii(s.substr(i, lit(1))) * 31 + ascii(s.substr(i + 1, lit(1))),
-      lit(numBuckets))
-
-  /** Whole-doc bucket array in ONE code-point pass — the native form
-    * of [[bigramBucket]] over every position (r21: the per-position
-    * `substr(s, i)` SEEKS on a UTF8String, making the exploded form
-    * O(len²) per doc — 40–55 s CPU at sf0.1 in the x97/x94 feature
-    * builds). BigramExprSpec pins array == the substr/ascii form.
-    * Callers materialize the array at an exchange before exploding
-    * (the minhashSignatures Generate rule). */
-  private[ops] def bigramBuckets(s: Column, numBuckets: Int): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    column(graft.functions.BigramBuckets(expression(s), numBuckets))
-  }
-
-  /** Whole-doc char-bigram array in one byte-boundary pass — the
-    * native form of the exploded `substr(i, 2)` gram build (same
-    * O(len²) seek pathology as [[bigramBuckets]]; same edge
-    * semantics: "" → [""], 1-char → [s]). */
-  private[ops] def charBigrams(s: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge.{column, expression}
-    column(graft.functions.CharBigrams(expression(s)))
-  }
-
   def importanceWeights(df: DataFrame, idCol: String, textCol: String,
       isTargetCol: String, numBuckets: Int = 512,
       alpha: Double = 0.5): DataFrame = {
@@ -311,16 +294,6 @@ object TextAnalysis {
       .otherwise(transform(
         sequence(lit(0), size(t) - n),
         i => concat_ws(" ", slice(t, i + 1, lit(n)))))
-  }
-
-  /** Character n-gram shingles (default 5-gram) over the normalized
-    * text — finer-grained dedup signal than word shingles. */
-  def charShingles(text: Column, n: Int = 5): Column = {
-    val s = regexp_replace(lower(text), WhitespaceClass, " ")
-    when(length(s) < n, array(s))
-      .otherwise(transform(
-        sequence(lit(1), length(s) - (n - 1)),
-        i => s.substr(i, lit(n))))
   }
 
   /** Quality heuristics: every metric is a plain expression so the
@@ -809,33 +782,6 @@ object TextAnalysis {
     BpeModel(merges.toList, vocab)
   }
 
-  /** Segment a corpus's word vocabulary under ALREADY-TRAINED merge
-    * rules — the tokenizer APPLY path for text the training corpus
-    * never saw ([[bpeSegment]] reads the trained model's own vocab
-    * table, so out-of-vocabulary words were previously unreachable;
-    * production trains the tokenizer once and encodes every later
-    * batch with the frozen rules). One [[applyMerge]] fold per rule
-    * over the NEW corpus's bounded word vocabulary, in rank order —
-    * exactly the training loop's application machinery minus the
-    * pair-count argmax, so a word the training corpus DID see
-    * segments identically (spec-asserted against the trained vocab).
-    * Output: (word, n, syms). */
-  def bpeSegmentVocabWith(rules: Seq[(Int, String, String, Long)],
-      df: DataFrame, textCol: String): DataFrame = {
-    val words = df.select(explode(tokens(col(textCol))).as("word"))
-      .filter(length(col("word")) > 0)
-      .groupBy("word").agg(count(lit(1)).as("n"))
-    rules.sortBy(_._1).foldLeft(
-      words.select(col("word"), col("n"), split(col("word"), "").as("syms"))
-        .localCheckpoint(true)) { case (v, (_, l, r, _)) =>
-      // one fold per rule, each materialized (the bpeTrainUncached
-      // codegen-size rule: nesting all rounds into one projection
-      // measured 14.6 s vs 1.6 s)
-      v.select(col("word"), col("n"), applyMerge(col("syms"), l, r).as("syms"))
-        .localCheckpoint(true)
-    }
-  }
-
   /** Persist trained BPE merge rules — the tokenizer is THE canonical
     * persisted artifact of an LLM data pipeline (train once on the
     * reference corpus, encode every batch forever after); one tiny
@@ -984,15 +930,6 @@ object TextAnalysis {
     * same vocabulary), SQL-expressible for the oracle. */
   def fingerprint(text: Column): Column =
     md5(concat_ws(" ", array_sort(array_distinct(tokens(text)))))
-
-  /** Compact similarity fingerprint: a short MinHash signature over
-    * word bigrams — min-sampled shingle hashes, the same containment
-    * signal winnowing targets, expressed with the engine's sketch
-    * machinery (numHashes controls the fingerprint width). */
-  def shingleFingerprint(text: Column, numHashes: Int = 16, seed: Long = 5L): Column = {
-    import graft.functions.Sketches
-    Sketches.minhashNgrams(tokens(text), n = 2, numHashes = numHashes, seed = seed)
-  }
 
   /** Shannon entropy of the character distribution, in nats — the
     * repetition/quality signal compression-ratio filters approximate
@@ -1402,25 +1339,6 @@ object TextAnalysis {
       keywordHitsAuto(textCol, terms)
     }
     if (hits.size == 1) hits.head else greatest(hits: _*)
-  }
-
-  /** [[keywordScreen]] on the Aho–Corasick path — same output
-    * contract (per (group, category) flagged-doc and hit totals),
-    * probe cost O(text × categories) instead of
-    * O(tokens × patterns × categories). The per-category hit columns
-    * are computed in ONE projection over the scan and aggregated per
-    * group BEFORE the category melt, so the explode runs on
-    * |groups|-sized rows (never re-evaluating the automata per
-    * output row — the Generate re-evaluation rule). Spec-asserted
-    * equal to [[keywordScreen]] on the same lists. */
-  def keywordScreenAuto(df: DataFrame, groupCol: String, textCol: String,
-      categories: Map[String, Seq[String]],
-      flagThreshold: Int = 2): DataFrame = {
-    require(categories.nonEmpty, "categories must be non-empty")
-    val cats = categories.toSeq.sortBy(_._1)
-    screenAggMelt(df, groupCol, cats.map(_._1),
-      cats.map { case (_, terms) => keywordHitsAuto(col(textCol), terms) },
-      flagThreshold)
   }
 
   /** Shared agg-before-melt screen shape: per-category hit columns in

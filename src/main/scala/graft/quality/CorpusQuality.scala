@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * check. Output is a driver-comparable relation (check_name,
   * observed, passed) rather than a throw, so the same suite serves
   * both as a registered query (SQL-replayable, hash-checked) and as
-  * a gate (`failures == 0`).
+  * a gate (no row with `passed = 0`).
   */
 object CorpusQuality {
 
@@ -70,34 +70,6 @@ object CorpusQuality {
         checkRow("vec_id_unique", col("dup"), _ === 0),
         checkRow("embedding_width_uniform", col("widths"), _ === 1))))
     docRows.union(embRows).orderBy(col("check_name"))
-  }
-
-  /** Gate form: count of failing checks (0 = corpus is ingestible). */
-  def failures(docs: DataFrame, embeddings: DataFrame): Long =
-    suite(docs, embeddings).filter(col("passed") === 0).count()
-
-  /** The anchor/CDC family's `text_ascii_only` precondition (x46) as
-    * a THROWING gate (r12 verdict #5): one aggregate scan, run
-    * EAGERLY at call time, counting docs with any char outside
-    * \x00-\x7F — the same doc-granular predicate as [[suite]]'s
-    * check row. The x135/x197/x198/x199/x200 oracles replay Spark's
-    * code-point rolling hash via DuckDB `ascii()`, which agree only
-    * on ASCII text; without this gate a non-ASCII corpus surfaces as
-    * a silent cross-engine hash mismatch deep in the compare instead
-    * of a named failure at the pipeline mouth. */
-  def requireAsciiParity(docs: DataFrame, textCol: String): Unit = {
-    // NULL text counts as a violation (r13 advice): rlike(NULL) is
-    // NULL, and when(NULL).otherwise(0) would wave a NULL-text doc
-    // through the gate straight into the anchor family's rolling hash
-    val bad = docs.agg(coalesce(sum(
-        when(col(textCol).isNull
-          || col(textCol).rlike("[^\\x00-\\x7F]"), 1L).otherwise(0L)),
-      lit(0L)).as("non_ascii_docs")).collect()(0).getLong(0)
-    require(bad == 0L,
-      s"text_ascii_only gate failed: $bad non-ASCII or NULL-text document(s) — the " +
-        "anchor/CDC rolling-hash family's cross-engine ascii() replay " +
-        "only agrees on ASCII text (x46); filter or transliterate " +
-        "before anchor dedup")
   }
 
   /** Winsorized per-group statistics: mean/stddev of `valueCol` after

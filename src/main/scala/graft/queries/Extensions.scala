@@ -1233,8 +1233,8 @@ object Extensions extends QueryModule {
     None)
 
   /** Z-order (Morton) layout key over (p_partkey, p_size) — the
-    * clustering key [[Layout.zorderBy]] range-shuffles on so per-file
-    * parquet min/max stats stay tight on BOTH columns (see
+    * clustering key a range shuffle plus in-partition sort on it
+    * keeps per-file parquet min/max stats tight on BOTH columns (see
     * Layout.scala's scale rationale; locality is spec-asserted in
     * LayoutSpec). The key computation is a pure shift/mask expression
     * tree, so the oracle replays the identical formula —

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface over the events table.
@@ -84,49 +83,6 @@ object EventStreams {
         col("session_window.start").as("session_start"),
         col("n_events"), col("session_value"))
 
-  /** Stream-stream join: every event enriched with the same user's
-    * purchases from the trailing hour — the two-sided stateful join
-    * class (distinct from stream-static enrichment): BOTH sides
-    * buffer state, and the watermark + time-range condition together
-    * bound it (rows older than watermark + range are evicted), so
-    * state stays proportional to the active window no matter how
-    * long the stream runs. */
-  def eventsWithRecentPurchases(events: DataFrame,
-      range: String = "1 hour", watermark: String = "30 minutes"): DataFrame = {
-    val purchases = events
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("value").as("p_value"))
-      .withWatermark("p_ts", watermark)
-    events
-      .withWatermark("ts", watermark)
-      .join(purchases, expr(
-        s"user_id = p_user AND p_ts <= ts AND p_ts >= ts - interval $range"))
-      .select(col("event_id"), col("user_id"), col("ts"),
-        col("p_ts"), col("p_value"))
-  }
-
-  /** Stream-static enrichment: the streaming fact joined to a STATIC
-    * dimension table — the stateless join class that completes the
-    * streaming join matrix next to [[eventsWithRecentPurchases]]'s
-    * two-sided stateful join. No watermark, no state store: the
-    * static side behaves like a broadcast lookup evaluated per
-    * micro-batch, so an updated dimension snapshot is picked up on
-    * the NEXT batch (re-read per batch by the file source) without
-    * restarting the query — the standard "enrich clicks with the
-    * user dimension" deployment. A left join keeps facts whose
-    * dimension row hasn't arrived yet (late dimension inserts are a
-    * data fact, not a drop reason). */
-  def enrichWithDimension(events: DataFrame, dim: DataFrame,
-      eventKeyCol: String, dimKeyCol: String): DataFrame = {
-    require(events.isStreaming, "events must be a streaming DataFrame")
-    require(!dim.isStreaming, "dim must be a static DataFrame")
-    // dataset-qualified key refs: when fact and dimension share the
-    // key's NAME (user_id = user_id, the common case) a bare col() is
-    // ambiguous once the join combines the inputs and analysis fails
-    events.join(dim, events(eventKeyCol) === dim(dimKeyCol), "left")
-  }
-
   /** Streaming exact dedup: drop rows whose key was already seen,
     * with state bounded by the watermark — the streaming form of
     * [[graft.ops.Dedup.exact]] for a continuously-ingesting corpus
@@ -140,35 +96,6 @@ object EventStreams {
     events
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark(keyCols)
-
-  final case class UserActivity(
-      user_id: Long, n_events: Long, total_value: Double, last_seen_epoch: Long)
-
-  /** Per-user running activity via mapGroupsWithState — the custom-
-    * state path (KeyValueGroupedDataset) for logic windows can't
-    * express. State per user: event count, value sum, last-seen. */
-  def userActivity(events: DataFrame): Dataset[UserActivity] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(col("user_id"), col("value"), unix_seconds(col("ts")).as("epoch"))
-      .as[(Long, Double, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[UserActivity, UserActivity](
-        GroupStateTimeout.NoTimeout) {
-        case (userId, rows, state: GroupState[UserActivity]) =>
-          val prev = state.getOption.getOrElse(UserActivity(userId, 0L, 0.0, 0L))
-          var n = prev.n_events
-          var total = prev.total_value
-          var last = prev.last_seen_epoch
-          rows.foreach { case (_, value, epoch) =>
-            n += 1; total += value; if (epoch > last) last = epoch
-          }
-          val next = UserActivity(userId, n, math.round(total * 100.0) / 100.0, last)
-          state.update(next)
-          next
-      }
-  }
 
   /** Run a streaming query into a partitioned parquet FILE sink with
     * a checkpoint — the production shape of the reference's
@@ -199,9 +126,8 @@ object EventStreams {
     * admission gates ([[runIncrementalAdmission]] = digest ledger,
     * [[runIncrementalNearDupAdmission]] = text sketch,
     * [[runIncrementalEmbeddingAdmission]] = embedding sketch). Each
-    * micro-batch `body` probes its store loaded FRESH (the
-    * [[enrichWithDimension]] stream-static class where the static side
-    * is re-listed per batch), anti-joins the flagged ids off, commits
+    * micro-batch `body` probes its store loaded FRESH (a stream-static
+    * join whose static side is re-listed per batch), anti-joins the flagged ids off, commits
     * one (id, status, min dup_id) row per intake row under `outDir`
     * ([[writeStatuses]]), then APPENDS the admitted survivors to the
     * store(s), so the next batch probes the grown store. Duplicates
@@ -246,7 +172,7 @@ object EventStreams {
     * `compact` rewrites the appended tree(s) blue/green and swaps them
     * into place ([[compactInPlace]]; the end of a foreachBatch body is
     * exactly the no-reader-active window the swap requires). Size N
-    * from [[graft.ops.Layout.compactionDue]]'s rule:
+    * so the probe's per-file cost stays a small fraction of the batch:
     * N ≈ maxFraction × batchWallMs / perFileMs (measured
     * ~1.2–2.2 ms/file locally). 0 = never — compact at your own
     * cadence. A replay after a completed swap re-probes the compacted
@@ -553,43 +479,5 @@ object EventStreams {
       .schema(batches.head.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(src)
-  }
-
-  final case class GroupProfile(
-      grp: String, n: Long, sum_v: Long, min_v: Long, max_v: Long)
-
-  /** Streaming twin of the mergeable batch profile
-    * ([[graft.ops.Profiling.batchStats]]/`mergeStats`): the same
-    * sufficient statistics (count, sum, min, max of an integer
-    * column) maintained incrementally by `mapGroupsWithState` — each
-    * micro-batch folds into per-group state with the exact integer
-    * algebra `mergeStats` uses, so after any prefix of batches the
-    * emitted state EQUALS the batch profile of everything ingested
-    * so far (the spec asserts the equality). State is constant-size
-    * per group — the 100 TB streaming-profile shape. */
-  def runningProfile(rows: DataFrame, groupCol: String,
-      valueCol: String): Dataset[GroupProfile] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows
-      .select(col(groupCol).cast("string"), col(valueCol).cast("long"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[GroupProfile, GroupProfile](
-        GroupStateTimeout.NoTimeout) {
-        case (grp, batch, state: GroupState[GroupProfile]) =>
-          val prev = state.getOption.getOrElse(
-            GroupProfile(grp, 0L, 0L, Long.MaxValue, Long.MinValue))
-          var n = prev.n; var s = prev.sum_v
-          var mn = prev.min_v; var mx = prev.max_v
-          batch.foreach { case (_, v) =>
-            n += 1; s += v
-            if (v < mn) mn = v
-            if (v > mx) mx = v
-          }
-          val next = GroupProfile(grp, n, s, mn, mx)
-          state.update(next)
-          next
-      }
   }
 }

@@ -101,12 +101,15 @@ class BenchSpec extends AnyFunSuite {
     val totalA = roundA.map(_.wall).sum
     val totalB = roundB.map(_.wall).sum
     assert(totalB / totalA > 1.39, "fixture: a 40% phantom regression")
-    val normA = Bench.calibNormalize(totalA, calibA.map(_.wall))
-    val normB = Bench.calibNormalize(totalB, calibB.map(_.wall))
+    def normalized(walls: Seq[Double], calib: Seq[Double]) =
+      walls.zip(Bench.calibFactorsAt(walls, calib))
+        .map { case (w, f) => w / f }.sum
+    val normA = normalized(roundA.map(_.wall), calibA.map(_.wall))
+    val normB = normalized(roundB.map(_.wall), calibB.map(_.wall))
     assert(math.abs(normA - normB) < 1e-9,
       s"calibration must dissolve the phantom: $normA vs $normB")
     // pre-calibration artifacts (no calib rows) pass through unchanged
-    assert(Bench.calibNormalize(totalA, Nil) == totalA)
+    assert(normalized(roundA.map(_.wall), Nil) == totalA)
     // both artifact lines carry the fields, and the stdout line still
     // fits the driver's tail cap at the 300-query scale
     val big = (1 to 300).map(i =>
@@ -260,8 +263,7 @@ class BenchSpec extends AnyFunSuite {
           "calib_wall":[0.3,0.31],"calib_scalar":[0.1,0.1],
           "queries":{$entries}}"""
     }
-    val dir = Files.createTempDirectory("benchgate_spec")
-    dir.toFile.deleteOnExit()
+    val dir = java.nio.file.Paths.get(TempDirs.createCleaned("benchgate_spec"))
     val prev = dir.resolve("prev.json"); val cur = dir.resolve("cur.json")
     val perf = dir.resolve("PERF.md")
     Files.writeString(prev, artifact(
@@ -440,22 +442,23 @@ class BenchSpec extends AnyFunSuite {
     }
     // raw comparison shows a phantom per-query regression up to ~45%
     assert(drifting.last / quiet.last > 1.35, "fixture: late rows look slow")
-    val normDrift = Bench.calibNormalizePerQuery(drifting, calibDrift)
-    val normQuiet = Bench.calibNormalizePerQuery(quiet, calibQuiet)
+    def perQuery(walls: Seq[Double], calib: Seq[Double]) =
+      walls.zip(Bench.calibFactorsAt(walls, calib)).map { case (w, f) => w / f }
+    val normDrift = perQuery(drifting, calibDrift)
+    val normQuiet = perQuery(quiet, calibQuiet)
     normDrift.zip(normQuiet).zipWithIndex.foreach { case ((d, q), i) =>
       assert(math.abs(d - q) / q < 0.02,
         s"row $i: interpolated calib must dissolve the drift ($d vs $q)")
     }
     // the MEAN-based correction (the r12 nit) leaves late rows looking
     // >15% slow and early rows fast — the interpolation must beat it
-    val meanNorm = drifting.map(w =>
-      Bench.calibNormalize(w, calibDrift))
+    val meanNorm = drifting.map(_ / (calibDrift.sum / calibDrift.size))
     assert(meanNorm.last / normQuiet.last > 1.15,
       "fixture: mean correction under-corrects the late rows")
     assert(meanNorm.head / normQuiet.head < 0.87,
       "fixture: mean correction over-corrects the early rows")
     // empty calibration passes through unchanged
-    assert(Bench.calibNormalizePerQuery(quiet, Nil) == quiet)
+    assert(perQuery(quiet, Nil) == quiet)
   }
 
   test("stdout low_par excludes the intrinsic allowlist so an anomalous row can't be crowded out") {

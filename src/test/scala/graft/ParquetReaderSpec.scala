@@ -54,13 +54,13 @@ class ParquetReaderSpec extends AnyFunSuite {
 
   /** The seven star-schema tables, written once from the fixtures. */
   private lazy val starOut: String = {
-    val out = Files.createTempDirectory("graft_reader_star").toString
+    val out = graft.TempDirs.createCleaned("graft_reader_star")
     StarSchemaWriter.runElt(spark, getClass.getResource("/citibike").getPath, out)
     out
   }
 
   private def tempTable(prefix: String): String =
-    s"${Files.createTempDirectory(prefix)}/t.parquet"
+    s"${TempDirs.createCleaned(prefix)}/t.parquet"
 
   /** Writes `parts` hive partitions (two rows each) to `path`: past
     * Spark's 32-path threshold a plain read lists them with a job. */
@@ -96,7 +96,7 @@ class ParquetReaderSpec extends AnyFunSuite {
     val s = spark.newSession()
     s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
     // copies: a path no earlier case has memoized under any conf
-    val dir = Files.createTempDirectory("graft_reader_events").toString
+    val dir = graft.TempDirs.createCleaned("graft_reader_events")
     Seq("lineitem", "events").foreach { t =>
       Files.copy(Paths.get(s"$sfDir/$t.parquet"), Paths.get(s"$dir/$t.parquet"))
     }
@@ -111,7 +111,7 @@ class ParquetReaderSpec extends AnyFunSuite {
   test("a metadata-stats read leaves the session conf alone, so a later documents read starts no job") {
     val s = spark.newSession()
     // a copy: a path no earlier case has memoized under any conf
-    val dir = Files.createTempDirectory("graft_reader_stats").toString
+    val dir = graft.TempDirs.createCleaned("graft_reader_stats")
     Files.copy(Paths.get(s"$sfDir/documents.parquet"),
       Paths.get(s"$dir/documents.parquet"))
     Tables.load(s, dir, "documents")

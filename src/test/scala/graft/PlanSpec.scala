@@ -1,14 +1,12 @@
 package graft
 
-import graft.etl.Bucketing
-import graft.ops.Skew
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape assertions: the 100 TB design claims (pushdown,
-  * broadcast, top-k without total sort, partial aggregation,
-  * bucketed co-location, salt spreading) verified against the actual
-  * optimized/executed plans, not just the results. */
+  * broadcast, top-k without total sort, partial aggregation)
+  * verified against the actual optimized/executed plans, not just the
+  * results. */
 class PlanSpec extends AnyFunSuite {
   import SparkTestSession.{sfDir, spark}
 
@@ -73,25 +71,6 @@ class PlanSpec extends AnyFunSuite {
     val plan = executedPlan("x23_batch_topk")
     assert(plan.contains("BroadcastNestedLoopJoin") || plan.contains("BroadcastExchange"),
       plan.take(2000))
-  }
-
-  test("bucketed join is shuffle-free") {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force non-broadcast
-    val ord = Tables.orders(s2, sfDir)
-    val li = Tables.lineitem(s2, sfDir)
-    Bucketing.writeBucketed(ord, "b_orders", "o_orderkey", numBuckets = 8)
-    Bucketing.writeBucketed(li.withColumnRenamed("l_orderkey", "o_orderkey"),
-      "b_lineitem", "o_orderkey", numBuckets = 8)
-    val joined = Bucketing.table(s2, "b_orders")
-      .join(Bucketing.table(s2, "b_lineitem"), "o_orderkey")
-    joined.collect()
-    assert(Bucketing.isShuffleFree(joined),
-      joined.queryExecution.executedPlan.toString.take(2000))
-    // sanity: same join over plain parquet DOES shuffle under the same session
-    val plain = ord.join(li, ord("o_orderkey") === li("l_orderkey"))
-    plain.collect()
-    assert(!Bucketing.isShuffleFree(plain))
   }
 
   test("pre-sketch exchange is conditional: wide input skips the RoundRobin") {
@@ -338,20 +317,6 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("ObjectHashAggregate"), plan.take(2000))
     assert(plan.contains("partial_misragries"), plan.take(2000))
     assert(plan.contains("Exchange SinglePartition"), plan.take(2000))
-  }
-
-  test("salted join spreads keys and preserves results") {
-    import spark.implicits._
-    val big = Tables.events(spark, sfDir).select($"user_id", $"value")
-    val dim = Tables.events(spark, sfDir).select($"user_id").distinct()
-      .withColumn("segment", pmod($"user_id", lit(5)))
-    val plain = big.join(dim, "user_id")
-      .groupBy("segment").agg(round(sum("value"), 2).as("v"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val salted = Skew.saltedEquiJoin(big, dim, "user_id", saltFactor = 4)
-      .groupBy("segment").agg(round(sum("value"), 2).as("v"))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(plain == salted)
   }
 
   test("x93 cap: rank<=k plans as WindowGroupLimit — map tasks pre-prune before the exchange") {

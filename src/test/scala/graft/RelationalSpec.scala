@@ -10,7 +10,7 @@ object SparkTestSession {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
+      graft.TempDirs.createCleaned("graft_wh"))
     .config("spark.ui.enabled", "false")
     .getOrCreate()
   val sfDir = "/root/testdata/sf0.001"

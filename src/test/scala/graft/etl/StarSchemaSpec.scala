@@ -26,25 +26,6 @@ class StarSchemaSpec extends AnyFunSuite {
     assert(staging.covids.columns.contains("bx_case_count"))
   }
 
-  test("ORC round-trip: schema and rows survive, filters push to the scan") {
-    import SparkTestSession.sfDir
-    import graft.Tables
-    val docs = Tables.documents(spark, sfDir)
-    val dir = Files.createTempDirectory("graft_orc").toString + "/docs"
-    Ingest.writeOrc(docs, dir)
-    val back = Ingest.readOrc(spark, dir)
-    assert(back.schema == docs.schema)
-    assert(back.count() == docs.count())
-    val a = docs.orderBy(col("doc_id")).collect().map(_.toSeq)
-    val b = back.orderBy(col("doc_id")).collect().map(_.toSeq)
-    assert(a.sameElements(b))
-    // the ORC reader must receive the pushed predicate like parquet does
-    val plan = back.filter(col("doc_id") === 7L)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(doc_id), EqualTo(doc_id,7)]"),
-      s"plan without pushdown:\n$plan")
-  }
-
   test("fact: row per trip, md5 id, computed partitions") {
     val fact = StarSchema.buildFact(staging.events, staging.covids, staging.weathers)
     assert(fact.count() == 8)
@@ -157,7 +138,7 @@ class StarSchemaSpec extends AnyFunSuite {
   }
 
   test("full ELT writes 7 tables; reference + extended quality suites pass") {
-    val out = Files.createTempDirectory("graft_elt").toString
+    val out = graft.TempDirs.createCleaned("graft_elt")
     StarSchemaWriter.runElt(spark, fixtures, out)
     DataQuality.validate(spark, out, DataQuality.referenceSuite)
     DataQuality.validate(spark, out, DataQuality.extendedSuite)
@@ -169,7 +150,7 @@ class StarSchemaSpec extends AnyFunSuite {
   }
 
   test("S5 append semantics vs idempotent dynamic-overwrite re-run") {
-    val out = Files.createTempDirectory("graft_elt_inc").toString
+    val out = graft.TempDirs.createCleaned("graft_elt_inc")
     StarSchemaWriter.runElt(spark, fixtures, out)
     StarSchemaWriter.runElt(spark, fixtures, out) // blind append, ref parity
     assert(spark.read.parquet(s"$out/bikeshare_fact_table.parquet").count() == 16)
@@ -193,7 +174,7 @@ class StarSchemaSpec extends AnyFunSuite {
   private lazy val febIn: String = {
     import java.nio.file.{Paths, StandardCopyOption}
     import scala.jdk.CollectionConverters._
-    val dir = Files.createTempDirectory("graft_feb").toString
+    val dir = graft.TempDirs.createCleaned("graft_feb")
     for (sub <- Seq("weathers", "stations", "covids")) {
       Files.createDirectories(Paths.get(s"$dir/$sub"))
       val listing = Files.list(Paths.get(s"$fixtures/$sub"))
@@ -217,7 +198,7 @@ class StarSchemaSpec extends AnyFunSuite {
   }
 
   test("monthly incremental: append accumulates months; idempotent re-run replaces only its month") {
-    val out = Files.createTempDirectory("graft_elt_months").toString
+    val out = graft.TempDirs.createCleaned("graft_elt_months")
     StarSchemaWriter.runElt(spark, fixtures, out, idempotent = true)  // January
     StarSchemaWriter.runElt(spark, febIn, out, idempotent = true)     // February
     val fact = spark.read.parquet(s"$out/bikeshare_fact_table.parquet")
@@ -243,7 +224,7 @@ class StarSchemaSpec extends AnyFunSuite {
       fact2.filter(col("month") === 2), "bike_id", bikes, "bike_id", "feb->bike")
 
     // --- dim maintenance mode: the beyond-parity fix ---
-    val out2 = Files.createTempDirectory("graft_elt_maint").toString
+    val out2 = graft.TempDirs.createCleaned("graft_elt_maint")
     StarSchemaWriter.runElt(spark, fixtures, out2, idempotent = true, maintainDims = true)
     StarSchemaWriter.runElt(spark, febIn, out2, idempotent = true, maintainDims = true)
     val mFact = spark.read.parquet(s"$out2/bikeshare_fact_table.parquet")
@@ -264,12 +245,12 @@ class StarSchemaSpec extends AnyFunSuite {
     def setMode = spark.conf.getAll.get(key)
     spark.conf.unset(key)
     StarSchemaWriter.runElt(spark, fixtures,
-      Files.createTempDirectory("graft_elt_conf").toString, idempotent = true)
+      graft.TempDirs.createCleaned("graft_elt_conf"), idempotent = true)
     assert(setMode.isEmpty, "an unset conf must stay unset")
 
     spark.conf.set(key, "static")
     try {
-      val out = Files.createTempDirectory("graft_elt_static").toString
+      val out = graft.TempDirs.createCleaned("graft_elt_static")
       StarSchemaWriter.runElt(spark, fixtures, out, idempotent = true) // January
       StarSchemaWriter.runElt(spark, febIn, out, idempotent = true)    // February
       StarSchemaWriter.runElt(spark, febIn, out, idempotent = true)    // February again
@@ -291,7 +272,7 @@ class StarSchemaSpec extends AnyFunSuite {
         assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty,
           s"$mode: $name differs from its built frame")
       }
-    val out = Files.createTempDirectory("graft_elt_witness").toString
+    val out = graft.TempDirs.createCleaned("graft_elt_witness")
     StarSchemaWriter.writeAll(spark, staging, out)
     assertWritten(out, "append")
     // the idempotent re-run over the same output replaces, never doubles
@@ -300,7 +281,7 @@ class StarSchemaSpec extends AnyFunSuite {
   }
 
   test("a failing table write is rethrown, not swallowed") {
-    val out = Files.createTempDirectory("graft_elt_fail").toString
+    val out = graft.TempDirs.createCleaned("graft_elt_fail")
     val blocker = java.nio.file.Paths.get(s"$out/bikeshare_fact_table.parquet")
     Files.write(blocker, "not a directory".getBytes("UTF-8"))
     val thrown = intercept[Exception](StarSchemaWriter.writeAll(spark, staging, out))

@@ -78,8 +78,7 @@ class BroadcastGateSpec extends AnyFunSuite {
   }
 
   test("an append under the same path re-proves the gate with no clear") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_gate_spec")
-      .resolve("v.parquet").toString
+    val dir = graft.TempDirs.createCleaned("graft_gate_spec") + "/v.parquet"
     withThreshold("8192") {
       vecFrame.write.parquet(dir)
       // 24 rows × (64 B + 8 floats × 4 B) × 2 safety = 4608 B ≤ 8192

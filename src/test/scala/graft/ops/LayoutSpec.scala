@@ -50,7 +50,7 @@ class LayoutSpec extends AnyFunSuite {
     assert(viaSql == got.map(_._3).toSeq)
   }
 
-  test("zorderBy clusters BOTH dimensions; single-column sort only one") {
+  test("Z-order key clusters BOTH dimensions; single-column sort only one") {
     // 64x64 grid, shuffled input order
     val grid = spark.range(64L * 64L)
       .select((col("id") % 64).as("x"), (col("id") / 64).as("y"))
@@ -62,8 +62,9 @@ class LayoutSpec extends AnyFunSuite {
         .agg(avg("rx"), avg("ry")).head()
       (r.getDouble(0), r.getDouble(1))
     }
-    val (zx, zy) = avgRanges(Layout.zorderBy(grid, Seq("x", "y"), bits = 6,
-      numPartitions = Some(16)))
+    // the x48 layout: range-partition + sort on the Morton key
+    val z = Layout.zValue(Seq(col("x"), col("y")), bits = 6)
+    val (zx, zy) = avgRanges(grid.repartitionByRange(16, z).sortWithinPartitions(z))
     // ideal 16-partition Z layout = 16x16 blocks (range 15 each); range
     // partition boundaries straddle blocks, so allow 2x ideal
     assert(zx <= 31 && zy <= 31,
@@ -73,14 +74,6 @@ class LayoutSpec extends AnyFunSuite {
     val (bx, by) = avgRanges(xSorted)
     assert(bx <= 8, s"x-sorted baseline must cluster x, got $bx")
     assert(by >= 48, s"x-sorted baseline leaves y unclustered, got $by")
-  }
-
-  test("zorderBy plans one range exchange on the z key") {
-    val df = Layout.zorderBy(
-      Seq((1L, 2L), (3L, 4L)).toDF("x", "y"), Seq("x", "y"))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("rangepartitioning"),
-      s"expected a range exchange, got:\n${plan.take(1500)}")
   }
 
   test("compactPartitioned: rows and partition scheme preserved; guards loud") {

@@ -283,9 +283,8 @@ class OpsSpec extends AnyFunSuite {
     // flagged — null digests don't join).
     val corpus = Seq((1L, "a b"), (2L, "c d"), (3L, "a b"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("digest_store_spec")
-    dir.toFile.deleteOnExit()
-    val ledger = Dedup.saveDigestStore(corpus, "doc_id", "text", dir.toString)
+    val dir = graft.TempDirs.createCleaned("digest_store_spec")
+    val ledger = Dedup.saveDigestStore(corpus, "doc_id", "text", dir)
     val batch = Seq(
       (10L, "a b"),            // corpus dup -> keeper 1 (not 3)
       (11L, "x y"),            // novel, keeps
@@ -657,7 +656,7 @@ class OpsSpec extends AnyFunSuite {
     val emb = graft.Tables.embeddings(spark, graft.SparkTestSession.sfDir)
     val corpus = emb.filter(col("vec_id") >= 100)
     val batch = emb.filter(col("vec_id") < 100)
-    val dir = java.nio.file.Files.createTempDirectory("graft_sigstore").toString
+    val dir = graft.TempDirs.createCleaned("graft_sigstore")
     val written = Dedup.saveEmbeddingSignatures(corpus, "vec_id", "embedding",
       dir, numBits = 48, bands = 8)
     assert(written.numBits == 48 && written.bands == 8 && written.seed == 42L)
@@ -686,7 +685,7 @@ class OpsSpec extends AnyFunSuite {
     val corpusDocs = graft.Tables.documents(spark, graft.SparkTestSession.sfDir)
     val corpus = corpusDocs.filter(col("doc_id") >= 100)
     val batch = corpusDocs.filter(col("doc_id") < 100)
-    val dir = java.nio.file.Files.createTempDirectory("graft_mhstore").toString
+    val dir = graft.TempDirs.createCleaned("graft_mhstore")
     val written = Dedup.saveMinhashSignatures(corpus, "doc_id", "text",
       dir, numHashes = 64, shingleSize = 4)
     assert(written.numHashes == 64 && written.shingleSize == 4)
@@ -1024,45 +1023,6 @@ class OpsSpec extends AnyFunSuite {
     assert(none.count() == 0L)
   }
 
-  test("eval bloom filter: save -> load -> identical flag set; params travel with the bytes") {
-    val passage = "the quick brown fox jumps over the lazy dog again and again tonight"
-    val evalDocs = Seq(
-      (1L, s"eval question one $passage end"),
-      (2L, "eval question two nothing shared here whatsoever"))
-      .toDF("doc_id", "text")
-    val train = Seq(
-      (10L, s"some training text containing $passage verbatim inside"),
-      (11L, "unrelated corpus entry with its own disjoint material"))
-      .toDF("doc_id", "text")
-    val built = Dedup.buildEvalBloomFilter(evalDocs, "doc_id", "text",
-      k = 6, window = 3, fpp = 1e-6)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom").toString
-    Dedup.saveEvalBloomFilter(built, spark, s"$dir/eval_bloom")
-    val loaded = Dedup.loadEvalBloomFilter(spark, s"$dir/eval_bloom")
-    // params round-trip — the loaded filter probes with ITS OWN k/window
-    assert((loaded.k, loaded.window, loaded.maxEvalDocFreq, loaded.fpp)
-      == ((6, 3, 20, 1e-6)))
-    assert(loaded.bytes.get.toSeq == built.bytes.get.toSeq)
-    def flags(f: Dedup.EvalBloomFilter) =
-      Dedup.bloomDecontaminateWith(train, f, "doc_id", "text", minMatched = 1)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-    assert(flags(loaded) == flags(built) && flags(loaded).nonEmpty)
-    // the build-once path agrees with the one-shot memoized operator
-    val oneShot = Dedup.bloomDecontaminate(train, evalDocs, "doc_id", "text",
-      minMatched = 1, k = 6, window = 3, fpp = 1e-6)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
-    assert(flags(loaded) == oneShot)
-    // empty-eval filter round-trips as None and yields the empty frame
-    val empty = Dedup.buildEvalBloomFilter(
-      evalDocs.filter(lit(false)), "doc_id", "text")
-    Dedup.saveEvalBloomFilter(empty, spark, s"$dir/empty_bloom")
-    val emptyLoaded = Dedup.loadEvalBloomFilter(spark, s"$dir/empty_bloom")
-    assert(emptyLoaded.bytes.isEmpty)
-    val none = Dedup.bloomDecontaminateWith(train, emptyLoaded, "doc_id", "text")
-    assert(none.columns.toSeq == Seq("train_id", "matched_fingerprints"))
-    assert(none.count() == 0L)
-  }
-
   test("repetition stats match hand-computed values") {
     val docs = Seq((1L, "a a a b"), (2L, "w x y z"), (3L, "solo"))
       .toDF("doc_id", "text")
@@ -1084,46 +1044,13 @@ class OpsSpec extends AnyFunSuite {
     assert(r3.getAs[Double]("dup_bigram_ratio") == 0.0)
   }
 
-  test("shard export: hive-partitioned by chunk range, round-trips the packed corpus") {
-    val docs = graft.Tables.documents(spark, graft.SparkTestSession.sfDir)
-    val assignments = Packing.chunkAssignments(docs, "doc_id", "text", budget = 512)
-    val outDir = java.nio.file.Files.createTempDirectory("graft_shards").toString
-    val nShards = CorpusExport.writeShards(docs, assignments, "doc_id", outDir,
-      chunksPerShard = 8)
-    val back = spark.read.parquet(outDir)
-    // every doc lands in exactly the shard its start_chunk dictates
-    val expected = assignments
-      .select(col("doc_id"), expr("start_chunk div 8").as("shard"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // hive partition values are re-inferred on read (int here) — cast
-    val got = back.select(col("doc_id"), col("shard").cast("long"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == expected)
-    assert(nShards == expected.values.toSet.size)
-    // hive layout: one directory per shard (partition pruning surface)
-    val dirs = new java.io.File(outDir).listFiles().filter(_.isDirectory)
-      .map(_.getName).filter(_.startsWith("shard=")).toSet
-    assert(dirs.size == nShards)
-    // a doc WITHOUT an assignment row fails the export loudly instead
-    // of silently dropping corpus data
-    val minId = assignments.agg(min(col("doc_id"))).collect().head.getLong(0)
-    val partial = assignments.filter(col("doc_id") =!= minId)
-    val outDir2 = java.nio.file.Files.createTempDirectory("graft_shards2").toString
-    val ex = intercept[Exception] {
-      CorpusExport.writeShards(docs, partial, "doc_id", outDir2, chunksPerShard = 8)
-    }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Seq.empty
-      else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(ex).exists(_.contains("without a packing assignment")),
-      messages(ex).mkString(" | "))
-  }
-
   test("corpus quality suite: green on testdata, catches planted violations") {
     import graft.quality.CorpusQuality
     val docs = graft.Tables.documents(spark, graft.SparkTestSession.sfDir)
     val emb = graft.Tables.embeddings(spark, graft.SparkTestSession.sfDir)
-    assert(CorpusQuality.failures(docs, emb) == 0L)
+    def failures(d: org.apache.spark.sql.DataFrame) =
+      CorpusQuality.suite(d, emb).filter(col("passed") === 0).count()
+    assert(failures(docs) == 0L)
     // plant from LITERAL rows (limit() without order guarantees
     // neither determinism nor containment): a duplicated doc_id, a
     // NULL doc_id, and a bad-lang + inconsistent-n_chars row
@@ -1148,45 +1075,11 @@ class OpsSpec extends AnyFunSuite {
     assert(out("lang_known") == ((1L, 0)))
     assert(out("n_chars_consistent") == ((1L, 0))) // only the 9001 row lies
     assert(out("text_ascii_only") == ((2L, 0))) // BMP + astral both counted
-    assert(CorpusQuality.failures(corrupt, emb) == 5L)
+    assert(failures(corrupt) == 5L)
     // an EMPTY corpus must fail the gate, never NULL past it
     val empty = CorpusQuality.suite(docs.filter(lit(false)), emb).collect()
     empty.foreach(r => assert(!r.isNullAt(1) && !r.isNullAt(2), r.toString))
-    assert(CorpusQuality.failures(docs.filter(lit(false)), emb) == 1L)
-  }
-
-  test("x46 gate order: non-ASCII corpus fails the NAMED gate before any anchor hashing (e2e)") {
-    // r12 verdict #5: the suite-level check existed with planted
-    // violations; this is the query-level proof — a non-ASCII corpus
-    // pushed through the x199 path must fail the named x46 gate
-    // BEFORE the anchor family can produce a silent cross-engine
-    // ascii()-replay hash mismatch. A long NON-repeating body (no
-    // intra-doc window dups) so the dedup outcome is hand-checkable.
-    val body = (0 until 60).map(i => s"word$i").mkString(" ")
-    val asciiRows = Seq(
-      (1L, body),                              // first occurrence: kept
-      (2L, body + " plus a short novel tail"), // majority dup: flagged
-      (3L, "an entirely novel short document"))
-    val nonAsciiRows = asciiRows ++ Seq(
-      (4L, "café au lait " + body),  // BMP non-ASCII
-      (5L, "ok 😀 " + body)) // astral (surrogate pair)
-    val ex = intercept[IllegalArgumentException] {
-      // throws at CALL time, before the anchor plan is constructed —
-      // the gate's aggregate is the ONLY job that runs
-      Dedup.dedupByAnchorProfileGated(
-        nonAsciiRows.toDF("doc_id", "text"), "doc_id", "text")
-    }
-    assert(ex.getMessage.contains("text_ascii_only"), ex.getMessage)
-    assert(ex.getMessage.contains("2 non-ASCII"), ex.getMessage)
-    // the clean corpus passes the gate; gated output == ungated output
-    val good = asciiRows.toDF("doc_id", "text")
-    val gated = Dedup.dedupByAnchorProfileGated(good, "doc_id", "text")
-      .orderBy("doc_id").collect().map(_.getLong(0)).toSeq
-    val ungated = Dedup.dedupByAnchorProfile(good, "doc_id", "text")
-      .orderBy("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(gated == ungated)
-    assert(gated.contains(1L) && gated.contains(3L), gated.toString)
-    assert(!gated.contains(2L), s"majority-dup doc must drop: $gated")
+    assert(failures(docs.filter(lit(false))) == 1L)
   }
 
   test("ngram novelty matches hand-computed df fractions") {
@@ -1241,12 +1134,7 @@ class OpsSpec extends AnyFunSuite {
       docs.repartition(7, col("doc_id")), "doc_id", "text", budget = 512)
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(shuffled == out.map { case (k, v) => k -> v._2 })
-    // conservation: per-chunk starting tokens sum to the corpus total
-    val summary = Packing.chunkSummary(
-      Packing.chunkAssignments(docs, "doc_id", "text", budget = 512))
-    val tot = summary.agg(sum(col("tokens_starting"))).collect().head.getLong(0)
     val corpusTokens = ref.values.map(_._1).sum
-    assert(tot == corpusTokens)
     // no-gap invariant: exact occupancy fills every chunk but the
     // last to the budget, and clipped slices conserve the total
     val occ = Packing.chunkOccupancy(
@@ -1360,10 +1248,12 @@ class OpsSpec extends AnyFunSuite {
     // frame sampling only for video rows
     val frames = Multimodal.sampleFrames(media, n = 4)
     assert(frames.select("media_id").distinct().count() == 10) // 30/3 videos
-    // metadata summary never touches content: check the optimized plan prunes the blob
-    val dir = java.nio.file.Files.createTempDirectory("graft_media").toString
+    // a metadata-only aggregate never touches content: check the
+    // executed plan prunes the blob
+    val dir = graft.TempDirs.createCleaned("graft_media")
     media.write.mode("overwrite").parquet(dir)
-    val summary = Multimodal.metadataSummary(spark.read.parquet(dir))
+    val summary = spark.read.parquet(dir)
+      .groupBy(col("kind"), col("format")).agg(avg(col("width")))
     val readSchema = summary.queryExecution.executedPlan.toString()
     assert(!readSchema.contains("content"), "blob column must be pruned from the scan")
     assert(summary.count() == 3)
@@ -1421,30 +1311,6 @@ class OpsSpec extends AnyFunSuite {
       s"real video features must be a pixel histogram: ${feats(1L).toSeq}")
   }
 
-  test("multimodal resize: scales image metadata, passes others through, composes") {
-    val media = Multimodal.syntheticMedia(spark, 30)
-    val resized = Multimodal.resize(media, targetWidth = 32)
-    val images = resized.filter(_.kind == "image").collect()
-    assert(images.nonEmpty && images.forall(_.width == 32))
-    // non-image rows untouched (same bytes)
-    val audioBefore = media.filter(_.kind == "audio").collect().map(r => r.media_id -> r.content.toSeq).toMap
-    resized.filter(_.kind == "audio").collect().foreach { r =>
-      assert(r.content.toSeq == audioBefore(r.media_id))
-    }
-    // empty/null payloads pass through instead of crashing the task
-    val degenerate = Seq(
-      Multimodal.MediaRow(98L, "image", "png", 64, 64, 0L, Array.empty[Byte]),
-      Multimodal.MediaRow(99L, "image", "png", 64, 64, 0L, null)).toDS()
-    val out = Multimodal.resize(degenerate, 32).collect()
-    assert(out.length == 2 && out.forall(r => r.content == null || r.content.isEmpty))
-    // deterministic and composable with feature extraction
-    val f1 = Multimodal.extractFeatures(resized, dims = 8).collect().map(_.feature.toSeq).toSeq
-    val f2 = Multimodal.extractFeatures(
-      Multimodal.resize(Multimodal.syntheticMedia(spark, 30), 32), dims = 8)
-      .collect().map(_.feature.toSeq).toSeq
-    assert(f1 == f2)
-  }
-
   test("imageio codec: real PNG decode, true dimensions, real resize round-trip") {
     import java.awt.image.BufferedImage
     // a real 100×60 gradient PNG, built and decoded by the JDK codec
@@ -1453,11 +1319,10 @@ class OpsSpec extends AnyFunSuite {
       img.setRGB(x, y, ((x * 255 / 99) << 16) | ((y * 255 / 59) << 8))
     val png = Multimodal.ImageCodec.encodePng(img)
     val media = Seq(Multimodal.MediaRow(1L, "image", "png", 100, 60, 0L, png)).toDS()
-    // resize: output bytes are a REAL PNG whose decoded dimensions
-    // match the metadata columns (50 wide, aspect-kept 30 high)
-    val out = Multimodal.resize(media, targetWidth = 50).collect().head
-    assert(out.width == 50 && out.height == 30, s"${out.width}×${out.height}")
-    val decoded = Multimodal.ImageCodec.decode(out.content)
+    // resize: re-encoded bytes are a REAL PNG whose decoded dimensions
+    // are the scaled ones (50 wide, aspect-kept 30 high)
+    val decoded = Multimodal.ImageCodec.decode(Multimodal.ImageCodec.encodePng(
+      Multimodal.ImageCodec.resizeTo(Multimodal.ImageCodec.decode(png).get, 50)))
     assert(decoded.isDefined)
     assert(decoded.get.getWidth == 50 && decoded.get.getHeight == 30)
     // features: a normalized luminance histogram over real pixels
@@ -1468,17 +1333,11 @@ class OpsSpec extends AnyFunSuite {
     val expected = Multimodal.ImageCodec.features(
       Multimodal.ImageCodec.decode(png).get, 8)
     assert(feats.toSeq == expected.toSeq)
-    // metadata overstating the decoded size gets repaired from pixels
-    val lying = Seq(Multimodal.MediaRow(2L, "image", "png", 500, 300, 0L, png)).toDS()
-    val repaired = Multimodal.resize(lying, targetWidth = 200).collect().head
-    assert(repaired.width == 100 && repaired.height == 60)
-    assert(repaired.content.toSeq == png.toSeq) // bytes untouched
     // corrupt image bytes never fail the task: stub fallback kicks in
     val corrupt = Seq(Multimodal.MediaRow(3L, "image", "png", 64, 64, 0L,
       Array.tabulate[Byte](64)(_.toByte))).toDS()
     val cf = Multimodal.extractFeatures(corrupt, dims = 8).collect().head
     assert(cf.feature.length == 8)
-    assert(Multimodal.resize(corrupt, 32).collect().head.width == 32)
   }
 
   test("audio codec: real WAV decode, sample-derived features, corrupt fallback") {
@@ -1531,22 +1390,6 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
     assert(typed.keySet == exploded.keySet)
     typed.foreach { case (k, v) => assert(v == exploded(k), s"label $k differs") }
-  }
-
-  test("char shingles, subword count and shingle fingerprints") {
-    val t = Seq((1L, "abc  def"), (2L, "ab")).toDF("doc_id", "text")
-    val sh = t.select(col("doc_id"), TextAnalysis.charShingles(col("text"), 3))
-      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    assert(sh(1L) == Seq("abc", "bc ", "c d", " de", "def")) // ws normalized
-    assert(sh(2L) == Seq("ab")) // shorter than n -> whole string
-    val sw = Seq((1L, "hello world42 x-y!")).toDF("doc_id", "text")
-      .select(TextAnalysis.subwordCount(col("text"))).head().getInt(0)
-    assert(sw == 7) // hello, world, 42, x, -, y, !
-    val fp = Seq((1L, "a b c d"), (2L, "a b c d"), (3L, "w x y z"))
-      .toDF("doc_id", "text")
-      .select(col("doc_id"), TextAnalysis.shingleFingerprint(col("text")))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(fp(1L) == fp(2L) && fp(1L) != fp(3L))
   }
 
   test("IVF: full-probe equals brute force; low-probe finds planted cluster") {
@@ -1678,8 +1521,7 @@ class OpsSpec extends AnyFunSuite {
     // of unchanged files serves the memo, and an overwrite under the
     // same PATH changes the files in the key, so it re-counts with no
     // clear call
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_spec")
-      .resolve("t.parquet").toString
+    val dir = graft.TempDirs.createCleaned("graft_cc_spec") + "/t.parquet"
     spark.range(10).toDF("id").write.mode("overwrite").parquet(dir)
     assert(graft.CorpusCounts.of(spark.read.parquet(dir)) == 10L)
     val (again, err) = graft.MemosSpec.stderrOf(graft.CorpusCounts.of(spark.read.parquet(dir)))
@@ -1808,7 +1650,7 @@ class OpsSpec extends AnyFunSuite {
       .as[(Long, Double)].collect().toMap
     assert(split.nonEmpty && split == fused,
       s"split path drifted from fused: ${(split.toSet diff fused.toSet).take(3)}")
-    val dir = java.nio.file.Files.createTempDirectory("graft_lrmodel").toString
+    val dir = graft.TempDirs.createCleaned("graft_lrmodel")
     val written = graft.ops.Classifier.saveLogRegModel(model, dir)
     assert(written.numBuckets == 32 && written.eta == 0.5 && written.iters == 2)
     val loaded = graft.ops.Classifier.loadLogRegModel(spark, dir)
@@ -2035,10 +1877,12 @@ class OpsSpec extends AnyFunSuite {
     assert(viaShards == exact,
       s"sharded full-probe must be exact: ${(viaShards diff exact).take(3)} vs ${(exact diff viaShards).take(3)}")
     assert(viaFlat == exact, "flat full-probe stays exact (x33's pinned contract)")
-    // single-query merge too
-    val q = emb.filter(col("vec_id") === 0)
-      .select("embedding").as[Seq[Float]].head().toArray
-    val singleSharded = Similarity.ivfShardedTopK(sharded, q, topK = 5, nprobe = 4)
+    // a one-row query frame merges to the single-query exact answer
+    val one = emb.filter(col("vec_id") === 0)
+    val q = one.select("embedding").as[Seq[Float]].head().toArray
+    val singleSharded = Similarity.ivfShardedBatchTopK(sharded, one,
+      "vec_id", "embedding", topK = 5, nprobe = 4)
+      .orderBy(col("rank")).select(col("neighbor_id"), col("cosine"))
       .as[(Long, Double)].collect().toSeq
     val singleExact = Similarity.bruteForceTopK(emb, "vec_id", "embedding", q, k = 5)
       .as[(Long, Double)].collect().toSeq
@@ -2282,15 +2126,10 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("sampling strata ceiling: row-scoped stratum column fails loudly, not with a driver OOM") {
-    // > MaxStrata distinct strata (a doc_id-like column): the count
-    // collect must reject BEFORE materializing the full map
+    // > MaxStrata distinct strata (a doc_id-like column): the
+    // map-driven operators gate on the driver-side map itself
     val big = spark.range(Sampling.MaxStrata + 10L)
       .select(col("id"), col("id").cast("string").as("stratum"))
-    val e = intercept[IllegalArgumentException] {
-      Sampling.temperatureMixture(big, "stratum", "id", alpha = 0.5).count() }
-    assert(e.getMessage.contains("MaxStrata")
-      || e.getMessage.contains("strata"), e.getMessage)
-    // the map-driven operators gate on the driver-side map itself
     val shares = (0 until Sampling.MaxStrata + 1)
       .map(i => s"s$i" -> 0.5).toMap
     val e2 = intercept[IllegalArgumentException] {
@@ -2299,34 +2138,6 @@ class OpsSpec extends AnyFunSuite {
     val e3 = intercept[IllegalArgumentException] {
       Sampling.upsampleToTarget(big, "stratum", "id", shares) }
     assert(e3.getMessage.contains("MaxStrata"))
-  }
-
-  test("temperature mixture: alpha=1 keeps all, alpha=0 equalizes strata, monotone between") {
-    import spark.implicits._
-    // skewed synthetic corpus: 1000 / 200 / 50 rows per source
-    val rows = (1L to 1000L).map(i => (i, "big")) ++
-      (1001L to 1200L).map(i => (i, "mid")) ++ (1201L to 1250L).map(i => (i, "small"))
-    val df = rows.toDF("id", "src")
-    def kept(alpha: Double): Map[String, Long] =
-      Sampling.temperatureMixture(df, "src", "id", alpha)
-        .groupBy("src").count().as[(String, Long)].collect().toMap
-    val natural = kept(1.0)
-    assert(natural == Map("big" -> 1000L, "mid" -> 200L, "small" -> 50L))
-    // alpha=0: every stratum's EXPECTED kept count is the rarest
-    // stratum's size (hash sampling → tolerance)
-    val flat = kept(0.0)
-    assert(flat("small") == 50L) // rarest keeps everything exactly
-    assert(math.abs(flat("big") - 50L) <= 25, flat.toString)
-    assert(math.abs(flat("mid") - 50L) <= 25, flat.toString)
-    // 0<alpha<1 sits between natural and flat per stratum
-    val half = kept(0.5)
-    assert(half("big") > flat("big") && half("big") < natural("big"), half.toString)
-    // deterministic: same call, same rows
-    assert(kept(0.5) == half)
-    // null strata are dropped, not an NPE in the fraction build
-    val withNull = df.union(Seq((9999L, null.asInstanceOf[String])).toDF("id", "src"))
-    val noNulls = Sampling.temperatureMixture(withNull, "src", "id", 0.5)
-    assert(noNulls.filter(col("src").isNull).count() == 0)
   }
 
   test("hash-stratified sample: fractions within tolerance, stable under relayout") {
@@ -2928,7 +2739,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("compaction: file count targets on-disk bytes, data intact, idempotent") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact")
+    val dir = graft.TempDirs.createCleaned("graft_compact")
     val frag = s"$dir/frag"
     val out = s"$dir/out"
     val df = spark.range(5000).toDF("id")
@@ -2948,45 +2759,10 @@ class OpsSpec extends AnyFunSuite {
     assert(Layout.compact(spark, out, out2, targetFileBytes = 1L << 30) == 1)
   }
 
-  test("schema evolution: merged read surfaces late columns as nulls") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_evolve").toString
-    Seq((1L, "alpha")).toDF("id", "text").write.parquet(s"$dir/p=1")
-    Seq((2L, "beta", "en")).toDF("id", "text", "lang").write.parquet(s"$dir/p=2")
-    val merged = graft.etl.Ingest.readEvolvedParquet(spark, dir)
-    assert(merged.columns.toSet == Set("id", "text", "lang", "p"))
-    val rows = merged.select("id", "lang").as[(Long, Option[String])]
-      .collect().toMap
-    assert(rows == Map(1L -> None, 2L -> Some("en")))
-    // the default first-footer read would have dropped `lang` — the
-    // merged read is what makes snapshot evolution visible
-  }
-
-  test("jsonl export: gzip line files, record cap respected, round-trips") {
-    val docs = graft.Tables.documents(spark, graft.SparkTestSession.sfDir)
-      .select("doc_id", "text", "lang")
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
-    CorpusExport.writeJsonlShards(docs, "doc_id", dir, maxRecordsPerFile = 20)
-    val files = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".json.gz"))
-    assert(files.nonEmpty)
-    // the cap bounds every file; gzip JSONL reads back losslessly
-    val back = spark.read.json(dir)
-    assert(back.count() == docs.count())
-    files.foreach { f =>
-      val lines = scala.io.Source.fromInputStream(
-        new java.util.zip.GZIPInputStream(
-          new java.io.FileInputStream(f))).getLines().size
-      assert(lines <= 20, s"${f.getName}: $lines lines")
-    }
-    val a = docs.orderBy("doc_id").collect().toSeq
-    val b = back.select("doc_id", "text", "lang").orderBy("doc_id").collect().toSeq
-    assert(a == b)
-  }
-
   test("ivf index survives save/load: identical probes, cluster-pruned scan") {
     val emb = graft.Tables.embeddings(spark, graft.SparkTestSession.sfDir)
     val built = Similarity.ivfIndex(emb, "vec_id", "embedding", k = 8, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = graft.TempDirs.createCleaned("graft_ivf")
     Similarity.saveIvfIndex(built, dir)
     val loaded = Similarity.loadIvfIndex(spark, dir, "vec_id", "embedding")
     assert(loaded.centroids.length == built.centroids.length)
@@ -3008,32 +2784,14 @@ class OpsSpec extends AnyFunSuite {
 
   test("bpe rules survive save/load; the apply path segments OOV words and matches training") {
     // the tokenizer apply story: rules persist (contiguous-rank
-    // validated), and bpeSegmentVocabWith replays the training loop's
-    // application machinery — words the training corpus saw must
-    // segment EXACTLY as the trained model's own vocab table says,
-    // and OOV words segment losslessly under the frozen rules
+    // validated) and load back identically
     val corpus = graft.Tables.documents(spark, graft.SparkTestSession.sfDir)
     val model = TextAnalysis.bpeModel(corpus, "text", numMerges = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+    val dir = graft.TempDirs.createCleaned("graft_bpe")
     val written = TextAnalysis.saveBpeRules(spark, model.rules, dir)
     assert(written == model.rules, "rules must round-trip identically")
     val loaded = TextAnalysis.loadBpeRules(spark, dir)
     assert(loaded == model.rules)
-    def symsOf(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("word"), col("syms"))
-      .as[(String, Seq[String])].collect().toMap
-    val applied = symsOf(TextAnalysis.bpeSegmentVocabWith(loaded, corpus, "text"))
-    val trained = symsOf(model.segmentedVocab)
-    assert(applied.nonEmpty && applied == trained,
-      s"apply path drifted from the trained vocab on " +
-        s"${(applied.toSet diff trained.toSet).take(2)}")
-    // OOV: a fabricated word the corpus cannot contain still segments
-    // losslessly under the frozen rules
-    val oov = Seq("zzqxjvzzqxjv").toDF("text")
-    val oovSyms = symsOf(TextAnalysis.bpeSegmentVocabWith(loaded, oov, "text"))
-    assert(oovSyms.keySet == Set("zzqxjvzzqxjv"))
-    assert(oovSyms("zzqxjvzzqxjv").mkString("") == "zzqxjvzzqxjv",
-      "segmentation must be lossless on OOV words")
     // a truncated store (missing middle rank) fails loudly
     import spark.implicits._
     model.rules.filter(_._1 != 2).toDF("merge_rank", "lhs", "rhs", "cnt")
@@ -3050,7 +2808,7 @@ class OpsSpec extends AnyFunSuite {
     // rectangle so a truncated store fails loudly
     val emb = graft.Tables.embeddings(spark, graft.SparkTestSession.sfDir)
     val pq = Similarity.pqTrain(emb, "vec_id", "embedding", m = 4, k = 8, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq").toString
+    val dir = graft.TempDirs.createCleaned("graft_pq")
     val written = Similarity.savePqModel(spark, pq, dir)
     assert(written.m == pq.m && written.k == pq.k && written.subDim == pq.subDim)
     val loaded = Similarity.loadPqModel(spark, dir)
@@ -3074,7 +2832,7 @@ class OpsSpec extends AnyFunSuite {
     val rest = emb.filter(col("vec_id") >= 40 && col("vec_id") < 60)
     val built = Similarity.ivfIndex(first, "vec_id", "embedding",
       k = 4, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_app").toString
+    val dir = graft.TempDirs.createCleaned("graft_ivf_app")
     Similarity.saveIvfIndex(built, dir)
     Similarity.appendToIvfIndex(spark, dir, rest, "vec_id", "embedding")
     val grown = Similarity.loadIvfIndex(spark, dir, "vec_id", "embedding")
@@ -3090,7 +2848,7 @@ class OpsSpec extends AnyFunSuite {
     assert(top.getLong(0) == 50L, s"appended vector not served: $top")
     // the shared assignment expression: re-appending vectors the
     // index already holds lands them in their original clusters
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_ivf_app2").toString
+    val dir2 = graft.TempDirs.createCleaned("graft_ivf_app2")
     Similarity.saveIvfIndex(built, dir2)
     Similarity.appendToIvfIndex(spark, dir2,
       first.withColumn("vec_id", col("vec_id") + 1000),
@@ -3191,10 +2949,6 @@ class OpsSpec extends AnyFunSuite {
       .as[(Long, String)].collect().toMap
     assert(got == Map(1L -> "unchanged", 2L -> "changed",
       3L -> "removed", 4L -> "removed", 5L -> "added"))
-    val summary = Diff.corpusDiffSummary(v1, v2, "doc_id", "text")
-      .as[(String, Long)].collect().toMap
-    assert(summary == Map("added" -> 1L, "changed" -> 1L,
-      "removed" -> 2L, "unchanged" -> 1L))
   }
 
   test("audio fingerprint near-dups: gain-scaled re-encodes surface, corrupt bytes drop") {
@@ -5017,37 +4771,6 @@ class OpsSpec extends AnyFunSuite {
     assert(uniform.getAs[Double]("skew_ratio") == 1.0)
   }
 
-  test("salted join: duplicated hot rows spread over >=2 salt buckets, results intact") {
-    // 200 IDENTICAL rows of one hot key — the regime salting exists
-    // for. A whole-row-hash salt would put all 200 in ONE bucket.
-    val hot = Seq.fill(200)((1L, "dup")).toDF("k", "payload")
-      .repartition(8)
-    // fallback salt (physical position): duplicates must spread
-    val fallbackSalts = hot
-      .withColumn("__salt", Skew.saltExpr(hot, None, 8))
-      .select("__salt").distinct().count()
-    assert(fallbackSalts >= 2,
-      s"positional salt left duplicates in $fallbackSalts bucket(s)")
-    // id-derived salt: distinct ids on a hot KEY must spread too
-    val hotIds = (1L to 200L).map(i => (1L, i)).toDF("k", "row_id")
-    val idSalts = hotIds
-      .withColumn("__salt", Skew.saltExpr(hotIds, Some("row_id"), 8))
-      .select("__salt").distinct().count()
-    assert(idSalts >= 2, s"id salt left hot key in $idSalts bucket(s)")
-    // join semantics survive salting: same rows as the plain join,
-    // duplicates preserved (200 matches), left rows without a match kept
-    val dim = Seq((1L, "seg_a")).toDF("k", "seg")
-    val inner = Skew.saltedEquiJoin(hot, dim, "k", saltFactor = 8)
-    assert(inner.count() == 200)
-    assert(inner.select("seg").distinct().collect().map(_.getString(0))
-      .toSeq == Seq("seg_a"))
-    val withMiss = hot.union(Seq((2L, "lonely")).toDF("k", "payload"))
-    val left = Skew.saltedEquiJoin(withMiss, dim, "k", saltFactor = 8,
-      joinType = "left", saltSourceCol = None)
-    assert(left.count() == 201)
-    assert(left.filter(col("k") === 2L && col("seg").isNull).count() == 1)
-  }
-
   test("rebalance to target: fractions honored, cap-at-1 keeps all, relayout-stable") {
     // a: 1000 rows, b: 100, c: 50, d: 200 (d not targeted -> dropped)
     val rows = ((1L to 1000L).map(i => (i, "a")) ++
@@ -5303,26 +5026,9 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("keyword screen auto + phrase hits: screen parity, overlapping phrase counts") {
-    // keywordScreenAuto must equal keywordScreen row-for-row on the
-    // x134-shaped fixture
-    val corpus = Seq(
-      ("s", "spark spark table"),
-      ("s", "join filter scan"),
-      ("t", "nothing matches here"),
-      ("t", "spark stream spark")).toDF("source", "text")
-    val cats = Map(
-      "engine" -> Seq("spark", "stream"),
-      "relational" -> Seq("join", "filter", "scan"),
-      "storage" -> Seq("table", "row"))
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy(col("grp"), col("category"))
-        .as[(String, String, Long, Long)].collect().toSeq
-    assert(rows(TextAnalysis.keywordScreenAuto(corpus, "source", "text", cats,
-        flagThreshold = 2))
-      == rows(TextAnalysis.keywordScreen(corpus, "source", "text", cats,
-        flagThreshold = 2)))
-    // phrase hits: multi-word matching with OVERLAPS — adjacent
-    // repeats share the delimiter space
+    // screen parity of the automaton path is pinned by the
+    // AhoDispatchThreshold case. Phrase hits: multi-word matching with
+    // OVERLAPS — adjacent repeats share the delimiter space
     val docs = Seq(
       (1L, "table table table"),        // "table table" twice (overlap)
       (2L, "a  Table\ttable b"),        // case + whitespace normalize -> 1
@@ -5423,10 +5129,6 @@ class OpsSpec extends AnyFunSuite {
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(rep("A") == ((2L, 1L, 2L, 5L)), s"got $rep")
     assert(rep("B") == ((1L, 1L, 1L, 0L)))
-    val released = Privacy.releasableCells(rows,
-      Seq(col("t"), col("cell")), k = 3)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    assert(released.toSeq == Seq(("A", "c1", 5L)))
   }
 
   test("erasure: subjects fully purged, audit proves zero residue, others untouched") {
@@ -5446,13 +5148,6 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("compaction cadence: compactionDue arithmetic; swapCompacted completes blue/green") {
-    // the r19 verdict-#4 rule: due ⇔ files × perFileMs > fraction × wall
-    assert(!Layout.compactionDue(fileCount = 10, perFileMs = 2.0,
-      batchWallMs = 1000.0))
-    assert(Layout.compactionDue(fileCount = 150, perFileMs = 2.0,
-      batchWallMs = 1000.0))
-    assert(!Layout.compactionDue(fileCount = 100, perFileMs = 2.0,
-      batchWallMs = 1000.0), "boundary: exactly the budget is not yet due")
     val live = graft.TempDirs.createCleaned("swap_live_spec")
     Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "t")
       .repartition(3).write.mode("overwrite").parquet(live)
@@ -5759,26 +5454,6 @@ class OpsSpec extends AnyFunSuite {
     // the collapsed duplicate row moved nothing: v1 starts at the FIRST t
     assert(u1(0).getAs[java.sql.Timestamp]("valid_from").getTime == 0L ||
       u1(0).getAs[java.sql.Timestamp]("valid_from") != null)
-  }
-
-  test("applyChangeSet: latest change wins, deletes drop, inserts land, base passes through") {
-    val base = Seq((1L, "a", 10L), (2L, "b", 20L), (3L, "c", 30L))
-      .toDF("id", "v", "n")
-    val changes = Seq(
-      (1L, "a2", 11L, 100L, 1L, false), // update id 1 (older)
-      (1L, "a3", 12L, 200L, 2L, false), // update id 1 (newer — wins)
-      (2L, "x", 0L, 100L, 3L, true),    // delete id 2
-      (9L, "new", 90L, 100L, 4L, false) // insert id 9
-    ).toDF("id", "v", "n", "ord", "tie", "del")
-    val out = History.applyChangeSet(base, changes, "id", "ord", "tie",
-        "del", Seq("v", "n"))
-      .orderBy("id").collect()
-    assert(out.map(_.getAs[Long]("id")).toSeq == Seq(1L, 3L, 9L))
-    val m = out.map(r => r.getAs[Long]("id") ->
-      (r.getAs[String]("v"), r.getAs[Long]("n"))).toMap
-    assert(m(1L) == ("a3", 12L)) // newest change applied
-    assert(m(3L) == ("c", 30L))  // untouched base row
-    assert(m(9L) == ("new", 90L))
   }
 
   test("calibration: hand-checked buckets, approx twin matches exact, guards") {

@@ -10,11 +10,11 @@ class EventStreamsSpec extends AnyFunSuite {
 
   // FileStreamSource needs a *directory*; testdata ships one file
   private lazy val eventsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_src")
+    val dir = graft.TempDirs.createCleaned("graft_stream_src")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      dir.resolve("events.parquet"))
-    dir.toString
+      java.nio.file.Paths.get(dir, "events.parquet"))
+    dir
   }
 
   private def rootMsg(t: Throwable): String =
@@ -80,10 +80,9 @@ class EventStreamsSpec extends AnyFunSuite {
   }
 
   test("file sink + checkpoint: restart consumes only new files, no dupes; watermark drops late rows") {
-    import java.nio.file.Files
-    val srcDir = Files.createTempDirectory("graft_sink_src").toString
-    val outDir = Files.createTempDirectory("graft_sink_out").toString
-    val ckDir = Files.createTempDirectory("graft_sink_ck").toString
+    val srcDir = graft.TempDirs.createCleaned("graft_sink_src")
+    val outDir = graft.TempDirs.createCleaned("graft_sink_out")
+    val ckDir = graft.TempDirs.createCleaned("graft_sink_ck")
     def writeBatch(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit =
       writeEvents(s"$srcDir/$name", rows)
     def run(): Unit = {
@@ -121,56 +120,9 @@ class EventStreamsSpec extends AnyFunSuite {
     assert(out.filter(hour(col("hour_start")) === 3).count() == 1)
   }
 
-  test("stream-stream join matches the batch time-range join") {
-    val stream = EventStreams.fromParquetDir(spark, eventsDir)
-    val got = EventStreams.runToMemory(spark,
-      EventStreams.eventsWithRecentPurchases(stream), "ss_join")
-    val ev = Tables.events(spark, sfDir)
-    val p = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
-        col("value").as("p_value"))
-    val batch = ev.join(p, expr(
-      "user_id = p_user AND p_ts <= ts AND p_ts >= ts - interval 1 hour"))
-    // append mode emits a pair once both watermarks pass it; every
-    // emitted pair must exist in the batch join, and the overlap must
-    // be substantial (only tail-of-stream pairs may be withheld)
-    assert(got.count() > 0)
-    val bothKeys = Seq("event_id", "p_ts")
-    assert(got.select(bothKeys.map(col): _*)
-      .join(batch.select(col("event_id"), col("p_ts")), bothKeys, "left_anti")
-      .count() == 0, "streamed pair missing from the batch join")
-    assert(got.count() >= batch.count() / 2)
-  }
-
-  test("stream-static enrichment equals the batch left join; static side needs no state") {
-    val stream = EventStreams.fromParquetDir(spark, eventsDir)
-    // user dimension derived from the corpus: a per-user segment tag
-    val dim = Tables.events(spark, sfDir)
-      .groupBy(col("user_id").as("d_user"))
-      .agg(count(lit(1)).as("d_events"))
-      .withColumn("segment",
-        when(col("d_events") >= 100, "heavy").otherwise("light"))
-    val got = EventStreams.runToMemory(spark,
-      EventStreams.enrichWithDimension(stream, dim, "user_id", "d_user")
-        .select(col("event_id"), col("segment")),
-      "ss_enrich", outputMode = OutputMode.Append())
-    val batch = Tables.events(spark, sfDir)
-      .join(dim, col("user_id") === col("d_user"), "left")
-      .select(col("event_id"), col("segment"))
-    // stateless join: EVERY event is emitted, enriched identically
-    assert(got.count() == batch.count())
-    assert(got.join(batch, Seq("event_id", "segment"), "left_anti")
-      .count() == 0, "streamed enrichment diverges from the batch join")
-    // the guards hold the contract: static-as-stream and vice versa fail
-    intercept[IllegalArgumentException] {
-      EventStreams.enrichWithDimension(dim, dim, "d_user", "d_user")
-    }
-  }
-
   test("streaming dedup within watermark keeps one row per key") {
-    import java.nio.file.Files
     import spark.implicits._
-    val srcDir = Files.createTempDirectory("graft_dedup_src").toString
+    val srcDir = graft.TempDirs.createCleaned("graft_dedup_src")
     // event 1 appears three times (replayed file / re-crawl shape),
     // event 2 once; all within one watermark horizon
     writeEvents(s"$srcDir/b1", Seq(
@@ -187,12 +139,11 @@ class EventStreamsSpec extends AnyFunSuite {
   }
 
   test("streaming dedup is exactly-once across a restart with a replayed file") {
-    import java.nio.file.Files
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_dedup_restart")
-    val srcDir = root.resolve("src").toString
-    val outDir = root.resolve("out").toString
-    val ckpt = root.resolve("ckpt").toString
+    val root = graft.TempDirs.createCleaned("graft_dedup_restart")
+    val srcDir = s"$root/src"
+    val outDir = s"$root/out"
+    val ckpt = s"$root/ckpt"
     def write(name: String, rows: Seq[(Long, Long, Long, String, Double, String)]): Unit =
       writeEvents(s"$srcDir/$name", rows)
     // run 1: two events land and commit to the file sink
@@ -218,32 +169,16 @@ class EventStreamsSpec extends AnyFunSuite {
     assert(got.select("event_id").as[Long].collect().toSet == Set(1L, 2L, 3L))
   }
 
-  test("stateful per-user activity aggregates every event once") {
-    val stream = EventStreams.fromParquetDir(spark, eventsDir)
-    val got = EventStreams.runToMemory(spark,
-      EventStreams.userActivity(stream).toDF(), "user_activity",
-      OutputMode.Update)
-    // one micro-batch → one state row per user; totals match batch
-    val batch = Tables.events(spark, sfDir)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("v"))
-    val latest = got.groupBy(col("user_id"))
-      .agg(max(col("n_events")).as("n_events"), max(col("total_value")).as("total_value"))
-    val joined = latest.join(batch, "user_id")
-    assert(joined.filter(col("n_events") =!= col("n")).count() == 0)
-    assert(joined.filter(abs(col("total_value") - col("v")) > 0.01).count() == 0)
-  }
-
   test("streaming curation equals the batch pipeline bit-for-bit") {
     import graft.ops.TextAnalysis
     // stateless row-level stages (score, gate, scrub) — a completed
     // stream over a static directory must equal the batch run exactly
     val docsDir = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_docstream_spec")
+      val dir = graft.TempDirs.createCleaned("graft_docstream_spec")
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$sfDir/documents.parquet"),
-        dir.resolve("documents.parquet"))
-      dir.toString
+        java.nio.file.Paths.get(dir, "documents.parquet"))
+      dir
     }
     def curate(df: org.apache.spark.sql.DataFrame) =
       TextAnalysis.qualityScore(df)
@@ -794,39 +729,5 @@ class EventStreamsSpec extends AnyFunSuite {
     assert(day3Rows.nonEmpty && day3Rows.forall(_._2 == "duplicate"),
       s"day-3 replicas must all flag through the grown ledger: " +
         s"${day3Rows.filter(_._2 != "duplicate").take(5)}")
-  }
-
-  test("streaming running profile converges to the batch profile exactly") {
-    import java.nio.file.Files
-    import spark.implicits._
-    import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_profile_src").toString
-    val b1 = Seq(("a", 10L), ("a", 30L), ("b", 5L))
-    val b2 = Seq(("a", 20L), ("b", 1L), ("c", 7L))
-    b1.toDF("grp", "v").coalesce(1).write.mode("append").parquet(dir)
-    b2.toDF("grp", "v").coalesce(1).write.mode("append").parquet(dir)
-    val schema = StructType(Seq(
-      StructField("grp", StringType), StructField("v", LongType)))
-    // one file per micro-batch: groups spanning files must MERGE in
-    // state, not recompute
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    val got = EventStreams.runToMemory(spark,
-      EventStreams.runningProfile(stream, "grp", "v").toDF(),
-      "running_profile", OutputMode.Update)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))
-    // the final state per group = the emission with the largest n
-    val finals = got.groupBy(_._1).map { case (g, rows) =>
-      g -> rows.maxBy(_._2) }.toMap
-    val batch = graft.ops.Profiling.batchStats(
-      (b1 ++ b2).toDF("grp", "v"), "grp", "v")
-      .collect().map(r => r.getString(0) ->
-        ((r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4)))).toMap
-    assert(finals == batch, s"finals $finals vs batch $batch")
-    // group "a" spans both files: its state must have been emitted
-    // more than once (incremental merge, not a single-batch compute)
-    assert(got.count(_._1 == "a") >= 2)
   }
 }
