@@ -17,22 +17,25 @@ import org.apache.spark.sql.SparkSession
   * the failure path can CANCEL sibling jobs (interrupting a pool
   * thread alone does not stop an already-submitted Spark job — the
   * r17 review); on any failure the group is cancelled, the pool
-  * drained with a bounded wait, and the first error rethrown.
+  * drained with a bounded wait, and the first error rethrown. A run
+  * with no failure cancels nothing: its group has no job left.
   * Results return in chain order — callers that union them keep
   * their original deterministic shape.
   *
-  * `maxConcurrency` defaults to 4 (the r17 cap argument: each
-  * in-flight chain may hold driver-resident state — a trained model,
-  * a collected meta row — and the cap bounds that regardless of
-  * chain count). */
+  * At most `MaxConcurrency` (4) chains run at once: each in-flight
+  * chain may hold driver-resident state — a trained model, a
+  * collected meta row — and the cap bounds that regardless of chain
+  * count. */
 object Concurrency {
 
-  def awaitAll[T](spark: SparkSession, label: String,
-      maxConcurrency: Int = 4)(chains: Seq[() => T]): Seq[T] = {
+  private val MaxConcurrency = 4
+
+  def awaitAll[T](spark: SparkSession, label: String)(
+      chains: Seq[() => T]): Seq[T] = {
     require(chains.nonEmpty, "awaitAll needs at least one chain")
     if (chains.length == 1) return Seq(chains.head())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(chains.length, maxConcurrency))
+      math.min(chains.length, MaxConcurrency))
     val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
     val sc = spark.sparkContext
     val group = s"graft-$label-${System.nanoTime()}"
@@ -46,15 +49,17 @@ object Concurrency {
       }
       // combine on the completing thread: after a failure the pool is
       // shut down and would reject the combinator's callbacks
-      scala.concurrent.Await.result(
+      try scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(futures)(implicitly,
           scala.concurrent.ExecutionContext.parasitic),
         scala.concurrent.duration.Duration.Inf)
+      catch { case t: Throwable =>
+        // stop sibling chains' jobs before their half-written state
+        // can confuse anything downstream
+        sc.cancelJobGroup(group)
+        throw t
+      }
     } finally {
-      // no-op on success (the group already finished); on failure it
-      // stops sibling chains' jobs before their half-written state
-      // can confuse anything downstream
-      sc.cancelJobGroup(group)
       pool.shutdownNow()
       val drained = pool.awaitTermination(
         120, java.util.concurrent.TimeUnit.SECONDS)

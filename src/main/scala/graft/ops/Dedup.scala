@@ -1172,8 +1172,6 @@ object Dedup {
     * use it as the cheap first-pass filter and the join variant for
     * attribution on the survivors.
     *
-    * The eval-side filter is MEMOIZED per (eval input, sketch params).
-    *
     * Same stop-fingerprint cap as the join variant: fingerprints in
     * more than `maxEvalDocFreq` eval docs are boilerplate, not
     * contamination signal, and are dropped before the filter is
@@ -1183,17 +1181,37 @@ object Dedup {
     * distinct-fingerprint overlap with the eval union is ≥
     * `minMatched`. Exact-twin discipline: x37's word-trigram
     * intersection pins the shared-passage semantics this
-    * approximates. */
-  /** Memo of built eval-side Bloom filters, keyed by session + eval
-    * input + sketch/cap/fpp params (NOT
-    * minMatched — the filter doesn't depend on it, so threshold
-    * sweeps reuse one build). Values are the serialized filter
-    * bytes: tiny and driver-held, nothing to unpersist on eviction;
-    * `None` records an empty capped set. */
-  private val bloomMemo =
-    new graft.BoundedMemo[((String, String), String, Int, Int, Int, Double),
-      Option[Array[Byte]]](16, "eval-bloom")
+    * approximates.
+    *
+    * The train side is one codegen'd projection per row: winnowing
+    * runs once, the membership test folds over the in-row fingerprint
+    * array, and the filter rides the plan as a binary literal
+    * (task-broadcast). */
+  def bloomDecontaminate(train: DataFrame, eval: DataFrame,
+      idCol: String, textCol: String,
+      minMatched: Int = 2, k: Int = 8, window: Int = 4,
+      maxEvalDocFreq: Int = 20, fpp: Double = 0.01): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import org.apache.spark.sql.types.BinaryType
+    val bytes = buildEvalBloom(eval, idCol, textCol, k, window,
+        maxEvalDocFreq, fpp).getOrElse {
+      return train.select(col(idCol).as("train_id"),
+        lit(0L).as("matched_fingerprints")).filter(lit(false))
+    }
+    val mightContain: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
+      f => ColumnBridge.column(BloomFilterMightContain(
+        Literal(bytes, BinaryType), ColumnBridge.expression(f)))
+    train.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("train_id"),
+        size(filter(array_distinct(
+          Sketches.winnowingFingerprint(col(textCol), k, window)),
+          mightContain)).cast("long").as("matched_fingerprints"))
+      .filter(col("matched_fingerprints") >= minMatched)
+  }
 
+  /** The serialized eval-side Bloom filter of [[bloomDecontaminate]];
+    * `None` when the capped fingerprint set is empty. */
   private def buildEvalBloom(eval: DataFrame, idCol: String, textCol: String,
       k: Int, window: Int, maxEvalDocFreq: Int,
       fpp: Double): Option[Array[Byte]] = {
@@ -1225,53 +1243,6 @@ object Dedup {
       bloom.writeTo(bos)
       Some(bos.toByteArray)
     }
-  }
-
-  def bloomDecontaminate(train: DataFrame, eval: DataFrame,
-      idCol: String, textCol: String,
-      minMatched: Int = 2, k: Int = 8, window: Int = 4,
-      maxEvalDocFreq: Int = 20, fpp: Double = 0.01): DataFrame = {
-    val maybeBytes = bloomMemo.getOrBuild((graft.PlanKeys.scoped(eval),
-        s"$idCol/$textCol", k, window, maxEvalDocFreq, fpp))(
-      buildEvalBloom(eval, idCol, textCol, k, window, maxEvalDocFreq, fpp))
-    bloomDecontaminateWith(train,
-      EvalBloomFilter(maybeBytes, k, window, maxEvalDocFreq, fpp),
-      idCol, textCol, minMatched)
-  }
-
-  /** A built eval-side decontamination filter: the serialized Bloom
-    * bytes (`None` = the capped fingerprint set was empty) plus the
-    * sketch parameters it was built with — carried together so the
-    * train-side pass can never silently probe with mismatched
-    * winnowing params (a k=8 filter probed with k=6 fingerprints
-    * would flag nothing, with no error). */
-  case class EvalBloomFilter(bytes: Option[Array[Byte]], k: Int,
-      window: Int, maxEvalDocFreq: Int, fpp: Double)
-
-  /** Train-side decontamination pass against a pre-built filter
-    * (the one [[bloomDecontaminate]] memoizes): one codegen'd
-    * projection per row — winnowing runs once with the FILTER'S OWN
-    * sketch params, the membership test folds over the in-row
-    * fingerprint array, the filter rides the plan as a binary
-    * literal (task-broadcast). Zero exchanges on the train side. */
-  def bloomDecontaminateWith(train: DataFrame, bloom: EvalBloomFilter,
-      idCol: String, textCol: String, minMatched: Int = 2): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    import org.apache.spark.sql.types.BinaryType
-    val bytes = bloom.bytes.getOrElse {
-      return train.select(col(idCol).as("train_id"),
-        lit(0L).as("matched_fingerprints")).filter(lit(false))
-    }
-    val mightContain: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-      f => ColumnBridge.column(BloomFilterMightContain(
-        Literal(bytes, BinaryType), ColumnBridge.expression(f)))
-    train.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("train_id"),
-        size(filter(array_distinct(
-          Sketches.winnowingFingerprint(col(textCol), bloom.k, bloom.window)),
-          mightContain)).cast("long").as("matched_fingerprints"))
-      .filter(col("matched_fingerprints") >= minMatched)
   }
 
   /** Duplicate-cluster formation: connected components over a
@@ -1318,40 +1289,25 @@ object Dedup {
 
   private def duplicateClustersUncached(pairs: DataFrame, idACol: String,
       idBCol: String, maxIters: Int): DataFrame = {
-    import org.apache.spark.sql.graftbridge.SessionBridge
     import org.apache.spark.storage.StorageLevel
-    // r21: the cached edge layout is sized by the EDGE LIST (~1M
-    // 16-byte rows ≈ 16 MB per partition), not the core count — every
-    // round re-scans this cache, and a core-count width pins every
-    // round's map stages at ~defaultParallelism tasks over tiny data
-    // (the 32c>8c inversion, profiled: 64-task round stages at 3.9 s
-    // CPU / 11 s task time on 32 cores vs 0.28 s / 0.8 s on 8). The
-    // hash-on-src layout also hands the seed aggregate its clustering
-    // for free. The count memoizes and forces the shared upstream
-    // pair build before anything here materializes.
+    // The cached edge layout is sized by the EDGE LIST (~1M 16-byte
+    // rows ≈ 16 MB per partition), not the core count: every round
+    // re-scans this cache, and a core-count width would pin every
+    // round's map stages at ~defaultParallelism tasks over tiny data.
+    // The hash-on-src layout also hands the seed aggregate its
+    // clustering for free. The count memoizes and forces the shared
+    // upstream pair build before anything here materializes.
+    //
+    // The rounds run on the caller's session and set no conf. AQE
+    // sizes their shuffles from the bytes each exchange carries:
+    // partitions coalesce down to the 1 MB minimum partition size, so
+    // a round over an O(|clustered docs|) frame of a few MB runs as a
+    // few tasks at any core count, and rounds at corpus scale still go
+    // wide.
     val pairRows = graft.CorpusCounts.of(pairs)
     val edgeWidth = math.max(1L, (2L * pairRows + 999999L) / 1000000L).toInt
-    // r21: the rounds coalesce by SIZE, not parallelism. The per-round
-    // frames are O(|clustered docs|) — tiny relative to the machine —
-    // but AQE's default parallelismFirst keeps every round stage at
-    // ~defaultParallelism tasks, so per-task fixed overhead SCALES
-    // WITH CORES on latency-dominated rounds (profiled, r21: the
-    // 64-task propagation stages read 3.9 s CPU / 11 s task time at 32
-    // cores vs 0.28 s / 0.8 s at 8 — the 32c>8c inversion the r20
-    // verdict flagged). parallelismFirst=false is scoped to the loop
-    // by running it on a CLONE of the caller's session (its shared
-    // state and cache, a copy of every conf the caller set) — the
-    // caller's conf never changes, so concurrent users of that session
-    // never see the key. Rounds bigger than the advisory partition size
-    // still go wide, so nothing changes at corpus scale. The edge list
-    // (and the shared upstream pair-table build, which the first
-    // action here would otherwise trigger) materializes BEFORE the key
-    // is set so memo-shared artifacts build identically no matter
-    // which consumer runs first.
-    val sess = SessionBridge.cloneOf(pairs.sparkSession)
-    val p = SessionBridge.rehome(sess, pairs)
-    val edges = p.select(col(idACol).as("src"), col(idBCol).as("dst"))
-      .union(p.select(col(idBCol).as("src"), col(idACol).as("dst")))
+    val edges = pairs.select(col(idACol).as("src"), col(idBCol).as("dst"))
+      .union(pairs.select(col(idBCol).as("src"), col(idACol).as("dst")))
       .repartition(edgeWidth, col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // localCheckpoint, not persist: each round's plan references the
@@ -1367,8 +1323,6 @@ object Dedup {
     // leave the edge list pinned for the session lifetime
     try {
       edges.count()
-      sess.conf.set("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
       var labels = edges.groupBy(col("src"))
         .agg(least(col("src"), min(col("dst"))).as("cluster_id"))
         .select(col("src").as("id"), col("cluster_id"))
@@ -1406,7 +1360,8 @@ object Dedup {
         // retries can only OVER-count an accumulator, and over-count
         // merely schedules one more (no-op) round — never a premature
         // stop — so the fold is convergence-safe.
-        val acc = sess.sparkContext.longAccumulator(s"graft.cc.changed.$iter")
+        val acc = pairs.sparkSession.sparkContext
+          .longAccumulator(s"graft.cc.changed.$iter")
         val improvedAt = nextPlan.schema.fieldNames.length
         val enc = org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(
           org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(nextPlan.schema))
@@ -1432,7 +1387,7 @@ object Dedup {
           s"duplicateClusters did not converge in $maxIters rounds " +
             s"($changed labels still improving) — raise maxIters; near-dup " +
             "components are normally shallow, so this signals pathological input")
-      SessionBridge.rehome(pairs.sparkSession, labels)
+      labels
     } finally edges.unpersist()
   }
 
@@ -2823,7 +2778,7 @@ object Dedup {
 
   /** Survivorship "golden record" per duplicate group — the
     * FIELD-level merge the row-level selectors can't express:
-    * [[canonicalBest]]/x114 keep one member row wholesale; real MDM
+    * [[keepBestPerCluster]]/x114 keep one member row wholesale; real MDM
     * survivorship composes the golden row field by field (freshest
     * address from one duplicate, the non-null phone from another).
     * Per `keyCol` group this emits: member count, the stable

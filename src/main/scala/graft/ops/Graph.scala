@@ -113,8 +113,8 @@ object Graph {
     *
     * Parallel edges are honored (each contributes one vote), matching
     * the plain edge-list reading; pass a deduplicated edge list for
-    * simple-graph semantics. `undirected = true` mirrors every edge
-    * so votes flow both ways.
+    * simple-graph semantics. Every edge is mirrored, so votes flow
+    * both ways (undirected).
     *
     * Scale shape: identical to [[pageRank]] — the edge list shuffles
     * ONCE onto src and persists; each round re-shuffles only the
@@ -128,15 +128,12 @@ object Graph {
     * checkpoint()). */
   def labelPropagation(edges: DataFrame, srcCol: String = "src",
       dstCol: String = "dst", iters: Int = 3,
-      nodes: Option[DataFrame] = None,
-      undirected: Boolean = true): DataFrame = {
+      nodes: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     require(iters > 0, "iters must be positive")
     val fwd = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
-    val e0 = if (undirected)
-      fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
-    else fwd
+    val e0 = fwd.union(fwd.select(col("dst").as("src"), col("src").as("dst")))
     val nodeIds = nodes.getOrElse(
       e0.select(col("src").as("id")).union(e0.select(col("dst").as("id")))
         .distinct()).select(col("id").cast("long").as("id"))

@@ -187,8 +187,8 @@ object Layout {
       .parquet(outDir)
   }
 
-  /** Data-file count of a store tree — the metadata walk every
-    * compaction-cadence decision starts from (no Spark job). Hidden
+  /** Data-file count of a store tree, by a metadata walk (no Spark
+    * job) — what a compaction shrinks. Hidden
     * files (`_` and `.` prefixes — commit markers, local-FS CRC
     * sidecars) are excluded, matching what a Spark scan lists. */
   def dataFileCount(spark: SparkSession,
@@ -205,35 +205,5 @@ object Layout {
       }
       n
     }
-  }
-
-  /** Swap a freshly-compacted tree into the live path — the pointer
-    * swap that completes the blue/green lifecycle WITHOUT violating
-    * the fresh-root rule: the rewrite already landed under
-    * `compactedPath` (a different root, so no read-under-overwrite
-    * ever happened); this is pure metadata (two renames + a delete),
-    * valid ONLY while no reader is active on `livePath` — exactly the
-    * between-micro-batches property a foreachBatch body guarantees,
-    * which is where the admission gates call it. Crash window: a
-    * failure between the renames leaves `livePath` missing and
-    * `livePath.old` present — the next load fails LOUDLY (no silent
-    * wrong answer); recover by renaming `.old` back (or the compacted
-    * tree in) by hand. A foreachBatch REPLAY after a completed swap
-    * re-probes the compacted tree, which answers identically
-    * (compaction is row-identity — OpsSpec). */
-  def swapCompacted(spark: SparkSession,
-      livePath: String, compactedPath: String): Unit = {
-    requireFreshRoot(spark, livePath, compactedPath)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val live = new org.apache.hadoop.fs.Path(livePath)
-    val fs = live.getFileSystem(conf)
-    val old = new org.apache.hadoop.fs.Path(livePath + ".old")
-    if (fs.exists(old)) fs.delete(old, true)
-    require(fs.rename(live, old),
-      s"swapCompacted: cannot move $live aside to $old")
-    require(fs.rename(new org.apache.hadoop.fs.Path(compactedPath), live),
-      s"swapCompacted: cannot move $compactedPath into $live " +
-        s"(the previous tree is preserved at $old)")
-    fs.delete(old, true)
   }
 }

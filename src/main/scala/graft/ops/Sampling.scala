@@ -60,14 +60,13 @@ object Sampling {
     * libm differences could flip a boundary row silently).
     *
     * Keep rule per row, for stratum size n and rarest-stratum size
-    * n_min (α is the mixture temperature):
-    *   - α = 0   (equal expected counts):  bucket·n    < n_min·2³²
-    *   - α = 1/2 (partial flattening):     bucket²·n   < n_min·2⁶⁴
+    * n_min, at mixture temperature α = 1/2 (partial flattening):
+    *   bucket²·n < n_min·2⁶⁴
     * where `bucket = ((id mod 2³¹)·2654435761) mod 2³²` — Knuth's
     * multiplicative scramble, a uniform stand-in for bucket/2³² ~
-    * U[0,1) that both engines compute identically. The comparisons
-    * run in decimal(38,0) (HUGEINT in the oracle), so they stay exact
-    * at any corpus size. α=1/2 is keep-probability √(n_min/n), the
+    * U[0,1) that both engines compute identically. The comparison
+    * runs in decimal(38,0) (HUGEINT in the oracle), so it stays exact
+    * at any corpus size. That is keep-probability √(n_min/n), the
     * standard partially-flattened pretraining mix.
     *
     * Scale shape: one two-phase count aggregate (|strata| rows,
@@ -76,8 +75,8 @@ object Sampling {
     * driver. Membership is a pure function of (id, stratum sizes):
     * stable across relayout.
     * Requires a non-negative numeric id. */
-  def replayableMixture(df: DataFrame, stratumCol: String, idCol: String,
-      alphaHalf: Boolean = true): DataFrame = {
+  def replayableMixture(df: DataFrame, stratumCol: String,
+      idCol: String): DataFrame = {
     val dec = "decimal(38,0)"
     val counts = df.filter(col(stratumCol).isNotNull)
       .groupBy(col(stratumCol)).agg(count(lit(1)).as("n_stratum"))
@@ -85,14 +84,9 @@ object Sampling {
     val bucket = pmod(
       pmod(col(idCol), lit(2147483648L)) * lit(2654435761L),
       lit(4294967296L)).cast(dec)
-    val keep =
-      if (alphaHalf)
-        bucket * bucket * col("n_stratum").cast(dec) <
-          col("__n_min").cast(dec) *
-            lit(new java.math.BigDecimal("18446744073709551616")).cast(dec)
-      else
-        bucket * col("n_stratum").cast(dec) <
-          col("__n_min").cast(dec) * lit(4294967296L).cast(dec)
+    val keep = bucket * bucket * col("n_stratum").cast(dec) <
+      col("__n_min").cast(dec) *
+        lit(new java.math.BigDecimal("18446744073709551616")).cast(dec)
     df.join(broadcast(counts), Seq(stratumCol))
       .crossJoin(broadcast(minN))
       .filter(keep)

@@ -908,12 +908,6 @@ object Similarity {
       subCentroids: Map[Int, Array[Array[Double]]],
       k2: Int)
 
-  /** Memo of trained two-level models — driver arrays only, like
-    * [[kmeansCentroids]]' memo. */
-  private val hierKmeansMemo =
-    new graft.BoundedMemo[((String, String), String, Int, Int, Int), HierKmeansModel](
-      8, "hier-kmeans")
-
   /** Train a two-level Lloyd model: flat top-level k-means, then ALL
     * per-top-cluster sub-clusterings trained together — each Lloyd
     * round is ONE distributed job (the [[pqTrain]] shape): broadcast
@@ -936,12 +930,6 @@ object Similarity {
       s"hierarchicalKmeansModel: k1=$k1 outside [1, $MaxTrainK]")
     require(k2 >= 1 && k2 <= MaxTrainK,
       s"hierarchicalKmeansModel: k2=$k2 outside [1, $MaxTrainK]")
-    hierKmeansMemo.getOrBuild((graft.PlanKeys.scoped(df), s"$idCol/$vecCol", k1, k2, iters))(
-      hierKmeansUncached(df, idCol, vecCol, k1, k2, iters))
-  }
-
-  private def hierKmeansUncached(df: DataFrame, idCol: String, vecCol: String,
-      k1: Int, k2: Int, iters: Int): HierKmeansModel = {
     import org.apache.spark.sql.expressions.Window
     val top = kmeansCentroids(df, idCol, vecCol, k1, iters)
     val base = df.select(col(idCol).as("id"),

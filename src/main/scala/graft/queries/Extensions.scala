@@ -540,7 +540,7 @@ object Extensions extends QueryModule {
 
   /** The x28 exact cosine pairs (vec_id < 200, cosine >= 0.3) and
     * their [[reachSql]] components — x28/x29/x98/x130 replay the
-    * memoized [[dupClustersFor]] clusters through this. */
+    * [[dupClustersFor]] clusters through this. */
   private val cosineReachSql =
     s"""pairs AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
@@ -552,19 +552,12 @@ object Extensions extends QueryModule {
   /** Duplicate-cluster formation: connected components (min-label
     * propagation) over x7's exact near-dup pairs, oracled by a
     * DuckDB recursive-CTE reachability replay — A≈B, B≈C collapse to
-    * one cluster even though (A, C) never paired. */
-  /** Clusters over x7's exact pair set, memoized per (session, dir):
-    * the iterative propagation runs once, x28 and x29 both read it.
-    * The labels frame is a localCheckpoint (RDD blocks, no
-    * CacheManager entry), reclaimed by the ContextCleaner once
-    * dropped — nothing to release. */
-  private val clusterMemo =
-    new graft.BoundedMemo[(String, String), org.apache.spark.sql.DataFrame](8, "dup-clusters")
+    * one cluster even though (A, C) never paired. x28, x29, x98 and
+    * x130 share one propagation run through
+    * [[Dedup.duplicateClusters]]' label memo. */
   private def dupClustersFor(s: org.apache.spark.sql.SparkSession, dir: String) =
-    clusterMemo.getOrBuild((graft.SessionKeys.of(s), dir)) {
-      val pairs = cosinePairs(s, dir).select(col("id_a"), col("id_b"))
-      Dedup.duplicateClusters(pairs, "id_a", "id_b")
-    }
+    Dedup.duplicateClusters(
+      cosinePairs(s, dir).select(col("id_a"), col("id_b")), "id_a", "id_b")
 
   private val x28DupClusters = GraftQuery(
     "x28_dup_clusters",
@@ -1748,7 +1741,7 @@ object Extensions extends QueryModule {
   private val x62MixtureSample = GraftQuery(
     "x62_mixture_sample",
     (s, dir) => graft.ops.Sampling.replayableMixture(
-      Tables.documents(s, dir), "lang", "doc_id", alphaHalf = true)
+      Tables.documents(s, dir), "lang", "doc_id")
       .select(col("doc_id"), col("lang"), col("n_stratum").as("n_lang"))
       .orderBy(col("doc_id")),
     Some("""WITH c AS (

@@ -161,33 +161,17 @@ object EventStreams {
     * the end of the body ([[graft.Persistence.release]] — a continuous
     * run would otherwise accumulate checkpoint blocks until GC). The
     * steady-state cost is ∝ daily intake — except the store LISTING,
-    * which grows one file per append until compaction rewrites the
-    * tree (measured: the `stream`/`streamnd` families of
+    * which grows one file per append until a batch compaction (the
+    * store's `compact*` function, run between stream runs) rewrites
+    * the tree (measured: the `stream`/`streamnd` families of
     * SCALE_REHEARSAL_r19_stream.json). The completed query is
     * returned — `recentProgress` carries per-batch durations for
-    * exactly that measurement.
-    *
-    * `compactEvery` (the maintenance CADENCE): when > 0, after every N
-    * committed micro-batches — after ALL of that batch's effects —
-    * `compact` rewrites the appended tree(s) blue/green and swaps them
-    * into place ([[compactInPlace]]; the end of a foreachBatch body is
-    * exactly the no-reader-active window the swap requires). Size N
-    * so the probe's per-file cost stays a small fraction of the batch:
-    * N ≈ maxFraction × batchWallMs / perFileMs (measured
-    * ~1.2–2.2 ms/file locally). 0 = never — compact at your own
-    * cadence. A replay after a completed swap re-probes the compacted
-    * tree, which answers identically (compaction is row-identity). */
-  private def gateLoop(docs: DataFrame, checkpointDir: String,
-      compactEvery: Int)(body: DataFrame => Unit)(
-      compact: SparkSession => Unit): StreamingQuery = {
+    * exactly that measurement. */
+  private def gateLoop(docs: DataFrame, checkpointDir: String)(
+      body: DataFrame => Unit): StreamingQuery = {
     require(docs.isStreaming, "docs must be a streaming DataFrame")
-    require(compactEvery >= 0, "compactEvery must be >= 0 (0 = never)")
     val q = docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        body(batch)
-        if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
-          compact(batch.sparkSession)
-      }
+      .foreachBatch { (batch: DataFrame, _: Long) => body(batch) }
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
@@ -220,29 +204,19 @@ object EventStreams {
         lit(null).cast("bigint").as("dup_id")))
       .write.mode("append").parquet(outDir)
 
-  /** Blue/green compaction of `path`: `rewrite` a fresh temp root,
-    * then swap it into place ([[graft.ops.Layout.swapCompacted]]). */
-  private def compactInPlace(spark: SparkSession, path: String,
-      tmpPrefix: String)(rewrite: String => Any): Unit = {
-    val tmp = graft.TempDirs.createCleaned(tmpPrefix)
-    rewrite(tmp)
-    graft.ops.Layout.swapCompacted(spark, path, tmp)
-  }
-
   /** Stream-static DIGEST admission: the x209 intake gate as a
     * structured stream over the [[gateLoop]]. Per batch the probe is
     * [[graft.ops.Dedup.incrementalExactDuplicates]] against the
     * ledger, and the append is [[graft.ops.Dedup.appendToDigestStore]]
-    * (whose digest anti-join makes a replayed append a no-op);
-    * `compactEvery` rewrites the ledger with
-    * [[graft.ops.Dedup.compactDigestStore]]. EventStreamsSpec pins the
+    * (whose digest anti-join makes a replayed append a no-op).
+    * EventStreamsSpec pins the
     * 3-micro-batch stream ≡ the batch pipeline row-for-row, and that a
     * replayed intake against the grown ledger reproduces the original
     * statuses. */
   def runIncrementalAdmission(docs: DataFrame, storePath: String,
       outDir: String, checkpointDir: String, idCol: String = "doc_id",
-      textCol: String = "text", compactEvery: Int = 0): StreamingQuery =
-    gateLoop(docs, checkpointDir, compactEvery) { batch =>
+      textCol: String = "text"): StreamingQuery =
+    gateLoop(docs, checkpointDir) { batch =>
       val store = graft.ops.Dedup.loadDigestStore(
         batch.sparkSession, storePath)
       // probe's plan leaves include the batch-digest checkpoint made
@@ -259,9 +233,6 @@ object EventStreams {
         idCol, textCol)
       graft.Persistence.release(flagged)
       graft.Persistence.release(admitted)
-    } { spark =>
-      compactInPlace(spark, storePath, "graft_adm_ledger_c")(
-        graft.ops.Dedup.compactDigestStore(spark, storePath, _))
     }
 
   /** The store calls that tell the two SKETCH gates apart, bound to a
@@ -309,18 +280,12 @@ object EventStreams {
     *      replay between the two appends can only duplicate value rows,
     *      which duplicates verify rows the min-reduction collapses —
     *      never a signature row, so the store stays keyed-unique);
-    *      release every per-batch checkpoint;
-    *   5. `compactEvery` > 0 compacts BOTH appended trees (the
-    *      signature store with `compactSignatures`, the plain value
-    *      dir with [[graft.ops.Layout.compact]]) and swaps each into
-    *      place. */
+    *      release every per-batch checkpoint. */
   private def runSketchAdmission(docs: DataFrame, storePath: String,
       corpusPath: String, outDir: String, checkpointDir: String,
-      idCol: String, valueCol: String, compactEvery: Int,
-      tmpPrefix: String)(
-      compactSignatures: (SparkSession, String, String) => Any)(
+      idCol: String, valueCol: String)(
       load: SparkSession => SketchStore): StreamingQuery =
-    gateLoop(docs, checkpointDir, compactEvery) { batch =>
+    gateLoop(docs, checkpointDir) { batch =>
       val spark = batch.sparkSession
       val store = load(spark)
       val probe = store.probe(spark.read.parquet(corpusPath), batch)
@@ -356,18 +321,12 @@ object EventStreams {
       graft.Persistence.release(flaggedRaw)
       graft.Persistence.release(admitted)
       graft.Persistence.release(newAdmits)
-    } { spark =>
-      compactInPlace(spark, storePath, s"${tmpPrefix}_sig_c")(
-        compactSignatures(spark, storePath, _))
-      compactInPlace(spark, corpusPath, s"${tmpPrefix}_corpus_c")(
-        graft.ops.Layout.compact(spark, corpusPath, _))
     }
 
   /** Stream-static NEAR-DUP admission: [[runSketchAdmission]] over the
     * minhash signature store, with EXACT gram-set verification
     * ([[graft.ops.Dedup.incrementalVerifiedTextDuplicates]]) against
-    * the corpus TEXT store under `corpusTextsPath`; compaction by
-    * [[graft.ops.Dedup.compactMinhashSignatures]].
+    * the corpus TEXT store under `corpusTextsPath`.
     *
     * BATCHING-INVARIANT ONLY AT threshold = 1.0 AND WITH ID-ORDERED
     * MICRO-BATCHES (the x211 precondition): verified Jaccard 1.0 ⇔
@@ -385,11 +344,9 @@ object EventStreams {
   def runIncrementalNearDupAdmission(docs: DataFrame, storePath: String,
       corpusTextsPath: String, outDir: String, checkpointDir: String,
       idCol: String = "doc_id", textCol: String = "text",
-      threshold: Double = 1.0, bands: Int = 32,
-      compactEvery: Int = 0): StreamingQuery =
+      threshold: Double = 1.0, bands: Int = 32): StreamingQuery =
     runSketchAdmission(docs, storePath, corpusTextsPath, outDir,
-        checkpointDir, idCol, textCol, compactEvery, "graft_ndadm")(
-        graft.ops.Dedup.compactMinhashSignatures(_, _, _)) { spark =>
+        checkpointDir, idCol, textCol) { spark =>
       val store = graft.ops.Dedup.loadMinhashSignatures(spark, storePath)
       SketchStore(store.signatures,
         graft.ops.Dedup.incrementalVerifiedTextDuplicates(store, _, _,
@@ -404,8 +361,7 @@ object EventStreams {
     * embedding signature store, with EXACT cosine verification
     * ([[graft.ops.Dedup.incrementalEmbeddingNearDuplicates]] through
     * the handle loaded fresh — width/bands/seed resolve from the meta
-    * sidecar) against the corpus VECTOR store under `corpusVecsPath`;
-    * compaction by [[graft.ops.Dedup.compactEmbeddingSignatures]].
+    * sidecar) against the corpus VECTOR store under `corpusVecsPath`.
     *
     * Oracle scope (the x212/x215 analysis applied): the output is
     * batching-invariant when flagging induces EQUIVALENCE CLASSES —
@@ -418,10 +374,9 @@ object EventStreams {
   def runIncrementalEmbeddingAdmission(docs: DataFrame, storePath: String,
       corpusVecsPath: String, outDir: String, checkpointDir: String,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      threshold: Double = 0.95, compactEvery: Int = 0): StreamingQuery =
+      threshold: Double = 0.95): StreamingQuery =
     runSketchAdmission(docs, storePath, corpusVecsPath, outDir,
-        checkpointDir, idCol, vecCol, compactEvery, "graft_embadm")(
-        graft.ops.Dedup.compactEmbeddingSignatures(_, _, _)) { spark =>
+        checkpointDir, idCol, vecCol) { spark =>
       val store = graft.ops.Dedup.loadEmbeddingSignatures(spark, storePath)
       SketchStore(store.signatures,
         graft.ops.Dedup.incrementalEmbeddingNearDuplicates(store, _, _,

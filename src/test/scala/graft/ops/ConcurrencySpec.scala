@@ -34,6 +34,43 @@ class ConcurrencySpec extends AnyFunSuite {
     assert(thrown eq boom)
   }
 
+  test("a successful run cancels nothing: no failed job-group cancel is logged") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("concurrency-spec", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val logger = LogManager.getLogger("org.apache.spark.scheduler.DAGScheduler")
+      .asInstanceOf[Logger]
+    val level = logger.getLevel
+    logger.setLevel(Level.WARN)
+    logger.addAppender(appender)
+    // the DAGScheduler handles a cancel on its event loop: a job run
+    // afterwards has passed through that loop, so its line is logged
+    def cancelLines(): Seq[String] = {
+      spark.range(1).count()
+      lines.toArray.toSeq.map(_.toString).filter(_.contains("Failed to cancel job group"))
+    }
+    try {
+      assert(Concurrency.awaitAll(spark, "quiet-spec")(Seq(
+        () => spark.range(5).count(), () => spark.range(7).count())) == Seq(5L, 7L))
+      assert(cancelLines().isEmpty)
+      // control: the appender does see the line a needless cancel logs
+      spark.sparkContext.cancelJobGroup("concurrency-spec-no-such-group")
+      assert(cancelLines().size == 1)
+    } finally {
+      logger.removeAppender(appender)
+      logger.setLevel(level)
+      appender.stop()
+    }
+  }
+
   test("a sibling's long-running Spark job is cancelled through the job group") {
     val sc = spark.sparkContext
     val taskRunning = new CountDownLatch(1)

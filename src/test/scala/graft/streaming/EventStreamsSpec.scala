@@ -358,48 +358,6 @@ class EventStreamsSpec extends AnyFunSuite {
       .filter(col("count") > 1).count() == 0L)
   }
 
-  test("admission compactEvery: identical output, ledger ends compacted, probes keep working") {
-    import graft.ops.{Dedup, Layout}
-    import spark.implicits._
-    // 6 single-file batches, each one corpus dup + one novel doc; run
-    // the digest gate over the SAME staged input with compactEvery=2
-    // (fires after batches 2/4/6 — the last AFTER batch 6's append,
-    // so the ledger ends exactly one file) and with the cadence off:
-    // outputs must match row-for-row, and a day-7 probe through the
-    // swapped tree must flag batch-6 content (nothing lost)
-    val corpus = Seq((1L, "alpha beta gamma"), (2L, "omicron pi rho"))
-      .toDF("doc_id", "text")
-    val batches = (0 until 6).map { i =>
-      Seq((100L + i, "alpha beta gamma"), (10L + i, s"novel content $i"))
-        .toDF("doc_id", "text")
-    }
-    def run(compactEvery: Int): (Set[(Long, String, Long)], String) = {
-      val ledger = graft.TempDirs.createCleaned(s"graft_ce_led$compactEvery")
-      Dedup.saveDigestStore(corpus, "doc_id", "text", ledger)
-      val out = graft.TempDirs.createCleaned(s"graft_ce_out$compactEvery")
-      graft.streaming.EventStreams.runIncrementalAdmission(
-        EventStreams.orderedIntake(spark, s"graft_ce$compactEvery", batches),
-        ledger, out,
-        graft.TempDirs.createCleaned(s"graft_ce_ck$compactEvery"),
-        "doc_id", "text", compactEvery = compactEvery)
-      (statuses(out), ledger)
-    }
-    val (outPlain, _) = run(0)
-    val (outCadence, ledgerC) = run(2)
-    assert(outCadence == outPlain,
-      "the maintenance cadence must not change a single admission row")
-    assert(Layout.dataFileCount(spark, s"$ledgerC/digests") == 1,
-      "compactEvery=2 over 6 batches must leave the ledger compacted " +
-        "(last fire lands after the final append)")
-    val probe = Seq((200L, "novel content 5"), (201L, "brand new"))
-      .toDF("doc_id", "text")
-    val flags = Dedup.incrementalExactDuplicates(
-        Dedup.loadDigestStore(spark, ledgerC), probe, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(flags == Set((200L, 15L)),
-      s"the swapped tree must still hold batch 6's append: $flags")
-  }
-
   test("mid-threshold admission: true-pair flags, intake partition, stores grow by admitted") {
     import graft.ops.Dedup
     import spark.implicits._
@@ -532,15 +490,12 @@ class EventStreamsSpec extends AnyFunSuite {
     assert(spark.read.parquet(vecDir).count() == nCorpus)
   }
 
-  test("embedding admission compactEvery: identical output, both trees end compacted") {
-    import graft.ops.{Dedup, Layout}
-    // the digest cadence spec for the EMBEDDING gate: 6 single-file
-    // batches, each one corpus replica (flags its original) and one
-    // negated corpus vector (novel -> admitted into BOTH trees).
-    // compactEvery=2 fires after batches 2/4/6 — the last after batch
-    // 6's appends — so the signature and vector trees each end at one
-    // file; the output must match the cadence-off run row for row, and
-    // a probe through the swapped trees must flag batch 6's content.
+  test("embedding admission stream: replicas flag their originals across batches; both stores grow") {
+    import graft.ops.Dedup
+    // 6 single-file batches, each one corpus replica (flags its
+    // original) and one negated corpus vector (novel -> admitted into
+    // BOTH trees); a probe through the grown trees must flag batch 6's
+    // admitted content.
     val emb = Tables.embeddings(spark, sfDir)
       .select(col("vec_id"), col("embedding"))
     val corpus = emb.filter(col("vec_id") < 40)
@@ -552,39 +507,30 @@ class EventStreamsSpec extends AnyFunSuite {
           .select((col("vec_id") + lit(2000L)).as("vec_id"),
             neg(col("embedding")).as("embedding")))
     }
-    def run(compactEvery: Int): (Set[(Long, String, Long)], String, String) = {
-      val sig = graft.TempDirs.createCleaned(s"graft_embce_sig$compactEvery")
-      val vec = graft.TempDirs.createCleaned(s"graft_embce_vec$compactEvery")
-      Dedup.saveEmbeddingSignatures(corpus, "vec_id", "embedding", sig,
-        numBits = 48, bands = 8)
-      corpus.write.mode("overwrite").parquet(vec)
-      val out = graft.TempDirs.createCleaned(s"graft_embce_out$compactEvery")
-      EventStreams.runIncrementalEmbeddingAdmission(
-        EventStreams.orderedIntake(spark, s"graft_embce$compactEvery", batches),
-        sig, vec, out,
-        graft.TempDirs.createCleaned(s"graft_embce_ck$compactEvery"),
-        "vec_id", "embedding", threshold = 0.95, compactEvery = compactEvery)
-      (statuses(out), sig, vec)
-    }
-    val (outPlain, _, _) = run(0)
-    val (outCadence, sigC, vecC) = run(2)
-    assert(outPlain == (0 until 6).flatMap(i => Seq(
+    val sig = graft.TempDirs.createCleaned("graft_embst_sig")
+    val vec = graft.TempDirs.createCleaned("graft_embst_vec")
+    Dedup.saveEmbeddingSignatures(corpus, "vec_id", "embedding", sig,
+      numBits = 48, bands = 8)
+    corpus.write.mode("overwrite").parquet(vec)
+    val out = graft.TempDirs.createCleaned("graft_embst_out")
+    EventStreams.runIncrementalEmbeddingAdmission(
+      EventStreams.orderedIntake(spark, "graft_embst", batches),
+      sig, vec, out, graft.TempDirs.createCleaned("graft_embst_ck"),
+      "vec_id", "embedding", threshold = 0.95)
+    val got = statuses(out)
+    assert(got == (0 until 6).flatMap(i => Seq(
       (1000L + i, "duplicate", i.toLong),
-      (2020L + i, "admitted", -1L))).toSet, s"got $outPlain")
-    assert(outCadence == outPlain,
-      "the maintenance cadence must not change a single admission row")
-    assert(Layout.dataFileCount(spark, s"$sigC/signatures") == 1,
-      "compactEvery=2 over 6 batches must leave the signature tree compacted")
-    assert(Layout.dataFileCount(spark, vecC) == 1,
-      "compactEvery=2 over 6 batches must leave the vector tree compacted")
+      (2020L + i, "admitted", -1L))).toSet, s"got $got")
+    assert(Dedup.loadEmbeddingSignatures(spark, sig).signatures.count() == 46L)
+    assert(spark.read.parquet(vec).count() == 46L)
     val probe = emb.filter(col("vec_id") === 25)
       .select(lit(3000L).as("vec_id"), neg(col("embedding")).as("embedding"))
     val flags = Dedup.incrementalEmbeddingNearDuplicates(
-        Dedup.loadEmbeddingSignatures(spark, sigC), spark.read.parquet(vecC),
+        Dedup.loadEmbeddingSignatures(spark, sig), spark.read.parquet(vec),
         probe, "vec_id", "embedding", threshold = 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(flags == Set((3000L, 2025L)),
-      s"the swapped trees must still hold batch 6's append: $flags")
+      s"the grown trees must hold batch 6's append: $flags")
   }
 
   test("near-dup admission stop -> compact -> restart: compacted roots serve the grown history") {
